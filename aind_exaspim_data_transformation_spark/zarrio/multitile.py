@@ -5,8 +5,8 @@ Every task row fully describes its write (source path, store, level, slice
 bounds, physical spec), so a single Spark action converts the whole
 dataset: the scheduler load-balances shards across executors regardless of
 tile boundaries — exactly what the reference's hand-rolled global
-round-robin approximates. File mode (one action per tile) is the
-degenerate case of this plan filtered to one tile.
+round-robin approximates. File mode runs this same plan once per tile
+(``pipeline.convert_to_zarr`` is the one-tile call).
 
 At 100 TB: ~45k coordinate rows per 6 TB tile, ~1M rows per dataset —
 trivially plannable; payloads never enter the DataFrame.
@@ -37,6 +37,7 @@ from .format import (
 from .metadata import multiscales_metadata
 from .pipeline import (
     ERROR_SAMPLE_CAP,
+    _level_shapes,
     _level_specs,
     _pad_to_shard,
     _read_reduced_region,
@@ -44,6 +45,7 @@ from .pipeline import (
     _unpack_payload,
     iter_coalesced_reads,
     stage_agg_exprs,
+    stage_dict,
 )
 
 TASK_SCHEMA = (
@@ -62,6 +64,7 @@ STATS_SCHEMA = (
     "bytes_read long, bytes_written long, elapsed double, checksum long, "
     "error string"
 )
+STATS_COLS = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
 
 #: Self-describing downsample task rows: store-routed so ONE Spark action
 #: covers level k of EVERY tile (job count per level is independent of the
@@ -89,26 +92,20 @@ MT_CASCADE_SCHEMA = (
     "oz int, oy int, ox int, sz int, sy int, sx int, payload binary"
 )
 
-MT_CASCADE_COLS = [
-    "kind",
-    "tile_path",
-    "store",
-    "level",
-    "iz",
-    "iy",
-    "ix",
-    "bytes_read",
-    "bytes_written",
-    "elapsed",
-    "checksum",
-    "oz",
-    "oy",
-    "ox",
-    "sz",
-    "sy",
-    "sx",
-    "payload",
-]
+MT_CASCADE_COLS = [f.split()[0] for f in MT_CASCADE_SCHEMA.split(", ")]
+
+
+def _row_spec(row) -> ShardSpec:
+    """The level's ShardSpec, rebuilt from a self-describing task row."""
+    return ShardSpec(
+        shape=(1, 1, row.shape_z, row.shape_y, row.shape_x),
+        shard_shape=(1, 1, row.shard_z, row.shard_y, row.shard_x),
+        chunk_shape=(1, 1, row.chunk_z, row.chunk_y, row.chunk_x),
+        dtype=row.dtype,
+        codec=row.codec,
+        codec_level=row.codec_level,
+        transpose_order=row.transpose or None,
+    )
 
 
 def _mt_cascade_applicable(
@@ -214,19 +211,7 @@ def _make_global_fused_writer(
                         row.y0 - b0[1] : row.y1 - b0[1],
                         row.x0 - b0[2] : row.x1 - b0[2],
                     ]
-                    spec = ShardSpec(
-                        shape=(1, 1, row.shape_z, row.shape_y, row.shape_x),
-                        shard_shape=(
-                            1, 1, row.shard_z, row.shard_y, row.shard_x,
-                        ),
-                        chunk_shape=(
-                            1, 1, row.chunk_z, row.chunk_y, row.chunk_x,
-                        ),
-                        dtype=row.dtype,
-                        codec=row.codec,
-                        codec_level=row.codec_level,
-                        transpose_order=row.transpose or None,
-                    )
+                    spec = _row_spec(row)
                     blob = encode_shard(_pad_to_shard(block, spec), spec)
                     write_shard_file(
                         row.store, 0, (0, 0, row.iz, row.iy, row.ix), blob
@@ -378,8 +363,6 @@ def build_global_tasks(
     Returns (tasks DF, specs per tile, quarantined tiles). The third
     map is empty unless on_corrupt="quarantine" skipped tiles whose
     open OR metadata probe failed driver-side."""
-    from ..operators.downsample import downsampled_shape
-
     rows: list[tuple] = []
     all_specs: dict[str, dict[int, ShardSpec]] = {}
     quarantined: dict[str, str] = {}
@@ -392,16 +375,7 @@ def build_global_tasks(
             # shape/dtype/extent attributes — either way there is no
             # task grid to build, so the tile is skipped, not the job.
             src = open_source(src_path)
-            if settings.translate_pyramid:
-                shapes = list(src.meta.shapes)
-                source_levels = len(shapes)
-            else:
-                shapes = [src.meta.shapes[0]]
-                for _ in range(1, settings.downsample_levels):
-                    shapes.append(
-                        downsampled_shape(shapes[-1], settings.scale_factor)
-                    )
-                source_levels = 1
+            shapes = _level_shapes(settings, src.meta)
             specs = _level_specs(settings, shapes, src.meta.dtype)
         except Exception as exc:  # noqa: BLE001 — quarantine boundary
             if settings.on_corrupt != "quarantine":
@@ -436,6 +410,7 @@ def build_global_tasks(
             )
         for lvl in range(len(shapes)):
             write_array_metadata(store, lvl, specs[lvl])
+        source_levels = len(shapes) if settings.translate_pyramid else 1
         for lvl, shape in list(enumerate(shapes))[:source_levels]:
             shard = specs[lvl].shard_shape[2:]
             chunk = specs[lvl].chunk_shape[2:]
@@ -488,6 +463,36 @@ def build_global_tasks(
     return tasks, all_specs, quarantined
 
 
+def _test_straggler_hook() -> None:
+    """Test-only seam for the speculation integration test
+    (``tests/test_speculation.py``): when
+    ``SPARK_GRAFT_TEST_STRAGGLER_MS`` is set in the EXECUTOR env, every
+    writer task logs ``<partitionId>_<attemptNumber>`` into
+    ``SPARK_GRAFT_TEST_ATTEMPT_DIR`` and the (partition 0, attempt 0)
+    task stalls that many ms before doing its writes — so a speculative
+    duplicate attempt demonstrably runs, races the original on the SAME
+    shard keys, and the store must come out byte-identical (the
+    tmp+os.replace puts in ``kvstore`` are what make that safe). A
+    single getenv no-op in production."""
+    import os
+
+    ms = os.environ.get("SPARK_GRAFT_TEST_STRAGGLER_MS")
+    if not ms:
+        return
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    if tc is None:
+        return
+    log_dir = os.environ.get("SPARK_GRAFT_TEST_ATTEMPT_DIR")
+    if log_dir:
+        os.makedirs(log_dir, exist_ok=True)
+        marker = f"{tc.partitionId()}_{tc.attemptNumber()}"
+        open(os.path.join(log_dir, marker), "w").close()
+    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
+        time.sleep(float(ms) / 1000.0)
+
+
 class _GlobalWriter:
     """Self-describing writer: rebuilds the ShardSpec from task columns;
     sources cached per partition; source reads superchunk-coalesced (one
@@ -511,6 +516,7 @@ class _GlobalWriter:
     def __call__(
         self, batches: Iterator[pd.DataFrame]
     ) -> Iterator[pd.DataFrame]:
+        _test_straggler_hook()
         quarantine = self.quarantine
         sources: dict[str, object] = {}
         last_err: dict[str, str] = {}
@@ -573,19 +579,7 @@ class _GlobalWriter:
                     )
                     continue
                 t0 = time.monotonic()
-                spec = ShardSpec(
-                    shape=(1, 1, row.shape_z, row.shape_y, row.shape_x),
-                    shard_shape=(
-                        1, 1, row.shard_z, row.shard_y, row.shard_x,
-                    ),
-                    chunk_shape=(
-                        1, 1, row.chunk_z, row.chunk_y, row.chunk_x,
-                    ),
-                    dtype=row.dtype,
-                    codec=row.codec,
-                    codec_level=row.codec_level,
-                    transpose_order=row.transpose or None,
-                )
+                spec = _row_spec(row)
                 blob = encode_shard(_pad_to_shard(block, spec), spec)
                 write_shard_file(
                     row.store, row.level, (0, 0, row.iz, row.iy, row.ix), blob
@@ -604,21 +598,7 @@ class _GlobalWriter:
                         None,
                     )
                 )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "tile_path",
-                    "level",
-                    "iz",
-                    "iy",
-                    "ix",
-                    "bytes_read",
-                    "bytes_written",
-                    "elapsed",
-                    "checksum",
-                    "error",
-                ],
-            )
+            yield pd.DataFrame(out, columns=STATS_COLS)
         for s in sources.values():
             if s is not None:
                 s.close()
@@ -668,13 +648,17 @@ def convert_tiles_to_zarr(
         spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
     )
     compute_pyramid = not settings.translate_pyramid
+    # Quarantine forces the level loop: the fused cascade assembles
+    # deeper-level shards from level-0 partials, so a quarantined group
+    # would bake PARTIAL coverage into a written shard. The loop reads
+    # parents back from the store, where a missing (quarantined) shard
+    # already degrades to fill_value.
     group_multiples = (
         _mt_cascade_applicable(all_specs, settings)
-        if compute_pyramid and not quarantine  # see pipeline: a
-        # quarantined group must degrade to fill, not to a partially
-        # assembled deeper-level shard — the level loop gives that.
+        if compute_pyramid and not quarantine
         else None
     )
+    stages = None
     if group_multiples:
         # Fused cascade: the WHOLE dataset — every tile, every pyramid
         # level — is ONE Spark job. Level-0 writes emit per-level
@@ -698,73 +682,61 @@ def convert_tiles_to_zarr(
         prev = spark.conf.get(coalesce_key, "true")
         spark.conf.set(coalesce_key, "false")
         try:
+            # A cascade never quarantines: the null error column gives
+            # its stages the shared stats keys with zero errors.
             rows = (
                 df.where(F.col("kind") == "stats")
+                .withColumn("error", F.lit(None).cast("string"))
                 .groupBy("tile_path", "level")
-                .agg(
-                    F.count(F.lit(1)).alias("n_shards"),
-                    F.sum("bytes_read").alias("bytes_read"),
-                    F.sum("bytes_written").alias("bytes_written"),
-                    F.sum("elapsed").alias("task_seconds"),
-                )
+                .agg(*stage_agg_exprs())
                 .collect()
             )
         finally:
             spark.conf.set(coalesce_key, prev)
-        # Same dict shape as the fallback path's per-tile stats
-        # (tile_path kept, no level key).
-        per_tile = {
-            r["tile_path"]: {
-                k: v for k, v in r.asDict().items() if k != "level"
-            }
-            for r in rows
-            if r["level"] == 0
-        }
-        stages = sorted(
-            (
-                {
-                    **{
-                        k: v
-                        for k, v in r.asDict().items()
-                        if k not in ("tile_path",)
-                    },
-                }
-                for r in rows
-                if r["level"] > 0
-            ),
-            key=lambda d: d["level"],
+        # Level 0 per tile (tile_path kept, no level key, as in the
+        # loop path); deeper levels one stage each across every tile.
+        per_tile, stages = {}, []
+        for r in rows:
+            d = stage_dict(r)
+            if d["level"] == 0:
+                del d["level"]
+                per_tile[d["tile_path"]] = d
+            else:
+                del d["tile_path"]
+                stages.append(d)
+        stages.sort(key=lambda d: d["level"])
+        plan = "fused_cascade"
+    else:
+        stats = (
+            tasks.repartition(n_parts, "superchunk")
+            .mapInPandas(_GlobalWriter(quarantine), STATS_SCHEMA)
+            .groupBy("tile_path")
+            .agg(*stage_agg_exprs())
+            .collect()
         )
-        return {
-            # n_tiles counts CONVERTED tiles — it must agree with the
-            # per-tile map a consumer iterates; driver-quarantined
-            # tiles are reported separately via n_quarantined_tiles.
-            "n_tiles": len(tiles) - len(quarantined_tiles),
-            "n_quarantined_tiles": len(quarantined_tiles),
-            "n_shards": sum(r["n_shards"] for r in per_tile.values()),
-            "bytes_read": sum(r["bytes_read"] for r in per_tile.values()),
-            "bytes_written": sum(
-                r["bytes_written"] for r in per_tile.values()
-            ),
-            "tiles": per_tile,
-            "downsample_stages": stages,
-            "pyramid_plan": "fused_cascade",
-        }
+        per_tile = {r["tile_path"]: stage_dict(r) for r in stats}
+        if compute_pyramid:
+            # Computed levels run sequentially (level k depends on k-1,
+            # reference A2) — but within a level EVERY tile's shards go
+            # into ONE store-routed Spark action, so the job count per
+            # level is independent of the tile count.
+            if any(len(s) > 1 for s in all_specs.values()):
+                import logging
 
-    stats = (
-        tasks.repartition(n_parts, "superchunk")
-        .mapInPandas(_GlobalWriter(quarantine), STATS_SCHEMA)
-        .groupBy("tile_path")
-        .agg(*stage_agg_exprs())
-        .collect()
-    )
-    per_tile = {r["tile_path"]: r.asDict() for r in stats}
-    for t in per_tile.values():
-        t["error_samples"] = [
-            e.asDict() for e in t.get("error_samples") or []
-        ]
+                logging.getLogger(__name__).warning(
+                    "computed pyramid runs the per-level store-read loop "
+                    "(quarantine mode, or no window-aligned cascade group "
+                    "within the memory cap for every tile) — expect ~2.5x "
+                    "the fused-cascade wall time"
+                )
+            stages = _run_downsample_levels(
+                spark, tiles, all_specs, settings
+            )
+            plan = "level_loop"
     result = {
-        # Converted tiles only (matches result["tiles"]); quarantined
-        # tiles are counted in n_quarantined_tiles below.
+        # n_tiles counts CONVERTED tiles — it must agree with the
+        # per-tile map a consumer iterates; driver-quarantined tiles are
+        # reported separately via n_quarantined_tiles.
         "n_tiles": len(tiles) - len(quarantined_tiles),
         "n_quarantined_tiles": len(quarantined_tiles),
         "n_shards": sum(r["n_shards"] for r in per_tile.values()),
@@ -772,31 +744,13 @@ def convert_tiles_to_zarr(
         "bytes_written": sum(r["bytes_written"] for r in per_tile.values()),
         "tiles": per_tile,
     }
-    n_errors = sum(r["n_errors"] or 0 for r in per_tile.values())
+    n_errors = sum(r["n_errors"] for r in per_tile.values())
     if quarantine or n_errors or quarantined_tiles:
         result["n_errors"] = n_errors
         result["quarantined_tiles"] = quarantined_tiles
-
-    if compute_pyramid:
-        # Fallback when no window-aligned cascade group fits the memory
-        # cap (or grids are mixed/single-level): computed pyramid levels
-        # run sequentially (level k depends on k-1, reference A2) — but
-        # within a level EVERY tile's shards go into ONE store-routed
-        # Spark action. Job count per level is therefore independent of
-        # the tile count (a 100-tile dataset schedules L-1 actions, not
-        # 100*(L-1)).
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "computed pyramid falls back to the per-level store-read "
-            "loop (no window-aligned cascade group within the memory "
-            "cap for every tile) — expect ~2.5x the fused-cascade wall "
-            "time"
-        )
-        result["downsample_stages"] = _run_downsample_levels(
-            spark, tiles, all_specs, settings
-        )
-        result["pyramid_plan"] = "level_loop"
+    if stages is not None:
+        result["downsample_stages"] = stages
+        result["pyramid_plan"] = plan
     return result
 
 
@@ -891,8 +845,8 @@ def _make_global_downsample_writer(
                         min(row.x1 * factor[2], row.parent_x),
                     ),
                 )
-                # Shard-local reduce-then-assemble (same fast path as the
-                # single-tile pipeline): only reduced voxels are buffered.
+                # Shard-local reduce-then-assemble: only reduced voxels
+                # are buffered.
                 block = _read_reduced_region(
                     row.store, parent, region3, pspec, factor, mode
                 )
@@ -905,19 +859,7 @@ def _make_global_downsample_writer(
                     )
                     * block.dtype.itemsize
                 )
-                spec = ShardSpec(
-                    shape=(1, 1, row.shape_z, row.shape_y, row.shape_x),
-                    shard_shape=(
-                        1, 1, row.shard_z, row.shard_y, row.shard_x,
-                    ),
-                    chunk_shape=(
-                        1, 1, row.chunk_z, row.chunk_y, row.chunk_x,
-                    ),
-                    dtype=row.dtype,
-                    codec=row.codec,
-                    codec_level=row.codec_level,
-                    transpose_order=row.transpose or None,
-                )
+                spec = _row_spec(row)
                 blob = encode_shard(_pad_to_shard(block, spec), spec)
                 write_shard_file(
                     row.store, row.level, (0, 0, row.iz, row.iy, row.ix), blob
@@ -936,21 +878,7 @@ def _make_global_downsample_writer(
                         None,
                     )
                 )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "tile_path",
-                    "level",
-                    "iz",
-                    "iy",
-                    "ix",
-                    "bytes_read",
-                    "bytes_written",
-                    "elapsed",
-                    "checksum",
-                    "error",
-                ],
-            )
+            yield pd.DataFrame(out, columns=STATS_COLS)
 
     return writer
 
@@ -980,17 +908,11 @@ def _run_downsample_levels(
         # STORE, not the source, so there is nothing for superchunk
         # grouping to coalesce — it would only collapse parallelism at
         # the small deep levels.
-        stats = (
+        stats = stage_dict(
             tasks.repartition(n_parts, "store", "iz", "iy", "ix")
             .mapInPandas(writer, STATS_SCHEMA)
-            .agg(
-                F.count(F.lit(1)).alias("n_shards"),
-                F.sum("bytes_read").alias("bytes_read"),
-                F.sum("bytes_written").alias("bytes_written"),
-                F.sum("elapsed").alias("task_seconds"),
-            )
+            .agg(*stage_agg_exprs())
             .collect()[0]
-            .asDict()
         )
         stats["level"] = lvl
         stages.append(stats)

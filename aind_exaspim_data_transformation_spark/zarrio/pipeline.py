@@ -1,25 +1,19 @@
-"""The conversion pipeline: tensor source -> sharded Zarr v3 store.
+"""Single-source conversion entry point and the shared conversion kernels.
 
-Spark-first re-expression of the reference's distributed conversion
-(reference compress/imaris_to_zarr.py:1501-2030):
+Every conversion runs in ``multitile``: one global shard-task DataFrame,
+superchunk-coalesced source reads, a fused pyramid cascade when a
+window-aligned group fits the memory cap, else a driver-side level loop
+(reference process_single_shard, compress/imaris_to_zarr.py:375-462,
+and the sequential pyramid, :677-799). ``convert_to_zarr`` is the
+one-tile call into that plan — the reference's ``partition_mode='file'``
+unit of work — reshaped into per-stage stats.
 
-- the global shard-task list is a coordinates-only DataFrame (plans.grid);
-- stores are created by the DRIVER before the action (the reference's
-  every-worker idempotent create, :1759-1790, collapses to this);
-- the shard executor (reference process_single_shard, :375-462) becomes a
-  ``mapInPandas`` writer UDF returning a stats row per shard;
-- pyramid translate = same plan over every source level; pyramid compute =
-  ONE fused job whenever a window-aligned superchunk group fits the
-  memory cap (cascade_group_multiple — the level-0 writer reduces each
-  group's bounding box recursively and emits per-level partials; a single
-  shuffle of compressed reduced voxels assembles every deeper level — the
-  parent level is never re-read from the store), else a
-  driver-side level loop (inherent dependency, reference :677-799), each
-  level one Spark action whose UDF reads the previous level from the store
-  and applies the block-local downsample kernel (partial aggregation: only
-  reduced voxels are ever materialized);
-- OME-NGFF metadata is written once by the driver after the actions
-  (replaces the partition-0 gate, :2006-2028).
+This module holds that public wrapper and the kernels the multitile
+writers share: coalesced source reads (``iter_coalesced_reads``), the
+cascade's group-alignment gate and partial routing
+(``cascade_group_multiple``, ``_split_rows``), the reduce-then-assemble
+parent read of the level loop (``_read_reduced_region``), per-level
+shapes and specs, and the stage-stats aggregation (``stage_agg_exprs``).
 
 Retry safety: shard writes are idempotent (same key, same bytes, atomic
 rename), so Spark task retries and speculative execution are harmless —
@@ -30,38 +24,25 @@ from __future__ import annotations
 
 import math
 import time
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsample_block, downsampled_shape
-from ..plans.grid import shard_tasks_df
 from ..sources.tensor import open_source
-from .codecs import HAVE_ZSTD, zlib_crc32, zstd_compress, zstd_decompress
+from .codecs import HAVE_ZSTD, zstd_compress, zstd_decompress
 from .format import (
     ShardSpec,
     clamp_shard_and_chunk,
     decode_shard,
-    encode_shard,
     read_array_region,
     shard_path,
-    write_array_metadata,
-    write_group_metadata,
-    write_shard_file,
 )
 from .kvstore import kv_get
-from .metadata import multiscales_metadata
-
-STATS_SCHEMA = (
-    "level int, iz int, iy int, ix int, "
-    "bytes_read long, bytes_written long, elapsed double, checksum long, "
-    "error string"
-)
 
 #: Cap on quarantined-shard detail rows carried to the driver: enough
 #: to locate the corrupt region(s); the full count is always exact.
@@ -132,6 +113,19 @@ def _split_rows(
                     )
                 )
     return rows
+
+
+def _level_shapes(
+    settings: ConvertJobSettings, meta
+) -> list[tuple[int, int, int]]:
+    """Per-level logical shapes: the source's own levels when translating,
+    else level 0 followed by ``downsample_levels - 1`` computed levels."""
+    if settings.translate_pyramid:
+        return list(meta.shapes)
+    shapes = [meta.shapes[0]]
+    for _ in range(1, settings.downsample_levels):
+        shapes.append(downsampled_shape(shapes[-1], settings.scale_factor))
+    return shapes
 
 
 def _level_specs(
@@ -220,7 +214,7 @@ def iter_coalesced_reads(pdf: pd.DataFrame, read_fn):
                         )
                     continue
                 # Quarantined group read (read_fn returned None, see
-                # _make_copy_writer): the corruption may touch only part
+                # multitile._GlobalWriter): the corruption may touch only part
                 # of the bounding box, so fall through to PER-ROW reads
                 # — only shards whose own voxels are broken quarantine,
                 # keeping the "every healthy byte converts" contract at
@@ -229,147 +223,6 @@ def iter_coalesced_reads(pdf: pd.DataFrame, read_fn):
             t0 = time.monotonic()
             block = read_fn(r, r.z0, r.z1, r.y0, r.y1, r.x0, r.x1)
             yield r, block, time.monotonic() - t0
-
-
-def _test_straggler_hook() -> None:
-    """Test-only seam for the speculation integration test
-    (``tests/test_speculation.py``): when
-    ``SPARK_GRAFT_TEST_STRAGGLER_MS`` is set in the EXECUTOR env, every
-    writer task logs ``<partitionId>_<attemptNumber>`` into
-    ``SPARK_GRAFT_TEST_ATTEMPT_DIR`` and the (partition 0, attempt 0)
-    task stalls that many ms before doing its writes — so a speculative
-    duplicate attempt demonstrably runs, races the original on the SAME
-    shard keys, and the store must come out byte-identical (the
-    tmp+os.replace puts in ``kvstore`` are what make that safe). A
-    single getenv no-op in production."""
-    import os
-
-    ms = os.environ.get("SPARK_GRAFT_TEST_STRAGGLER_MS")
-    if not ms:
-        return
-    from pyspark import TaskContext
-
-    tc = TaskContext.get()
-    if tc is None:
-        return
-    log_dir = os.environ.get("SPARK_GRAFT_TEST_ATTEMPT_DIR")
-    if log_dir:
-        os.makedirs(log_dir, exist_ok=True)
-        marker = f"{tc.partitionId()}_{tc.attemptNumber()}"
-        open(os.path.join(log_dir, marker), "w").close()
-    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-        time.sleep(float(ms) / 1000.0)
-
-
-def _make_copy_writer(
-    source_path: str,
-    store: str,
-    specs: dict[int, ShardSpec],
-    quarantine: bool = False,
-):
-    """Writer UDF for the translate/level-0 path: superchunk-coalesced
-    hyperslab read from the source at the task's level, pad, encode,
-    write. Arrow-batched; the source is opened once per partition
-    (reference re-opens per task, compress/imaris_to_zarr.py:434 —
-    per-partition is strictly cheaper). Rows are repartitioned by
-    superchunk upstream, so each group's single bounding-box read
-    (iter_coalesced_reads) serves every shard in the group.
-
-    With ``quarantine`` (settings.on_corrupt="quarantine"): a failed
-    open or read emits per-shard ERROR rows instead of raising — the
-    shard is not written and reads back as fill_value. Only the SOURCE
-    side is defensive; encode/store-write errors still raise (they are
-    transient-environment failures where Spark's retry is the right
-    tool, not deterministic poison pills)."""
-
-    def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _test_straggler_hook()
-        last_err: list[str | None] = [None]
-        try:
-            src = open_source(source_path)
-        except Exception as exc:  # noqa: BLE001 — quarantine boundary
-            if not quarantine:
-                raise
-            src = None
-            last_err[0] = f"open: {type(exc).__name__}: {exc}"
-
-        def read_fn(row, z0, z1, y0, y1, x0, x1):
-            if src is None:
-                return None
-            if not quarantine:
-                return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
-            try:
-                return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
-            except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                last_err[0] = f"read: {type(exc).__name__}: {exc}"
-                return None
-
-        n_err = 0
-        for pdf in batches:
-            out = []
-            for row, block, read_sec in iter_coalesced_reads(pdf, read_fn):
-                if block is None:
-                    # Detail message only for the first ERROR_SAMPLE_CAP
-                    # errors per partition (empty-but-non-null beyond):
-                    # keeps the sample agg's executor buffers bounded on
-                    # a fully corrupt source while the COUNT stays exact.
-                    n_err += 1
-                    msg = (
-                        (last_err[0] or "read: unknown error")
-                        if n_err <= ERROR_SAMPLE_CAP
-                        else ""
-                    )
-                    out.append(
-                        (
-                            row.level,
-                            row.iz,
-                            row.iy,
-                            row.ix,
-                            0,
-                            0,
-                            read_sec,
-                            None,
-                            msg,
-                        )
-                    )
-                    continue
-                t0 = time.monotonic()
-                spec = specs[row.level]
-                blob = encode_shard(_pad_to_shard(block, spec), spec)
-                write_shard_file(
-                    store, row.level, (0, 0, row.iz, row.iy, row.ix), blob
-                )
-                out.append(
-                    (
-                        row.level,
-                        row.iz,
-                        row.iy,
-                        row.ix,
-                        block.nbytes,
-                        len(blob),
-                        read_sec + time.monotonic() - t0,
-                        zlib_crc32(np.ascontiguousarray(block)),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "level",
-                    "iz",
-                    "iy",
-                    "ix",
-                    "bytes_read",
-                    "bytes_written",
-                    "elapsed",
-                    "checksum",
-                    "error",
-                ],
-            )
-        if src is not None:
-            src.close()
-
-    return writer
 
 
 #: Memory guard for the fused cascade's group read buffer: the group
@@ -477,86 +330,14 @@ def _read_reduced_region(
     return out
 
 
-def _make_downsample_writer(
-    store: str,
-    specs: dict[int, ShardSpec],
-    parent_shapes: dict[int, tuple[int, int, int]],
-    factor: tuple[int, int, int],
-    mode: str,
-):
-    """Writer UDF for the compute path: read the factor-scaled region of
-    the PREVIOUS level from the store, block-reduce, write this level's
-    shard. The partial half of a partial+final aggregation — only reduced
-    voxels move."""
-
-    def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                t0 = time.monotonic()
-                lvl, parent = row.level, row.level - 1
-                pz, py, px = parent_shapes[parent]
-                region3 = (
-                    slice(row.z0 * factor[0], min(row.z1 * factor[0], pz)),
-                    slice(row.y0 * factor[1], min(row.y1 * factor[1], py)),
-                    slice(row.x0 * factor[2], min(row.x1 * factor[2], px)),
-                )
-                block = _read_reduced_region(
-                    store, parent, region3, specs[parent], factor, mode
-                )
-                parent_nbytes = (
-                    int(
-                        np.prod(
-                            [s.stop - s.start for s in region3],
-                            dtype=np.int64,
-                        )
-                    )
-                    * block.dtype.itemsize
-                )
-                spec = specs[lvl]
-                blob = encode_shard(_pad_to_shard(block, spec), spec)
-                write_shard_file(
-                    store, lvl, (0, 0, row.iz, row.iy, row.ix), blob
-                )
-                out.append(
-                    (
-                        lvl,
-                        row.iz,
-                        row.iy,
-                        row.ix,
-                        parent_nbytes,
-                        len(blob),
-                        time.monotonic() - t0,
-                        zlib_crc32(np.ascontiguousarray(block)),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "level",
-                    "iz",
-                    "iy",
-                    "ix",
-                    "bytes_read",
-                    "bytes_written",
-                    "elapsed",
-                    "checksum",
-                    "error",
-                ],
-            )
-
-    return writer
-
-
 def stage_agg_exprs() -> list:
-    """The stage-stats aggregation, shared by every writer agg (single
-    and multi-tile) so the error-row protocol — ``n_shards`` counts
-    WRITTEN shards, quarantined rows tally in ``n_errors``, and the
-    locator-sample list honors the writers' blank-message cap (messages
-    past ``ERROR_SAMPLE_CAP`` per partition/tile arrive empty, keeping
-    executor agg buffers bounded on a fully corrupt source) — cannot
-    drift between call sites."""
+    """The stage-stats aggregation, shared by every writer agg (level-0
+    copy, fused cascade, level loop) so the error-row protocol —
+    ``n_shards`` counts WRITTEN shards, quarantined rows tally in
+    ``n_errors``, and the locator-sample list honors the writers'
+    blank-message cap (messages past ``ERROR_SAMPLE_CAP`` per
+    partition/tile arrive empty, keeping executor agg buffers bounded on
+    a fully corrupt source) — cannot drift between call sites."""
     is_err = F.col("error").isNotNull()
     return [
         F.count(F.when(~is_err, 1)).alias("n_shards"),
@@ -577,176 +358,54 @@ def stage_agg_exprs() -> list:
     ]
 
 
-def _run_stage(
-    spark: SparkSession,
-    tasks: DataFrame,
-    writer,
-    n_partitions: int,
-    partition_cols: tuple[str, ...] = ("superchunk",),
-) -> dict:
-    """One action: write shards, aggregate stats (see
-    ``stage_agg_exprs`` for the error-row accounting)."""
-    stats = (
-        tasks.repartition(n_partitions, *partition_cols)
-        .mapInPandas(writer, STATS_SCHEMA)
-        .agg(*stage_agg_exprs())
-        .collect()[0]
-    )
-    out = stats.asDict()
-    out["error_samples"] = [r.asDict() for r in out["error_samples"] or []]
+def stage_dict(row) -> dict:
+    """One collected ``stage_agg_exprs`` row as a plain dict."""
+    out = row.asDict()
+    out["error_samples"] = [e.asDict() for e in out["error_samples"] or []]
     return out
 
 
 def convert_to_zarr(
     spark: SparkSession, settings: ConvertJobSettings
 ) -> dict:
-    """Run the full conversion; returns aggregate stats per stage."""
-    src = open_source(settings.input_source)  # driver-side metadata probe
-    meta = src.meta
-    factor = settings.scale_factor
+    """Convert ``settings.input_source`` into the store at
+    ``settings.output_location``: a one-tile ``convert_tiles_to_zarr``
+    call. Returns per-stage stats — ``stages[0]`` is the source-read
+    stage (every level when translating), then one stage per computed
+    level."""
+    # Imported here: multitile builds on this module's kernels.
+    from .multitile import convert_tiles_to_zarr
 
-    if settings.translate_pyramid:
-        shapes = list(meta.shapes)
-    else:
-        shapes = [meta.shapes[0]]
-        for _ in range(1, settings.downsample_levels):
-            shapes.append(downsampled_shape(shapes[-1], factor))
-    n_levels = len(shapes)
-    specs = _level_specs(settings, shapes, meta.dtype)
+    # Driver-side probe. Unlike a multi-tile job, which skips an
+    # unopenable tile under on_corrupt="quarantine", a single-source
+    # conversion has nothing left to convert, so it raises here.
+    src = open_source(settings.input_source)
+    try:
+        shapes = _level_shapes(settings, src.meta)
+    finally:
+        src.close()
     store = settings.output_location
-
-    # Driver-side store creation BEFORE any action (idempotent-create
-    # analog; no worker races possible).
-    for lvl in range(n_levels):
-        write_array_metadata(store, lvl, specs[lvl])
-
-    n_parts = max(
-        spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
+    mt = convert_tiles_to_zarr(
+        spark, [(settings.input_source, store)], settings
     )
-    quarantine = settings.on_corrupt == "quarantine"
-    compute_pyramid = not settings.translate_pyramid and n_levels > 1
-    pyramid_plan = None
-    if compute_pyramid:
-        gm = cascade_group_multiple(
-            specs, factor, n_levels, settings.superchunk_multiple
-        )
-        # Quarantine mode forces the per-level loop: the fused cascade
-        # assembles deeper-level shards from level-0 partials, so a
-        # quarantined group would bake PARTIAL coverage into a written
-        # shard. The loop reads parents back from the store, where a
-        # missing (quarantined) shard already degrades to fill_value.
-        if quarantine:
-            gm = None
-        pyramid_plan = "level_loop" if gm is None else "fused_cascade"
-    if pyramid_plan == "fused_cascade":
-        # Fused cascade: the whole pyramid is ONE job — level-0 writes
-        # emit reduced partials for every level, one shuffle keyed by
-        # target shard assembles all deeper levels, and the parent
-        # level is never re-read from the store. ONE implementation
-        # serves both entry points: delegate to the multi-tile cascade
-        # with a single tile (imported locally — multitile builds on
-        # this module's helpers, so a top-level import would cycle).
-        # The metadata writes above are re-issued inside and are
-        # byte-identical (deterministic, idempotent sinks).
-        from .multitile import convert_tiles_to_zarr
-
-        mt = convert_tiles_to_zarr(
-            spark, [(settings.input_source, store)], settings
-        )
-        tile_stats = next(iter(mt["tiles"].values()))
-        stage0 = {
-            k: v for k, v in tile_stats.items() if k != "tile_path"
-        }
-        stage0["level"] = 0
-        stages = [stage0] + mt["downsample_stages"]
-    else:
-        # The task grid is only enumerated for the non-delegated paths
-        # (the cascade branch builds its own rows in multitile).
-        source_levels = (
-            range(n_levels) if settings.translate_pyramid else [0]
-        )
-        tasks = shard_tasks_df(
-            spark,
-            {lvl: shapes[lvl] for lvl in source_levels},
-            {lvl: specs[lvl].shard_shape[2:] for lvl in source_levels},
-            settings.superchunk_multiple,
-        )
-        stages = [
-            _run_stage(
-                spark,
-                tasks,
-                _make_copy_writer(
-                    settings.input_source, store, specs, quarantine
-                ),
-                n_parts,
-            )
-        ]
-        if compute_pyramid:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "computed pyramid falls back to the per-level store-read "
-                "loop (the cascade's window-aligned group would exceed "
-                "%d bytes for shard %s / factor %s / depth %d) — expect "
-                "~2.5x the fused-cascade wall time",
-                CASCADE_MAX_GROUP_BYTES,
-                specs[0].shard_shape[2:],
-                factor,
-                n_levels,
-            )
-            stages[0]["level"] = 0
-            # Sequential level loop: level k depends on k-1 (reference
-            # A2). Partition by shard coords, NOT superchunk — the
-            # downsample writer reads the store per-shard, so there is
-            # no source read to coalesce and superchunk grouping would
-            # only collapse parallelism at the small deep levels.
-            for lvl in range(1, n_levels):
-                ltasks = shard_tasks_df(
-                    spark,
-                    {lvl: shapes[lvl]},
-                    {lvl: specs[lvl].shard_shape[2:]},
-                    settings.superchunk_multiple,
-                )
-                stage = _run_stage(
-                    spark,
-                    ltasks,
-                    _make_downsample_writer(
-                        store,
-                        specs,
-                        {lvl - 1: shapes[lvl - 1]},
-                        factor,
-                        settings.downsample_mode,
-                    ),
-                    n_parts,
-                    partition_cols=("iz", "iy", "ix"),
-                )
-                stage["level"] = lvl
-                stages.append(stage)
-
-    # Driver-side metadata write, once, after all actions.
-    write_group_metadata(
-        store,
-        multiscales_metadata(
-            name=settings.input_source.rsplit("/", 1)[-1],
-            n_levels=n_levels,
-            voxel_zyx=meta.voxel_size,
-            origin_zyx=meta.origin,
-            factors_zyx=tuple(float(f) for f in factor),
-            method=settings.downsample_mode,
-        ),
-    )
-    src.close()
+    stage0 = {
+        k: v
+        for k, v in mt["tiles"][settings.input_source].items()
+        if k != "tile_path"
+    }
+    stage0["level"] = 0
+    stages = [stage0, *mt.get("downsample_stages", [])]
     result = {
-        "n_levels": n_levels,
+        "n_levels": len(shapes),
         "shapes": shapes,
         "stages": stages,
         "store": store,
     }
-    n_errors = sum(s.get("n_errors") or 0 for s in stages)
-    if quarantine or n_errors:
+    n_errors = sum(s["n_errors"] for s in stages)
+    if settings.on_corrupt == "quarantine" or n_errors:
         result["n_errors"] = n_errors
-    if pyramid_plan is not None:
-        # Explicit plan-choice record: which pyramid strategy ran, so a
-        # user on the slow path sees it in the stats, not just the log.
-        result["pyramid_plan"] = pyramid_plan
+    if not settings.translate_pyramid and len(shapes) > 1:
+        # Which pyramid strategy ran, so a user on the slow path sees it
+        # in the stats, not just the log.
+        result["pyramid_plan"] = mt["pyramid_plan"]
     return result

@@ -1,7 +1,8 @@
 """Fused pyramid cascade vs the per-level store-read loop.
 
-The cascade (zarrio/pipeline.py: `_run_cascade`) computes every pyramid
-level inside ONE Spark job — the level-0 writer reduces each source
+The cascade (zarrio/multitile.py: `_make_global_fused_writer` and
+`_make_global_assembler`, reached through `pipeline.convert_to_zarr` as a
+one-tile call) computes every pyramid level inside ONE Spark job — the level-0 writer reduces each source
 block recursively and ships compressed partials through a single
 shuffle. It must be a pure optimization: for any shape / mode / depth
 the resulting store must be BYTE-identical to the sequential
@@ -239,3 +240,54 @@ def test_multitile_cascade_matches_loop_bytes(spark, tmp_path, monkeypatch):
     loop = run("loop", force_loop=True)
     assert cascade == loop
     assert all(len(h) > 3 for h in cascade.values())
+
+
+STAGE_KEYS = {
+    "n_shards",
+    "bytes_read",
+    "bytes_written",
+    "task_seconds",
+    "n_errors",
+    "error_samples",
+}
+
+
+@pytest.mark.parametrize("plan", ["translate", "fused_cascade", "level_loop"])
+def test_stage_dicts_share_one_key_set(spark, tmp_path, monkeypatch, plan):
+    """Every stage dict carries the same stats keys whichever plan ran,
+    through both entry points: the level-0 copy, the cascade's deeper
+    levels and the level loop's all come from one aggregation."""
+    import aind_exaspim_data_transformation_spark.zarrio.multitile as mt
+
+    if plan == "level_loop":
+        monkeypatch.setattr(
+            pipeline, "cascade_group_multiple", lambda *a, **k: None
+        )
+    translate = plan == "translate"
+    settings = ConvertJobSettings(
+        input_source="synth://96,80,64,3",
+        output_location=str(tmp_path / "one.zarr"),
+        chunk_shape=(16, 16, 16),
+        shard_shape=(32, 32, 32),
+        translate_pyramid=translate,
+        downsample_levels=3,
+    )
+    res = pipeline.convert_to_zarr(spark, settings)
+    levels = [0] if translate else [0, 1, 2]
+    assert [s["level"] for s in res["stages"]] == levels
+    for s in res["stages"]:
+        assert set(s) == STAGE_KEYS | {"level"}, s
+        assert s["n_errors"] == 0 and s["error_samples"] == []
+    assert res.get("pyramid_plan") == (None if translate else plan)
+
+    multi = mt.convert_tiles_to_zarr(
+        spark,
+        [(settings.input_source, str(tmp_path / "multi.zarr"))],
+        settings,
+    )
+    for t in multi["tiles"].values():
+        assert set(t) == STAGE_KEYS | {"tile_path"}, t
+    for s in multi.get("downsample_stages", []):
+        assert set(s) == STAGE_KEYS | {"level"}, s
+    assert len(multi.get("downsample_stages", [])) == (0 if translate else 2)
+    assert multi.get("pyramid_plan") == (None if translate else plan)

@@ -8,7 +8,7 @@ launch a speculative copy on the same host as the original, so
 ``local[*]``/``local-cluster`` can never fire one — the speculation
 checker thread isn't even started when ``isLocal``), a straggler
 injected into one writer task via the env-gated seam in
-``zarrio.pipeline._test_straggler_hook``, and assertions that
+``zarrio.multitile._test_straggler_hook``, and assertions that
 
 1. a speculative DUPLICATE attempt of the straggler partition actually
    ran (attempt-marker files record every (partition, attempt) the

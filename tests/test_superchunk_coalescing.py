@@ -8,7 +8,6 @@ import pandas as pd
 import pytest
 
 from aind_exaspim_data_transformation_spark.config import ConvertJobSettings
-from aind_exaspim_data_transformation_spark.plans.grid import shard_tasks_df
 from aind_exaspim_data_transformation_spark.sources.tensor import (
     NpyPyramidSource,
     write_npy_pyramid,
@@ -16,11 +15,9 @@ from aind_exaspim_data_transformation_spark.sources.tensor import (
 from aind_exaspim_data_transformation_spark.zarrio import multitile, pipeline
 from aind_exaspim_data_transformation_spark.zarrio.format import (
     read_array_region,
-    write_array_metadata,
 )
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     _level_specs,
-    _make_copy_writer,
     convert_to_zarr,
     iter_coalesced_reads,
 )
@@ -49,13 +46,18 @@ def _settings(src, store, shard=(16, 16, 16), sm=(2, 2, 2)):
     )
 
 
-def _tasks_pdf(spark, shape, shard, sm):
-    return (
-        shard_tasks_df(spark, {0: shape}, {0: shard}, sm)
-        .toPandas()
+def _global_tasks(spark, settings):
+    """The tile's multitile task rows (creating its store) and level-0
+    spec, rows ordered so each superchunk group is contiguous."""
+    tasks, specs, _ = multitile.build_global_tasks(
+        spark, [(settings.input_source, settings.output_location)], settings
+    )
+    pdf = (
+        tasks.toPandas()
         .sort_values(["superchunk", "iz", "iy", "ix"])
         .reset_index(drop=True)
     )
+    return pdf, specs[settings.input_source][0]
 
 
 @pytest.fixture()
@@ -74,13 +76,10 @@ def counted(tmp_path, monkeypatch):
 
 def test_one_read_per_superchunk(spark, counted):
     arr, src, store, src_path = counted
-    settings = _settings(src_path, store)
-    specs = _level_specs(settings, [arr.shape], "uint16")
-    write_array_metadata(store, 0, specs[0])
-    pdf = _tasks_pdf(spark, arr.shape, (16, 16, 16), (2, 2, 2))
+    pdf, spec0 = _global_tasks(spark, _settings(src_path, store))
     assert len(pdf) == 64  # (64/16)^3 shards
 
-    writer = _make_copy_writer(src_path, store, specs)
+    writer = multitile._GlobalWriter()
     stats = pd.concat(list(writer(iter([pdf]))))
 
     # 64 shards in 8 superchunks of 2x2x2 shards -> exactly 8 source
@@ -94,7 +93,7 @@ def test_one_read_per_superchunk(spark, counted):
     got = read_array_region(
         store, 0,
         (slice(0, 1), slice(0, 1), slice(0, 64), slice(0, 64), slice(0, 64)),
-        specs[0],
+        spec0,
     )[0, 0]
     np.testing.assert_array_equal(got, arr)
 
@@ -110,22 +109,17 @@ def test_edge_clamped_superchunks_still_coalesce(spark, tmp_path):
     import unittest.mock as mock
 
     store = str(tmp_path / "edge.zarr")
-    settings = _settings(src_path, store)
-    specs = _level_specs(settings, [arr.shape], "uint16")
-    write_array_metadata(store, 0, specs[0])
-    pdf = _tasks_pdf(spark, arr.shape, (16, 16, 16), (2, 2, 2))
-    assert len(pdf) == 27  # ceil-div grid 3x3x3
-
-    with mock.patch.object(pipeline, "open_source", lambda p: src):
-        writer = _make_copy_writer(src_path, store, specs)
-        list(writer(iter([pdf])))
+    with mock.patch.object(multitile, "open_source", lambda p: src):
+        pdf, spec0 = _global_tasks(spark, _settings(src_path, store))
+        assert len(pdf) == 27  # ceil-div grid 3x3x3
+        list(multitile._GlobalWriter()(iter([pdf])))
 
     # grid 3x3x3 with multiple 2 -> 2x2x2 = 8 superchunk groups
     assert len(src.reads) == 8
     got = read_array_region(
         store, 0,
         (slice(0, 1), slice(0, 1), slice(0, 48), slice(0, 40), slice(0, 33)),
-        specs[0],
+        spec0,
     )[0, 0]
     np.testing.assert_array_equal(got, arr)
 

@@ -1,17 +1,16 @@
 """Assemble SCALE_r{N}.json from this round's sweep logs.
 
-Round-agnostic successor to ``assemble_scale_r13.py`` with the
-round-13 advice hygiene fixes: explicit ``is not None`` checks (a
-legitimate 0.0 sec is no longer conflated with missing), file handles
-closed via ``with``, and malformed rows carrying ``secs: []`` but a
-stale scalar ``sec`` no longer fall through to the single-sample
-branch. Per (query, sf) the headline ``sec`` is the MIN over every
-sample in every run (independent JVMs, multi-pass — the host-noise
-protocol's estimator); all samples + host-speed probes are archived
-per row. Ratios are reported for every consecutive SF pair, and the
-HEADLINE ratio summary uses sf30 as the base when present (round-13
-verdict: sf10 is too small a denominator for sub-15 s rows — fixed
-costs manufacture fake superlinearity).
+Round-agnostic: one assembler for every round's sweep logs. Explicit
+``is not None`` checks (a legitimate 0.0 sec is never conflated with
+missing), file handles closed via ``with``, and malformed rows carrying
+``secs: []`` but a stale scalar ``sec`` never fall through to the
+single-sample branch. Per (query, sf) the headline ``sec`` is the MIN
+over every sample in every run (independent JVMs, multi-pass — the
+host-noise protocol's estimator); all samples + host-speed probes are
+archived per row. Ratios are reported for every consecutive SF pair,
+and the HEADLINE ratio summary uses sf30 as the base when present
+(round-13 verdict: sf10 is too small a denominator for sub-15 s rows —
+fixed costs manufacture fake superlinearity).
 
     python tools/assemble_scale.py /tmp/sweep_sf30*.log \
         /tmp/sweep_sf100*.log > SCALE_r14.json
