@@ -10,7 +10,6 @@ similarity search, multimodal columns, text analysis), all designed for
 Layout:
 - ``session``    SparkSession builder with scale-oriented defaults
 - ``config``     job-settings model (port of reference models.py semantics)
-- ``plans``      grid / shape planning as DataFrame expressions
 - ``sources``    table loaders, Imaris-style tensor sources
 - ``operators``  downsample kernel, dedup, similarity, text, multimodal
 - ``zarrio``     pure-Python Zarr v3 sharded store writer + OME-NGFF metadata

@@ -2,28 +2,25 @@
 
 CRC32C is required by the v3 `sharding_indexed` index codec chain
 (mirrors the reference's index spec, compress/imaris_to_zarr.py:237).
-Implemented as a table-driven numpy kernel — no C extension needed, and
-fast enough for 16-byte-per-chunk index payloads (the only thing it
-checksums here).
+Implemented as a byte-at-a-time table loop over Python ints — no C
+extension needed, and fast enough for the 16-byte-per-chunk index
+payloads (the only thing it checksums here).
 """
 
 from __future__ import annotations
 
 import gzip as _gzip
-import zlib as _zlib
-
-import numpy as np
 
 _CRC32C_POLY = 0x82F63B78  # reflected Castagnoli polynomial
 
 
-def _make_table() -> np.ndarray:
-    table = np.empty(256, dtype=np.uint32)
+def _make_table() -> list[int]:
+    table = []
     for i in range(256):
         crc = i
         for _ in range(8):
             crc = (crc >> 1) ^ (_CRC32C_POLY if crc & 1 else 0)
-        table[i] = crc
+        table.append(crc)
     return table
 
 
@@ -32,12 +29,11 @@ _TABLE = _make_table()
 
 def crc32c(data: bytes, value: int = 0) -> int:
     """CRC-32C (Castagnoli) of ``data``; matches the crc32c library."""
-    crc = np.uint32(value ^ 0xFFFFFFFF)
-    buf = np.frombuffer(data, dtype=np.uint8)
+    crc = value ^ 0xFFFFFFFF
     table = _TABLE
-    for b in buf:
-        crc = table[(crc ^ b) & 0xFF] ^ (crc >> np.uint32(8))
-    return int(crc ^ np.uint32(0xFFFFFFFF))
+    for b in bytes(data):
+        crc = table[(crc ^ b) & 0xFF] ^ (crc >> 8)
+    return crc ^ 0xFFFFFFFF
 
 
 # zstd backend selection. Determinism scope: frames are deterministic per
@@ -126,11 +122,3 @@ def decompress(
     if codec == "none":
         return data
     raise ValueError(f"unknown codec {codec!r}")
-
-
-def zlib_crc32(data) -> int:
-    """Plain CRC32 (for quick content fingerprints in stats rows).
-    Accepts any C-contiguous buffer — pass ndarrays directly instead
-    of .tobytes(), which would copy the whole block first (a 512^3
-    uint16 shard is 256 MB; the checksum path is per-shard-write)."""
-    return _zlib.crc32(data) & 0xFFFFFFFF

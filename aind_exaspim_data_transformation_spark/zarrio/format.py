@@ -123,6 +123,22 @@ def clamp_shard_and_chunk(
     return tuple(shard), chunk
 
 
+def shard_grid(
+    shape_zyx: tuple[int, int, int], shard_zyx: tuple[int, int, int]
+):
+    """Every shard of a 3-D array in row-major order, as
+    ``(iz, iy, ix, z0, z1, y0, y1, x0, x1)`` with the last shard on each
+    axis clamped to the array edge — the one grid every conversion stage
+    enumerates (reference compute_shard_grid / shard_index_to_slices /
+    enumerate_shard_indices, compress/imaris_to_zarr.py:277-372)."""
+    counts = [math.ceil(d / s) for d, s in zip(shape_zyx, shard_zyx)]
+    for idx in product(*(range(n) for n in counts)):
+        bounds: list[int] = []
+        for i, s, d in zip(idx, shard_zyx, shape_zyx):
+            bounds += (i * s, min((i + 1) * s, d))
+        yield (*idx, *bounds)
+
+
 # --------------------------------------------------------------------------
 # Shard binary encode / decode
 # --------------------------------------------------------------------------

@@ -14,7 +14,6 @@ trivially plannable; payloads never enter the DataFrame.
 
 from __future__ import annotations
 
-import math
 import time
 from collections.abc import Iterator
 
@@ -26,20 +25,19 @@ from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
 from ..sources.tensor import open_source
-from .codecs import zlib_crc32
 from .format import (
     ShardSpec,
-    encode_shard,
+    shard_grid,
     write_array_metadata,
     write_group_metadata,
-    write_shard_file,
 )
 from .metadata import multiscales_metadata
 from .pipeline import (
     ERROR_SAMPLE_CAP,
+    _group_bbox,
     _level_shapes,
     _level_specs,
-    _pad_to_shard,
+    _put_shard,
     _read_reduced_region,
     _split_rows,
     _unpack_payload,
@@ -48,6 +46,10 @@ from .pipeline import (
     stage_dict,
 )
 
+#: One self-describing row per shard write, for every stage: the
+#: source-read stage (level 0, or every level when translating) and each
+#: level of the store-read level loop. Rows are store-routed, so ONE
+#: Spark action covers a stage across EVERY tile.
 TASK_SCHEMA = (
     "tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
@@ -61,25 +63,9 @@ TASK_SCHEMA = (
 
 STATS_SCHEMA = (
     "tile_path string, level int, iz int, iy int, ix int, "
-    "bytes_read long, bytes_written long, elapsed double, checksum long, "
-    "error string"
+    "bytes_read long, bytes_written long, elapsed double, error string"
 )
 STATS_COLS = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
-
-#: Self-describing downsample task rows: store-routed so ONE Spark action
-#: covers level k of EVERY tile (job count per level is independent of the
-#: tile count). ``parent_*`` is the previous level's logical shape.
-DS_TASK_SCHEMA = (
-    "store string, level int, iz int, iy int, ix int, "
-    "z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, "
-    "shard_z int, shard_y int, shard_x int, "
-    "chunk_z int, chunk_y int, chunk_x int, "
-    "shape_z int, shape_y int, shape_x int, "
-    "parent_z int, parent_y int, parent_x int, "
-    "dtype string, codec string, codec_level int, transpose string, "
-    "superchunk string"
-)
-
 
 #: Cascade rows for the fused multi-tile computed pyramid: 'stats' rows
 #: are per-shard write records (tile_path set so level-0 stats keep their
@@ -88,11 +74,13 @@ DS_TASK_SCHEMA = (
 MT_CASCADE_SCHEMA = (
     "kind string, tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
-    "bytes_read long, bytes_written long, elapsed double, checksum long, "
+    "bytes_read long, bytes_written long, elapsed double, "
     "oz int, oy int, ox int, sz int, sy int, sx int, payload binary"
 )
 
 MT_CASCADE_COLS = [f.split()[0] for f in MT_CASCADE_SCHEMA.split(", ")]
+#: The null part columns (oz..payload) of a 'stats' cascade row.
+_NO_PART = (None,) * 7
 
 
 def _row_spec(row) -> ShardSpec:
@@ -175,33 +163,18 @@ def _make_global_fused_writer(
         if all_rows is not None:
             for _, grp in all_rows.groupby("superchunk", sort=False):
                 rows = list(grp.itertuples(index=False))
-                b0 = (
-                    min(r.z0 for r in rows),
-                    min(r.y0 for r in rows),
-                    min(r.x0 for r in rows),
-                )
-                b1 = (
-                    max(r.z1 for r in rows),
-                    max(r.y1 for r in rows),
-                    max(r.x1 for r in rows),
-                )
-                bbox_vol = (
-                    (b1[0] - b0[0]) * (b1[1] - b0[1]) * (b1[2] - b0[2])
-                )
-                rows_vol = sum(
-                    (r.z1 - r.z0) * (r.y1 - r.y0) * (r.x1 - r.x0)
-                    for r in rows
-                )
-                if bbox_vol != rows_vol:
+                box = _group_bbox(rows)
+                if box is None:
                     raise RuntimeError(
                         "fused cascade saw an incomplete superchunk "
-                        f"group ({len(rows)} rows, bbox {b0}..{b1}) — "
-                        "compute-pyramid runs enumerate full groups, so "
-                        "this indicates a partitioning bug"
+                        f"group ({len(rows)} rows, key "
+                        f"{rows[0].superchunk!r}) — compute-pyramid runs "
+                        "enumerate full groups, so this indicates a "
+                        "partitioning bug"
                     )
+                b0 = box[0::2]
                 t0 = time.monotonic()
-                region = read_fn(rows[0], b0[0], b1[0], b0[1], b1[1],
-                                 b0[2], b1[2])
+                region = read_fn(rows[0], *box)
                 read_sec = (time.monotonic() - t0) / len(rows)
                 out = []
                 for row in rows:
@@ -211,10 +184,9 @@ def _make_global_fused_writer(
                         row.y0 - b0[1] : row.y1 - b0[1],
                         row.x0 - b0[2] : row.x1 - b0[2],
                     ]
-                    spec = _row_spec(row)
-                    blob = encode_shard(_pad_to_shard(block, spec), spec)
-                    write_shard_file(
-                        row.store, 0, (0, 0, row.iz, row.iy, row.ix), blob
+                    nbytes = _put_shard(
+                        row.store, 0, row.iz, row.iy, row.ix, block,
+                        _row_spec(row),
                     )
                     out.append(
                         (
@@ -226,16 +198,9 @@ def _make_global_fused_writer(
                             row.iy,
                             row.ix,
                             block.nbytes,
-                            len(blob),
+                            nbytes,
                             read_sec + time.monotonic() - t0,
-                            zlib_crc32(np.ascontiguousarray(block)),
-                            None,
-                            None,
-                            None,
-                            None,
-                            None,
-                            None,
-                            None,
+                            *_NO_PART,
                         )
                     )
                 red = region
@@ -261,7 +226,6 @@ def _make_global_fused_writer(
                                 None,
                                 store,
                                 *part[:4],
-                                None,
                                 None,
                                 None,
                                 None,
@@ -320,8 +284,7 @@ def _make_global_assembler():
             nread += (
                 int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize
             )
-        blob = encode_shard(_pad_to_shard(block, spec), spec)
-        write_shard_file(store, lvl, (0, 0, iz, iy, ix), blob)
+        nbytes = _put_shard(store, lvl, iz, iy, ix, block, spec)
         return pd.DataFrame(
             [
                 (
@@ -333,22 +296,47 @@ def _make_global_assembler():
                     iy,
                     ix,
                     nread,
-                    len(blob),
+                    nbytes,
                     time.monotonic() - t0,
-                    zlib_crc32(np.ascontiguousarray(block)),
-                    None,
-                    None,
-                    None,
-                    None,
-                    None,
-                    None,
-                    None,
+                    *_NO_PART,
                 )
             ],
             columns=MT_CASCADE_COLS,
         )
 
     return assemble
+
+
+def _task_rows(
+    src_path: str,
+    store: str,
+    lvl: int,
+    spec: ShardSpec,
+    settings: ConvertJobSettings,
+    key_m: tuple[int, int, int],
+) -> list[tuple]:
+    """One tile's level-``lvl`` TASK_SCHEMA rows, one per shard of
+    ``format.shard_grid``; the superchunk key groups ``key_m`` shards per
+    axis."""
+    shard, chunk = spec.shard_shape[2:], spec.chunk_shape[2:]
+    return [
+        (
+            src_path,
+            store,
+            lvl,
+            *cell,
+            *shard,
+            *chunk,
+            *spec.shape[2:],
+            spec.dtype,
+            settings.codec,
+            settings.codec_level,
+            settings.transpose_order or "",
+            f"{src_path},{lvl},{cell[0] // key_m[0]},"
+            f"{cell[1] // key_m[1]},{cell[2] // key_m[2]}",
+        )
+        for cell in shard_grid(spec.shape[2:], shard)
+    ]
 
 
 def build_global_tasks(
@@ -411,42 +399,10 @@ def build_global_tasks(
         for lvl in range(len(shapes)):
             write_array_metadata(store, lvl, specs[lvl])
         source_levels = len(shapes) if settings.translate_pyramid else 1
-        for lvl, shape in list(enumerate(shapes))[:source_levels]:
-            shard = specs[lvl].shard_shape[2:]
-            chunk = specs[lvl].chunk_shape[2:]
-            gz, gy, gx = (
-                math.ceil(shape[0] / shard[0]),
-                math.ceil(shape[1] / shard[1]),
-                math.ceil(shape[2] / shard[2]),
+        for lvl in range(source_levels):
+            rows += _task_rows(
+                src_path, store, lvl, specs[lvl], settings, key_m
             )
-            for iz in range(gz):
-                for iy in range(gy):
-                    for ix in range(gx):
-                        rows.append(
-                            (
-                                src_path,
-                                store,
-                                lvl,
-                                iz,
-                                iy,
-                                ix,
-                                iz * shard[0],
-                                min((iz + 1) * shard[0], shape[0]),
-                                iy * shard[1],
-                                min((iy + 1) * shard[1], shape[1]),
-                                ix * shard[2],
-                                min((ix + 1) * shard[2], shape[2]),
-                                *shard,
-                                *chunk,
-                                *shape,
-                                src.meta.dtype,
-                                settings.codec,
-                                settings.codec_level,
-                                settings.transpose_order or "",
-                                f"{src_path},{lvl},{iz // key_m[0]},"
-                                f"{iy // key_m[1]},{ix // key_m[2]}",
-                            )
-                        )
         write_group_metadata(
             store,
             multiscales_metadata(
@@ -536,11 +492,11 @@ class _GlobalWriter:
             src = sources[row.tile_path]
             if src is None:  # cached open failure for this tile
                 return None
-            if not quarantine:
-                return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
             try:
                 return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
             except Exception as exc:  # noqa: BLE001 — quarantine
+                if not quarantine:
+                    raise
                 last_err[row.tile_path] = (
                     f"read: {type(exc).__name__}: {exc}"
                 )
@@ -573,16 +529,14 @@ class _GlobalWriter:
                             0,
                             0,
                             read_sec,
-                            None,
                             msg,
                         )
                     )
                     continue
                 t0 = time.monotonic()
-                spec = _row_spec(row)
-                blob = encode_shard(_pad_to_shard(block, spec), spec)
-                write_shard_file(
-                    row.store, row.level, (0, 0, row.iz, row.iy, row.ix), blob
+                nbytes = _put_shard(
+                    row.store, row.level, row.iz, row.iy, row.ix, block,
+                    _row_spec(row),
                 )
                 out.append(
                     (
@@ -592,9 +546,8 @@ class _GlobalWriter:
                         row.iy,
                         row.ix,
                         block.nbytes,
-                        len(blob),
+                        nbytes,
                         read_sec + time.monotonic() - t0,
-                        zlib_crc32(np.ascontiguousarray(block)),
                         None,
                     )
                 )
@@ -730,7 +683,7 @@ def convert_tiles_to_zarr(
                     "the fused-cascade wall time"
                 )
             stages = _run_downsample_levels(
-                spark, tiles, all_specs, settings
+                spark, tiles, all_specs, settings, n_parts
             )
             plan = "level_loop"
     result = {
@@ -754,68 +707,14 @@ def convert_tiles_to_zarr(
     return result
 
 
-def _build_downsample_tasks(
-    tiles: list[tuple[str, str]],
-    all_specs: dict[str, dict[int, ShardSpec]],
-    settings: ConvertJobSettings,
-    lvl: int,
-) -> list[tuple]:
-    """Level-``lvl`` task rows across every tile (DS_TASK_SCHEMA)."""
-    sm = settings.superchunk_multiple
-    rows: list[tuple] = []
-    for _src_path, store in tiles:
-        specs = all_specs.get(_src_path)
-        if specs is None:  # tile quarantined at the driver probe
-            continue
-        if lvl not in specs:
-            continue
-        shape = specs[lvl].shape[2:]
-        parent = specs[lvl - 1].shape[2:]
-        shard = specs[lvl].shard_shape[2:]
-        chunk = specs[lvl].chunk_shape[2:]
-        gz, gy, gx = (
-            math.ceil(shape[0] / shard[0]),
-            math.ceil(shape[1] / shard[1]),
-            math.ceil(shape[2] / shard[2]),
-        )
-        for iz in range(gz):
-            for iy in range(gy):
-                for ix in range(gx):
-                    rows.append(
-                        (
-                            store,
-                            lvl,
-                            iz,
-                            iy,
-                            ix,
-                            iz * shard[0],
-                            min((iz + 1) * shard[0], shape[0]),
-                            iy * shard[1],
-                            min((iy + 1) * shard[1], shape[1]),
-                            ix * shard[2],
-                            min((ix + 1) * shard[2], shape[2]),
-                            *shard,
-                            *chunk,
-                            *shape,
-                            *parent,
-                            specs[lvl].dtype,
-                            settings.codec,
-                            settings.codec_level,
-                            settings.transpose_order or "",
-                            f"{store},{lvl},{iz // sm[0]},"
-                            f"{iy // sm[1]},{ix // sm[2]}",
-                        )
-                    )
-    return rows
-
-
 def _make_global_downsample_writer(
     factor: tuple[int, int, int], mode: str
 ):
     """Store-routed downsample writer: reads the factor-scaled parent
     region from each row's own store, block-reduces, writes the shard.
-    Parent specs are read once per (store, level) per partition from the
-    store's own zarr.json — no spec state shipped through the plan."""
+    Parent specs (and with them the parent's logical shape) are read
+    once per (store, level) per partition from the store's own
+    zarr.json — no spec state shipped through the plan."""
     from .format import read_array_metadata
 
     def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -831,19 +730,14 @@ def _make_global_downsample_writer(
                     pspec = pspecs[key] = read_array_metadata(
                         row.store, parent
                     )
-                region3 = (
-                    slice(
-                        row.z0 * factor[0],
-                        min(row.z1 * factor[0], row.parent_z),
-                    ),
-                    slice(
-                        row.y0 * factor[1],
-                        min(row.y1 * factor[1], row.parent_y),
-                    ),
-                    slice(
-                        row.x0 * factor[2],
-                        min(row.x1 * factor[2], row.parent_x),
-                    ),
+                region3 = tuple(
+                    slice(a * f, min(b * f, d))
+                    for a, b, f, d in zip(
+                        (row.z0, row.y0, row.x0),
+                        (row.z1, row.y1, row.x1),
+                        factor,
+                        pspec.shape[2:],
+                    )
                 )
                 # Shard-local reduce-then-assemble: only reduced voxels
                 # are buffered.
@@ -859,22 +753,20 @@ def _make_global_downsample_writer(
                     )
                     * block.dtype.itemsize
                 )
-                spec = _row_spec(row)
-                blob = encode_shard(_pad_to_shard(block, spec), spec)
-                write_shard_file(
-                    row.store, row.level, (0, 0, row.iz, row.iy, row.ix), blob
+                nbytes = _put_shard(
+                    row.store, row.level, row.iz, row.iy, row.ix, block,
+                    _row_spec(row),
                 )
                 out.append(
                     (
-                        row.store,
+                        row.tile_path,
                         row.level,
                         row.iz,
                         row.iy,
                         row.ix,
                         parent_nbytes,
-                        len(blob),
+                        nbytes,
                         time.monotonic() - t0,
-                        zlib_crc32(np.ascontiguousarray(block)),
                         None,
                     )
                 )
@@ -888,12 +780,10 @@ def _run_downsample_levels(
     tiles: list[tuple[str, str]],
     all_specs: dict[str, dict[int, ShardSpec]],
     settings: ConvertJobSettings,
+    n_parts: int,
 ) -> list[dict]:
     """One Spark action per pyramid level, all tiles unioned. Returns one
     stats dict per level (NOT per tile-level pair)."""
-    n_parts = max(
-        spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
-    )
     n_levels = max(
         (len(specs) for specs in all_specs.values()), default=0
     )
@@ -902,8 +792,17 @@ def _run_downsample_levels(
     )
     stages: list[dict] = []
     for lvl in range(1, n_levels):
-        rows = _build_downsample_tasks(tiles, all_specs, settings, lvl)
-        tasks = spark.createDataFrame(rows, DS_TASK_SCHEMA)
+        rows: list[tuple] = []
+        for src_path, store in tiles:
+            # Absent for a tile quarantined at the driver probe, or one
+            # with fewer levels.
+            spec = all_specs.get(src_path, {}).get(lvl)
+            if spec is not None:
+                rows += _task_rows(
+                    src_path, store, lvl, spec, settings,
+                    settings.superchunk_multiple,
+                )
+        tasks = spark.createDataFrame(rows, TASK_SCHEMA)
         # Shard-coord partitioning: the downsample writer reads the
         # STORE, not the source, so there is nothing for superchunk
         # grouping to coalesce — it would only collapse parallelism at

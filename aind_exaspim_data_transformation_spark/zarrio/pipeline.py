@@ -9,11 +9,13 @@ one-tile call into that plan — the reference's ``partition_mode='file'``
 unit of work — reshaped into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
-writers share: coalesced source reads (``iter_coalesced_reads``), the
-cascade's group-alignment gate and partial routing
-(``cascade_group_multiple``, ``_split_rows``), the reduce-then-assemble
-parent read of the level loop (``_read_reduced_region``), per-level
-shapes and specs, and the stage-stats aggregation (``stage_agg_exprs``).
+writers share: the superchunk group bounding box and coalesced source
+reads (``_group_bbox``, ``iter_coalesced_reads``), the one pad, encode
+and write step every writer ends in (``_put_shard``), the cascade's
+group-alignment gate and partial routing (``cascade_group_multiple``,
+``_split_rows``), the reduce-then-assemble parent read of the level loop
+(``_read_reduced_region``), per-level shapes and specs, and the
+stage-stats aggregation (``stage_agg_exprs``).
 
 Retry safety: shard writes are idempotent (same key, same bytes, atomic
 rename), so Spark task retries and speculative execution are harmless —
@@ -39,8 +41,10 @@ from .format import (
     ShardSpec,
     clamp_shard_and_chunk,
     decode_shard,
+    encode_shard,
     read_array_region,
     shard_path,
+    write_shard_file,
 )
 from .kvstore import kv_get
 
@@ -151,15 +155,44 @@ def _level_specs(
     return specs
 
 
-def _pad_to_shard(block: np.ndarray, spec: ShardSpec) -> np.ndarray:
-    """Pad an edge block to the full 5-D shard shape (v3 regular grid)."""
+def _put_shard(
+    store: str,
+    level: int,
+    iz: int,
+    iy: int,
+    ix: int,
+    block: np.ndarray,
+    spec: ShardSpec,
+) -> int:
+    """Pad an edge block to the full 5-D shard shape (v3 regular grid),
+    encode it and write shard (iz, iy, ix); returns the bytes written."""
     target = spec.shard_shape[2:]
-    if block.shape == target:
-        out = block
-    else:
-        out = np.zeros(target, dtype=block.dtype)
-        out[: block.shape[0], : block.shape[1], : block.shape[2]] = block
-    return out[None, None, ...]
+    if block.shape != target:
+        padded = np.zeros(target, dtype=block.dtype)
+        padded[: block.shape[0], : block.shape[1], : block.shape[2]] = block
+        block = padded
+    blob = encode_shard(block[None, None, ...], spec)
+    write_shard_file(store, level, (0, 0, iz, iy, ix), blob)
+    return len(blob)
+
+
+def _group_bbox(rows) -> tuple[int, int, int, int, int, int] | None:
+    """``(z0, z1, y0, y1, x0, x1)`` bounding box of a superchunk group's
+    task rows, or None when the rows do not tile it exactly (checked as
+    volume equality)."""
+    box = (
+        min(r.z0 for r in rows),
+        max(r.z1 for r in rows),
+        min(r.y0 for r in rows),
+        max(r.y1 for r in rows),
+        min(r.x0 for r in rows),
+        max(r.x1 for r in rows),
+    )
+    box_vol = (box[1] - box[0]) * (box[3] - box[2]) * (box[5] - box[4])
+    rows_vol = sum(
+        (r.z1 - r.z0) * (r.y1 - r.y0) * (r.x1 - r.x0) for r in rows
+    )
+    return box if box_vol == rows_vol else None
 
 
 def iter_coalesced_reads(pdf: pd.DataFrame, read_fn):
@@ -186,39 +219,29 @@ def iter_coalesced_reads(pdf: pd.DataFrame, read_fn):
     """
     for _, grp in pdf.groupby("superchunk", sort=False):
         rows = list(grp.itertuples(index=False))
-        if len(rows) > 1:
-            bz0 = min(r.z0 for r in rows)
-            bz1 = max(r.z1 for r in rows)
-            by0 = min(r.y0 for r in rows)
-            by1 = max(r.y1 for r in rows)
-            bx0 = min(r.x0 for r in rows)
-            bx1 = max(r.x1 for r in rows)
-            bbox_vol = (bz1 - bz0) * (by1 - by0) * (bx1 - bx0)
-            rows_vol = sum(
-                (r.z1 - r.z0) * (r.y1 - r.y0) * (r.x1 - r.x0) for r in rows
-            )
-            if bbox_vol == rows_vol:
-                t0 = time.monotonic()
-                region = read_fn(rows[0], bz0, bz1, by0, by1, bx0, bx1)
-                per_row = (time.monotonic() - t0) / len(rows)
-                if region is not None:
-                    for r in rows:
-                        yield (
-                            r,
-                            region[
-                                r.z0 - bz0 : r.z1 - bz0,
-                                r.y0 - by0 : r.y1 - by0,
-                                r.x0 - bx0 : r.x1 - bx0,
-                            ],
-                            per_row,
-                        )
-                    continue
-                # Quarantined group read (read_fn returned None, see
-                # multitile._GlobalWriter): the corruption may touch only part
-                # of the bounding box, so fall through to PER-ROW reads
-                # — only shards whose own voxels are broken quarantine,
-                # keeping the "every healthy byte converts" contract at
-                # shard granularity, not superchunk granularity.
+        box = _group_bbox(rows) if len(rows) > 1 else None
+        if box is not None:
+            t0 = time.monotonic()
+            region = read_fn(rows[0], *box)
+            per_row = (time.monotonic() - t0) / len(rows)
+            if region is not None:
+                for r in rows:
+                    yield (
+                        r,
+                        region[
+                            r.z0 - box[0] : r.z1 - box[0],
+                            r.y0 - box[2] : r.y1 - box[2],
+                            r.x0 - box[4] : r.x1 - box[4],
+                        ],
+                        per_row,
+                    )
+                continue
+            # Quarantined group read (read_fn returned None, see
+            # multitile._GlobalWriter): the corruption may touch only
+            # part of the bounding box, so fall through to PER-ROW reads
+            # — only shards whose own voxels are broken quarantine,
+            # keeping the "every healthy byte converts" contract at
+            # shard granularity, not superchunk granularity.
         for r in rows:
             t0 = time.monotonic()
             block = read_fn(r, r.z0, r.z1, r.y0, r.y1, r.x0, r.x1)

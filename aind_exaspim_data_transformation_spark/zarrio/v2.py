@@ -15,7 +15,6 @@ Any zarr-python 2.x reader opens these stores.
 from __future__ import annotations
 
 import json
-import os
 import time
 import zlib
 from collections.abc import Iterator
@@ -28,8 +27,9 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
-from ..plans.grid import shard_tasks_df
 from ..sources.tensor import open_source
+from .format import shard_grid
+from .kvstore import kv_get, kv_join, kv_put
 from .metadata import multiscales_metadata
 
 
@@ -62,19 +62,19 @@ def write_v2_array_metadata(store: str, level: int, spec: V2Spec) -> str:
         "order": "C",
         "filters": None,
     }
-    path = os.path.join(store, str(level), ".zarray")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(meta, f, indent=2)
-    return path
+    path = kv_join(store, str(level), ".zarray")
+    return kv_put(path, json.dumps(meta, indent=2).encode("utf-8"))
 
 
 def write_v2_group(store: str, attributes: dict) -> None:
-    os.makedirs(store, exist_ok=True)
-    with open(os.path.join(store, ".zgroup"), "w") as f:
-        json.dump({"zarr_format": 2}, f)
-    with open(os.path.join(store, ".zattrs"), "w") as f:
-        json.dump(attributes, f, indent=2)
+    kv_put(
+        kv_join(store, ".zgroup"),
+        json.dumps({"zarr_format": 2}).encode("utf-8"),
+    )
+    kv_put(
+        kv_join(store, ".zattrs"),
+        json.dumps(attributes, indent=2).encode("utf-8"),
+    )
 
 
 def encode_v2_chunk(block: np.ndarray, spec: V2Spec) -> bytes:
@@ -100,7 +100,7 @@ def decode_v2_chunk(blob: bytes, spec: V2Spec) -> np.ndarray:
 
 
 def v2_chunk_path(store: str, level: int, idx: tuple[int, ...]) -> str:
-    return os.path.join(store, str(level), ".".join(str(i) for i in idx))
+    return kv_join(store, str(level), ".".join(str(i) for i in idx))
 
 
 def read_v2_region(
@@ -124,11 +124,10 @@ def read_v2_region(
         for s, e, c in zip(starts, stops, spec.chunks)
     ]
     for idx in product(*(range(a, b + 1) for a, b in zip(lo, hi))):
-        path = v2_chunk_path(store, level, idx)
-        if not os.path.exists(path):
+        blob = kv_get(v2_chunk_path(store, level, idx))
+        if blob is None:
             continue
-        with open(path, "rb") as f:
-            chunk = decode_v2_chunk(f.read(), spec)
+        chunk = decode_v2_chunk(blob, spec)
         c_start = [i * c for i, c in zip(idx, spec.chunks)]
         src_sl, dst_sl = [], []
         for s, e, c0, c in zip(starts, stops, c_start, spec.chunks):
@@ -171,10 +170,16 @@ def convert_to_zarr_v2(
         ),
     )
 
-    level_shapes = {lvl: meta.shapes[lvl] for lvl in range(len(meta.shapes))}
-    chunk_by_level = {lvl: specs[lvl].chunks[2:] for lvl in specs}
-    tasks = shard_tasks_df(
-        spark, level_shapes, chunk_by_level, settings.superchunk_multiple
+    sm = settings.superchunk_multiple
+    rows = []
+    for lvl, shape in enumerate(meta.shapes):
+        for cell in shard_grid(shape, specs[lvl].chunks[2:]):
+            key = (lvl, *(i // m for i, m in zip(cell[:3], sm)))
+            rows.append((lvl, *cell, ",".join(map(str, key))))
+    tasks = spark.createDataFrame(
+        rows,
+        "level int, iz int, iy int, ix int, "
+        "z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, superchunk string",
     )
     source_path = settings.input_source
     spec_args = {
@@ -197,14 +202,12 @@ def convert_to_zarr_v2(
                     row.level, row.z0, row.z1, row.y0, row.y1, row.x0, row.x1
                 )[None, None, ...]
                 blob = encode_v2_chunk(block, spec)
-                path = v2_chunk_path(
-                    store, row.level, (0, 0, row.iz, row.iy, row.ix)
+                kv_put(
+                    v2_chunk_path(
+                        store, row.level, (0, 0, row.iz, row.iy, row.ix)
+                    ),
+                    blob,
                 )
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                tmp = f"{path}.tmp.{os.getpid()}"
-                with open(tmp, "wb") as f:
-                    f.write(blob)
-                os.replace(tmp, path)
                 out.append(
                     (row.level, block.nbytes, len(blob),
                      time.monotonic() - t0)

@@ -23,6 +23,30 @@ def test_crc32c_incremental_matches_whole():
     assert crc32c(data) == crc32c(data[5:], crc32c(data[:5]))
 
 
+def _crc32c_bitwise(data: bytes, value: int = 0) -> int:
+    """Table-free reference: one polynomial step per bit."""
+    crc = value ^ 0xFFFFFFFF
+    for b in data:
+        crc ^= b
+        for _ in range(8):
+            crc = (crc >> 1) ^ (0x82F63B78 if crc & 1 else 0)
+    return crc ^ 0xFFFFFFFF
+
+
+def test_crc32c_fuzz_matches_bitwise_reference():
+    """Random lengths up to a 4096-chunk shard index (64 KiB), whole and
+    split at a random point."""
+    import random
+
+    rng = random.Random(20240611)
+    for n in [0, 1, 16, 65536] + [rng.randrange(65537) for _ in range(6)]:
+        data = rng.randbytes(n)
+        want = _crc32c_bitwise(data)
+        assert crc32c(data) == want, n
+        cut = rng.randrange(n + 1)
+        assert crc32c(data[cut:], crc32c(data[:cut])) == want, (n, cut)
+
+
 @pytest.mark.parametrize("codec", ["gzip", "zstd", "none"])
 def test_compress_roundtrip(codec):
     if codec == "zstd" and not HAVE_ZSTD:

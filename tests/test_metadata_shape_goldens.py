@@ -31,17 +31,20 @@ class _StubSource:
         pass
 
 
-def _settings(tmp_path, shard=(512, 512, 512)):
+def _settings(tmp_path, shard=(512, 512, 512), sm=(2, 1, 1)):
     return ConvertJobSettings(
         input_source="unused",
         output_location=str(tmp_path),
         chunk_shape=(64, 64, 64),
         shard_shape=shard,
+        superchunk_multiple=sm,
         translate_pyramid=True,
     )
 
 
-def _tasks(spark, tmp_path, monkeypatch, shapes_by_tile, shard):
+def _tasks(
+    spark, tmp_path, monkeypatch, shapes_by_tile, shard, sm=(2, 1, 1)
+):
     monkeypatch.setattr(
         multitile, "open_source",
         lambda p: _StubSource(shapes_by_tile[p]),
@@ -51,7 +54,7 @@ def _tasks(spark, tmp_path, monkeypatch, shapes_by_tile, shard):
         for i, p in enumerate(shapes_by_tile)
     ]
     tasks, _specs, _quarantined = multitile.build_global_tasks(
-        spark, tiles, _settings(tmp_path, shard)
+        spark, tiles, _settings(tmp_path, shard, sm)
     )
     return tasks.toPandas()
 
@@ -113,3 +116,18 @@ def test_padded_shape_would_give_wrong_count(spark, tmp_path, monkeypatch):
         {"/fake/tile.ims": [(512, 512, 512)]}, (512, 512, 512),
     )
     assert len(true) == 1
+
+
+def test_multi_level_and_superchunk_keys(spark, tmp_path, monkeypatch):
+    """Translate mode emits every level's shards; at superchunk multiple
+    2 the 2x2x2 level-0 shards form one group and share one key."""
+    pdf = _tasks(
+        spark, tmp_path, monkeypatch,
+        {"/fake/tile.ims": [(128, 128, 128), (64, 64, 64)]},
+        (64, 64, 64),
+        sm=(2, 2, 2),
+    )
+    assert len(pdf) == 8 + 1
+    sc0 = set(pdf[pdf.level == 0].superchunk)
+    # all 8 level-0 shards share one superchunk
+    assert sc0 == {"/fake/tile.ims,0,0,0,0"}

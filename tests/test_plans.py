@@ -1,6 +1,8 @@
 """Physical-plan regression tests: the optimizations the 100 TB design
 relies on must be visible in the executed plan, not assumed."""
 
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from aind_exaspim_data_transformation_spark.queries import QUERIES
@@ -89,13 +91,12 @@ def test_repartition_by_range_and_sort_within_partitions(spark):
         assert a["hi"] <= b["lo"]
 
 
-def test_sort_merge_transition_parity(spark):
-    """At 100x the data, fact tables outgrow the broadcast threshold and
-    AQE plans sort-merge joins instead. Simulate that regime (thresholds
-    -1) and pin BOTH halves of the contract: un-hinted fact joins flip
-    to SortMergeJoin while explicitly-hinted dimensions stay broadcast,
-    and the results still hash-match the DuckDB oracle — correctness is
-    join-strategy-independent."""
+@contextmanager
+def _shuffle_join_regime(spark):
+    """Both broadcast thresholds at -1 — the regime where fact tables
+    have outgrown broadcast — restored afterwards. Yields a function
+    that runs a query to its AQE-final plan and checks it against the
+    query's DuckDB oracle: ``(plan, ok, msg)``."""
     import sys
     from pathlib import Path
 
@@ -103,6 +104,16 @@ def test_sort_merge_transition_parity(spark):
     from parity import compare
 
     from aind_exaspim_data_transformation_spark.queries import ORACLES
+
+    def run(name):
+        df = QUERIES[name](spark, SF_SMALL)
+        df.collect()  # AQE-final plan
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("formatted")
+        )
+        ok, msg, _rows = compare(df, ORACLES[name], SF_SMALL)
+        return plan, ok, msg
 
     saved = {
         k: spark.conf.get(k, None)
@@ -112,25 +123,40 @@ def test_sort_merge_transition_parity(spark):
         )
     }
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        for name in ("q05_local_supplier_volume", "q10_returned_items"):
-            df = QUERIES[name](spark, SF_SMALL)
-            df.collect()  # AQE-final plan
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")
-            )
-            assert "SortMergeJoin" in plan, name
-            assert "BroadcastHashJoin" in plan, name  # hinted dims hold
-            ok, msg, _rows = compare(df, ORACLES[name], SF_SMALL)
-            assert ok, f"{name} under SMJ: {msg}"
+        for k in saved:
+            spark.conf.set(k, "-1")
+        yield run
     finally:
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_sort_merge_transition_parity(spark):
+    """At 100x the data, fact tables outgrow the broadcast threshold and
+    AQE plans sort-merge joins instead. Simulate that regime (thresholds
+    -1) and pin BOTH halves of the contract: un-hinted fact joins flip
+    to SortMergeJoin while explicitly-hinted dimensions stay broadcast,
+    and the results still hash-match the DuckDB oracle — correctness is
+    join-strategy-independent."""
+    with _shuffle_join_regime(spark) as run:
+        for name in ("q05_local_supplier_volume", "q10_returned_items"):
+            plan, ok, msg = run(name)
+            assert "SortMergeJoin" in plan, name
+            assert "BroadcastHashJoin" in plan, name  # hinted dims hold
+            assert ok, f"{name} under SMJ: {msg}"
+
+
+def test_range_frame_sort_merge_fallback_parity(spark):
+    """q_window_range_frame's join carries no broadcast hint, so with
+    broadcast off it runs as a SortMergeJoin — and must still
+    hash-match its oracle."""
+    with _shuffle_join_regime(spark) as run:
+        plan, ok, msg = run("q_window_range_frame")
+    assert "SortMergeJoin" in plan
+    assert ok, f"q_window_range_frame under SMJ: {msg}"
 
 
 def test_runtime_bloom_filter_join_pruning(spark):

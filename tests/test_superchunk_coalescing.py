@@ -157,6 +157,23 @@ def test_partial_group_falls_back_to_per_row_reads(counted):
         )
 
 
+def test_fused_writer_rejects_incomplete_group():
+    """The fused cascade reduces a whole group's bounding box, so a group
+    whose rows do not tile it must raise rather than cascade fill voxels
+    into the deeper levels."""
+    rows = pd.DataFrame(
+        [
+            dict(level=0, iz=0, iy=0, ix=0, z0=0, z1=16, y0=0, y1=16,
+                 x0=0, x1=16, superchunk="t,0,0,0,0"),
+            dict(level=0, iz=1, iy=1, ix=1, z0=16, z1=32, y0=16, y1=32,
+                 x0=16, x1=32, superchunk="t,0,0,0,0"),
+        ]
+    )
+    writer = multitile._make_global_fused_writer((2, 2, 2), "mean", 2)
+    with pytest.raises(RuntimeError, match="incomplete superchunk"):
+        list(writer(iter([rows])))
+
+
 def test_global_writer_coalesces(spark, counted):
     """Multitile path: one action, reads counted per superchunk."""
     arr, src, store, src_path = counted
