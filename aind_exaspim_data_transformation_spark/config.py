@@ -2,9 +2,11 @@
 
 Same knob surface as the reference's pydantic settings (reference
 models.py:20-143: chunk/shard shapes, scale factor, level count, the six
-downsample modes, partition mode, single-tile mode) plus Spark-specific
-additions. Values validate from JSON / dict / env exactly like a
-spark-submit entry module needs.
+downsample modes, single-tile mode) plus Spark-specific additions. The
+reference's ``partition_mode`` is accepted and ignored (pydantic's
+default ``extra="ignore"``): its 'shard' and 'file' modes are one plan
+here. Values validate from JSON / dict / env exactly like a spark-submit
+entry module needs.
 """
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ from typing import Literal
 from pydantic import BaseModel, Field, field_validator
 
 DownsampleMode = Literal["stride", "median", "mode", "mean", "min", "max"]
-PartitionMode = Literal["shard", "file"]
 
 
 class ConvertJobSettings(BaseModel):
@@ -40,7 +41,6 @@ class ConvertJobSettings(BaseModel):
     transpose_order: Literal["C", "F"] | None = None
 
     # Spark-side knobs
-    partition_mode: PartitionMode = "shard"
     single_tile_upload: bool = False
     superchunk_multiple: tuple[int, int, int] = (2, 1, 1)
     tasks_per_cpu: int = 2

@@ -4,9 +4,11 @@ The reference's job_entrypoint/run_job (imaris_job.py:719-770) re-expressed
 for spark-submit: settings come from --job-settings JSON, a config file, or
 the TRANSFORMATION_JOB_* environment; tiles are discovered, optionally
 filtered to one (single-tile mode), joined to acquisition.json translations,
-and converted — either in one global shard-scheduled action
-(partition_mode='shard') or one action per tile ('file'). Returns the same
-JobResponse shape (status_code 200, "Job finished in ...").
+and converted in one global shard-scheduled plan
+(``multitile.convert_tiles_to_zarr``). The reference's two partition modes
+become that one plan: its 'file' mode wrote the same stores, so a
+``partition_mode`` in the settings is accepted and ignored. Returns the
+same JobResponse shape (status_code 200, "Job finished in ...").
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ from .sources.acquisition import load_acquisition, translation_for_tile
 from .sources.discovery import discover_tiles
 from .zarrio.kvstore import kv_join
 from .zarrio.multitile import convert_tiles_to_zarr
-from .zarrio.pipeline import convert_to_zarr
 
 
 class JobResponse(BaseModel):
@@ -71,21 +72,7 @@ def run_job(spark: SparkSession, settings: TileJobSettings) -> JobResponse:
             if tr is not None:
                 translations[tile_path] = tr
 
-    if settings.partition_mode == "shard":
-        stats = convert_tiles_to_zarr(spark, tiles, settings)
-    else:  # 'file': one action per tile (reference round-robin analog)
-        stats = {"n_tiles": len(tiles), "tiles": {}}
-        for tile_path, store in tiles:
-            per = convert_to_zarr(
-                spark,
-                settings.model_copy(
-                    update={
-                        "input_source": tile_path,
-                        "output_location": store,
-                    }
-                ),
-            )
-            stats["tiles"][tile_path] = per
+    stats = convert_tiles_to_zarr(spark, tiles, settings)
 
     elapsed = time.monotonic() - t_start
     return JobResponse(

@@ -1,12 +1,14 @@
 """Multi-tile conversion: one GLOBAL shard-task DataFrame across all tiles
-(the reference's partition_mode='shard', imaris_job.py:535-647).
+(the reference's partition_mode='shard', imaris_job.py:535-647; its
+'file' mode is the same plan over one tile, so there is only this one).
 
-Every task row fully describes its write (source path, store, level, slice
-bounds, physical spec), so a single Spark action converts the whole
-dataset: the scheduler load-balances shards across executors regardless of
-tile boundaries — exactly what the reference's hand-rolled global
-round-robin approximates. File mode runs this same plan once per tile
-(``pipeline.convert_to_zarr`` is the one-tile call).
+Every task row names its write (source path, store, level, slice bounds,
+superchunk key); the level's layout (shapes, dtype, codec) lives only in
+the store's own zarr.json, which the driver writes before any task runs.
+A single Spark action converts the whole dataset: the scheduler
+load-balances shards across executors regardless of tile boundaries —
+exactly what the reference's hand-rolled global round-robin approximates.
+``pipeline.convert_to_zarr`` is the one-tile call.
 
 At 100 TB: ~45k coordinate rows per 6 TB tile, ~1M rows per dataset —
 trivially plannable; payloads never enter the DataFrame.
@@ -24,9 +26,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
+from ..operators.downsample import downsample_block
 from ..sources.tensor import open_source
 from .format import (
     ShardSpec,
+    read_array_metadata,
     shard_grid,
     write_array_metadata,
     write_group_metadata,
@@ -46,220 +50,120 @@ from .pipeline import (
     stage_dict,
 )
 
-#: One self-describing row per shard write, for every stage: the
-#: source-read stage (level 0, or every level when translating) and each
-#: level of the store-read level loop. Rows are store-routed, so ONE
-#: Spark action covers a stage across EVERY tile.
+#: One row per shard write, for every stage: the source-read stage
+#: (level 0, or every level when translating) and each level of the
+#: store-read level loop. Rows are store-routed, so ONE Spark action
+#: covers a stage across EVERY tile.
 TASK_SCHEMA = (
     "tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
     "z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, "
-    "shard_z int, shard_y int, shard_x int, "
-    "chunk_z int, chunk_y int, chunk_x int, "
-    "shape_z int, shape_y int, shape_x int, "
-    "dtype string, codec string, codec_level int, transpose string, "
     "superchunk string"
 )
 
-STATS_SCHEMA = (
-    "tile_path string, level int, iz int, iy int, ix int, "
-    "bytes_read long, bytes_written long, elapsed double, error string"
-)
-STATS_COLS = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
-
-#: Cascade rows for the fused multi-tile computed pyramid: 'stats' rows
-#: are per-shard write records (tile_path set so level-0 stats keep their
-#: per-tile grouping), 'part' rows carry a compressed reduced piece
-#: routed to (store, level, shard index).
-MT_CASCADE_SCHEMA = (
+#: The one writer-row schema. 'stats' rows are per-shard write records
+#: (``error`` set on a quarantined shard, which was not written); 'part'
+#: rows carry a cascade's compressed reduced piece routed to (store,
+#: level, shard index), placed at (oz, oy, ox) with shape (sz, sy, sx).
+WRITER_SCHEMA = (
     "kind string, tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
-    "bytes_read long, bytes_written long, elapsed double, "
+    "bytes_read long, bytes_written long, elapsed double, error string, "
     "oz int, oy int, ox int, sz int, sy int, sx int, payload binary"
 )
-
-MT_CASCADE_COLS = [f.split()[0] for f in MT_CASCADE_SCHEMA.split(", ")]
-#: The null part columns (oz..payload) of a 'stats' cascade row.
-_NO_PART = (None,) * 7
+WRITER_COLS = [f.split()[0] for f in WRITER_SCHEMA.split(", ")]
 
 
-def _row_spec(row) -> ShardSpec:
-    """The level's ShardSpec, rebuilt from a self-describing task row."""
-    return ShardSpec(
-        shape=(1, 1, row.shape_z, row.shape_y, row.shape_x),
-        shard_shape=(1, 1, row.shard_z, row.shard_y, row.shard_x),
-        chunk_shape=(1, 1, row.chunk_z, row.chunk_y, row.chunk_x),
-        dtype=row.dtype,
-        codec=row.codec,
-        codec_level=row.codec_level,
-        transpose_order=row.transpose or None,
+def _stats_row(row, nread, nwritten, elapsed, error=None) -> tuple:
+    """The WRITER_SCHEMA 'stats' row of task or part ``row``'s shard
+    (the part columns null)."""
+    return (
+        "stats", row.tile_path, row.store, row.level, row.iz, row.iy,
+        row.ix, nread, nwritten, elapsed, error, *(None,) * 7,
     )
+
+
+class _LevelSpecs(dict):
+    """``(store, level) -> ShardSpec``, read from the store's own
+    zarr.json on first use: the only place a writer learns a level's
+    layout. One per writer call, never module-level — Python workers
+    outlive jobs, and a store path can be rewritten with a new layout."""
+
+    def __missing__(self, key: tuple[str, int]) -> ShardSpec:
+        spec = self[key] = read_array_metadata(*key)
+        return spec
 
 
 def _mt_cascade_applicable(
     all_specs: dict[str, dict[int, ShardSpec]],
     settings: ConvertJobSettings,
-) -> dict[str, tuple[int, int, int]] | None:
-    """Per-tile cascade group multiples (in level-0 shards), or None when
-    ANY tile cannot cascade (single-level grid, or the window-aligned
-    group would exceed `pipeline.CASCADE_MAX_GROUP_BYTES`) — mixed grids
+) -> bool:
+    """Whether EVERY tile can run the fused cascade: False when no tile
+    converts, or when any tile has a single-level grid or would need a
+    window-aligned group over `pipeline.CASCADE_MAX_GROUP_BYTES` (both
+    make `pipeline.cascade_group_multiple` return None) — mixed grids
     fall back to the level loop as one dataset."""
     from .pipeline import cascade_group_multiple
 
-    out: dict[str, tuple[int, int, int]] = {}
-    for path, specs in all_specs.items():
-        if len(specs) < 2:
-            return None
-        gm = cascade_group_multiple(
+    return bool(all_specs) and all(
+        cascade_group_multiple(
             specs,
             settings.scale_factor,
             len(specs),
             settings.superchunk_multiple,
         )
-        if gm is None:
-            return None
-        out[path] = gm
+        is not None
+        for specs in all_specs.values()
+    )
+
+
+def _cascade_parts(
+    region: np.ndarray,
+    origin: tuple[int, int, int],
+    store: str,
+    cascade: tuple[tuple[int, int, int], str, int],
+    specs: _LevelSpecs,
+) -> list[tuple]:
+    """The fused cascade step of one group: reduce its level-0
+    ``region`` (global origin ``origin``) recursively and emit 'part'
+    rows routed to each deeper level's shards. Reducing at group (not
+    shard) granularity is what lifts the shard-alignment precondition:
+    the group extent is chosen window-aligned through every level
+    (`pipeline.cascade_group_multiple`), so ANY shard shape cascades
+    exactly — per-window reduce results are independent of the block
+    extent they are computed in, so group-level and shard-level reduces
+    are byte-identical where both apply."""
+    factor, mode, n_levels = cascade
+    out = []
+    red = region
+    for lvl_to in range(1, n_levels):
+        red = downsample_block(red, factor, mode)
+        origin = tuple(o // f for o, f in zip(origin, factor))
+        cs = specs[store, lvl_to].shard_shape[2:]
+        for part in _split_rows(red, origin, lvl_to, cs):
+            # part = (level, iz, iy, ix, oz, oy, ox, sz, sy, sx, payload)
+            out.append(
+                ("part", None, store, *part[:4], *(None,) * 4, *part[4:])
+            )
     return out
-
-
-def _make_global_fused_writer(
-    factor: tuple[int, int, int], mode: str, n_levels: int
-):
-    """Self-describing fused copy writer: reads each cascade GROUP's
-    bounding box in one source read, writes every level-0 shard in the
-    group, then recursively reduces the whole group block and emits
-    compressed 'part' rows routed by store. Reducing at group (not
-    shard) granularity is what lifts the old shard-alignment
-    precondition: the group extent is chosen window-aligned through
-    every level (`pipeline.cascade_group_multiple`), so ANY shard shape
-    cascades exactly — per-window reduce results are independent of the
-    block extent they are computed in, so group-level and shard-level
-    reduces are byte-identical where both apply. Child shard shapes come
-    from each store's own zarr.json, read once per (store, level) per
-    worker."""
-    from .format import read_array_metadata
-
-    from ..operators.downsample import downsample_block
-
-    def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sources: dict[str, object] = {}
-        child_shard: dict[tuple[str, int], tuple[int, int, int]] = {}
-
-        def read_fn(row, z0, z1, y0, y1, x0, x1):
-            src = sources.get(row.tile_path)
-            if src is None:
-                src = sources[row.tile_path] = open_source(row.tile_path)
-            return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
-
-        # The group-level reduce needs every row of a group in hand, and
-        # mapInPandas may split one partition into several Arrow batches
-        # — so materialize the partition's rows (coordinates only, tiny)
-        # before grouping. Partitioning hashes the superchunk key, so a
-        # group never spans Spark partitions.
-        pdfs = [p for p in batches if len(p)]
-        all_rows = (
-            pd.concat(pdfs, ignore_index=True) if pdfs else None
-        )
-        if all_rows is not None:
-            for _, grp in all_rows.groupby("superchunk", sort=False):
-                rows = list(grp.itertuples(index=False))
-                box = _group_bbox(rows)
-                if box is None:
-                    raise RuntimeError(
-                        "fused cascade saw an incomplete superchunk "
-                        f"group ({len(rows)} rows, key "
-                        f"{rows[0].superchunk!r}) — compute-pyramid runs "
-                        "enumerate full groups, so this indicates a "
-                        "partitioning bug"
-                    )
-                b0 = box[0::2]
-                t0 = time.monotonic()
-                region = read_fn(rows[0], *box)
-                read_sec = (time.monotonic() - t0) / len(rows)
-                out = []
-                for row in rows:
-                    t0 = time.monotonic()
-                    block = region[
-                        row.z0 - b0[0] : row.z1 - b0[0],
-                        row.y0 - b0[1] : row.y1 - b0[1],
-                        row.x0 - b0[2] : row.x1 - b0[2],
-                    ]
-                    nbytes = _put_shard(
-                        row.store, 0, row.iz, row.iy, row.ix, block,
-                        _row_spec(row),
-                    )
-                    out.append(
-                        (
-                            "stats",
-                            row.tile_path,
-                            row.store,
-                            0,
-                            row.iz,
-                            row.iy,
-                            row.ix,
-                            block.nbytes,
-                            nbytes,
-                            read_sec + time.monotonic() - t0,
-                            *_NO_PART,
-                        )
-                    )
-                red = region
-                origin = b0
-                store = rows[0].store
-                for lvl_to in range(1, n_levels):
-                    red = downsample_block(red, factor, mode)
-                    origin = tuple(
-                        o // f for o, f in zip(origin, factor)
-                    )
-                    key = (store, lvl_to)
-                    cs = child_shard.get(key)
-                    if cs is None:
-                        cs = child_shard[key] = read_array_metadata(
-                            store, lvl_to
-                        ).shard_shape[2:]
-                    for part in _split_rows(red, origin, lvl_to, cs):
-                        # part = (level, iz, iy, ix,
-                        #         oz, oy, ox, sz, sy, sx, payload)
-                        out.append(
-                            (
-                                "part",
-                                None,
-                                store,
-                                *part[:4],
-                                None,
-                                None,
-                                None,
-                                *part[4:],
-                            )
-                        )
-                yield pd.DataFrame(out, columns=MT_CASCADE_COLS)
-        for s in sources.values():
-            s.close()
-
-    return writer
 
 
 def _make_global_assembler():
     """Grouped assembler for the multi-tile cascade: each 'part' group
     is one (store, level, shard) — place pieces, encode with the
     store's own spec, write, emit a stats row. 'stats' groups pass
-    through. Specs cache per (store, level) across groups within a
-    worker."""
-    from .format import read_array_metadata
-
-    specs_cache: dict[tuple[str, int], ShardSpec] = {}
+    through. Specs are cached per (store, level) across the groups of
+    a task."""
+    specs = _LevelSpecs()
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.iloc[0]["kind"] == "stats":
             return pdf
         t0 = time.monotonic()
-        first = pdf.iloc[0]
-        store, lvl = first["store"], int(first["level"])
-        iz, iy, ix = int(first["iz"]), int(first["iy"]), int(first["ix"])
-        key = (store, lvl)
-        spec = specs_cache.get(key)
-        if spec is None:
-            spec = specs_cache[key] = read_array_metadata(store, lvl)
+        first = next(pdf.itertuples(index=False))
+        store, lvl = first.store, int(first.level)
+        iz, iy, ix = int(first.iz), int(first.iy), int(first.ix)
+        spec = specs[store, lvl]
         cs = spec.shard_shape[2:]
         dims = spec.shape[2:]
         start = (iz * cs[0], iy * cs[1], ix * cs[2])
@@ -267,41 +171,22 @@ def _make_global_assembler():
         block = np.full(valid, spec.fill_value, dtype=spec.np_dtype)
         nread = 0
         for r in pdf.itertuples(index=False):
-            raw = _unpack_payload(
-                r.payload,
-                int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize,
-            )
-            piece = np.frombuffer(raw, dtype=spec.np_dtype).reshape(
-                r.sz, r.sy, r.sx
-            )
+            # Uncompressed piece size, so bytes_read is comparable with
+            # the per-level fallback loop (which reads raw parent voxels).
+            size = int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize
+            piece = np.frombuffer(
+                _unpack_payload(r.payload, size), dtype=spec.np_dtype
+            ).reshape(r.sz, r.sy, r.sx)
             block[
                 r.oz : r.oz + r.sz,
                 r.oy : r.oy + r.sy,
                 r.ox : r.ox + r.sx,
             ] = piece
-            # Uncompressed piece size, so bytes_read is comparable with
-            # the per-level fallback loop (which reads raw parent voxels).
-            nread += (
-                int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize
-            )
+            nread += size
         nbytes = _put_shard(store, lvl, iz, iy, ix, block, spec)
         return pd.DataFrame(
-            [
-                (
-                    "stats",
-                    None,
-                    store,
-                    lvl,
-                    iz,
-                    iy,
-                    ix,
-                    nread,
-                    nbytes,
-                    time.monotonic() - t0,
-                    *_NO_PART,
-                )
-            ],
-            columns=MT_CASCADE_COLS,
+            [_stats_row(first, nread, nbytes, time.monotonic() - t0)],
+            columns=WRITER_COLS,
         )
 
     return assemble
@@ -312,30 +197,21 @@ def _task_rows(
     store: str,
     lvl: int,
     spec: ShardSpec,
-    settings: ConvertJobSettings,
     key_m: tuple[int, int, int],
 ) -> list[tuple]:
     """One tile's level-``lvl`` TASK_SCHEMA rows, one per shard of
     ``format.shard_grid``; the superchunk key groups ``key_m`` shards per
     axis."""
-    shard, chunk = spec.shard_shape[2:], spec.chunk_shape[2:]
     return [
         (
             src_path,
             store,
             lvl,
             *cell,
-            *shard,
-            *chunk,
-            *spec.shape[2:],
-            spec.dtype,
-            settings.codec,
-            settings.codec_level,
-            settings.transpose_order or "",
             f"{src_path},{lvl},{cell[0] // key_m[0]},"
             f"{cell[1] // key_m[1]},{cell[2] // key_m[2]}",
         )
-        for cell in shard_grid(spec.shape[2:], shard)
+        for cell in shard_grid(spec.shape[2:], spec.shard_shape[2:])
     ]
 
 
@@ -396,13 +272,13 @@ def build_global_tasks(
                 )
                 or sm
             )
+        # Every level's zarr.json before any task runs: it is the only
+        # layout the writers read (``_LevelSpecs``).
         for lvl in range(len(shapes)):
             write_array_metadata(store, lvl, specs[lvl])
         source_levels = len(shapes) if settings.translate_pyramid else 1
         for lvl in range(source_levels):
-            rows += _task_rows(
-                src_path, store, lvl, specs[lvl], settings, key_m
-            )
+            rows += _task_rows(src_path, store, lvl, specs[lvl], key_m)
         write_group_metadata(
             store,
             multiscales_metadata(
@@ -450,10 +326,14 @@ def _test_straggler_hook() -> None:
 
 
 class _GlobalWriter:
-    """Self-describing writer: rebuilds the ShardSpec from task columns;
-    sources cached per partition; source reads superchunk-coalesced (one
-    bounding-box read per superchunk group — the superchunk key embeds
-    tile_path and level, so groups never span tiles).
+    """The one source-read writer. Per superchunk group (the key embeds
+    tile_path and level, so groups never span tiles) it makes one
+    bounding-box source read, writes every shard of the group with the
+    level's spec from the store's zarr.json, and — with ``cascade`` set
+    to ``(factor, mode, n_levels)`` — emits the group's reduced deeper
+    levels as 'part' rows (``_cascade_parts``). It yields one DataFrame
+    per group, so a task never holds more than one group's region and
+    parts. Sources are cached per call.
 
     With ``quarantine`` (settings.on_corrupt="quarantine"): a tile that
     fails to open, or a read that fails, yields per-shard ERROR rows —
@@ -466,16 +346,22 @@ class _GlobalWriter:
     and resolve ``open_source`` at call time, instead of baking the
     driver's globals (incl. test monkeypatches) into the pickle."""
 
-    def __init__(self, quarantine: bool = False):
+    def __init__(
+        self,
+        quarantine: bool = False,
+        cascade: tuple[tuple[int, int, int], str, int] | None = None,
+    ):
         self.quarantine = quarantine
+        self.cascade = cascade
 
     def __call__(
         self, batches: Iterator[pd.DataFrame]
     ) -> Iterator[pd.DataFrame]:
         _test_straggler_hook()
-        quarantine = self.quarantine
+        quarantine, cascade = self.quarantine, self.cascade
         sources: dict[str, object] = {}
         last_err: dict[str, str] = {}
+        specs = _LevelSpecs()
 
         def read_fn(row, z0, z1, y0, y1, x0, x1):
             if row.tile_path not in sources:
@@ -502,10 +388,30 @@ class _GlobalWriter:
                 )
                 return None
 
+        # A group is read once only if all its rows are in hand, and
+        # mapInPandas may split one partition into several Arrow batches
+        # — so materialize the partition's rows (coordinates only, tiny)
+        # before grouping. Partitioning hashes the superchunk key, so a
+        # group never spans Spark partitions.
+        pdfs = [p for p in batches if len(p)]
+        if not pdfs:
+            return
+        tasks = pd.concat(pdfs, ignore_index=True)
         n_err: dict[str, int] = {}
-        for pdf in batches:
+        for _, grp in tasks.groupby("superchunk", sort=False):
+            rows = list(grp.itertuples(index=False))
+            box = _group_bbox(rows)
+            if cascade is not None and box is None:
+                raise RuntimeError(
+                    "fused cascade saw an incomplete superchunk "
+                    f"group ({len(rows)} rows, key "
+                    f"{rows[0].superchunk!r}) — compute-pyramid runs "
+                    "enumerate full groups, so this indicates a "
+                    "partitioning bug"
+                )
+            region, items = iter_coalesced_reads(rows, read_fn)
             out = []
-            for row, block, read_sec in iter_coalesced_reads(pdf, read_fn):
+            for row, block, read_sec in items:
                 if block is None:
                     # Message detail capped PER TILE (the final agg also
                     # groups by tile_path) so one fully-corrupt tile
@@ -519,39 +425,24 @@ class _GlobalWriter:
                         if n <= ERROR_SAMPLE_CAP
                         else ""
                     )
-                    out.append(
-                        (
-                            row.tile_path,
-                            row.level,
-                            row.iz,
-                            row.iy,
-                            row.ix,
-                            0,
-                            0,
-                            read_sec,
-                            msg,
-                        )
-                    )
+                    out.append(_stats_row(row, 0, 0, read_sec, msg))
                     continue
                 t0 = time.monotonic()
                 nbytes = _put_shard(
                     row.store, row.level, row.iz, row.iy, row.ix, block,
-                    _row_spec(row),
+                    specs[row.store, row.level],
                 )
                 out.append(
-                    (
-                        row.tile_path,
-                        row.level,
-                        row.iz,
-                        row.iy,
-                        row.ix,
-                        block.nbytes,
-                        nbytes,
+                    _stats_row(
+                        row, block.nbytes, nbytes,
                         read_sec + time.monotonic() - t0,
-                        None,
                     )
                 )
-            yield pd.DataFrame(out, columns=STATS_COLS)
+            if cascade is not None:
+                out += _cascade_parts(
+                    region, box[0::2], rows[0].store, cascade, specs
+                )
+            yield pd.DataFrame(out, columns=WRITER_COLS)
         for s in sources.values():
             if s is not None:
                 s.close()
@@ -606,41 +497,35 @@ def convert_tiles_to_zarr(
     # would bake PARTIAL coverage into a written shard. The loop reads
     # parents back from the store, where a missing (quarantined) shard
     # already degrades to fill_value.
-    group_multiples = (
-        _mt_cascade_applicable(all_specs, settings)
-        if compute_pyramid and not quarantine
-        else None
+    cascade = None
+    if (
+        compute_pyramid
+        and not quarantine
+        and _mt_cascade_applicable(all_specs, settings)
+    ):
+        n_levels = max(len(s) for s in all_specs.values())
+        cascade = (settings.scale_factor, settings.downsample_mode, n_levels)
+    written = tasks.repartition(n_parts, "superchunk").mapInPandas(
+        _GlobalWriter(quarantine, cascade), WRITER_SCHEMA
     )
     stages = None
-    if group_multiples:
+    if cascade is not None:
         # Fused cascade: the WHOLE dataset — every tile, every pyramid
         # level — is ONE Spark job. Level-0 writes emit per-level
         # compressed reduced partials routed by (store, level, shard);
-        # one shuffle assembles all deeper levels of all tiles. No
-        # store re-read, and the job count is 1 regardless of tile
-        # count or depth (the loop path schedules 1 + (L-1) actions).
-        n_levels = max(len(s) for s in all_specs.values())
-        df = tasks.repartition(n_parts, "superchunk").mapInPandas(
-            _make_global_fused_writer(
-                settings.scale_factor,
-                settings.downsample_mode,
-                n_levels,
-            ),
-            MT_CASCADE_SCHEMA,
-        )
-        df = df.groupBy(
+        # one shuffle assembles all deeper levels of all tiles into
+        # stats rows. No store re-read, and the job count is 1
+        # regardless of tile count or depth (the loop path schedules
+        # 1 + (L-1) actions).
+        assembled = written.groupBy(
             "kind", "store", "level", "iz", "iy", "ix"
-        ).applyInPandas(_make_global_assembler(), MT_CASCADE_SCHEMA)
+        ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
         coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
         prev = spark.conf.get(coalesce_key, "true")
         spark.conf.set(coalesce_key, "false")
         try:
-            # A cascade never quarantines: the null error column gives
-            # its stages the shared stats keys with zero errors.
             rows = (
-                df.where(F.col("kind") == "stats")
-                .withColumn("error", F.lit(None).cast("string"))
-                .groupBy("tile_path", "level")
+                assembled.groupBy("tile_path", "level")
                 .agg(*stage_agg_exprs())
                 .collect()
             )
@@ -660,13 +545,7 @@ def convert_tiles_to_zarr(
         stages.sort(key=lambda d: d["level"])
         plan = "fused_cascade"
     else:
-        stats = (
-            tasks.repartition(n_parts, "superchunk")
-            .mapInPandas(_GlobalWriter(quarantine), STATS_SCHEMA)
-            .groupBy("tile_path")
-            .agg(*stage_agg_exprs())
-            .collect()
-        )
+        stats = written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
         per_tile = {r["tile_path"]: stage_dict(r) for r in stats}
         if compute_pyramid:
             # Computed levels run sequentially (level k depends on k-1,
@@ -712,24 +591,18 @@ def _make_global_downsample_writer(
 ):
     """Store-routed downsample writer: reads the factor-scaled parent
     region from each row's own store, block-reduces, writes the shard.
-    Parent specs (and with them the parent's logical shape) are read
-    once per (store, level) per partition from the store's own
+    Parent and child specs (and with them the parent's logical shape)
+    are read once per (store, level) per call from the store's own
     zarr.json — no spec state shipped through the plan."""
-    from .format import read_array_metadata
 
     def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pspecs: dict[tuple[str, int], ShardSpec] = {}
+        specs = _LevelSpecs()
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 t0 = time.monotonic()
                 parent = row.level - 1
-                key = (row.store, parent)
-                pspec = pspecs.get(key)
-                if pspec is None:
-                    pspec = pspecs[key] = read_array_metadata(
-                        row.store, parent
-                    )
+                pspec = specs[row.store, parent]
                 region3 = tuple(
                     slice(a * f, min(b * f, d))
                     for a, b, f, d in zip(
@@ -755,22 +628,14 @@ def _make_global_downsample_writer(
                 )
                 nbytes = _put_shard(
                     row.store, row.level, row.iz, row.iy, row.ix, block,
-                    _row_spec(row),
+                    specs[row.store, row.level],
                 )
                 out.append(
-                    (
-                        row.tile_path,
-                        row.level,
-                        row.iz,
-                        row.iy,
-                        row.ix,
-                        parent_nbytes,
-                        nbytes,
-                        time.monotonic() - t0,
-                        None,
+                    _stats_row(
+                        row, parent_nbytes, nbytes, time.monotonic() - t0
                     )
                 )
-            yield pd.DataFrame(out, columns=STATS_COLS)
+            yield pd.DataFrame(out, columns=WRITER_COLS)
 
     return writer
 
@@ -799,8 +664,7 @@ def _run_downsample_levels(
             spec = all_specs.get(src_path, {}).get(lvl)
             if spec is not None:
                 rows += _task_rows(
-                    src_path, store, lvl, spec, settings,
-                    settings.superchunk_multiple,
+                    src_path, store, lvl, spec, settings.superchunk_multiple
                 )
         tasks = spark.createDataFrame(rows, TASK_SCHEMA)
         # Shard-coord partitioning: the downsample writer reads the
@@ -809,7 +673,7 @@ def _run_downsample_levels(
         # the small deep levels.
         stats = stage_dict(
             tasks.repartition(n_parts, "store", "iz", "iy", "ix")
-            .mapInPandas(writer, STATS_SCHEMA)
+            .mapInPandas(writer, WRITER_SCHEMA)
             .agg(*stage_agg_exprs())
             .collect()[0]
         )

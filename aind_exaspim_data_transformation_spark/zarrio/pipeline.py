@@ -5,8 +5,7 @@ superchunk-coalesced source reads, a fused pyramid cascade when a
 window-aligned group fits the memory cap, else a driver-side level loop
 (reference process_single_shard, compress/imaris_to_zarr.py:375-462,
 and the sequential pyramid, :677-799). ``convert_to_zarr`` is the
-one-tile call into that plan — the reference's ``partition_mode='file'``
-unit of work — reshaped into per-stage stats.
+one-tile call into that plan, reshaped into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
 writers share: the superchunk group bounding box and coalesced source
@@ -28,7 +27,6 @@ import math
 import time
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -195,19 +193,21 @@ def _group_bbox(rows) -> tuple[int, int, int, int, int, int] | None:
     return box if box_vol == rows_vol else None
 
 
-def iter_coalesced_reads(pdf: pd.DataFrame, read_fn):
+def iter_coalesced_reads(rows: list, read_fn):
     """Superchunk read-once coalescing (reference S9, iter_superchunks at
-    utils/io_utils.py:153-303): group the batch's task rows by their
-    ``superchunk`` key, issue ONE source read for the group's bounding box,
-    and slice every shard block out of the in-memory region — amortizing
-    source I/O exactly as the reference's superchunk loop does (its default
-    superchunk is 2x the shard, compress/imaris_to_zarr.py:1310-1314;
-    ours is ``superchunk_multiple`` x the shard, same default).
+    utils/io_utils.py:153-303): issue ONE source read for a superchunk
+    group's bounding box and slice every shard block out of the in-memory
+    region — amortizing source I/O exactly as the reference's superchunk
+    loop does (its default superchunk is 2x the shard,
+    compress/imaris_to_zarr.py:1310-1314; ours is ``superchunk_multiple``
+    x the shard, same default).
 
-    ``read_fn(row, z0, z1, y0, y1, x0, x1)`` performs the actual source
-    read (the row identifies level / tile for the caller). Yields
-    ``(row, block, read_seconds)`` with the superchunk's single read time
-    amortized evenly over its rows.
+    ``rows`` are one group's task rows; ``read_fn(row, z0, z1, y0, y1,
+    x0, x1)`` performs the actual source read (the row identifies level /
+    tile for the caller). Returns ``(region, items)``: ``region`` is the
+    group's bounding-box array, or None when the rows were read one by
+    one, and ``items`` yields ``(row, block, read_seconds)`` with the
+    group's single read time amortized evenly over its rows.
 
     Coalescing only fires when the group's rows exactly tile their
     bounding box (the analog of the reference's divisibility validation,
@@ -217,35 +217,40 @@ def iter_coalesced_reads(pdf: pd.DataFrame, read_fn):
     ``superchunk_multiple * shard_shape``, mirroring the reference's
     superchunk-sized bound.
     """
-    for _, grp in pdf.groupby("superchunk", sort=False):
-        rows = list(grp.itertuples(index=False))
-        box = _group_bbox(rows) if len(rows) > 1 else None
-        if box is not None:
-            t0 = time.monotonic()
-            region = read_fn(rows[0], *box)
-            per_row = (time.monotonic() - t0) / len(rows)
-            if region is not None:
-                for r in rows:
-                    yield (
-                        r,
-                        region[
-                            r.z0 - box[0] : r.z1 - box[0],
-                            r.y0 - box[2] : r.y1 - box[2],
-                            r.x0 - box[4] : r.x1 - box[4],
-                        ],
-                        per_row,
-                    )
-                continue
-            # Quarantined group read (read_fn returned None, see
-            # multitile._GlobalWriter): the corruption may touch only
-            # part of the bounding box, so fall through to PER-ROW reads
-            # — only shards whose own voxels are broken quarantine,
-            # keeping the "every healthy byte converts" contract at
-            # shard granularity, not superchunk granularity.
-        for r in rows:
-            t0 = time.monotonic()
-            block = read_fn(r, r.z0, r.z1, r.y0, r.y1, r.x0, r.x1)
-            yield r, block, time.monotonic() - t0
+    box = _group_bbox(rows)
+    if box is not None:
+        t0 = time.monotonic()
+        region = read_fn(rows[0], *box)
+        per_row = (time.monotonic() - t0) / len(rows)
+        if region is not None:
+            return region, (
+                (
+                    r,
+                    region[
+                        r.z0 - box[0] : r.z1 - box[0],
+                        r.y0 - box[2] : r.y1 - box[2],
+                        r.x0 - box[4] : r.x1 - box[4],
+                    ],
+                    per_row,
+                )
+                for r in rows
+            )
+        if len(rows) == 1:  # that read was the row's own read
+            return None, iter([(rows[0], None, per_row)])
+        # Quarantined group read (read_fn returned None, see
+        # multitile._GlobalWriter): the corruption may touch only part
+        # of the bounding box, so fall back to PER-ROW reads — only
+        # shards whose own voxels are broken quarantine, keeping the
+        # "every healthy byte converts" contract at shard granularity,
+        # not superchunk granularity.
+    return None, _read_rows(rows, read_fn)
+
+
+def _read_rows(rows: list, read_fn):
+    for r in rows:
+        t0 = time.monotonic()
+        block = read_fn(r, r.z0, r.z1, r.y0, r.y1, r.x0, r.x1)
+        yield r, block, time.monotonic() - t0
 
 
 #: Memory guard for the fused cascade's group read buffer: the group

@@ -133,7 +133,6 @@ def test_run_job_discovers_ims_tiles(spark, tmp_path_factory):
         chunk_shape=(8, 8, 8),
         shard_shape=(8, 8, 8),
         translate_pyramid=True,
-        partition_mode="shard",
     )
     resp = run_job(spark, settings)
     assert resp.status_code == 200

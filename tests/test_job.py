@@ -1,5 +1,5 @@
 """Multi-tile job orchestration: discovery, acquisition.json lookups,
-global shard-mode conversion, file-mode conversion, CLI settings parsing."""
+global conversion, single-tile mode, CLI settings parsing."""
 
 import json
 
@@ -106,7 +106,6 @@ def test_run_job_shard_mode(spark, dataset, tmp_path):
         output_location=str(out),
         chunk_shape=(16, 16, 16),
         shard_shape=(32, 32, 32),
-        partition_mode="shard",
         acquisition_path=acq_path,
     )
     resp = run_job(spark, settings)
@@ -128,15 +127,14 @@ def test_run_job_shard_mode(spark, dataset, tmp_path):
     ) == [(3500.0, 2500.0, 1500.0)]
 
 
-def test_run_job_file_mode(spark, dataset, tmp_path):
+def test_run_job_single_tile(spark, dataset, tmp_path):
     root, arrays, _ = dataset
-    out = tmp_path / "out_file_mode"
+    out = tmp_path / "out_single_tile"
     settings = TileJobSettings(
         input_source=str(root),
         output_location=str(out),
         chunk_shape=(16, 16, 16),
         shard_shape=(32, 32, 32),
-        partition_mode="file",
         single_tile_upload=True,
     )
     resp = run_job(spark, settings)
@@ -170,6 +168,13 @@ def test_settings_parsing(tmp_path, monkeypatch):
     monkeypatch.setenv("TRANSFORMATION_JOB_OUTPUT_LOCATION", "/env_out")
     s3 = _settings_from_args([])
     assert s3.input_source == "/env_in"
+    # The reference's partition_mode is accepted and ignored: its 'file'
+    # and 'shard' modes are one plan here.
+    s4 = _settings_from_args(
+        ["--job-settings",
+         json.dumps({**json.loads(js), "partition_mode": "file"})]
+    )
+    assert s4 == s
     with pytest.raises(Exception):
         TileJobSettings.model_validate_json(
             json.dumps(

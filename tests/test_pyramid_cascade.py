@@ -1,9 +1,10 @@
 """Fused pyramid cascade vs the per-level store-read loop.
 
-The cascade (zarrio/multitile.py: `_make_global_fused_writer` and
-`_make_global_assembler`, reached through `pipeline.convert_to_zarr` as a
-one-tile call) computes every pyramid level inside ONE Spark job — the level-0 writer reduces each source
-block recursively and ships compressed partials through a single
+The cascade (zarrio/multitile.py: `_GlobalWriter` with its `cascade`
+step and `_make_global_assembler`, reached through
+`pipeline.convert_to_zarr` as a one-tile call) computes every pyramid
+level inside ONE Spark job — the source writer reduces each superchunk
+group's block recursively and ships compressed partials through a single
 shuffle. It must be a pure optimization: for any shape / mode / depth
 the resulting store must be BYTE-identical to the sequential
 level-loop (which is itself golden-tested against the reference's

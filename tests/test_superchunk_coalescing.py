@@ -98,6 +98,27 @@ def test_one_read_per_superchunk(spark, counted):
     np.testing.assert_array_equal(got, arr)
 
 
+def test_group_split_across_batches_is_read_once(spark, counted):
+    """mapInPandas may hand one partition over as several Arrow batches;
+    a superchunk group split between two of them is still read once."""
+    arr, src, store, src_path = counted
+    pdf, spec0 = _global_tasks(spark, _settings(src_path, store))
+    assert len(pdf) == 64
+
+    # Rows [:4] are half of the first 2x2x2-shard group.
+    batches = [pdf.iloc[:4], pdf.iloc[4:]]
+    stats = pd.concat(list(multitile._GlobalWriter()(iter(batches))))
+
+    assert len(stats) == 64
+    assert len(src.reads) == 8
+    got = read_array_region(
+        store, 0,
+        (slice(0, 1), slice(0, 1), slice(0, 64), slice(0, 64), slice(0, 64)),
+        spec0,
+    )[0, 0]
+    np.testing.assert_array_equal(got, arr)
+
+
 def test_edge_clamped_superchunks_still_coalesce(spark, tmp_path):
     """Non-divisible shape: clamped edge groups still tile their bounding
     box exactly, so every multi-shard group coalesces to one read."""
@@ -141,14 +162,14 @@ def test_partial_group_falls_back_to_per_row_reads(counted):
                  x0=16, x1=32, superchunk="0,0,0,0"),
         ]
     )
-    out = list(
-        iter_coalesced_reads(
-            rows,
-            lambda r, z0, z1, y0, y1, x0, x1: src.read_block(
-                r.level, z0, z1, y0, y1, x0, x1
-            ),
-        )
+    region, items = iter_coalesced_reads(
+        list(rows.itertuples(index=False)),
+        lambda r, z0, z1, y0, y1, x0, x1: src.read_block(
+            r.level, z0, z1, y0, y1, x0, x1
+        ),
     )
+    out = list(items)
+    assert region is None
     assert len(out) == 2
     assert len(src.reads) == 2  # per-row, no 32^3 over-read
     for (r, block, _sec) in out:
@@ -169,7 +190,7 @@ def test_fused_writer_rejects_incomplete_group():
                  x0=16, x1=32, superchunk="t,0,0,0,0"),
         ]
     )
-    writer = multitile._make_global_fused_writer((2, 2, 2), "mean", 2)
+    writer = multitile._GlobalWriter(cascade=((2, 2, 2), "mean", 2))
     with pytest.raises(RuntimeError, match="incomplete superchunk"):
         list(writer(iter([rows])))
 

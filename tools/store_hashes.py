@@ -1,0 +1,281 @@
+"""Store-hash table: run a fixed list of conversions and print, per case,
+the file count and a manifest hash of everything the case wrote.
+
+The manifest hash is the 16-hex prefix of the sha256 of ``json.dumps`` of
+the sorted ``[relative path, sha256]`` list of every file under the
+case's output root. Two checkouts that print the same table wrote
+byte-identical Zarr stores, which is how a refactor of the conversion
+code proves it changed no output byte.
+
+    python tools/store_hashes.py            # all cases
+    python tools/store_hashes.py translate  # cases whose name contains it
+
+Every input is seeded or synthetic and written into a temp dir, so the
+table depends only on the checkout's code.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import json
+import os
+import sys
+import tempfile
+import zlib
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import numpy as np  # noqa: E402
+
+from aind_exaspim_data_transformation_spark.config import (  # noqa: E402
+    ConvertJobSettings,
+)
+from aind_exaspim_data_transformation_spark.job import (  # noqa: E402
+    TileJobSettings,
+    run_job,
+)
+from aind_exaspim_data_transformation_spark.sources.tensor import (  # noqa: E402
+    write_imaris_file,
+    write_npy_pyramid,
+)
+from aind_exaspim_data_transformation_spark.zarrio import (  # noqa: E402
+    multitile,
+    pipeline,
+)
+from aind_exaspim_data_transformation_spark.zarrio.v2 import (  # noqa: E402
+    convert_to_zarr_v2,
+)
+
+SYNTH = dict(
+    chunk_shape=(64, 64, 64),
+    shard_shape=(128, 128, 128),
+    codec="zstd",
+    codec_level=3,
+)
+
+
+def manifest(root: str) -> tuple[int, str]:
+    """(file count, manifest hash prefix) of every file under ``root``."""
+    entries = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as f:
+                digest = hashlib.sha256(f.read()).hexdigest()
+            entries.append([os.path.relpath(path, root), digest])
+    blob = json.dumps(sorted(entries)).encode()
+    return len(entries), hashlib.sha256(blob).hexdigest()[:16]
+
+
+class _LevelLoopForced:
+    """Make every computed pyramid run the store-read level loop."""
+
+    def __enter__(self):
+        self.saved = pipeline.cascade_group_multiple
+        pipeline.cascade_group_multiple = lambda *a, **k: None
+
+    def __exit__(self, *exc):
+        pipeline.cascade_group_multiple = self.saved
+
+
+def _convert(spark, src, out, **kw):
+    pipeline.convert_to_zarr(
+        spark,
+        ConvertJobSettings(input_source=src, output_location=out, **kw),
+    )
+
+
+def _ims_tile(path: str) -> None:
+    """A 96x160x144 chunked (32^3) gzip Imaris tile."""
+    rng = np.random.default_rng(11)
+    arr = rng.integers(0, 65535, size=(96, 160, 144), dtype=np.uint16)
+    write_imaris_file(path, [arr], chunks=(32, 32, 32), compression="gzip")
+
+
+def _corrupt_ims_tile(path: str) -> None:
+    """A 32^3 chunked (8^3) gzip Imaris tile whose chunk (0,0,0) payload
+    is overwritten, so reads touching it fail while the metadata probe
+    stays intact."""
+    rng = np.random.default_rng(7)
+    arr = rng.integers(0, 65535, size=(32, 32, 32), dtype=np.uint16)
+    write_imaris_file(path, [arr], chunks=(8, 8, 8), compression="gzip")
+    payload = zlib.compress(np.ascontiguousarray(arr[:8, :8, :8]).tobytes(), 4)
+    with open(path, "rb") as f:
+        data = bytearray(f.read())
+    idx = data.find(payload)
+    assert idx > 0, "chunk payload not found"
+    n = min(40, len(payload))
+    data[idx : idx + n] = b"\xff" * n
+    with open(path, "wb") as f:
+        f.write(bytes(data))
+
+
+def _job_dataset(root: str) -> None:
+    """Two 40^3 two-level npy tiles."""
+    rng = np.random.default_rng(42)
+    for i in range(2):
+        arr = rng.integers(0, 65535, size=(40, 40, 40), dtype=np.uint16)
+        write_npy_pyramid(
+            os.path.join(root, f"tile_{i:06d}_ch_488"), arr, n_levels=2
+        )
+
+
+def _multitile(spark, tmp: str, out: str, force_loop: bool) -> None:
+    """Three edge-truncated npy tiles, one computed 3-level store each."""
+    rng = np.random.default_rng(5)
+    tiles = []
+    for i, shape in enumerate([(20, 14, 10), (16, 16, 16), (9, 9, 9)]):
+        arr = rng.integers(0, 65535, size=shape, dtype=np.uint16)
+        src = os.path.join(tmp, f"mt_tile{i}")
+        if not os.path.exists(src):
+            write_npy_pyramid(src, arr, n_levels=1)
+        tiles.append((src, os.path.join(out, f"store{i}.zarr")))
+    settings = ConvertJobSettings(
+        input_source="ignored",
+        output_location="ignored",
+        chunk_shape=(8, 8, 8),
+        shard_shape=(8, 8, 8),
+        translate_pyramid=False,
+        downsample_levels=3,
+        downsample_mode="mean",
+    )
+    saved = multitile._mt_cascade_applicable
+    if force_loop:
+        multitile._mt_cascade_applicable = lambda *a: False
+    try:
+        multitile.convert_tiles_to_zarr(spark, tiles, settings)
+    finally:
+        multitile._mt_cascade_applicable = saved
+
+
+def _run_job(spark, tmp: str, out: str, **kw) -> None:
+    root = os.path.join(tmp, "job_dataset")
+    if not os.path.exists(root):
+        os.makedirs(root)
+        _job_dataset(root)
+    resp = run_job(
+        spark,
+        TileJobSettings(
+            input_source=root,
+            output_location=out,
+            chunk_shape=(16, 16, 16),
+            shard_shape=(32, 32, 32),
+            **kw,
+        ),
+    )
+    assert resp.status_code == 200, resp.message
+
+
+def _v2(spark, tmp: str, out: str) -> None:
+    rng = np.random.default_rng(3)
+    arr = rng.integers(0, 65535, size=(40, 50, 60), dtype=np.uint16)
+    src = os.path.join(tmp, "v2_src")
+    write_npy_pyramid(src, arr, n_levels=2)
+    convert_to_zarr_v2(
+        spark,
+        ConvertJobSettings(
+            input_source=src, output_location=out, chunk_shape=(16, 16, 16)
+        ),
+    )
+
+
+def _cascade(spark, out):
+    _convert(
+        spark, "synth://512,256,256,1", out, translate_pyramid=False,
+        downsample_levels=3, downsample_mode="mean", **SYNTH,
+    )
+
+
+def _ims(tmp: str) -> str:
+    path = os.path.join(tmp, "tile.ims")
+    if not os.path.exists(path):
+        _ims_tile(path)
+    return path
+
+
+def _ims_cascade(spark, tmp, out):
+    _convert(
+        spark, _ims(tmp), out, chunk_shape=(32, 32, 32),
+        shard_shape=(64, 64, 64), translate_pyramid=False,
+        downsample_levels=3, downsample_mode="mean",
+    )
+
+
+def _quarantine(spark, tmp, out):
+    path = os.path.join(tmp, "corrupt.ims")
+    _corrupt_ims_tile(path)
+    _convert(
+        spark, path, out, chunk_shape=(8, 8, 8), shard_shape=(16, 16, 16),
+        translate_pyramid=False, downsample_levels=2,
+        downsample_mode="mean", codec="gzip", codec_level=1,
+        on_corrupt="quarantine",
+    )
+
+
+def _level_loop(fn):
+    def run(*args):
+        with _LevelLoopForced():
+            fn(*args)
+
+    return run
+
+
+#: name -> fn(spark, tmp, out); each case writes only under ``out``.
+CASES = {
+    "translate synth": lambda spark, tmp, out: _convert(
+        spark, "synth://512,256,256,1", out, **SYNTH
+    ),
+    "translate synthnoise": lambda spark, tmp, out: _convert(
+        spark, "synthnoise://512,256,256,1", out, **SYNTH
+    ),
+    "cascade synth 3-level": lambda spark, tmp, out: _cascade(spark, out),
+    "level loop synth 3-level": _level_loop(
+        lambda spark, tmp, out: _cascade(spark, out)
+    ),
+    "quarantine corrupt ims": _quarantine,
+    "translate ims": lambda spark, tmp, out: _convert(
+        spark, _ims(tmp), out, chunk_shape=(32, 32, 32),
+        shard_shape=(64, 64, 64),
+    ),
+    "cascade ims 3-level": _ims_cascade,
+    "run_job partition_mode=file": lambda spark, tmp, out: _run_job(
+        spark, tmp, out, partition_mode="file"
+    ),
+    "run_job": lambda spark, tmp, out: _run_job(spark, tmp, out),
+    "multitile cascade": lambda spark, tmp, out: _multitile(
+        spark, tmp, out, force_loop=False
+    ),
+    "multitile level loop": lambda spark, tmp, out: _multitile(
+        spark, tmp, out, force_loop=True
+    ),
+    "v2 translate": _v2,
+    "translate synth codec=none": lambda spark, tmp, out: _convert(
+        spark, "synth://512,256,256,1", out,
+        **{**SYNTH, "codec": "none"},
+    ),
+    "translate synth codec=none transpose=C": lambda spark, tmp, out: _convert(
+        spark, "synth://512,256,256,1", out,
+        **{**SYNTH, "codec": "none", "transpose_order": "C"},
+    ),
+}
+
+
+def main(argv: list[str]) -> int:
+    from aind_exaspim_data_transformation_spark.session import get_spark
+
+    spark = get_spark("store-hashes", cpus=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    with tempfile.TemporaryDirectory() as tmp:
+        for i, (name, fn) in enumerate(CASES.items()):
+            if argv and not any(a in name for a in argv):
+                continue
+            out = os.path.join(tmp, f"case{i}")
+            fn(spark, tmp, out)
+            n, digest = manifest(out)
+            print(f"{name:42s} {n:4d} {digest}", flush=True)
+    spark.stop()
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
