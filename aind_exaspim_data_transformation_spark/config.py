@@ -32,8 +32,8 @@ class ConvertJobSettings(BaseModel):
     translate_pyramid: bool = True  # copy source levels vs recompute
 
     # zstd level 3 matches the reference's production codec chain
-    # (reference compress/imaris_to_zarr.py:223-242); gzip remains for
-    # environments with no zstd backend (zarrio.codecs.HAVE_ZSTD).
+    # (reference compress/imaris_to_zarr.py:223-242), encoded by
+    # pyarrow's libzstd; gzip and none remain selectable.
     codec: Literal["gzip", "zstd", "none"] = "zstd"
     codec_level: int = 3
     # inner transpose codec order ("C", "F", or None to omit) — the

@@ -23,7 +23,7 @@ from pydantic import BaseModel
 from pyspark.sql import SparkSession
 
 from .config import ConvertJobSettings
-from .sources.acquisition import load_acquisition, translation_for_tile
+from .sources.acquisition import load_acquisition, translation_table
 from .sources.discovery import discover_tiles
 from .zarrio.kvstore import kv_join
 from .zarrio.multitile import convert_tiles_to_zarr
@@ -66,9 +66,11 @@ def run_job(spark: SparkSession, settings: TileJobSettings) -> JobResponse:
 
     translations = {}
     if settings.acquisition_path:
-        acq = load_acquisition(spark, settings.acquisition_path)
+        table = translation_table(
+            load_acquisition(spark, settings.acquisition_path)
+        )
         for tile_path, _ in tiles:
-            tr = translation_for_tile(acq, os.path.basename(tile_path))
+            tr = table.get(os.path.basename(tile_path))
             if tr is not None:
                 translations[tile_path] = tr
 

@@ -8,7 +8,8 @@ lookups are explode/filter/transform expressions:
   (reference :183-215);
 - tile translation: tiles[] -> match file_name -> first translation-type
   transform -> mm -> µm (x1000, reference _MM_TO_UM :260) -> reversed to
-  ZYX; empty result on any miss (reference returns None, :309-314).
+  ZYX, collected once into a ``{file_name: zyx}`` dict whose ``.get``
+  is None on any miss (reference returns None, :309-314).
 """
 
 from __future__ import annotations
@@ -77,17 +78,12 @@ def tile_translations(acq: DataFrame) -> DataFrame:
     )
 
 
-def translation_for_tile(
-    acq: DataFrame, tile_filename: str
-) -> tuple[float, float, float] | None:
-    """ZYX µm translation for one tile, or None when the tile or its
-    translation transform is absent."""
-    rows = (
-        tile_translations(acq)
-        .where(F.col("file_name") == tile_filename)
-        .collect()
-    )
-    if not rows:
-        return None
-    r = rows[0]
-    return (r["trans_z_um"], r["trans_y_um"], r["trans_x_um"])
+def translation_table(
+    acq: DataFrame,
+) -> dict[str, tuple[float, float, float]]:
+    """``{file_name: (z, y, x) µm}`` for every tile with a translation,
+    collected in one Spark job; ``.get`` gives None on a miss."""
+    return {
+        r["file_name"]: (r["trans_z_um"], r["trans_y_um"], r["trans_x_um"])
+        for r in tile_translations(acq).collect()
+    }

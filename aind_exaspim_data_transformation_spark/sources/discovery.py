@@ -34,6 +34,10 @@ def discover_tiles(
         paths = sorted(
             p.parent for p in root.rglob("meta.json") if p.parent.is_dir()
         )
+    if single_tile:
+        # Integration-test mode: first tile only (reference
+        # imaris_job.py:76-82; ~95% cost cut per README.md:76).
+        paths = paths[:1]
     rows = [
         (
             str(p),
@@ -42,11 +46,6 @@ def discover_tiles(
         )
         for p in paths
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "tile_path string, tile_name string, size_bytes long"
-    ).orderBy("tile_path")
-    if single_tile:
-        # Integration-test mode: first tile only (reference
-        # imaris_job.py:76-82; ~95% cost cut per README.md:76).
-        df = df.limit(1)
-    return df
+    )

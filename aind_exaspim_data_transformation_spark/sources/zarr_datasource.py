@@ -4,10 +4,14 @@ optional DataSource V2 ergonomic).
 
 Each input partition is one shard file, so scan parallelism equals the
 shard grid and executors read only their shard (the hyperslab-pushdown
-property, expressed through the source's natural partitioning). Rows are
-block rows per the engine data model (§1.4): coordinates + metadata +
-optional payload. With ``payload=false`` (default) the scan is
-metadata-only — Catalyst's column pruning then never touches voxel bytes.
+property, expressed through the source's natural partitioning). Shards
+are read through ``zarrio.kvstore``, so every store URL the writers
+accept scans (local path, ``s3://``, ``s3+local://``); a missing shard
+gives no row. Rows are block rows per the engine data model (§1.4):
+coordinates + metadata + optional payload. With ``payload=false``
+(default) the scan is metadata-only: each shard object is still read
+(``file_bytes`` is its length) but never decoded, and Catalyst's column
+pruning keeps voxel bytes out of the plan.
 
 Usage::
 
@@ -18,9 +22,6 @@ Usage::
 """
 
 from __future__ import annotations
-
-import os
-from itertools import product
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -58,20 +59,16 @@ def _schema(with_payload: bool) -> StructType:
 
 
 class _ShardPartition(InputPartition):
-    """Carries the resolved spec fields so executors never re-read
-    zarr.json (a 45k-shard scan would otherwise do 45k metadata reads)."""
+    """One shard: the level's resolved spec and the shard's
+    ``grid_cells`` cell ``(idx, inner, outer)`` travel with it, so
+    executors never re-read zarr.json (a 45k-shard scan would otherwise
+    do 45k metadata reads)."""
 
-    def __init__(
-        self,
-        store: str,
-        level: int,
-        idx: tuple[int, ...],
-        spec_fields: tuple,
-    ):
+    def __init__(self, store: str, level: int, spec, cell: tuple):
         self.store = store
         self.level = level
-        self.idx = idx
-        self.spec_fields = spec_fields
+        self.spec = spec
+        self.cell = cell
 
 
 class _ZarrShardReader(DataSourceReader):
@@ -86,70 +83,39 @@ class _ZarrShardReader(DataSourceReader):
         )
 
     def partitions(self):
-        from ..zarrio.format import read_array_metadata
+        from ..zarrio.format import grid_cells, read_array_metadata
 
         spec = read_array_metadata(self.store, self.level)
-        fields = (
-            spec.shape,
-            spec.shard_shape,
-            spec.chunk_shape,
-            spec.dtype,
-            spec.codec,
-            spec.codec_level,
-            spec.fill_value,
-            spec.transpose_order,
-        )
         return [
-            _ShardPartition(self.store, self.level, idx, fields)
-            for idx in product(*(range(g) for g in spec.shard_grid))
+            _ShardPartition(self.store, self.level, spec, cell)
+            for cell in grid_cells(
+                (0,) * len(spec.shape), spec.shape, spec.shard_shape
+            )
         ]
 
     def read(self, partition: _ShardPartition):
-        from ..zarrio.format import ShardSpec, decode_shard, shard_path
+        from ..zarrio.format import decode_shard, shard_path
+        from ..zarrio.kvstore import kv_get
 
-        shape, shard_shape, chunk_shape, dtype, codec, lvl, fill, tr = (
-            partition.spec_fields
-        )
-        spec = ShardSpec(
-            shape=shape,
-            shard_shape=shard_shape,
-            chunk_shape=chunk_shape,
-            dtype=dtype,
-            codec=codec,
-            codec_level=lvl,
-            fill_value=fill,
-            transpose_order=tr,
-        )
-        idx = partition.idx
-        path = shard_path(partition.store, partition.level, idx)
-        if not os.path.exists(path):
+        spec = partition.spec
+        idx, inner, outer = partition.cell
+        blob = kv_get(shard_path(partition.store, partition.level, idx))
+        if blob is None:
             return
-        # spatial dims are the trailing 3 of the 5-D (t,c,z,y,x) layout
-        _, _, iz, iy, ix = idx
-        sz, sy, sx = spec.shard_shape[2:]
-        shape_z, shape_y, shape_x = spec.shape[2:]
-        row = [
+        # spatial dims are the trailing 3 of the 5-D (t,c,z,y,x) layout;
+        # the grid starts at 0, so ``outer`` is the shard's global extent
+        row = (
             partition.level,
-            iz,
-            iy,
-            ix,
-            iz * sz,
-            min((iz + 1) * sz, shape_z),
-            iy * sy,
-            min((iy + 1) * sy, shape_y),
-            ix * sx,
-            min((ix + 1) * sx, shape_x),
+            *idx[2:],
+            *(v for s in outer[2:] for v in (s.start, s.stop)),
             spec.dtype,
-            os.path.getsize(path),
-        ]
+            len(blob),
+        )
         if self.with_payload:
-            with open(path, "rb") as f:
-                shard = decode_shard(f.read(), spec)
-            # clip padding so payload bytes == logical block bytes
-            z1, y1, x1 = row[5] - row[4], row[7] - row[6], row[9] - row[8]
-            block = shard[0, 0, :z1, :y1, :x1]
-            row.append(bytes(block.tobytes(order="C")))
-        yield tuple(row)
+            # ``inner`` clips the edge padding, so payload bytes ==
+            # logical block bytes
+            row += (decode_shard(blob, spec)[inner].tobytes(),)
+        yield row
 
 
 class ZarrShardDataSource(DataSource):

@@ -4,8 +4,8 @@ No zarr-python / tensorstore dependency: the v3 on-disk format (array
 metadata JSON, `sharding_indexed` shard binary layout, crc32c-checked
 index) is implemented directly on numpy. Mirrors the store layout the
 reference produces via TensorStore specs (reference
-compress/imaris_to_zarr.py:141-269), with gzip in place of zstd when the
-zstandard module is absent.
+compress/imaris_to_zarr.py:141-269), including its zstd inner codec
+(pyarrow's bundled libzstd).
 """
 
 from .codecs import crc32c

@@ -1,4 +1,5 @@
-"""Codecs for the Zarr v3 writer: CRC32C (Castagnoli) and bytes compressors.
+"""Codecs for the Zarr v3 writer: CRC32C (Castagnoli) and bytes compressors
+(gzip from the stdlib, zstd from pyarrow's bundled libzstd).
 
 CRC32C is required by the v3 `sharding_indexed` index codec chain
 (mirrors the reference's index spec, compress/imaris_to_zarr.py:237).
@@ -10,6 +11,8 @@ payloads (the only thing it checksums here).
 from __future__ import annotations
 
 import gzip as _gzip
+
+import pyarrow as _pa
 
 _CRC32C_POLY = 0x82F63B78  # reflected Castagnoli polynomial
 
@@ -36,68 +39,29 @@ def crc32c(data: bytes, value: int = 0) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-# zstd backend selection. Determinism scope: frames are deterministic per
-# (input bytes, level) WITHIN one backend+libzstd version, but the
-# zstandard wheel and pyarrow's bundled libzstd are not guaranteed to emit
-# byte-identical frames for the same input. The idempotent-rewrite
-# guarantee (same shard key -> same bytes on re-run) therefore holds per
-# environment; switching backends between a run and its resume may rewrite
-# shards with different (still valid) bytes. ``zstd_backend_info()``
-# reports the active backend so callers can record it next to a store.
-try:  # optional fast path when the zstandard wheel exists
-    import zstandard as _zstd
-
-    def zstd_compress(data: bytes, level: int = 3) -> bytes:
-        return _zstd.ZstdCompressor(level=level).compress(data)
-
-    def zstd_decompress(data: bytes, expected_size: int | None = None) -> bytes:
-        return _zstd.ZstdDecompressor().decompress(data)
-
-    HAVE_ZSTD = True
-    ZSTD_BACKEND = ("zstandard", getattr(_zstd, "__version__", "?"))
-except ImportError:
-    try:  # pyarrow bundles libzstd: same frames (magic 0x28b52ffd),
-        # deterministic per (input, level); its decompress API needs the
-        # output size, which the sharding_indexed decode always knows
-        # (chunk_shape x itemsize).
-        import pyarrow as _pa
-
-        _pa.Codec("zstd")  # raises if built without zstd
-
-        def zstd_compress(data: bytes, level: int = 3) -> bytes:
-            buf = _pa.Codec("zstd", compression_level=level).compress(data)
-            return buf if isinstance(buf, bytes) else buf.to_pybytes()
-
-        def zstd_decompress(
-            data: bytes, expected_size: int | None = None
-        ) -> bytes:
-            if expected_size is None:
-                raise NotImplementedError(
-                    "pyarrow zstd decode requires the decompressed size"
-                )
-            buf = _pa.Codec("zstd").decompress(data, expected_size)
-            return buf if isinstance(buf, bytes) else buf.to_pybytes()
-
-        HAVE_ZSTD = True
-        ZSTD_BACKEND = ("pyarrow", _pa.__version__)
-    except Exception:  # pragma: no cover - env-dependent
-        HAVE_ZSTD = False
-        ZSTD_BACKEND = (None, None)
-
-        def zstd_compress(data: bytes, level: int = 3) -> bytes:
-            raise NotImplementedError("no zstd backend available")
-
-        def zstd_decompress(
-            data: bytes, expected_size: int | None = None
-        ) -> bytes:
-            raise NotImplementedError("no zstd backend available")
+# zstd is pyarrow's bundled libzstd: pyarrow is already a hard
+# dependency (every mapInPandas batch is Arrow), so there is one backend
+# and no import-order choice. Frames are deterministic per (input bytes,
+# level) for one libzstd build, which pins the idempotent-rewrite
+# guarantee (same shard key -> same bytes on retry or resume) to the
+# pyarrow build; ``zstd_backend_info()`` reports it. Its decompress API
+# needs the output size, which every caller knows (the shard decode's
+# chunk_shape x itemsize, the cascade assembler's piece shape).
+def zstd_compress(data: bytes, level: int) -> bytes:
+    return _pa.Codec("zstd", compression_level=level).compress(
+        data, asbytes=True
+    )
 
 
-def zstd_backend_info() -> tuple[str | None, str | None]:
-    """(backend name, version) of the active zstd implementation — record
-    this next to a store if a resume must detect a backend switch (frames
-    differ across backends; see module comment on determinism scope)."""
-    return ZSTD_BACKEND
+def zstd_decompress(data: bytes, expected_size: int) -> bytes:
+    return _pa.Codec("zstd").decompress(data, expected_size, asbytes=True)
+
+
+def zstd_backend_info() -> tuple[str, str]:
+    """(backend name, version) of the zstd implementation — the pyarrow
+    build, whose bundled libzstd decides frame identity; record it next
+    to a store if a resume must detect a build switch."""
+    return ("pyarrow", _pa.__version__)
 
 
 def compress(data: bytes, codec: str, level: int) -> bytes:
@@ -112,9 +76,7 @@ def compress(data: bytes, codec: str, level: int) -> bytes:
     raise ValueError(f"unknown codec {codec!r}")
 
 
-def decompress(
-    data: bytes, codec: str, expected_size: int | None = None
-) -> bytes:
+def decompress(data: bytes, codec: str, expected_size: int) -> bytes:
     if codec == "gzip":
         return _gzip.decompress(data)
     if codec == "zstd":

@@ -21,7 +21,7 @@ the v3 regular grid requires; readers clip to the array shape.
 from __future__ import annotations
 
 import json
-import math
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, field
 from itertools import product
 
@@ -78,12 +78,6 @@ class ShardSpec:
         )
 
     @property
-    def shard_grid(self) -> tuple[int, ...]:
-        return tuple(
-            math.ceil(d / s) for d, s in zip(self.shape, self.shard_shape)
-        )
-
-    @property
     def np_dtype(self) -> np.dtype:
         return np.dtype(self.dtype)
 
@@ -123,6 +117,42 @@ def clamp_shard_and_chunk(
     return tuple(shard), chunk
 
 
+def grid_cells(
+    starts: Sequence[int], stops: Sequence[int], block: Sequence[int]
+) -> Iterator[tuple[tuple[int, ...], tuple[slice, ...], tuple[slice, ...]]]:
+    """Every cell of the regular grid of ``block``-sized cells that the
+    region ``[starts, stops)`` overlaps, in row-major order, as
+    ``(idx, inner, outer)``: the cell index, the overlap's slices inside
+    the cell, and the same overlap's slices inside the region. Any rank;
+    an empty extent on any axis yields no cells. The one place a region
+    meets a block grid — every store reader, the shard grid and the
+    cascade's partial split go through it."""
+    ranges = [
+        range(a // b, (e + b - 1) // b) if e > a else range(0)
+        for a, e, b in zip(starts, stops, block)
+    ]
+    for idx in product(*ranges):
+        inner, outer = [], []
+        for i, a, e, b in zip(idx, starts, stops, block):
+            lo, hi = max(a, i * b), min(e, (i + 1) * b)
+            inner.append(slice(lo - i * b, hi - i * b))
+            outer.append(slice(lo - a, hi - a))
+        yield idx, tuple(inner), tuple(outer)
+
+
+def region_bounds(
+    region: tuple[slice, ...], shape: tuple[int, ...]
+) -> tuple[list[int], list[int]]:
+    """``(starts, stops)`` of a slice region, an open stop and any stop
+    past the array edge clipped to ``shape``."""
+    starts = [s.start or 0 for s in region]
+    stops = [
+        min(s.stop if s.stop is not None else d, d)
+        for s, d in zip(region, shape)
+    ]
+    return starts, stops
+
+
 def shard_grid(
     shape_zyx: tuple[int, int, int], shard_zyx: tuple[int, int, int]
 ):
@@ -131,12 +161,8 @@ def shard_grid(
     axis clamped to the array edge — the one grid every conversion stage
     enumerates (reference compute_shard_grid / shard_index_to_slices /
     enumerate_shard_indices, compress/imaris_to_zarr.py:277-372)."""
-    counts = [math.ceil(d / s) for d, s in zip(shape_zyx, shard_zyx)]
-    for idx in product(*(range(n) for n in counts)):
-        bounds: list[int] = []
-        for i, s, d in zip(idx, shard_zyx, shape_zyx):
-            bounds += (i * s, min((i + 1) * s, d))
-        yield (*idx, *bounds)
+    for idx, _, outer in grid_cells((0, 0, 0), shape_zyx, shard_zyx):
+        yield (*idx, *(v for s in outer for v in (s.start, s.stop)))
 
 
 # --------------------------------------------------------------------------
@@ -353,29 +379,14 @@ def read_array_region(
     """Assemble an arbitrary region from shard files (reader twin of the
     writer; used by round-trip verification and the pyramid compute path)."""
     spec = spec or read_array_metadata(store, level)
-    starts = [s.start or 0 for s in region]
-    stops = [
-        min(s.stop if s.stop is not None else d, d)
-        for s, d in zip(region, spec.shape)
-    ]
-    out_shape = tuple(e - s for s, e in zip(starts, stops))
-    out = np.full(out_shape, spec.fill_value, dtype=spec.np_dtype)
-    lo = [s // ss for s, ss in zip(starts, spec.shard_shape)]
-    hi = [
-        (e - 1) // ss if e > s else s // ss
-        for s, e, ss in zip(starts, stops, spec.shard_shape)
-    ]
-    for idx in product(*(range(a, b + 1) for a, b in zip(lo, hi))):
+    starts, stops = region_bounds(region, spec.shape)
+    out = np.full(
+        tuple(e - s for s, e in zip(starts, stops)),
+        spec.fill_value,
+        dtype=spec.np_dtype,
+    )
+    for idx, inner, outer in grid_cells(starts, stops, spec.shard_shape):
         blob = kv_get(shard_path(store, level, idx))
-        if blob is None:
-            continue
-        shard = decode_shard(blob, spec)
-        sh_start = [i * ss for i, ss in zip(idx, spec.shard_shape)]
-        src_sl, dst_sl = [], []
-        for s, e, s0, ss in zip(starts, stops, sh_start, spec.shard_shape):
-            a = max(s, s0)
-            b = min(e, s0 + ss)
-            src_sl.append(slice(a - s0, b - s0))
-            dst_sl.append(slice(a - s, b - s))
-        out[tuple(dst_sl)] = shard[tuple(src_sl)]
+        if blob is not None:
+            out[outer] = decode_shard(blob, spec)[inner]
     return out

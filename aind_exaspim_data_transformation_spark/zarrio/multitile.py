@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsample_block
 from ..sources.tensor import open_source
+from .codecs import zstd_decompress
 from .format import (
     ShardSpec,
     read_array_metadata,
@@ -44,7 +45,6 @@ from .pipeline import (
     _put_shard,
     _read_reduced_region,
     _split_rows,
-    _unpack_payload,
     iter_coalesced_reads,
     stage_agg_exprs,
     stage_dict,
@@ -175,7 +175,7 @@ def _make_global_assembler():
             # the per-level fallback loop (which reads raw parent voxels).
             size = int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize
             piece = np.frombuffer(
-                _unpack_payload(r.payload, size), dtype=spec.np_dtype
+                zstd_decompress(r.payload, size), dtype=spec.np_dtype
             ).reshape(r.sz, r.sy, r.sx)
             block[
                 r.oz : r.oz + r.sz,

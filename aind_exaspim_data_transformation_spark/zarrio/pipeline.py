@@ -34,13 +34,15 @@ from pyspark.sql import functions as F
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsample_block, downsampled_shape
 from ..sources.tensor import open_source
-from .codecs import HAVE_ZSTD, zstd_compress, zstd_decompress
+from .codecs import zstd_compress
 from .format import (
     ShardSpec,
     clamp_shard_and_chunk,
     decode_shard,
     encode_shard,
+    grid_cells,
     read_array_region,
+    region_bounds,
     shard_path,
     write_shard_file,
 )
@@ -49,27 +51,6 @@ from .kvstore import kv_get
 #: Cap on quarantined-shard detail rows carried to the driver: enough
 #: to locate the corrupt region(s); the full count is always exact.
 ERROR_SAMPLE_CAP = 20
-
-def _pack_payload(raw: bytes) -> bytes:
-    """Wire compression for cascade partials: reduced voxels shuffle
-    compressed (zstd-1 when a backend exists, zlib-1 otherwise), cutting
-    the pandas->Arrow->UnsafeRow->shuffle copy chain to compressed size.
-    Self-describing one-byte tag so the assembler never guesses; this is
-    in-flight data only — stored shard bytes are untouched."""
-    if HAVE_ZSTD:
-        return b"z" + zstd_compress(raw, 1)
-    import zlib
-
-    return b"g" + zlib.compress(raw, 1)
-
-
-def _unpack_payload(blob: bytes, expected_size: int) -> bytes:
-    if blob[:1] == b"z":
-        return zstd_decompress(blob[1:], expected_size)
-    import zlib
-
-    return zlib.decompress(blob[1:])
-
 
 def _split_rows(
     red: np.ndarray,
@@ -80,40 +61,23 @@ def _split_rows(
     """Split a reduced block (global origin ``r0`` at level ``lvl_to``)
     across that level's shard grid. One tuple per overlapped target
     shard: (level, iz, iy, ix, oz, oy, ox, sz, sy, sx, payload) —
-    offsets inside the target shard, piece shape, compressed voxels."""
+    offsets inside the target shard, piece shape, and the voxels
+    zstd-1 compressed for the shuffle, cutting the pandas->Arrow->
+    UnsafeRow->shuffle copy chain to compressed size (in-flight data
+    only; stored shard bytes are untouched)."""
     r1 = tuple(a + s for a, s in zip(r0, red.shape))
-    cs = child_shard
     rows = []
-    for cz in range(r0[0] // cs[0], (r1[0] - 1) // cs[0] + 1):
-        for cy in range(r0[1] // cs[1], (r1[1] - 1) // cs[1] + 1):
-            for cx in range(r0[2] // cs[2], (r1[2] - 1) // cs[2] + 1):
-                c0 = (cz * cs[0], cy * cs[1], cx * cs[2])
-                a = [max(r0[d], c0[d]) for d in range(3)]
-                b = [
-                    min(r1[d], c0[d] + cs[d]) for d in range(3)
-                ]
-                piece = np.ascontiguousarray(
-                    red[
-                        a[0] - r0[0] : b[0] - r0[0],
-                        a[1] - r0[1] : b[1] - r0[1],
-                        a[2] - r0[2] : b[2] - r0[2],
-                    ]
-                )
-                rows.append(
-                    (
-                        lvl_to,
-                        cz,
-                        cy,
-                        cx,
-                        a[0] - c0[0],
-                        a[1] - c0[1],
-                        a[2] - c0[2],
-                        piece.shape[0],
-                        piece.shape[1],
-                        piece.shape[2],
-                        _pack_payload(piece.tobytes()),
-                    )
-                )
+    for idx, inner, outer in grid_cells(r0, r1, child_shard):
+        piece = red[outer]
+        rows.append(
+            (
+                lvl_to,
+                *idx,
+                *(s.start for s in inner),
+                *piece.shape,
+                zstd_compress(piece.tobytes(), 1),
+            )
+        )
     return rows
 
 
@@ -316,10 +280,8 @@ def _read_reduced_region(
     under full-core concurrency, so saved traffic is saved wall time.
     Falls back to read_array_region + one big reduce otherwise.
     """
-    dims = spec.shape[2:]
     pshard = spec.shard_shape[2:]
-    starts = [s.start or 0 for s in region3]
-    stops = [min(s.stop, d) for s, d in zip(region3, dims)]
+    starts, stops = region_bounds(region3, spec.shape[2:])
     aligned = all(st % ps == 0 for st, ps in zip(starts, pshard)) and all(
         ps % f == 0 for ps, f in zip(pshard, factor)
     )
@@ -333,28 +295,19 @@ def _read_reduced_region(
         tuple(e - s for s, e in zip(starts, stops)), factor
     )
     out = np.full(out_shape, spec.fill_value, dtype=spec.np_dtype)
-    lo = [s // ps for s, ps in zip(starts, pshard)]
-    hi = [(e - 1) // ps for e, ps in zip(stops, pshard)]
-    for iz in range(lo[0], hi[0] + 1):
-        for iy in range(lo[1], hi[1] + 1):
-            for ix in range(lo[2], hi[2] + 1):
-                blob = kv_get(shard_path(store, parent, (0, 0, iz, iy, ix)))
-                if blob is None:
-                    continue  # missing shard == fill, already in `out`
-                shard = decode_shard(blob, spec)[0, 0]
-                s0 = [i * ps for i, ps in zip((iz, iy, ix), pshard)]
-                valid = [
-                    min(ps, e - a) for ps, e, a in zip(pshard, stops, s0)
-                ]
-                piece = downsample_block(
-                    shard[: valid[0], : valid[1], : valid[2]], factor, mode
-                )
-                o0 = [(a - s) // f for a, s, f in zip(s0, starts, factor)]
-                out[
-                    o0[0] : o0[0] + piece.shape[0],
-                    o0[1] : o0[1] + piece.shape[1],
-                    o0[2] : o0[2] + piece.shape[2],
-                ] = piece
+    for idx, inner, outer in grid_cells(starts, stops, pshard):
+        blob = kv_get(shard_path(store, parent, (0, 0, *idx)))
+        if blob is None:
+            continue  # missing shard == fill, already in `out`
+        piece = downsample_block(
+            decode_shard(blob, spec)[0, 0][inner], factor, mode
+        )
+        out[
+            tuple(
+                slice(o.start // f, o.start // f + n)
+                for o, f, n in zip(outer, factor, piece.shape)
+            )
+        ] = piece
     return out
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
 from ..sources.tensor import open_source
-from .format import shard_grid
+from .format import grid_cells, region_bounds, shard_grid
 from .kvstore import kv_get, kv_join, kv_put
 from .metadata import multiscales_metadata
 
@@ -106,35 +106,16 @@ def v2_chunk_path(store: str, level: int, idx: tuple[int, ...]) -> str:
 def read_v2_region(
     store: str, level: int, region: tuple[slice, ...], spec: V2Spec
 ) -> np.ndarray:
-    starts = [s.start or 0 for s in region]
-    stops = [
-        min(s.stop if s.stop is not None else d, d)
-        for s, d in zip(region, spec.shape)
-    ]
+    starts, stops = region_bounds(region, spec.shape)
     out = np.full(
         tuple(e - s for s, e in zip(starts, stops)),
         spec.fill_value,
         dtype=spec.np_dtype,
     )
-    from itertools import product
-
-    lo = [s // c for s, c in zip(starts, spec.chunks)]
-    hi = [
-        (e - 1) // c if e > s else s // c
-        for s, e, c in zip(starts, stops, spec.chunks)
-    ]
-    for idx in product(*(range(a, b + 1) for a, b in zip(lo, hi))):
+    for idx, inner, outer in grid_cells(starts, stops, spec.chunks):
         blob = kv_get(v2_chunk_path(store, level, idx))
-        if blob is None:
-            continue
-        chunk = decode_v2_chunk(blob, spec)
-        c_start = [i * c for i, c in zip(idx, spec.chunks)]
-        src_sl, dst_sl = [], []
-        for s, e, c0, c in zip(starts, stops, c_start, spec.chunks):
-            a, b = max(s, c0), min(e, c0 + c)
-            src_sl.append(slice(a - c0, b - c0))
-            dst_sl.append(slice(a - s, b - s))
-        out[tuple(dst_sl)] = chunk[tuple(src_sl)]
+        if blob is not None:
+            out[outer] = decode_v2_chunk(blob, spec)[inner]
     return out
 
 

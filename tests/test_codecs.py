@@ -3,7 +3,6 @@
 import pytest
 
 from aind_exaspim_data_transformation_spark.zarrio.codecs import (
-    HAVE_ZSTD,
     compress,
     crc32c,
     decompress,
@@ -49,11 +48,9 @@ def test_crc32c_fuzz_matches_bitwise_reference():
 
 @pytest.mark.parametrize("codec", ["gzip", "zstd", "none"])
 def test_compress_roundtrip(codec):
-    if codec == "zstd" and not HAVE_ZSTD:
-        pytest.skip("no zstd backend")
     payload = bytes(range(256)) * 100
     # expected_size mirrors the shard decode path (format.py passes the
-    # chunk byte count); the pyarrow zstd backend requires it.
+    # chunk byte count); pyarrow's zstd decode requires it.
     enc = compress(payload, codec, 1 if codec == "gzip" else 3)
     assert decompress(enc, codec, len(payload)) == payload
     if codec != "none":
@@ -62,10 +59,8 @@ def test_compress_roundtrip(codec):
 
 def test_zstd_deterministic_and_framed():
     """Same (input, level) -> same bytes within one environment (the
-    idempotent-rewrite guarantee is per-backend; see codecs.py docstring),
+    idempotent-rewrite guarantee is per pyarrow build; see codecs.py),
     and the output is a real zstd frame (magic 0x28B52FFD little-endian)."""
-    if not HAVE_ZSTD:
-        pytest.skip("no zstd backend")
     payload = bytes(range(256)) * 500
     a = compress(payload, "zstd", 3)
     b = compress(payload, "zstd", 3)

@@ -14,7 +14,7 @@ from aind_exaspim_data_transformation_spark.job import (
 from aind_exaspim_data_transformation_spark.sources.acquisition import (
     load_acquisition,
     tile_translations,
-    translation_for_tile,
+    translation_table,
     voxel_resolution,
 )
 from aind_exaspim_data_transformation_spark.sources.discovery import (
@@ -75,7 +75,8 @@ def test_discover_tiles_sorted_and_single(spark, dataset):
         "tile_000000_ch_488",
         "tile_000001_ch_488",
     ]
-    assert discover_tiles(spark, str(root), single_tile=True).count() == 1
+    single = discover_tiles(spark, str(root), single_tile=True).collect()
+    assert [r.tile_name for r in single] == ["tile_000000_ch_488"]
 
 
 def test_discover_empty_dir(spark, tmp_path):
@@ -89,13 +90,14 @@ def test_acquisition_lookups(spark, dataset):
     tr = tile_translations(acq).collect()
     assert len(tr) == 1  # the translation-less tile is excluded
     # XYZ mm [1.5, 2.5, 3.5] -> ZYX um (3500, 2500, 1500)
-    assert translation_for_tile(acq, "tile_000000_ch_488") == (
+    table = translation_table(acq)
+    assert table.get("tile_000000_ch_488") == (
         3500.0,
         2500.0,
         1500.0,
     )
-    assert translation_for_tile(acq, "tile_000001_ch_488") is None
-    assert translation_for_tile(acq, "missing") is None
+    assert table.get("tile_000001_ch_488") is None
+    assert table.get("missing") is None
 
 
 def test_run_job_shard_mode(spark, dataset, tmp_path):

@@ -1,4 +1,7 @@
-"""spark.read.format('zarrshards') over an engine-written store."""
+"""spark.read.format('zarrshards') over an engine-written store, local
+and behind an S3 URL (``s3+local://``, the filesystem-backed fake S3
+client): the reader goes through ``zarrio.kvstore``, so both scan the
+same rows."""
 
 import numpy as np
 import pytest
@@ -17,14 +20,18 @@ from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
 )
 
 
-@pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
+@pytest.fixture(scope="module", params=["local", "s3+local"])
+def store(spark, tmp_path_factory, request):
     tmp = tmp_path_factory.mktemp("ds")
     rng = np.random.default_rng(42)
     level0 = rng.integers(0, 65535, size=(50, 40, 30), dtype=np.uint16)
     src = str(tmp / "tile")
     write_npy_pyramid(src, level0, n_levels=2)
-    out = str(tmp / "store.zarr")
+    out = (
+        str(tmp / "store.zarr")
+        if request.param == "local"
+        else f"s3+local://{tmp / 's3root'}//bkt/out/store.zarr"
+    )
     convert_to_zarr(
         spark,
         ConvertJobSettings(
@@ -81,3 +88,8 @@ def test_payload_scan_roundtrip(spark, store):
         F.sum(F.octet_length("payload")).alias("b")
     ).collect()[0]["b"]
     assert total == level0.nbytes
+    voxel_sum = sum(
+        int(np.frombuffer(r.payload, dtype=np.uint16).sum(dtype=np.int64))
+        for r in df.select("payload").collect()
+    )
+    assert voxel_sum == int(level0.sum(dtype=np.int64))

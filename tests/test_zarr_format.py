@@ -202,9 +202,6 @@ def test_pipeline_with_zstd(spark, tmp_path):
     from aind_exaspim_data_transformation_spark.sources.tensor import (
         write_npy_pyramid,
     )
-    from aind_exaspim_data_transformation_spark.zarrio.codecs import (
-        HAVE_ZSTD,
-    )
     from aind_exaspim_data_transformation_spark.zarrio.format import (
         read_array_metadata,
         read_array_region,
@@ -213,8 +210,6 @@ def test_pipeline_with_zstd(spark, tmp_path):
         convert_to_zarr,
     )
 
-    if not HAVE_ZSTD:
-        pytest.skip("no zstd backend")
     rng = np.random.default_rng(17)
     arr = rng.integers(0, 65535, (24, 24, 24), dtype=np.uint16)
     src = str(tmp_path / "tile_000003_ch_488")
