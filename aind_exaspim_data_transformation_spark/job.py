@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 
 from .config import ConvertJobSettings
 from .sources.acquisition import load_acquisition, translation_table
-from .sources.discovery import discover_tiles
+from .sources.discovery import list_tiles
 from .zarrio.kvstore import kv_join
 from .zarrio.multitile import convert_tiles_to_zarr
 
@@ -51,12 +51,11 @@ def _tile_store(output_root: str, tile_name: str) -> str:
 
 def run_job(spark: SparkSession, settings: TileJobSettings) -> JobResponse:
     t_start = time.monotonic()
-    tiles_df = discover_tiles(
-        spark, settings.input_source, settings.single_tile_upload
-    )
     tiles = [
-        (r["tile_path"], _tile_store(settings.output_location, r["tile_name"]))
-        for r in tiles_df.collect()
+        (path, _tile_store(settings.output_location, name))
+        for path, name, _size in list_tiles(
+            settings.input_source, settings.single_tile_upload
+        )
     ]
     if not tiles:
         return JobResponse(

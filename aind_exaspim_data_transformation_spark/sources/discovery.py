@@ -14,14 +14,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 
-def discover_tiles(
-    spark: SparkSession,
+def list_tiles(
     input_dir: str,
     single_tile: bool = False,
     patterns: tuple[str, ...] = ("*.ims", "*.h5"),
-) -> DataFrame:
-    """DataFrame of tile rows (tile_path, tile_name, size_bytes), sorted by
-    path; falls back through ``patterns`` until one matches. Also accepts
+) -> list[tuple[str, str, int]]:
+    """Tile rows (tile_path, tile_name, size_bytes), sorted by path;
+    falls back through ``patterns`` until one matches. Also accepts
     npy-pyramid directories (meta.json marker) for environments without
     HDF5."""
     root = Path(input_dir)
@@ -38,7 +37,7 @@ def discover_tiles(
         # Integration-test mode: first tile only (reference
         # imaris_job.py:76-82; ~95% cost cut per README.md:76).
         paths = paths[:1]
-    rows = [
+    return [
         (
             str(p),
             p.name,
@@ -46,6 +45,16 @@ def discover_tiles(
         )
         for p in paths
     ]
+
+
+def discover_tiles(
+    spark: SparkSession,
+    input_dir: str,
+    single_tile: bool = False,
+    patterns: tuple[str, ...] = ("*.ims", "*.h5"),
+) -> DataFrame:
+    """``list_tiles`` as a DataFrame."""
     return spark.createDataFrame(
-        rows, "tile_path string, tile_name string, size_bytes long"
+        list_tiles(input_dir, single_tile, patterns),
+        "tile_path string, tile_name string, size_bytes long",
     )

@@ -1,13 +1,15 @@
-"""Multi-tile conversion: one GLOBAL shard-task DataFrame across all tiles
+"""Multi-tile conversion: one GLOBAL shard-task plan across all tiles
 (the reference's partition_mode='shard', imaris_job.py:535-647; its
 'file' mode is the same plan over one tile, so there is only this one).
 
 Every task row names its write (source path, store, level, slice bounds,
 superchunk key); the level's layout (shapes, dtype, codec) lives only in
 the store's own zarr.json, which the driver writes before any task runs.
-A single Spark action converts the whole dataset: the scheduler
-load-balances shards across executors regardless of tile boundaries —
-exactly what the reference's hand-rolled global round-robin approximates.
+The driver puts whole superchunk groups into Spark partitions itself
+(``assign_groups``, balanced by voxels — the deterministic host-side
+split of the reference's imaris_job.py:35-46, across every tile) and
+feeds each writer task its partition's rows (``driver_partitioned``),
+so no Spark job moves rows the driver already holds.
 ``pipeline.convert_to_zarr`` is the one-tile call.
 
 At 100 TB: ~45k coordinate rows per 6 TB tile, ~1M rows per dataset —
@@ -16,14 +18,15 @@ trivially plannable; payloads never enter the DataFrame.
 
 from __future__ import annotations
 
+import heapq
 import time
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsample_block
@@ -50,16 +53,18 @@ from .pipeline import (
     stage_dict,
 )
 
-#: One row per shard write, for every stage: the source-read stage
-#: (level 0, or every level when translating) and each level of the
-#: store-read level loop. Rows are store-routed, so ONE Spark action
-#: covers a stage across EVERY tile.
+#: One row per shard (or v2 chunk) write, for every stage: the
+#: source-read stage (level 0, or every level when translating), each
+#: level of the store-read level loop, and the v2 writer. Rows are
+#: store-routed, so ONE Spark action covers a stage across EVERY tile;
+#: rows sharing a ``superchunk`` key always run in one task.
 TASK_SCHEMA = (
     "tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
     "z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, "
     "superchunk string"
 )
+TASK_COLS = [f.split()[0] for f in TASK_SCHEMA.split(", ")]
 
 #: The one writer-row schema. 'stats' rows are per-shard write records
 #: (``error`` set on a quarantined shard, which was not written); 'part'
@@ -196,12 +201,13 @@ def _task_rows(
     src_path: str,
     store: str,
     lvl: int,
-    spec: ShardSpec,
+    shape: tuple[int, int, int],
+    block: tuple[int, int, int],
     key_m: tuple[int, int, int],
 ) -> list[tuple]:
-    """One tile's level-``lvl`` TASK_SCHEMA rows, one per shard of
-    ``format.shard_grid``; the superchunk key groups ``key_m`` shards per
-    axis."""
+    """One tile's level-``lvl`` TASK_SCHEMA rows, one per ``block`` (a
+    shard, or a v2 chunk) of ``format.shard_grid`` over ``shape``; the
+    superchunk key groups ``key_m`` blocks per axis."""
     return [
         (
             src_path,
@@ -211,22 +217,94 @@ def _task_rows(
             f"{src_path},{lvl},{cell[0] // key_m[0]},"
             f"{cell[1] // key_m[1]},{cell[2] // key_m[2]}",
         )
-        for cell in shard_grid(spec.shape[2:], spec.shard_shape[2:])
+        for cell in shard_grid(shape, block)
     ]
 
 
-def build_global_tasks(
+def _voxels(rows: list[tuple]) -> int:
+    """Voxels the TASK_SCHEMA ``rows`` write: the work they stand for."""
+    return sum(
+        (r[7] - r[6]) * (r[9] - r[8]) * (r[11] - r[10]) for r in rows
+    )
+
+
+def assign_groups(rows: list[tuple], n_parts: int) -> list[list[tuple]]:
+    """Put the TASK_SCHEMA ``rows`` into ``n_parts`` partitions, whole
+    superchunk groups at a time: largest group first, each onto the
+    least-loaded partition (lowest index on a tie), load counted in
+    voxels. So no group spans partitions, the same rows always give the
+    same assignment (a retried or speculative task gets the same rows),
+    and no partition carries more than the mean load plus the largest
+    group. With fewer groups than ``n_parts`` some partitions stay
+    empty."""
+    groups: dict[str, list[tuple]] = {}
+    for r in rows:
+        groups.setdefault(r[12], []).append(r)
+    parts: list[list[tuple]] = [[] for _ in range(n_parts)]
+    loads = [(0, p) for p in range(n_parts)]
+    for grp in sorted(groups.values(), key=_voxels, reverse=True):
+        load, p = heapq.heappop(loads)
+        parts[p] += grp
+        heapq.heappush(loads, (load + _voxels(grp), p))
+    return parts
+
+
+class _PartitionFeed:
+    """mapInPandas body over ``spark.range(n)``: the task holding id
+    ``p`` hands ``writer`` partition ``p``'s rows as one TASK_SCHEMA
+    frame (an empty partition yields nothing). The row lists arrive as a
+    broadcast, which a reused Python worker unpickles once, not once
+    per task."""
+
+    def __init__(self, parts, writer):
+        self.parts = parts
+        self.writer = writer
+
+    def __call__(
+        self, batches: Iterator[pd.DataFrame]
+    ) -> Iterator[pd.DataFrame]:
+        for ids in batches:
+            for p in ids["id"]:
+                rows = self.parts.value[p]
+                if rows:
+                    yield from self.writer(
+                        iter([pd.DataFrame(rows, columns=TASK_COLS)])
+                    )
+
+
+@contextmanager
+def driver_partitioned(
     spark: SparkSession,
+    rows: list[tuple],
+    n_parts: int,
+    writer,
+    schema: str,
+) -> Iterator[DataFrame]:
+    """``writer``'s output over the TASK_SCHEMA ``rows``, split on the
+    driver into ``n_parts`` Spark partitions (``assign_groups``) with no
+    Exchange in front of them. The row lists ship as one broadcast,
+    destroyed when the block exits, so run the block's actions inside
+    it."""
+    bc = spark.sparkContext.broadcast(assign_groups(rows, n_parts))
+    try:
+        yield spark.range(n_parts, numPartitions=n_parts).mapInPandas(
+            _PartitionFeed(bc, writer), schema
+        )
+    finally:
+        bc.destroy()
+
+
+def plan_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
-) -> tuple[DataFrame, dict[str, dict[int, ShardSpec]], dict[str, str]]:
-    """Probe every tile driver-side, create its stores, and emit the
-    global task rows (source-readable levels only: every level in
-    translate mode, level 0 in compute mode — computed levels run as
-    per-level downsample stages afterwards).
-    Returns (tasks DF, specs per tile, quarantined tiles). The third
-    map is empty unless on_corrupt="quarantine" skipped tiles whose
-    open OR metadata probe failed driver-side."""
+) -> tuple[list[tuple], dict[str, dict[int, ShardSpec]], dict[str, str]]:
+    """Probe every tile driver-side, create its stores, and list the
+    global source-read task rows: every level in translate mode, level 0
+    in compute mode (whose deeper levels the writer's fused cascade, or
+    else the level loop, derives from level 0).
+    Returns (TASK_SCHEMA rows, specs per tile, quarantined tiles). The
+    third map is empty unless on_corrupt="quarantine" skipped tiles
+    whose open OR metadata probe failed driver-side."""
     rows: list[tuple] = []
     all_specs: dict[str, dict[int, ShardSpec]] = {}
     quarantined: dict[str, str] = {}
@@ -278,7 +356,11 @@ def build_global_tasks(
             write_array_metadata(store, lvl, specs[lvl])
         source_levels = len(shapes) if settings.translate_pyramid else 1
         for lvl in range(source_levels):
-            rows += _task_rows(src_path, store, lvl, specs[lvl], key_m)
+            spec = specs[lvl]
+            rows += _task_rows(
+                src_path, store, lvl, spec.shape[2:], spec.shard_shape[2:],
+                key_m,
+            )
         write_group_metadata(
             store,
             multiscales_metadata(
@@ -291,8 +373,17 @@ def build_global_tasks(
             ),
         )
         src.close()
-    tasks = spark.createDataFrame(rows, TASK_SCHEMA)
-    return tasks, all_specs, quarantined
+    return rows, all_specs, quarantined
+
+
+def build_global_tasks(
+    spark: SparkSession,
+    tiles: list[tuple[str, str]],
+    settings: ConvertJobSettings,
+) -> tuple[DataFrame, dict[str, dict[int, ShardSpec]], dict[str, str]]:
+    """``plan_global_tasks`` with its rows as a TASK_SCHEMA DataFrame."""
+    rows, all_specs, quarantined = plan_global_tasks(tiles, settings)
+    return spark.createDataFrame(rows, TASK_SCHEMA), all_specs, quarantined
 
 
 def _test_straggler_hook() -> None:
@@ -388,11 +479,11 @@ class _GlobalWriter:
                 )
                 return None
 
-        # A group is read once only if all its rows are in hand, and
-        # mapInPandas may split one partition into several Arrow batches
-        # — so materialize the partition's rows (coordinates only, tiny)
-        # before grouping. Partitioning hashes the superchunk key, so a
-        # group never spans Spark partitions.
+        # A group is read once only if all its rows are in hand, and a
+        # caller may hand one partition over as several frames — so
+        # materialize the partition's rows (coordinates only, tiny)
+        # before grouping. ``assign_groups`` puts whole superchunk
+        # groups into a partition, so a group never spans partitions.
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
@@ -475,19 +566,12 @@ def convert_tiles_to_zarr(
             "partition subsetting requires translate_pyramid=True; run the "
             "compute-pyramid stage once after all partitions complete"
         )
-    tasks, all_specs, quarantined_tiles = build_global_tasks(
-        spark, tiles, settings
-    )
+    tasks, all_specs, quarantined_tiles = plan_global_tasks(tiles, settings)
     quarantine = settings.on_corrupt == "quarantine"
     if partition_to_process is not None and num_partitions:
-        w = Window.orderBy(
-            "tile_path", "level", "iz", "iy", "ix"
-        )
-        tasks = (
-            tasks.withColumn("__rn", F.row_number().over(w) - 1)
-            .where(F.col("__rn") % num_partitions == partition_to_process)
-            .drop("__rn")
-        )
+        tasks = sorted(tasks, key=lambda r: (r[0], *r[2:6]))[
+            partition_to_process::num_partitions
+        ]
     n_parts = max(
         spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
     )
@@ -505,36 +589,42 @@ def convert_tiles_to_zarr(
     ):
         n_levels = max(len(s) for s in all_specs.values())
         cascade = (settings.scale_factor, settings.downsample_mode, n_levels)
-    written = tasks.repartition(n_parts, "superchunk").mapInPandas(
-        _GlobalWriter(quarantine, cascade), WRITER_SCHEMA
-    )
+    with driver_partitioned(
+        spark, tasks, n_parts, _GlobalWriter(quarantine, cascade),
+        WRITER_SCHEMA,
+    ) as written:
+        if cascade is not None:
+            # Fused cascade: the WHOLE dataset — every tile, every
+            # pyramid level — is ONE action. Level-0 writes emit
+            # per-level compressed reduced partials routed by (store,
+            # level, shard); one shuffle assembles all deeper levels of
+            # all tiles into stats rows. No store re-read, and the job
+            # count is fixed regardless of tile count or depth (the
+            # loop path schedules 1 + (L-1) actions).
+            assembled = written.groupBy(
+                "kind", "store", "level", "iz", "iy", "ix"
+            ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
+            coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+            prev = spark.conf.get(coalesce_key, "true")
+            spark.conf.set(coalesce_key, "false")
+            try:
+                stats = (
+                    assembled.groupBy("tile_path", "level")
+                    .agg(*stage_agg_exprs())
+                    .collect()
+                )
+            finally:
+                spark.conf.set(coalesce_key, prev)
+        else:
+            stats = (
+                written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
+            )
     stages = None
     if cascade is not None:
-        # Fused cascade: the WHOLE dataset — every tile, every pyramid
-        # level — is ONE Spark job. Level-0 writes emit per-level
-        # compressed reduced partials routed by (store, level, shard);
-        # one shuffle assembles all deeper levels of all tiles into
-        # stats rows. No store re-read, and the job count is 1
-        # regardless of tile count or depth (the loop path schedules
-        # 1 + (L-1) actions).
-        assembled = written.groupBy(
-            "kind", "store", "level", "iz", "iy", "ix"
-        ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
-        coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-        prev = spark.conf.get(coalesce_key, "true")
-        spark.conf.set(coalesce_key, "false")
-        try:
-            rows = (
-                assembled.groupBy("tile_path", "level")
-                .agg(*stage_agg_exprs())
-                .collect()
-            )
-        finally:
-            spark.conf.set(coalesce_key, prev)
         # Level 0 per tile (tile_path kept, no level key, as in the
         # loop path); deeper levels one stage each across every tile.
         per_tile, stages = {}, []
-        for r in rows:
+        for r in stats:
             d = stage_dict(r)
             if d["level"] == 0:
                 del d["level"]
@@ -545,7 +635,6 @@ def convert_tiles_to_zarr(
         stages.sort(key=lambda d: d["level"])
         plan = "fused_cascade"
     else:
-        stats = written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
         per_tile = {r["tile_path"]: stage_dict(r) for r in stats}
         if compute_pyramid:
             # Computed levels run sequentially (level k depends on k-1,
@@ -663,20 +752,20 @@ def _run_downsample_levels(
             # with fewer levels.
             spec = all_specs.get(src_path, {}).get(lvl)
             if spec is not None:
+                # One group per shard: the downsample writer reads the
+                # STORE, not the source, so there is nothing for
+                # superchunk grouping to coalesce — it would only
+                # collapse parallelism at the small deep levels.
                 rows += _task_rows(
-                    src_path, store, lvl, spec, settings.superchunk_multiple
+                    src_path, store, lvl, spec.shape[2:],
+                    spec.shard_shape[2:], (1, 1, 1),
                 )
-        tasks = spark.createDataFrame(rows, TASK_SCHEMA)
-        # Shard-coord partitioning: the downsample writer reads the
-        # STORE, not the source, so there is nothing for superchunk
-        # grouping to coalesce — it would only collapse parallelism at
-        # the small deep levels.
-        stats = stage_dict(
-            tasks.repartition(n_parts, "store", "iz", "iy", "ix")
-            .mapInPandas(writer, WRITER_SCHEMA)
-            .agg(*stage_agg_exprs())
-            .collect()[0]
-        )
+        with driver_partitioned(
+            spark, rows, n_parts, writer, WRITER_SCHEMA
+        ) as written:
+            stats = stage_dict(
+                written.agg(*stage_agg_exprs()).collect()[0]
+            )
         stats["level"] = lvl
         stages.append(stats)
     return stages

@@ -1,6 +1,6 @@
 """Single-source conversion entry point and the shared conversion kernels.
 
-Every conversion runs in ``multitile``: one global shard-task DataFrame,
+Every conversion runs in ``multitile``: one global shard-task plan,
 superchunk-coalesced source reads, a fused pyramid cascade when a
 window-aligned group fits the memory cap, else a driver-side level loop
 (reference process_single_shard, compress/imaris_to_zarr.py:375-462,

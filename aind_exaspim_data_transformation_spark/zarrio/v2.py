@@ -28,9 +28,10 @@ from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
 from ..sources.tensor import open_source
-from .format import grid_cells, region_bounds, shard_grid
+from .format import grid_cells, region_bounds
 from .kvstore import kv_get, kv_join, kv_put
 from .metadata import multiscales_metadata
+from .multitile import _task_rows, driver_partitioned
 
 
 @dataclass(frozen=True)
@@ -151,18 +152,13 @@ def convert_to_zarr_v2(
         ),
     )
 
-    sm = settings.superchunk_multiple
-    rows = []
-    for lvl, shape in enumerate(meta.shapes):
-        for cell in shard_grid(shape, specs[lvl].chunks[2:]):
-            key = (lvl, *(i // m for i, m in zip(cell[:3], sm)))
-            rows.append((lvl, *cell, ",".join(map(str, key))))
-    tasks = spark.createDataFrame(
-        rows,
-        "level int, iz int, iy int, ix int, "
-        "z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, superchunk string",
-    )
     source_path = settings.input_source
+    tasks = []
+    for lvl, shape in enumerate(meta.shapes):
+        tasks += _task_rows(
+            source_path, store, lvl, shape, specs[lvl].chunks[2:],
+            settings.superchunk_multiple,
+        )
     spec_args = {
         lvl: (specs[lvl].shape, specs[lvl].chunks, specs[lvl].dtype,
               specs[lvl].level)
@@ -202,19 +198,21 @@ def convert_to_zarr_v2(
     n_parts = max(
         spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
     )
-    stats = (
-        tasks.repartition(n_parts, "superchunk")
-        .mapInPandas(
-            writer,
-            "level int, bytes_read long, bytes_written long, elapsed double",
+    with driver_partitioned(
+        spark,
+        tasks,
+        n_parts,
+        writer,
+        "level int, bytes_read long, bytes_written long, elapsed double",
+    ) as written:
+        stats = (
+            written.agg(
+                F.count(F.lit(1)).alias("n_chunks"),
+                F.sum("bytes_read").alias("bytes_read"),
+                F.sum("bytes_written").alias("bytes_written"),
+            )
+            .collect()[0]
+            .asDict()
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("bytes_read").alias("bytes_read"),
-            F.sum("bytes_written").alias("bytes_written"),
-        )
-        .collect()[0]
-        .asDict()
-    )
     src.close()
     return {"n_levels": len(meta.shapes), "stats": stats, "store": store}
