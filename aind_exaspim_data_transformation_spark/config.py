@@ -55,9 +55,9 @@ class ConvertJobSettings(BaseModel):
     # instead of raising, the affected shards are simply not written,
     # and absent shards read back as fill_value under the Zarr v3 spec —
     # so the output store stays valid and every healthy byte converts.
-    # Quarantine also disables the fused pyramid cascade (deeper levels
-    # would assemble from partial coverage); the per-level loop runs
-    # instead, where a missing parent shard already degrades to fill.
+    # The fused pyramid cascade still runs: it reduces the group region
+    # built from the per-shard reads, a withheld shard's voxels as
+    # fill_value, which is what a store read of level 0 returns.
     on_corrupt: Literal["fail", "quarantine"] = "fail"
 
     @field_validator("downsample_levels")

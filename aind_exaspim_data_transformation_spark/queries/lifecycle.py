@@ -86,9 +86,16 @@ def managed_query(
 # inflates small-task Python stages 2-7x (worker acquisition from a
 # bloated pool).
 #
+# Scope: local mode only. The policy sees and stops only the DRIVER
+# JVM's Python workers, which are the whole pool only when the
+# executors run inside the driver JVM (local[*]). On a cluster the
+# executors' pools live in other JVMs on other hosts: this measures
+# none of their processes and recycles none of their factories.
+#
 # Policy: after each managed query, measure the pool's total RSS
-# (driver-side /proc walk over the JVM's descendants — no Spark job);
-# above the ceiling, stop every PythonWorkerFactory. stop() destroys
+# (a /proc walk over the driver JVM's own process tree — no Spark
+# job); above the ceiling, stop every PythonWorkerFactory of the
+# driver's SparkEnv. stop() destroys
 # the daemon, whose SIGTERM handler SIGHUPs its process group — every
 # forked worker exits with it — and the factory transparently spawns a
 # fresh daemon on the next Python task, so the recycle is invisible to
@@ -136,7 +143,9 @@ def _rss_bytes(pid: int) -> int:
 
 def python_worker_pool_stats(spark: SparkSession) -> dict:
     """(n_processes, rss_bytes) of every python process descended from
-    the session's JVM — the daemon pool plus its forked workers."""
+    the driver JVM, found by walking this host's /proc tree: the daemon
+    pool plus its forked workers. That is the whole pool in local mode
+    only; executors in other JVMs (a cluster) are not counted."""
     jvm_pid = int(
         spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     )
@@ -153,10 +162,11 @@ def python_worker_pool_stats(spark: SparkSession) -> dict:
 
 
 def recycle_python_workers(spark: SparkSession) -> None:
-    """Stop every PythonWorkerFactory of the session's SparkEnv (the
+    """Stop every PythonWorkerFactory of the driver's SparkEnv (the
     same call SparkEnv.stop() makes at shutdown): daemons exit, their
     SIGHUP'd workers exit with them, and the next Python task spawns a
-    fresh daemon. Safe whenever no job is running."""
+    fresh daemon. Executors in other JVMs keep their factories. Safe
+    whenever no job is running."""
     sc = spark.sparkContext
     jvm = sc._jvm
     gw = sc._gateway
@@ -173,8 +183,10 @@ def recycle_python_workers(spark: SparkSession) -> None:
 
 
 def maybe_recycle_python_workers(spark: SparkSession) -> bool:
-    """Recycle the pool iff its RSS exceeds the ceiling; returns whether
-    it fired. Called by managed_query on scope exit."""
+    """Recycle the driver JVM's pool iff its RSS exceeds the ceiling;
+    returns whether it fired. Called by managed_query on scope exit.
+    It bounds the pool in local mode only: it measures and recycles
+    the driver's Python workers, never a cluster executor's."""
     try:
         stats = python_worker_pool_stats(spark)
     except Exception:

@@ -12,6 +12,16 @@ feeds each writer task its partition's rows (``driver_partitioned``),
 so no Spark job moves rows the driver already holds.
 ``pipeline.convert_to_zarr`` is the one-tile call.
 
+A computed pyramid has one kernel, the fused cascade: the source writer
+reduces each superchunk group recursively and ships per-level partials
+through one shuffle to the assembler, which writes the deeper levels.
+When a window-aligned group of the full depth would exceed
+``pipeline.CASCADE_MAX_GROUP_BYTES``, the cascade runs in passes
+(``pyramid_passes``): each later pass reads its base level back from
+the store and cascades the next levels. One-step passes are the
+reference's sequential level-by-level pyramid
+(compress/imaris_to_zarr.py:677-799) as a special case.
+
 At 100 TB: ~45k coordinate rows per 6 TB tile, ~1M rows per dataset —
 trivially plannable; payloads never enter the DataFrame.
 """
@@ -19,6 +29,8 @@ trivially plannable; payloads never enter the DataFrame.
 from __future__ import annotations
 
 import heapq
+import logging
+import math
 import time
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -35,10 +47,12 @@ from .codecs import zstd_decompress
 from .format import (
     ShardSpec,
     read_array_metadata,
+    read_array_region,
     shard_grid,
     write_array_metadata,
     write_group_metadata,
 )
+from . import pipeline
 from .metadata import multiscales_metadata
 from .pipeline import (
     ERROR_SAMPLE_CAP,
@@ -46,16 +60,17 @@ from .pipeline import (
     _level_shapes,
     _level_specs,
     _put_shard,
-    _read_reduced_region,
+    _row_slices,
     _split_rows,
+    cascade_group_multiple,
     iter_coalesced_reads,
     stage_agg_exprs,
     stage_dict,
 )
 
-#: One row per shard (or v2 chunk) write, for every stage: the
-#: source-read stage (level 0, or every level when translating), each
-#: level of the store-read level loop, and the v2 writer. Rows are
+#: One row per shard (or v2 chunk) read, for every stage: the
+#: source-read stage (level 0, or every level when translating), the
+#: base level of each later cascade pass, and the v2 writer. Rows are
 #: store-routed, so ONE Spark action covers a stage across EVERY tile;
 #: rows sharing a ``superchunk`` key always run in one task.
 TASK_SCHEMA = (
@@ -99,62 +114,112 @@ class _LevelSpecs(dict):
         return spec
 
 
-def _mt_cascade_applicable(
+def _pass_multiple(
+    spec: ShardSpec,
+    base: int,
+    depth: int,
+    settings: ConvertJobSettings,
+    max_group_bytes: float | None = None,
+) -> tuple[int, int, int] | None:
+    """``pipeline.cascade_group_multiple`` for a pass that reads level
+    ``base`` (``spec``) and cascades ``depth`` levels. The source pass
+    groups from ``settings.superchunk_multiple``; a store pass from one
+    shard, because a store read has nothing to coalesce."""
+    sm = settings.superchunk_multiple if base == 0 else (1, 1, 1)
+    return cascade_group_multiple(
+        spec, settings.scale_factor, depth, sm, max_group_bytes
+    )
+
+
+def pyramid_passes(
     all_specs: dict[str, dict[int, ShardSpec]],
     settings: ConvertJobSettings,
-) -> bool:
-    """Whether EVERY tile can run the fused cascade: False when no tile
-    converts, or when any tile has a single-level grid or would need a
-    window-aligned group over `pipeline.CASCADE_MAX_GROUP_BYTES` (both
-    make `pipeline.cascade_group_multiple` return None) — mixed grids
-    fall back to the level loop as one dataset."""
-    from .pipeline import cascade_group_multiple
+) -> list[tuple[int, int]]:
+    """The computed pyramid's cascade passes over the whole dataset,
+    ``[(base, depth), ...]``: a pass reads level ``base`` (the source
+    for the first pass, the store after it) and cascades ``depth``
+    levels, ``base`` included. Each pass is as deep as every tile's
+    window-aligned group allows within
+    ``pipeline.CASCADE_MAX_GROUP_BYTES``; a one-step pass always runs,
+    so the pyramid always completes. Empty when nothing is computed."""
+    n_levels = max((len(s) for s in all_specs.values()), default=0)
+    passes: list[tuple[int, int]] = []
+    base = 0
+    while base < n_levels - 1:
+        depth = n_levels - base
+        while depth > 2 and not all(
+            _pass_multiple(specs[base], base, depth, settings) is not None
+            for specs in all_specs.values()
+        ):
+            depth -= 1
+        passes.append((base, depth))
+        base += depth - 1
+    return passes
 
-    return bool(all_specs) and all(
-        cascade_group_multiple(
-            specs,
-            settings.scale_factor,
-            len(specs),
-            settings.superchunk_multiple,
+
+def _pass_rows(
+    tiles: list[tuple[str, str]],
+    all_specs: dict[str, dict[int, ShardSpec]],
+    base: int,
+    depth: int,
+    settings: ConvertJobSettings,
+) -> list[tuple]:
+    """Every converting tile's level-``base`` TASK_SCHEMA rows for a
+    pass of ``depth`` levels, grouped window-aligned through the pass
+    (``_pass_multiple`` without the cap: ``pyramid_passes`` checked it,
+    and a one-step pass runs whatever its group size)."""
+    rows: list[tuple] = []
+    for src_path, store in tiles:
+        specs = all_specs.get(src_path)
+        if specs is None:  # quarantined at the driver probe
+            continue
+        spec = specs[base]
+        key_m = (
+            _pass_multiple(spec, base, depth, settings, math.inf)
+            or settings.superchunk_multiple
         )
-        is not None
-        for specs in all_specs.values()
-    )
+        rows += _task_rows(
+            src_path, store, base, spec.shape[2:], spec.shard_shape[2:],
+            key_m,
+        )
+    return rows
 
 
 def _cascade_parts(
     region: np.ndarray,
+    row,
     origin: tuple[int, int, int],
-    store: str,
     cascade: tuple[tuple[int, int, int], str, int],
     specs: _LevelSpecs,
 ) -> list[tuple]:
-    """The fused cascade step of one group: reduce its level-0
-    ``region`` (global origin ``origin``) recursively and emit 'part'
-    rows routed to each deeper level's shards. Reducing at group (not
-    shard) granularity is what lifts the shard-alignment precondition:
-    the group extent is chosen window-aligned through every level
-    (`pipeline.cascade_group_multiple`), so ANY shard shape cascades
-    exactly — per-window reduce results are independent of the block
-    extent they are computed in, so group-level and shard-level reduces
-    are byte-identical where both apply."""
-    factor, mode, n_levels = cascade
+    """The fused cascade step of one group: reduce its ``region`` (at
+    ``row``'s store and level, global origin ``origin``) recursively
+    through the pass's next ``depth - 1`` levels and emit 'part' rows
+    routed to each level's shards. Reducing at group (not shard)
+    granularity is what lifts the shard-alignment precondition: the
+    group extent is chosen window-aligned through every level of the
+    pass (`pipeline.cascade_group_multiple`), so ANY shard shape
+    cascades exactly — per-window reduce results are independent of
+    the block extent they are computed in, so group-level and
+    shard-level reduces are byte-identical where both apply."""
+    factor, mode, depth = cascade
     out = []
     red = region
-    for lvl_to in range(1, n_levels):
+    for lvl_to in range(row.level + 1, row.level + depth):
         red = downsample_block(red, factor, mode)
         origin = tuple(o // f for o, f in zip(origin, factor))
-        cs = specs[store, lvl_to].shard_shape[2:]
+        cs = specs[row.store, lvl_to].shard_shape[2:]
         for part in _split_rows(red, origin, lvl_to, cs):
             # part = (level, iz, iy, ix, oz, oy, ox, sz, sy, sx, payload)
             out.append(
-                ("part", None, store, *part[:4], *(None,) * 4, *part[4:])
+                ("part", None, row.store, *part[:4], *(None,) * 4,
+                 *part[4:])
             )
     return out
 
 
 def _make_global_assembler():
-    """Grouped assembler for the multi-tile cascade: each 'part' group
+    """Grouped assembler for every cascade pass: each 'part' group
     is one (store, level, shard) — place pieces, encode with the
     store's own spec, write, emit a stats row. 'stats' groups pass
     through. Specs are cached per (store, level) across the groups of
@@ -176,8 +241,8 @@ def _make_global_assembler():
         block = np.full(valid, spec.fill_value, dtype=spec.np_dtype)
         nread = 0
         for r in pdf.itertuples(index=False):
-            # Uncompressed piece size, so bytes_read is comparable with
-            # the per-level fallback loop (which reads raw parent voxels).
+            # Uncompressed piece size: the reduced voxels this shard is
+            # built from, not the zstd-1 bytes that crossed the shuffle.
             size = int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize
             piece = np.frombuffer(
                 zstd_decompress(r.payload, size), dtype=spec.np_dtype
@@ -297,18 +362,21 @@ def driver_partitioned(
 def plan_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
-) -> tuple[list[tuple], dict[str, dict[int, ShardSpec]], dict[str, str]]:
+) -> tuple[
+    list[tuple],
+    dict[str, dict[int, ShardSpec]],
+    dict[str, str],
+    list[tuple[int, int]],
+]:
     """Probe every tile driver-side, create its stores, and list the
     global source-read task rows: every level in translate mode, level 0
-    in compute mode (whose deeper levels the writer's fused cascade, or
-    else the level loop, derives from level 0).
-    Returns (TASK_SCHEMA rows, specs per tile, quarantined tiles). The
-    third map is empty unless on_corrupt="quarantine" skipped tiles
-    whose open OR metadata probe failed driver-side."""
-    rows: list[tuple] = []
+    in compute mode (whose deeper levels the cascade passes derive).
+    Returns (TASK_SCHEMA rows, specs per tile, quarantined tiles,
+    ``pyramid_passes``). The third map is empty unless
+    on_corrupt="quarantine" skipped tiles whose open OR metadata probe
+    failed driver-side; the passes are empty when translating."""
     all_specs: dict[str, dict[int, ShardSpec]] = {}
     quarantined: dict[str, str] = {}
-    sm = settings.superchunk_multiple
     for src_path, store in tiles:
         src = None
         try:
@@ -332,35 +400,10 @@ def plan_global_tasks(
             quarantined[src_path] = f"open: {type(exc).__name__}: {exc}"
             continue
         all_specs[src_path] = specs
-        # Compute-pyramid tiles group by the window-aligned cascade
-        # grid (pipeline.cascade_group_multiple — identical to the
-        # plain superchunk grid for factor-divisible shards), so the
-        # fused cascade's group-level reduce stays exact for any shard
-        # shape. Computed here (driver, per tile) so no per-row join is
-        # needed later; if any tile can't cascade the level loop runs,
-        # for which the bigger groups are merely a read-coalescing
-        # choice.
-        key_m = sm
-        if not settings.translate_pyramid and len(shapes) > 1:
-            from .pipeline import cascade_group_multiple
-
-            key_m = (
-                cascade_group_multiple(
-                    specs, settings.scale_factor, len(shapes), sm
-                )
-                or sm
-            )
         # Every level's zarr.json before any task runs: it is the only
         # layout the writers read (``_LevelSpecs``).
         for lvl in range(len(shapes)):
             write_array_metadata(store, lvl, specs[lvl])
-        source_levels = len(shapes) if settings.translate_pyramid else 1
-        for lvl in range(source_levels):
-            spec = specs[lvl]
-            rows += _task_rows(
-                src_path, store, lvl, spec.shape[2:], spec.shard_shape[2:],
-                key_m,
-            )
         write_group_metadata(
             store,
             multiscales_metadata(
@@ -373,7 +416,24 @@ def plan_global_tasks(
             ),
         )
         src.close()
-    return rows, all_specs, quarantined
+    rows: list[tuple] = []
+    passes: list[tuple[int, int]] = []
+    if settings.translate_pyramid:
+        for src_path, store in tiles:
+            for lvl, spec in all_specs.get(src_path, {}).items():
+                rows += _task_rows(
+                    src_path, store, lvl, spec.shape[2:],
+                    spec.shard_shape[2:], settings.superchunk_multiple,
+                )
+    else:
+        # Compute-pyramid tiles group by the first pass's window-aligned
+        # cascade grid (identical to the plain superchunk grid for
+        # factor-divisible shards), so the cascade's group-level reduce
+        # stays exact for any shard shape.
+        passes = pyramid_passes(all_specs, settings)
+        depth = passes[0][1] if passes else 1
+        rows = _pass_rows(tiles, all_specs, 0, depth, settings)
+    return rows, all_specs, quarantined, passes
 
 
 def build_global_tasks(
@@ -381,8 +441,9 @@ def build_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
 ) -> tuple[DataFrame, dict[str, dict[int, ShardSpec]], dict[str, str]]:
-    """``plan_global_tasks`` with its rows as a TASK_SCHEMA DataFrame."""
-    rows, all_specs, quarantined = plan_global_tasks(tiles, settings)
+    """``plan_global_tasks``'s rows as a TASK_SCHEMA DataFrame, with its
+    specs and quarantined tiles."""
+    rows, all_specs, quarantined, _ = plan_global_tasks(tiles, settings)
     return spark.createDataFrame(rows, TASK_SCHEMA), all_specs, quarantined
 
 
@@ -417,20 +478,26 @@ def _test_straggler_hook() -> None:
 
 
 class _GlobalWriter:
-    """The one source-read writer. Per superchunk group (the key embeds
+    """The one pyramid writer. Per superchunk group (the key embeds
     tile_path and level, so groups never span tiles) it makes one
-    bounding-box source read, writes every shard of the group with the
-    level's spec from the store's zarr.json, and — with ``cascade`` set
-    to ``(factor, mode, n_levels)`` — emits the group's reduced deeper
-    levels as 'part' rows (``_cascade_parts``). It yields one DataFrame
-    per group, so a task never holds more than one group's region and
-    parts. Sources are cached per call.
+    bounding-box read — of the source, or with ``from_store`` of the
+    pass's base level in the store — and writes every shard of a
+    source-read group with the level's spec from the store's zarr.json.
+    With ``cascade`` set to ``(factor, mode, depth)`` it emits the
+    group's reduced next ``depth - 1`` levels as 'part' rows
+    (``_cascade_parts``). A store-read group writes no shard (the pass
+    before wrote its level), so it emits parts only. It yields one
+    DataFrame per group, so a task never holds more than one group's
+    region and parts. Sources are cached per call.
 
     With ``quarantine`` (settings.on_corrupt="quarantine"): a tile that
-    fails to open, or a read that fails, yields per-shard ERROR rows —
-    a poison-pill tile cannot abort the other tiles' conversion. The
-    open failure is cached per tile so a corrupt tile is probed once
-    per partition, not once per superchunk group.
+    fails to open, or a source read that fails, yields per-shard ERROR
+    rows — a poison-pill tile cannot abort the other tiles'
+    conversion. The open failure is cached per tile so a corrupt tile is
+    probed once per partition, not once per superchunk group. The
+    cascade then reduces the group's region built from the per-row
+    reads, each failed row as fill_value: the voxels a store read of the
+    withheld shard returns.
 
     A module-level CLASS (not a closure factory) so cloudpickle ships
     instances by class reference + state: workers re-import this module
@@ -441,9 +508,11 @@ class _GlobalWriter:
         self,
         quarantine: bool = False,
         cascade: tuple[tuple[int, int, int], str, int] | None = None,
+        from_store: bool = False,
     ):
         self.quarantine = quarantine
         self.cascade = cascade
+        self.from_store = from_store
 
     def __call__(
         self, batches: Iterator[pd.DataFrame]
@@ -454,7 +523,16 @@ class _GlobalWriter:
         last_err: dict[str, str] = {}
         specs = _LevelSpecs()
 
-        def read_fn(row, z0, z1, y0, y1, x0, x1):
+        def store_read(row, z0, z1, y0, y1, x0, x1):
+            return read_array_region(
+                row.store,
+                row.level,
+                (slice(0, 1), slice(0, 1), slice(z0, z1), slice(y0, y1),
+                 slice(x0, x1)),
+                specs[row.store, row.level],
+            )[0, 0]
+
+        def source_read(row, z0, z1, y0, y1, x0, x1):
             if row.tile_path not in sources:
                 try:
                     sources[row.tile_path] = open_source(row.tile_path)
@@ -500,7 +578,21 @@ class _GlobalWriter:
                     "enumerate full groups, so this indicates a "
                     "partitioning bug"
                 )
-            region, items = iter_coalesced_reads(rows, read_fn)
+            if self.from_store:
+                region, items = store_read(rows[0], *box), ()
+            else:
+                region, items = iter_coalesced_reads(rows, source_read)
+            # After a quarantined group read the rows were read one by
+            # one: the cascade reduces their blocks, a failed row as
+            # fill_value.
+            fill_in = region is None and cascade is not None
+            if fill_in:
+                spec = specs[rows[0].store, rows[0].level]
+                region = np.full(
+                    tuple(b - a for a, b in zip(box[0::2], box[1::2])),
+                    spec.fill_value,
+                    dtype=spec.np_dtype,
+                )
             out = []
             for row, block, read_sec in items:
                 if block is None:
@@ -518,6 +610,8 @@ class _GlobalWriter:
                     )
                     out.append(_stats_row(row, 0, 0, read_sec, msg))
                     continue
+                if fill_in:
+                    region[_row_slices(row, box)] = block
                 t0 = time.monotonic()
                 nbytes = _put_shard(
                     row.store, row.level, row.iz, row.iy, row.ix, block,
@@ -531,12 +625,49 @@ class _GlobalWriter:
                 )
             if cascade is not None:
                 out += _cascade_parts(
-                    region, box[0::2], rows[0].store, cascade, specs
+                    region, rows[0], box[0::2], cascade, specs
                 )
             yield pd.DataFrame(out, columns=WRITER_COLS)
         for s in sources.values():
             if s is not None:
                 s.close()
+
+
+def _run_pass(
+    spark: SparkSession,
+    rows: list[tuple],
+    n_parts: int,
+    writer: _GlobalWriter,
+) -> list:
+    """``writer`` over the TASK_SCHEMA ``rows`` as one Spark action;
+    returns the collected stage stats, per tile without a cascade and
+    per (tile, level) with one. A cascade's 'part' rows go through ONE
+    shuffle to ``_make_global_assembler``, which writes the pass's
+    deeper levels of every tile, so a pass's job count is fixed
+    whatever the tile count or depth."""
+    with driver_partitioned(
+        spark, rows, n_parts, writer, WRITER_SCHEMA
+    ) as written:
+        if writer.cascade is None:
+            return (
+                written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
+            )
+        assembled = written.groupBy(
+            "kind", "store", "level", "iz", "iy", "ix"
+        ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
+        # Assembly is CPU-bound per group while its shuffled bytes are
+        # tiny, so size-based AQE coalescing would serialize it.
+        coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(coalesce_key, "true")
+        spark.conf.set(coalesce_key, "false")
+        try:
+            return (
+                assembled.groupBy("tile_path", "level")
+                .agg(*stage_agg_exprs())
+                .collect()
+            )
+        finally:
+            spark.conf.set(coalesce_key, prev)
 
 
 def convert_tiles_to_zarr(
@@ -546,7 +677,8 @@ def convert_tiles_to_zarr(
     partition_to_process: int | None = None,
     num_partitions: int | None = None,
 ) -> dict:
-    """Convert many tiles in ONE Spark action (global shard scheduling).
+    """Convert many tiles in ONE Spark action per cascade pass (global
+    shard scheduling).
 
     ``partition_to_process``/``num_partitions`` subset the global task
     list deterministically (row-major order, round-robin) — the Spark
@@ -557,16 +689,18 @@ def convert_tiles_to_zarr(
     because shard writes are idempotent.
 
     Subsetting composes with TRANSLATE mode only: a computed pyramid
-    reads level 0 back from the store, which is incomplete until every
-    partition has run — downsampling from a partial level 0 would
-    silently bake fill-value zeros into the pyramid.
+    needs every level-0 group whole (and a later pass reads its base
+    level back from the store), so a partial level 0 would silently
+    bake fill-value zeros into the pyramid.
     """
     if partition_to_process is not None and not settings.translate_pyramid:
         raise ValueError(
             "partition subsetting requires translate_pyramid=True; run the "
             "compute-pyramid stage once after all partitions complete"
         )
-    tasks, all_specs, quarantined_tiles = plan_global_tasks(tiles, settings)
+    tasks, all_specs, quarantined_tiles, passes = plan_global_tasks(
+        tiles, settings
+    )
     quarantine = settings.on_corrupt == "quarantine"
     if partition_to_process is not None and num_partitions:
         tasks = sorted(tasks, key=lambda r: (r[0], *r[2:6]))[
@@ -575,85 +709,44 @@ def convert_tiles_to_zarr(
     n_parts = max(
         spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
     )
-    compute_pyramid = not settings.translate_pyramid
-    # Quarantine forces the level loop: the fused cascade assembles
-    # deeper-level shards from level-0 partials, so a quarantined group
-    # would bake PARTIAL coverage into a written shard. The loop reads
-    # parents back from the store, where a missing (quarantined) shard
-    # already degrades to fill_value.
-    cascade = None
-    if (
-        compute_pyramid
-        and not quarantine
-        and _mt_cascade_applicable(all_specs, settings)
-    ):
-        n_levels = max(len(s) for s in all_specs.values())
-        cascade = (settings.scale_factor, settings.downsample_mode, n_levels)
-    with driver_partitioned(
-        spark, tasks, n_parts, _GlobalWriter(quarantine, cascade),
-        WRITER_SCHEMA,
-    ) as written:
-        if cascade is not None:
-            # Fused cascade: the WHOLE dataset — every tile, every
-            # pyramid level — is ONE action. Level-0 writes emit
-            # per-level compressed reduced partials routed by (store,
-            # level, shard); one shuffle assembles all deeper levels of
-            # all tiles into stats rows. No store re-read, and the job
-            # count is fixed regardless of tile count or depth (the
-            # loop path schedules 1 + (L-1) actions).
-            assembled = written.groupBy(
-                "kind", "store", "level", "iz", "iy", "ix"
-            ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
-            coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-            prev = spark.conf.get(coalesce_key, "true")
-            spark.conf.set(coalesce_key, "false")
-            try:
-                stats = (
-                    assembled.groupBy("tile_path", "level")
-                    .agg(*stage_agg_exprs())
-                    .collect()
-                )
-            finally:
-                spark.conf.set(coalesce_key, prev)
+    pass_levels = [[base, base + depth - 1] for base, depth in passes]
+    if len(passes) > 1:
+        logging.getLogger(__name__).warning(
+            "pyramid cascade runs in %d passes (levels %s): no "
+            "window-aligned group of the full depth fits "
+            "CASCADE_MAX_GROUP_BYTES=%d for every tile, so each later "
+            "pass re-reads its base level from the store",
+            len(passes), pass_levels, pipeline.CASCADE_MAX_GROUP_BYTES,
+            extra={"pyramid_passes": pass_levels},
+        )
+    stats = []
+    # The first pass reads the source (every level when translating, no
+    # cascade for a one-level pyramid); each later one level ``base``
+    # back from the store, written by the pass before it.
+    for i, (base, depth) in enumerate(passes or [(0, 1)]):
+        if i:
+            tasks = _pass_rows(tiles, all_specs, base, depth, settings)
+        cascade = (
+            (settings.scale_factor, settings.downsample_mode, depth)
+            if depth > 1
+            else None
+        )
+        stats += _run_pass(
+            spark, tasks, n_parts,
+            _GlobalWriter(quarantine, cascade, from_store=i > 0),
+        )
+    # Per tile: the source-read stage (level 0, or every level when
+    # translating); each computed level one stage across every tile.
+    per_tile, stages = {}, []
+    for r in stats:
+        d = stage_dict(r)
+        if d.get("level"):
+            del d["tile_path"]
+            stages.append(d)
         else:
-            stats = (
-                written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
-            )
-    stages = None
-    if cascade is not None:
-        # Level 0 per tile (tile_path kept, no level key, as in the
-        # loop path); deeper levels one stage each across every tile.
-        per_tile, stages = {}, []
-        for r in stats:
-            d = stage_dict(r)
-            if d["level"] == 0:
-                del d["level"]
-                per_tile[d["tile_path"]] = d
-            else:
-                del d["tile_path"]
-                stages.append(d)
-        stages.sort(key=lambda d: d["level"])
-        plan = "fused_cascade"
-    else:
-        per_tile = {r["tile_path"]: stage_dict(r) for r in stats}
-        if compute_pyramid:
-            # Computed levels run sequentially (level k depends on k-1,
-            # reference A2) — but within a level EVERY tile's shards go
-            # into ONE store-routed Spark action, so the job count per
-            # level is independent of the tile count.
-            if any(len(s) > 1 for s in all_specs.values()):
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "computed pyramid runs the per-level store-read loop "
-                    "(quarantine mode, or no window-aligned cascade group "
-                    "within the memory cap for every tile) — expect ~2.5x "
-                    "the fused-cascade wall time"
-                )
-            stages = _run_downsample_levels(
-                spark, tiles, all_specs, settings, n_parts
-            )
-            plan = "level_loop"
+            d.pop("level", None)
+            per_tile[d["tile_path"]] = d
+    stages.sort(key=lambda d: d["level"])
     result = {
         # n_tiles counts CONVERTED tiles — it must agree with the
         # per-tile map a consumer iterates; driver-quarantined tiles are
@@ -669,103 +762,10 @@ def convert_tiles_to_zarr(
     if quarantine or n_errors or quarantined_tiles:
         result["n_errors"] = n_errors
         result["quarantined_tiles"] = quarantined_tiles
-    if stages is not None:
+    if not settings.translate_pyramid:
         result["downsample_stages"] = stages
-        result["pyramid_plan"] = plan
+        result["pyramid_plan"] = (
+            "cascade_passes" if len(passes) > 1 else "fused_cascade"
+        )
+        result["pyramid_passes"] = pass_levels
     return result
-
-
-def _make_global_downsample_writer(
-    factor: tuple[int, int, int], mode: str
-):
-    """Store-routed downsample writer: reads the factor-scaled parent
-    region from each row's own store, block-reduces, writes the shard.
-    Parent and child specs (and with them the parent's logical shape)
-    are read once per (store, level) per call from the store's own
-    zarr.json — no spec state shipped through the plan."""
-
-    def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        specs = _LevelSpecs()
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                t0 = time.monotonic()
-                parent = row.level - 1
-                pspec = specs[row.store, parent]
-                region3 = tuple(
-                    slice(a * f, min(b * f, d))
-                    for a, b, f, d in zip(
-                        (row.z0, row.y0, row.x0),
-                        (row.z1, row.y1, row.x1),
-                        factor,
-                        pspec.shape[2:],
-                    )
-                )
-                # Shard-local reduce-then-assemble: only reduced voxels
-                # are buffered.
-                block = _read_reduced_region(
-                    row.store, parent, region3, pspec, factor, mode
-                )
-                parent_nbytes = (
-                    int(
-                        np.prod(
-                            [s.stop - s.start for s in region3],
-                            dtype=np.int64,
-                        )
-                    )
-                    * block.dtype.itemsize
-                )
-                nbytes = _put_shard(
-                    row.store, row.level, row.iz, row.iy, row.ix, block,
-                    specs[row.store, row.level],
-                )
-                out.append(
-                    _stats_row(
-                        row, parent_nbytes, nbytes, time.monotonic() - t0
-                    )
-                )
-            yield pd.DataFrame(out, columns=WRITER_COLS)
-
-    return writer
-
-
-def _run_downsample_levels(
-    spark: SparkSession,
-    tiles: list[tuple[str, str]],
-    all_specs: dict[str, dict[int, ShardSpec]],
-    settings: ConvertJobSettings,
-    n_parts: int,
-) -> list[dict]:
-    """One Spark action per pyramid level, all tiles unioned. Returns one
-    stats dict per level (NOT per tile-level pair)."""
-    n_levels = max(
-        (len(specs) for specs in all_specs.values()), default=0
-    )
-    writer = _make_global_downsample_writer(
-        settings.scale_factor, settings.downsample_mode
-    )
-    stages: list[dict] = []
-    for lvl in range(1, n_levels):
-        rows: list[tuple] = []
-        for src_path, store in tiles:
-            # Absent for a tile quarantined at the driver probe, or one
-            # with fewer levels.
-            spec = all_specs.get(src_path, {}).get(lvl)
-            if spec is not None:
-                # One group per shard: the downsample writer reads the
-                # STORE, not the source, so there is nothing for
-                # superchunk grouping to coalesce — it would only
-                # collapse parallelism at the small deep levels.
-                rows += _task_rows(
-                    src_path, store, lvl, spec.shape[2:],
-                    spec.shard_shape[2:], (1, 1, 1),
-                )
-        with driver_partitioned(
-            spark, rows, n_parts, writer, WRITER_SCHEMA
-        ) as written:
-            stats = stage_dict(
-                written.agg(*stage_agg_exprs()).collect()[0]
-            )
-        stats["level"] = lvl
-        stages.append(stats)
-    return stages

@@ -1,10 +1,12 @@
 """Single-source conversion entry point and the shared conversion kernels.
 
 Every conversion runs in ``multitile``: one global shard-task plan,
-superchunk-coalesced source reads, a fused pyramid cascade when a
-window-aligned group fits the memory cap, else a driver-side level loop
-(reference process_single_shard, compress/imaris_to_zarr.py:375-462,
-and the sequential pyramid, :677-799). ``convert_to_zarr`` is the
+superchunk-coalesced source reads, and one pyramid kernel, the fused
+cascade (reference process_single_shard,
+compress/imaris_to_zarr.py:375-462, and the sequential pyramid,
+:677-799). When a window-aligned group of the full depth would exceed
+``CASCADE_MAX_GROUP_BYTES``, the cascade runs in passes, each later pass
+reading its base level back from the store. ``convert_to_zarr`` is the
 one-tile call into that plan, reshaped into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
@@ -12,9 +14,8 @@ writers share: the superchunk group bounding box and coalesced source
 reads (``_group_bbox``, ``iter_coalesced_reads``), the one pad, encode
 and write step every writer ends in (``_put_shard``), the cascade's
 group-alignment gate and partial routing (``cascade_group_multiple``,
-``_split_rows``), the reduce-then-assemble parent read of the level loop
-(``_read_reduced_region``), per-level shapes and specs, and the
-stage-stats aggregation (``stage_agg_exprs``).
+``_split_rows``), per-level shapes and specs, and the stage-stats
+aggregation (``stage_agg_exprs``).
 
 Retry safety: shard writes are idempotent (same key, same bytes, atomic
 rename), so Spark task retries and speculative execution are harmless —
@@ -32,21 +33,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
-from ..operators.downsample import downsample_block, downsampled_shape
+from ..operators.downsample import downsampled_shape
 from ..sources.tensor import open_source
 from .codecs import zstd_compress
 from .format import (
     ShardSpec,
     clamp_shard_and_chunk,
-    decode_shard,
     encode_shard,
     grid_cells,
-    read_array_region,
-    region_bounds,
-    shard_path,
     write_shard_file,
 )
-from .kvstore import kv_get
 
 #: Cap on quarantined-shard detail rows carried to the driver: enough
 #: to locate the corrupt region(s); the full count is always exact.
@@ -157,6 +153,15 @@ def _group_bbox(rows) -> tuple[int, int, int, int, int, int] | None:
     return box if box_vol == rows_vol else None
 
 
+def _row_slices(r, box) -> tuple[slice, slice, slice]:
+    """Task row ``r``'s voxels inside its group's bounding-box region."""
+    return (
+        slice(r.z0 - box[0], r.z1 - box[0]),
+        slice(r.y0 - box[2], r.y1 - box[2]),
+        slice(r.x0 - box[4], r.x1 - box[4]),
+    )
+
+
 def iter_coalesced_reads(rows: list, read_fn):
     """Superchunk read-once coalescing (reference S9, iter_superchunks at
     utils/io_utils.py:153-303): issue ONE source read for a superchunk
@@ -188,16 +193,7 @@ def iter_coalesced_reads(rows: list, read_fn):
         per_row = (time.monotonic() - t0) / len(rows)
         if region is not None:
             return region, (
-                (
-                    r,
-                    region[
-                        r.z0 - box[0] : r.z1 - box[0],
-                        r.y0 - box[2] : r.y1 - box[2],
-                        r.x0 - box[4] : r.x1 - box[4],
-                    ],
-                    per_row,
-                )
-                for r in rows
+                (r, region[_row_slices(r, box)], per_row) for r in rows
             )
         if len(rows) == 1:  # that read was the row's own read
             return None, iter([(rows[0], None, per_row)])
@@ -219,22 +215,26 @@ def _read_rows(rows: list, read_fn):
 
 #: Memory guard for the fused cascade's group read buffer: the group
 #: bounding box (raw voxels) a single task holds in memory. Pathological
-#: shard shapes (e.g. a 101-voxel odd shard under a depth-4 factor-2
-#: pyramid) would need gigabyte groups to stay window-aligned; past this
-#: bound the per-level loop runs instead.
+#: shard shapes (e.g. a 101-voxel odd shard under a depth-5 factor-2
+#: pyramid) would need gigabyte groups to stay window-aligned through
+#: every level; past this bound the cascade runs in shallower passes
+#: (``multitile.pyramid_passes``). Read at call time, so setting it to 0
+#: forces one-step passes.
 CASCADE_MAX_GROUP_BYTES = 1 << 30
 
 
 def cascade_group_multiple(
-    specs: dict[int, ShardSpec],
+    spec: ShardSpec,
     factor: tuple[int, int, int],
     n_levels: int,
     superchunk_multiple: tuple[int, int, int],
-    max_group_bytes: int = CASCADE_MAX_GROUP_BYTES,
+    max_group_bytes: float | None = None,
 ) -> tuple[int, int, int] | None:
-    """Per-axis superchunk multiple (in level-0 shards) that makes every
-    cascade group exactly window-aligned at every pyramid level, or None
-    when the required group exceeds ``max_group_bytes``.
+    """Per-axis superchunk multiple (in shards of ``spec``, the level a
+    cascade pass reads) that makes every cascade group exactly
+    window-aligned at every level of an ``n_levels``-level pass, or None
+    when the pass has nothing to cascade or the required group exceeds
+    ``max_group_bytes`` (default: ``CASCADE_MAX_GROUP_BYTES``).
 
     The fused cascade reduces each group's bounding box recursively, so
     a group's origin and extent must stay on the window grid through
@@ -247,73 +247,25 @@ def cascade_group_multiple(
     case reads exactly the groups it always did."""
     if n_levels < 2:
         return None
-    shard0 = specs[0].shard_shape[2:]
-    dims = specs[0].shape[2:]
+    if max_group_bytes is None:
+        max_group_bytes = CASCADE_MAX_GROUP_BYTES
+    shard = spec.shard_shape[2:]
+    dims = spec.shape[2:]
     csm = []
-    for sm, sh, f in zip(superchunk_multiple, shard0, factor):
+    for sm, sh, f in zip(superchunk_multiple, shard, factor):
         t = f ** (n_levels - 1)
         csm.append(sm * (t // math.gcd(sm * sh, t)))
-    group_bytes = specs[0].np_dtype.itemsize
-    for c, sh, d in zip(csm, shard0, dims):
+    group_bytes = spec.np_dtype.itemsize
+    for c, sh, d in zip(csm, shard, dims):
         group_bytes *= min(c * sh, d)
     if group_bytes > max_group_bytes:
         return None
     return tuple(csm)
 
 
-def _read_reduced_region(
-    store: str,
-    parent: int,
-    region3: tuple[slice, slice, slice],
-    spec: ShardSpec,
-    factor: tuple[int, int, int],
-    mode: str,
-) -> np.ndarray:
-    """Reduce-then-assemble read of a parent region.
-
-    When the region is parent-shard-aligned and the factor divides the
-    parent shard shape (the aligned case every power-of-two pyramid
-    hits), each parent shard is decoded and reduced independently and
-    only REDUCED voxels reach the assembly buffer — no full-resolution
-    bounding-box array exists, halving the memory traffic of
-    assemble-then-reduce. The downsample stage is memory-bandwidth-bound
-    under full-core concurrency, so saved traffic is saved wall time.
-    Falls back to read_array_region + one big reduce otherwise.
-    """
-    pshard = spec.shard_shape[2:]
-    starts, stops = region_bounds(region3, spec.shape[2:])
-    aligned = all(st % ps == 0 for st, ps in zip(starts, pshard)) and all(
-        ps % f == 0 for ps, f in zip(pshard, factor)
-    )
-    if not aligned:
-        full = read_array_region(
-            store, parent, (slice(0, 1), slice(0, 1), *region3), spec
-        )[0, 0]
-        return downsample_block(full, factor, mode)
-
-    out_shape = downsampled_shape(
-        tuple(e - s for s, e in zip(starts, stops)), factor
-    )
-    out = np.full(out_shape, spec.fill_value, dtype=spec.np_dtype)
-    for idx, inner, outer in grid_cells(starts, stops, pshard):
-        blob = kv_get(shard_path(store, parent, (0, 0, *idx)))
-        if blob is None:
-            continue  # missing shard == fill, already in `out`
-        piece = downsample_block(
-            decode_shard(blob, spec)[0, 0][inner], factor, mode
-        )
-        out[
-            tuple(
-                slice(o.start // f, o.start // f + n)
-                for o, f, n in zip(outer, factor, piece.shape)
-            )
-        ] = piece
-    return out
-
-
 def stage_agg_exprs() -> list:
-    """The stage-stats aggregation, shared by every writer agg (level-0
-    copy, fused cascade, level loop) so the error-row protocol —
+    """The stage-stats aggregation, shared by every writer agg (source
+    writer, every cascade pass) so the error-row protocol —
     ``n_shards`` counts WRITTEN shards, quarantined rows tally in
     ``n_errors``, and the locator-sample list honors the writers'
     blank-message cap (messages past ``ERROR_SAMPLE_CAP`` per
@@ -386,7 +338,8 @@ def convert_to_zarr(
     if settings.on_corrupt == "quarantine" or n_errors:
         result["n_errors"] = n_errors
     if not settings.translate_pyramid and len(shapes) > 1:
-        # Which pyramid strategy ran, so a user on the slow path sees it
-        # in the stats, not just the log.
+        # Which pyramid plan ran, so a user on the multi-pass path sees
+        # it in the stats, not just the log.
         result["pyramid_plan"] = mt["pyramid_plan"]
+        result["pyramid_passes"] = mt["pyramid_passes"]
     return result

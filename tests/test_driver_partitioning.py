@@ -158,8 +158,9 @@ def _jobs_of(spark, fn) -> int:
 
 def test_conversion_job_counts(spark, two_tiles, tmp_path):
     """Writer input needs no Spark job: a two-tile fused cascade runs the
-    writer stage, the assembler stage and the stats result (3 jobs); a
-    translate run the writer stage and the stats result (2 jobs)."""
+    writer stage, the assembler stage and the stats result (3 jobs),
+    under on_corrupt="quarantine" too; a translate run the writer stage
+    and the stats result (2 jobs)."""
     cascade = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
                enumerate(two_tiles)]
     res = {}
@@ -173,6 +174,22 @@ def test_conversion_job_counts(spark, two_tiles, tmp_path):
         ),
     )
     assert res["pyramid_plan"] == "fused_cascade"
+    assert n == 3
+
+    quarantine = [(src, str(tmp_path / f"q{i}.zarr")) for i, (src, _) in
+                  enumerate(two_tiles)]
+    res = {}
+    n = _jobs_of(
+        spark,
+        lambda: res.update(
+            convert_tiles_to_zarr(
+                spark, quarantine,
+                _settings(translate_pyramid=False, downsample_levels=3,
+                          on_corrupt="quarantine"),
+            )
+        ),
+    )
+    assert res["pyramid_plan"] == "fused_cascade" and res["n_errors"] == 0
     assert n == 3
 
     translate = [(src, str(tmp_path / f"t{i}.zarr")) for i, (src, _) in

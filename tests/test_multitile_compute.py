@@ -66,13 +66,13 @@ def test_shard_mode_computed_pyramid(spark, tmp_path):
 def test_spark_job_count_contracts(spark, tmp_path, monkeypatch):
     """Listener-counted contract for the 100-tile claim: 32 tiles with a
     3-level computed pyramid run as ONE Spark job through the fused
-    cascade (job count independent of tile count AND depth); the
-    factor^depth-indivisible fallback runs 1 + (levels-1) jobs (job
-    count independent of tile count). AQE is disabled for the
+    cascade (job count independent of tile count AND depth); forced
+    one-step passes (``CASCADE_MAX_GROUP_BYTES = 0``) run one job per
+    pass (job count independent of tile count). AQE is disabled for the
     measurement so one action maps to one Spark job (AQE materializes
     shuffle stages as extra jobs; it changes scheduling, not the action
     count)."""
-    import aind_exaspim_data_transformation_spark.zarrio.multitile as mt
+    import aind_exaspim_data_transformation_spark.zarrio.pipeline as pipeline
 
     sc = spark.sparkContext
     aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
@@ -113,11 +113,12 @@ def test_spark_job_count_contracts(spark, tmp_path, monkeypatch):
         assert len(result["downsample_stages"]) == 2
         assert len(jobs) == 1  # whole dataset, every level: ONE job
 
-        monkeypatch.setattr(mt, "_mt_cascade_applicable", lambda *a: False)
-        result, jobs = run("mt-loop-count", 8, "jl")
+        monkeypatch.setattr(pipeline, "CASCADE_MAX_GROUP_BYTES", 0)
+        result, jobs = run("mt-passes-count", 8, "jl")
         assert result["n_tiles"] == 8 and result["n_shards"] == 8 * 8
         assert len(result["downsample_stages"]) == 2
-        assert len(jobs) == 1 + (3 - 1)
+        assert result["pyramid_plan"] == "cascade_passes"
+        assert len(jobs) == len(result["pyramid_passes"]) == 3 - 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
 

@@ -14,6 +14,9 @@ import numpy as np
 import pytest
 
 from aind_exaspim_data_transformation_spark.config import ConvertJobSettings
+from aind_exaspim_data_transformation_spark.operators.downsample import (
+    downsample_block,
+)
 from aind_exaspim_data_transformation_spark.sources.tensor import (
     write_imaris_file,
 )
@@ -119,8 +122,8 @@ def test_quarantine_converts_every_healthy_shard(spark, tmp_path):
         s["error"].startswith(("read:", "open:"))
         for s in stage0["error_samples"]
     )
-    # Quarantine trades the fused cascade for the per-level loop.
-    assert res["pyramid_plan"] == "level_loop"
+    # Quarantine runs the fused cascade like any other run.
+    assert res["pyramid_plan"] == "fused_cascade"
 
     q_files = _shard_files(str(tmp_path / "q.zarr"))
     missing = set(clean_files) - set(q_files)
@@ -155,6 +158,18 @@ def test_quarantine_converts_every_healthy_shard(spark, tmp_path):
     assert not quarantined_voxels[16:, :, :].any()
     assert not quarantined_voxels[:, 16:, :].any()
     assert not quarantined_voxels[:, :, 16:].any()
+    # The cascade reduced level 0 as the store holds it: the withheld
+    # shard's voxels count as fill_value in level 1.
+    spec1 = read_array_metadata(str(tmp_path / "q.zarr"), 1)
+    level1 = read_array_region(
+        str(tmp_path / "q.zarr"),
+        1,
+        (slice(0, 1), slice(0, 1), slice(0, 16), slice(0, 16), slice(0, 16)),
+        spec1,
+    )[0, 0]
+    np.testing.assert_array_equal(
+        level1, downsample_block(full, (2, 2, 2), "mean")
+    )
 
     # Deterministic + idempotent: re-running the quarantine job yields
     # byte-identical outputs and the same error count.

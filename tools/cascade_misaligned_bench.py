@@ -71,7 +71,8 @@ def main() -> None:
                 )
                 runs.append(time.monotonic() - t0)
         med = statistics.median(runs)
-        # report the group multiple the planner actually picked
+        # the full-depth group multiple (None past the cap, where the
+        # cascade runs in the passes reported beside it)
         from aind_exaspim_data_transformation_spark.sources.tensor import (
             open_source,
         )
@@ -86,14 +87,15 @@ def main() -> None:
             shapes.append(downsampled_shape(shapes[-1], st.scale_factor))
         specs = _level_specs(st, shapes, meta.dtype)
         gm = cascade_group_multiple(
-            specs, st.scale_factor, DEPTH, st.superchunk_multiple
+            specs[0], st.scale_factor, DEPTH, st.superchunk_multiple
         )
         result["configs"][name] = {
             "median_sec": round(med, 3),
             "runs": [round(x, 3) for x in runs],
             "gbps": round(r["stages"][0]["bytes_read"] / 1e9 / med, 4),
             "group_multiple": gm,
-            "plan": "level_loop" if gm is None else "fused_cascade",
+            "plan": r["pyramid_plan"],
+            "passes": r["pyramid_passes"],
         }
     a = result["configs"]["aligned_128"]["median_sec"]
     b = result["configs"]["misaligned_100"]["median_sec"]

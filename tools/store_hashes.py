@@ -22,6 +22,7 @@ import os
 import sys
 import tempfile
 import zlib
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -67,19 +68,20 @@ def manifest(root: str) -> tuple[int, str]:
     return len(entries), hashlib.sha256(blob).hexdigest()[:16]
 
 
-class _LevelLoopForced:
-    """Make every computed pyramid run the store-read level loop."""
-
-    def __enter__(self):
-        self.saved = pipeline.cascade_group_multiple
-        pipeline.cascade_group_multiple = lambda *a, **k: None
-
-    def __exit__(self, *exc):
-        pipeline.cascade_group_multiple = self.saved
+@contextmanager
+def _group_cap(nbytes: int):
+    """Run with ``pipeline.CASCADE_MAX_GROUP_BYTES`` set to ``nbytes``;
+    0 makes every computed pyramid run one-step cascade passes."""
+    saved = pipeline.CASCADE_MAX_GROUP_BYTES
+    pipeline.CASCADE_MAX_GROUP_BYTES = nbytes
+    try:
+        yield
+    finally:
+        pipeline.CASCADE_MAX_GROUP_BYTES = saved
 
 
 def _convert(spark, src, out, **kw):
-    pipeline.convert_to_zarr(
+    return pipeline.convert_to_zarr(
         spark,
         ConvertJobSettings(input_source=src, output_location=out, **kw),
     )
@@ -120,7 +122,7 @@ def _job_dataset(root: str) -> None:
         )
 
 
-def _multitile(spark, tmp: str, out: str, force_loop: bool) -> None:
+def _multitile(spark, tmp: str, out: str) -> None:
     """Three edge-truncated npy tiles, one computed 3-level store each."""
     rng = np.random.default_rng(5)
     tiles = []
@@ -139,13 +141,7 @@ def _multitile(spark, tmp: str, out: str, force_loop: bool) -> None:
         downsample_levels=3,
         downsample_mode="mean",
     )
-    saved = multitile._mt_cascade_applicable
-    if force_loop:
-        multitile._mt_cascade_applicable = lambda *a: False
-    try:
-        multitile.convert_tiles_to_zarr(spark, tiles, settings)
-    finally:
-        multitile._mt_cascade_applicable = saved
+    multitile.convert_tiles_to_zarr(spark, tiles, settings)
 
 
 def _run_job(spark, tmp: str, out: str, **kw) -> None:
@@ -212,9 +208,21 @@ def _quarantine(spark, tmp, out):
     )
 
 
-def _level_loop(fn):
+def _misaligned(spark, out, passes):
+    """100x80x60, 4 levels over 18^3 shards (18 % 2^3 != 0); under a
+    200,000-byte group cap the pyramid runs as passes [(0, 3), (2, 2)]."""
+    res = _convert(
+        spark, "synth://100,80,60,1", out, chunk_shape=(6, 6, 6),
+        shard_shape=(18, 18, 18), translate_pyramid=False,
+        downsample_levels=4, downsample_mode="mean", codec="zstd",
+        codec_level=3,
+    )
+    assert res["pyramid_passes"] == passes, res["pyramid_passes"]
+
+
+def _capped(fn, nbytes: int):
     def run(*args):
-        with _LevelLoopForced():
+        with _group_cap(nbytes):
             fn(*args)
 
     return run
@@ -229,8 +237,8 @@ CASES = {
         spark, "synthnoise://512,256,256,1", out, **SYNTH
     ),
     "cascade synth 3-level": lambda spark, tmp, out: _cascade(spark, out),
-    "level loop synth 3-level": _level_loop(
-        lambda spark, tmp, out: _cascade(spark, out)
+    "depth-1 passes synth 3-level": _capped(
+        lambda spark, tmp, out: _cascade(spark, out), 0
     ),
     "quarantine corrupt ims": _quarantine,
     "translate ims": lambda spark, tmp, out: _convert(
@@ -242,12 +250,8 @@ CASES = {
         spark, tmp, out, partition_mode="file"
     ),
     "run_job": lambda spark, tmp, out: _run_job(spark, tmp, out),
-    "multitile cascade": lambda spark, tmp, out: _multitile(
-        spark, tmp, out, force_loop=False
-    ),
-    "multitile level loop": lambda spark, tmp, out: _multitile(
-        spark, tmp, out, force_loop=True
-    ),
+    "multitile cascade": _multitile,
+    "multitile depth-1 passes": _capped(_multitile, 0),
     "v2 translate": _v2,
     "translate synth codec=none": lambda spark, tmp, out: _convert(
         spark, "synth://512,256,256,1", out,
@@ -256,6 +260,13 @@ CASES = {
     "translate synth codec=none transpose=C": lambda spark, tmp, out: _convert(
         spark, "synth://512,256,256,1", out,
         **{**SYNTH, "codec": "none", "transpose_order": "C"},
+    ),
+    "one-pass synth misaligned 4-level": lambda spark, tmp, out: _misaligned(
+        spark, out, [[0, 3]]
+    ),
+    "two-pass synth misaligned 4-level": _capped(
+        lambda spark, tmp, out: _misaligned(spark, out, [[0, 2], [2, 3]]),
+        200_000,
     ),
 }
 
