@@ -4,13 +4,15 @@
 
 Every task row names its write (source path, store, level, slice bounds,
 superchunk key); the level's layout (shapes, dtype, codec) lives only in
-the store's own zarr.json, which the driver writes before any task runs.
-The driver puts whole superchunk groups into Spark partitions itself
-(``assign_groups``, balanced by voxels — the deterministic host-side
-split of the reference's imaris_job.py:35-46, across every tile) and
-feeds each writer task its partition's rows (``driver_partitioned``),
-so no Spark job moves rows the driver already holds.
-``pipeline.convert_to_zarr`` is the one-tile call.
+the store's own zarr.json — or, for a Zarr v2 store, its ``.zarray`` —
+which the driver writes before any task runs. The driver puts whole
+superchunk groups into Spark partitions itself (``assign_groups``,
+balanced by voxels — the deterministic host-side split of the
+reference's imaris_job.py:35-46, across every tile) and ``_run_pass``
+feeds each writer task its partition's rows, so no Spark job moves rows
+the driver already holds. ``pipeline.convert_to_zarr`` is the one-tile
+call; ``v2.convert_to_zarr_v2`` runs the same writer over a v2 chunk
+grid.
 
 A computed pyramid has one kernel, the fused cascade: the source writer
 reduces each superchunk group recursively and ships per-level partials
@@ -33,7 +35,6 @@ import logging
 import math
 import time
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -67,10 +68,11 @@ from .pipeline import (
     stage_agg_exprs,
     stage_dict,
 )
+from .v2 import V2Spec, read_v2_array_metadata
 
 #: One row per shard (or v2 chunk) read, for every stage: the
-#: source-read stage (level 0, or every level when translating), the
-#: base level of each later cascade pass, and the v2 writer. Rows are
+#: source-read stage (level 0, or every level when translating, v2
+#: included) and the base level of each later cascade pass. Rows are
 #: store-routed, so ONE Spark action covers a stage across EVERY tile;
 #: rows sharing a ``superchunk`` key always run in one task.
 TASK_SCHEMA = (
@@ -105,12 +107,18 @@ def _stats_row(row, nread, nwritten, elapsed, error=None) -> tuple:
 
 class _LevelSpecs(dict):
     """``(store, level) -> ShardSpec``, read from the store's own
-    zarr.json on first use: the only place a writer learns a level's
-    layout. One per writer call, never module-level — Python workers
-    outlive jobs, and a store path can be rewritten with a new layout."""
+    zarr.json on first use — or a ``V2Spec`` from the level's
+    ``.zarray`` when it has no zarr.json: the only place a writer learns
+    a level's layout. One per writer call, never module-level — Python
+    workers outlive jobs, and a store path can be rewritten with a new
+    layout."""
 
-    def __missing__(self, key: tuple[str, int]) -> ShardSpec:
-        spec = self[key] = read_array_metadata(*key)
+    def __missing__(self, key: tuple[str, int]) -> ShardSpec | V2Spec:
+        try:
+            spec = read_array_metadata(*key)
+        except FileNotFoundError:
+            spec = read_v2_array_metadata(*key)
+        self[key] = spec
         return spec
 
 
@@ -337,28 +345,6 @@ class _PartitionFeed:
                     )
 
 
-@contextmanager
-def driver_partitioned(
-    spark: SparkSession,
-    rows: list[tuple],
-    n_parts: int,
-    writer,
-    schema: str,
-) -> Iterator[DataFrame]:
-    """``writer``'s output over the TASK_SCHEMA ``rows``, split on the
-    driver into ``n_parts`` Spark partitions (``assign_groups``) with no
-    Exchange in front of them. The row lists ship as one broadcast,
-    destroyed when the block exits, so run the block's actions inside
-    it."""
-    bc = spark.sparkContext.broadcast(assign_groups(rows, n_parts))
-    try:
-        yield spark.range(n_parts, numPartitions=n_parts).mapInPandas(
-            _PartitionFeed(bc, writer), schema
-        )
-    finally:
-        bc.destroy()
-
-
 def plan_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
@@ -482,7 +468,8 @@ class _GlobalWriter:
     tile_path and level, so groups never span tiles) it makes one
     bounding-box read — of the source, or with ``from_store`` of the
     pass's base level in the store — and writes every shard of a
-    source-read group with the level's spec from the store's zarr.json.
+    source-read group with the level's spec from the store's zarr.json
+    (a v2 level's from its .zarray, each task row one chunk).
     With ``cascade`` set to ``(factor, mode, depth)`` it emits the
     group's reduced next ``depth - 1`` levels as 'part' rows
     (``_cascade_parts``). A store-read group writes no shard (the pass
@@ -636,18 +623,26 @@ class _GlobalWriter:
 def _run_pass(
     spark: SparkSession,
     rows: list[tuple],
-    n_parts: int,
+    tasks_per_cpu: int,
     writer: _GlobalWriter,
 ) -> list:
-    """``writer`` over the TASK_SCHEMA ``rows`` as one Spark action;
-    returns the collected stage stats, per tile without a cascade and
-    per (tile, level) with one. A cascade's 'part' rows go through ONE
+    """``writer`` over the TASK_SCHEMA ``rows`` as one Spark action —
+    every conversion action runs here; returns the collected stage
+    stats, per tile without a cascade and per (tile, level) with one.
+
+    The driver splits the rows into ``tasks_per_cpu`` partitions per
+    default-parallelism slot (``assign_groups``) with no Exchange in
+    front of the writer; the row lists ship as one broadcast, destroyed
+    once the action has run. A cascade's 'part' rows go through ONE
     shuffle to ``_make_global_assembler``, which writes the pass's
     deeper levels of every tile, so a pass's job count is fixed
     whatever the tile count or depth."""
-    with driver_partitioned(
-        spark, rows, n_parts, writer, WRITER_SCHEMA
-    ) as written:
+    n_parts = max(spark.sparkContext.defaultParallelism * tasks_per_cpu, 1)
+    bc = spark.sparkContext.broadcast(assign_groups(rows, n_parts))
+    try:
+        written = spark.range(n_parts, numPartitions=n_parts).mapInPandas(
+            _PartitionFeed(bc, writer), WRITER_SCHEMA
+        )
         if writer.cascade is None:
             return (
                 written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
@@ -668,6 +663,8 @@ def _run_pass(
             )
         finally:
             spark.conf.set(coalesce_key, prev)
+    finally:
+        bc.destroy()
 
 
 def convert_tiles_to_zarr(
@@ -706,9 +703,6 @@ def convert_tiles_to_zarr(
         tasks = sorted(tasks, key=lambda r: (r[0], *r[2:6]))[
             partition_to_process::num_partitions
         ]
-    n_parts = max(
-        spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
-    )
     pass_levels = [[base, base + depth - 1] for base, depth in passes]
     if len(passes) > 1:
         logging.getLogger(__name__).warning(
@@ -732,7 +726,7 @@ def convert_tiles_to_zarr(
             else None
         )
         stats += _run_pass(
-            spark, tasks, n_parts,
+            spark, tasks, settings.tasks_per_cpu,
             _GlobalWriter(quarantine, cascade, from_store=i > 0),
         )
     # Per tile: the source-read stage (level 0, or every level when

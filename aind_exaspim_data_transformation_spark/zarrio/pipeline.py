@@ -12,7 +12,8 @@ one-tile call into that plan, reshaped into per-stage stats.
 This module holds that public wrapper and the kernels the multitile
 writers share: the superchunk group bounding box and coalesced source
 reads (``_group_bbox``, ``iter_coalesced_reads``), the one pad, encode
-and write step every writer ends in (``_put_shard``), the cascade's
+and write step every writer ends in, v3 shard or v2 chunk
+(``_put_shard``), the cascade's
 group-alignment gate and partial routing (``cascade_group_multiple``,
 ``_split_rows``), per-level shapes and specs, and the stage-stats
 aggregation (``stage_agg_exprs``).
@@ -43,6 +44,8 @@ from .format import (
     grid_cells,
     write_shard_file,
 )
+from .kvstore import kv_put
+from .v2 import V2Spec, encode_v2_chunk, v2_chunk_path
 
 #: Cap on quarantined-shard detail rows carried to the driver: enough
 #: to locate the corrupt region(s); the full count is always exact.
@@ -120,10 +123,16 @@ def _put_shard(
     iy: int,
     ix: int,
     block: np.ndarray,
-    spec: ShardSpec,
+    spec: ShardSpec | V2Spec,
 ) -> int:
     """Pad an edge block to the full 5-D shard shape (v3 regular grid),
-    encode it and write shard (iz, iy, ix); returns the bytes written."""
+    encode it and write shard (iz, iy, ix); returns the bytes written.
+    A ``V2Spec`` level has no shards: the block is chunk (iz, iy, ix),
+    written as one v2 chunk (``encode_v2_chunk`` pads it)."""
+    if isinstance(spec, V2Spec):
+        blob = encode_v2_chunk(block[None, None, ...], spec)
+        kv_put(v2_chunk_path(store, level, (0, 0, iz, iy, ix)), blob)
+        return len(blob)
     target = spec.shard_shape[2:]
     if block.shape != target:
         padded = np.zeros(target, dtype=block.dtype)

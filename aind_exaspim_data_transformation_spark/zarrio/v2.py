@@ -1,13 +1,22 @@
-"""Zarr v2 writer — the legacy-format path (SURVEY §2A X5).
+"""Zarr v2 layout — the legacy-format store (SURVEY §2A X5).
 
 The reference keeps a dask-based Zarr v2 writer for
 ``use_tensorstore=False`` (reference compress/imaris_to_zarr.py:807-990:
 ``zarr.create_dataset`` per level + ``da.to_zarr``, Blosc compressor).
-This is its Spark twin: same task model as the v3 pipeline, but the task
-granularity is the CHUNK (v2 has no shards) and the on-disk layout is the
-v2 spec — per-level ``.zarray`` JSON, dot-separated chunk keys, zlib
-compressor (the stdlib-available numcodecs codec; Blosc needs the
-numcodecs wheel and is gated out in this environment).
+Here v2 is a layout, not a second writer: ``convert_to_zarr_v2`` writes
+each level's ``.zarray`` and hands the chunk grid to the one conversion
+writer (``multitile._GlobalWriter`` through ``multitile._run_pass``),
+which reads the layout back from ``.zarray`` (``read_v2_array_metadata``)
+as it reads a v3 level's from zarr.json. So v2 shares its superchunk-
+coalesced source reads, ``on_corrupt="quarantine"`` and stage stats; a
+task row is one CHUNK (v2 has no shards).
+
+The on-disk layout is the v2 spec: per-level ``.zarray`` JSON,
+dot-separated chunk keys, and the zlib compressor (the stdlib-available
+numcodecs codec; Blosc needs the numcodecs wheel and is gated out in
+this environment). Chunks are zlib at ``codec_level`` whatever
+``codec`` says. Only the source's own levels are copied: a computed
+pyramid (``translate_pyramid=False``) is rejected.
 
 Any zarr-python 2.x reader opens these stores.
 """
@@ -15,23 +24,18 @@ Any zarr-python 2.x reader opens these stores.
 from __future__ import annotations
 
 import json
-import time
 import zlib
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
 from ..sources.tensor import open_source
 from .format import grid_cells, region_bounds
 from .kvstore import kv_get, kv_join, kv_put
 from .metadata import multiscales_metadata
-from .multitile import _task_rows, driver_partitioned
 
 
 @dataclass(frozen=True)
@@ -65,6 +69,22 @@ def write_v2_array_metadata(store: str, level: int, spec: V2Spec) -> str:
     }
     path = kv_join(store, str(level), ".zarray")
     return kv_put(path, json.dumps(meta, indent=2).encode("utf-8"))
+
+
+def read_v2_array_metadata(store: str, level: int) -> V2Spec:
+    """The level's ``V2Spec`` from its ``.zarray`` (the v2 twin of
+    ``format.read_array_metadata``)."""
+    blob = kv_get(kv_join(store, str(level), ".zarray"))
+    if blob is None:
+        raise FileNotFoundError(f"no .zarray for level {level} in {store}")
+    meta = json.loads(blob)
+    return V2Spec(
+        shape=tuple(meta["shape"]),
+        chunks=tuple(meta["chunks"]),
+        dtype=np.dtype(meta["dtype"]).name,
+        level=meta["compressor"]["level"],
+        fill_value=meta["fill_value"],
+    )
 
 
 def write_v2_group(store: str, attributes: dict) -> None:
@@ -123,23 +143,51 @@ def read_v2_region(
 def convert_to_zarr_v2(
     spark: SparkSession, settings: ConvertJobSettings
 ) -> dict:
-    """Translate a source pyramid into a Zarr v2 store; task = one chunk
-    (v2 has no shard indirection). Same retry-safe idempotent writes."""
+    """Copy the source's levels into a Zarr v2 store, one task row per
+    chunk, with the one conversion writer. Returns ``stats``, the
+    source-read stage dict (``n_shards`` counts written chunks)."""
+    # Imported here: pipeline and multitile build on this module.
+    from .multitile import _GlobalWriter, _run_pass, _task_rows
+    from .pipeline import stage_dict
+
+    if not settings.translate_pyramid:
+        raise ValueError(
+            "Zarr v2 output copies the source's own levels; a computed "
+            "pyramid (translate_pyramid=False) is not supported"
+        )
     src = open_source(settings.input_source)
-    meta = src.meta
+    try:
+        meta = src.meta
+    finally:
+        src.close()
     store = settings.output_location
-    specs: dict[int, V2Spec] = {}
+    # The writer reads a level's zarr.json before its .zarray, so a v3
+    # level left at the location would take the v2 chunks' place.
+    for lvl in range(len(meta.shapes)):
+        if kv_get(kv_join(store, str(lvl), "zarr.json")) is not None:
+            raise ValueError(
+                f"{store} already holds a Zarr v3 level {lvl}; write the "
+                "v2 store to a fresh location"
+            )
+    tasks = []
     for lvl, shape in enumerate(meta.shapes):
         chunk = tuple(
             min(c, d) for c, d in zip(settings.chunk_shape, shape)
         )
-        specs[lvl] = V2Spec(
-            shape=(1, 1, *shape),
-            chunks=(1, 1, *chunk),
-            dtype=meta.dtype,
-            level=settings.codec_level,
+        write_v2_array_metadata(
+            store,
+            lvl,
+            V2Spec(
+                shape=(1, 1, *shape),
+                chunks=(1, 1, *chunk),
+                dtype=meta.dtype,
+                level=settings.codec_level,
+            ),
         )
-        write_v2_array_metadata(store, lvl, specs[lvl])
+        tasks += _task_rows(
+            settings.input_source, store, lvl, shape, chunk,
+            settings.superchunk_multiple,
+        )
     write_v2_group(
         store,
         multiscales_metadata(
@@ -151,68 +199,10 @@ def convert_to_zarr_v2(
             method=settings.downsample_mode,
         ),
     )
-
-    source_path = settings.input_source
-    tasks = []
-    for lvl, shape in enumerate(meta.shapes):
-        tasks += _task_rows(
-            source_path, store, lvl, shape, specs[lvl].chunks[2:],
-            settings.superchunk_multiple,
-        )
-    spec_args = {
-        lvl: (specs[lvl].shape, specs[lvl].chunks, specs[lvl].dtype,
-              specs[lvl].level)
-        for lvl in specs
-    }
-
-    def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        src = open_source(source_path)
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                t0 = time.monotonic()
-                shape, chunks, dtype, lvl_ = spec_args[row.level]
-                spec = V2Spec(
-                    shape=shape, chunks=chunks, dtype=dtype, level=lvl_
-                )
-                block = src.read_block(
-                    row.level, row.z0, row.z1, row.y0, row.y1, row.x0, row.x1
-                )[None, None, ...]
-                blob = encode_v2_chunk(block, spec)
-                kv_put(
-                    v2_chunk_path(
-                        store, row.level, (0, 0, row.iz, row.iy, row.ix)
-                    ),
-                    blob,
-                )
-                out.append(
-                    (row.level, block.nbytes, len(blob),
-                     time.monotonic() - t0)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["level", "bytes_read", "bytes_written", "elapsed"],
-            )
-        src.close()
-
-    n_parts = max(
-        spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
+    (row,) = _run_pass(
+        spark, tasks, settings.tasks_per_cpu,
+        _GlobalWriter(settings.on_corrupt == "quarantine"),
     )
-    with driver_partitioned(
-        spark,
-        tasks,
-        n_parts,
-        writer,
-        "level int, bytes_read long, bytes_written long, elapsed double",
-    ) as written:
-        stats = (
-            written.agg(
-                F.count(F.lit(1)).alias("n_chunks"),
-                F.sum("bytes_read").alias("bytes_read"),
-                F.sum("bytes_written").alias("bytes_written"),
-            )
-            .collect()[0]
-            .asDict()
-        )
-    src.close()
+    stats = stage_dict(row)
+    del stats["tile_path"]
     return {"n_levels": len(meta.shapes), "stats": stats, "store": store}

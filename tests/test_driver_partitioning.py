@@ -1,6 +1,6 @@
 """Driver-partitioned conversion input: the driver puts whole superchunk
 groups into Spark partitions (``multitile.assign_groups``) and feeds each
-writer task its rows (``multitile.driver_partitioned``), so no Spark job
+writer task its rows (``multitile._run_pass``), so no Spark job
 only moves rows the driver already holds."""
 
 import random

@@ -10,6 +10,8 @@ read back as fill_value (Zarr v3: absent chunk == fill), so the output
 store stays valid and every healthy byte converts.
 """
 
+import os
+
 import numpy as np
 import pytest
 
@@ -29,6 +31,11 @@ from aind_exaspim_data_transformation_spark.zarrio.multitile import (
 )
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     convert_to_zarr,
+)
+from aind_exaspim_data_transformation_spark.zarrio.v2 import (
+    convert_to_zarr_v2,
+    read_v2_array_metadata,
+    read_v2_region,
 )
 
 
@@ -77,8 +84,6 @@ def _settings(src, store, **kw):
 
 
 def _shard_files(store):
-    import os
-
     out = {}
     for root, _dirs, files in os.walk(store):
         for f in files:
@@ -179,6 +184,53 @@ def test_quarantine_converts_every_healthy_shard(spark, tmp_path):
     )
     assert res2["n_errors"] == res["n_errors"]
     assert _shard_files(str(tmp_path / "q.zarr")) == q_files
+
+
+def test_v2_quarantine_withholds_only_the_corrupt_chunk(spark, tmp_path):
+    """A v2 store runs the one writer, so it quarantines like a v3 one:
+    the 8^3 chunk over the broken HDF5 chunk is withheld (its group's
+    read fails and falls back to per-chunk reads), every other chunk is
+    written, and the withheld one reads back as fill_value."""
+    tile = tmp_path / "tile.ims"
+    arr = _make_tile(tile)
+    _corrupt_chunk(tile, arr)
+    store = str(tmp_path / "v2.zarr")
+    res = convert_to_zarr_v2(
+        spark,
+        ConvertJobSettings(
+            input_source=str(tile),
+            output_location=store,
+            chunk_shape=(8, 8, 8),
+            on_corrupt="quarantine",
+        ),
+    )
+    stats = res["stats"]
+    assert stats["n_errors"] == 1 and stats["n_shards"] == 4**3 - 1
+    (sample,) = stats["error_samples"]
+    assert (sample["level"], sample["iz"], sample["iy"], sample["ix"]) == (
+        0, 0, 0, 0,
+    )
+    assert sample["error"].startswith("read:")
+
+    keys = set(os.listdir(os.path.join(store, "0"))) - {".zarray"}
+    every = {
+        f"0.0.{iz}.{iy}.{ix}"
+        for iz in range(4)
+        for iy in range(4)
+        for ix in range(4)
+    }
+    assert keys == every - {"0.0.0.0.0"}
+
+    spec = read_v2_array_metadata(store, 0)
+    full = read_v2_region(
+        store, 0,
+        (slice(0, 1), slice(0, 1), slice(0, 32), slice(0, 32), slice(0, 32)),
+        spec,
+    )[0, 0]
+    assert (full[:8, :8, :8] == spec.fill_value).all()
+    want = arr.copy()
+    want[:8, :8, :8] = spec.fill_value
+    np.testing.assert_array_equal(full, want)
 
 
 def test_multitile_quarantine_isolates_poison_tiles(spark, tmp_path):

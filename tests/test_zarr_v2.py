@@ -1,13 +1,21 @@
-"""Zarr v2 legacy writer (X5) round trips + padded-shape walk goldens."""
+"""Zarr v2 legacy layout (X5) round trips + padded-shape walk goldens."""
 
 import json
 
 import numpy as np
+import pytest
 
 from aind_exaspim_data_transformation_spark.config import ConvertJobSettings
+from aind_exaspim_data_transformation_spark.operators.downsample import (
+    downsample_block,
+)
 from aind_exaspim_data_transformation_spark.sources.tensor import (
     true_shapes_from_padded,
     write_npy_pyramid,
+)
+from aind_exaspim_data_transformation_spark.zarrio.format import (
+    ShardSpec,
+    write_array_metadata,
 )
 from aind_exaspim_data_transformation_spark.zarrio.v2 import (
     V2Spec,
@@ -16,6 +24,7 @@ from aind_exaspim_data_transformation_spark.zarrio.v2 import (
     encode_v2_chunk,
     read_v2_region,
 )
+from tests.test_pyramid_cascade import STAGE_KEYS
 
 
 def test_true_shapes_from_padded_regression():
@@ -60,13 +69,18 @@ def test_convert_to_zarr_v2_store(spark, tmp_path):
             input_source=src,
             output_location=store,
             chunk_shape=(16, 16, 16),
-            # v2 has no zstd in this environment: the writer maps any
-            # codec onto zlib at codec_level — pin the legacy pairing
+            # v2 has no zstd in this environment: v2 stores are zlib at
+            # codec_level whatever codec says — pin the legacy pairing
             codec="gzip",
             codec_level=1,
         ),
     )
     assert result["n_levels"] == 2
+    # The one writer's stage dict: 48 level-0 + 8 level-1 chunks.
+    stats = result["stats"]
+    assert set(stats) == STAGE_KEYS
+    assert stats["n_shards"] == 48 + 8
+    assert stats["n_errors"] == 0 and stats["error_samples"] == []
     # .zarray metadata is spec-conformant
     zarray = json.load(open(f"{store}/0/.zarray"))
     assert zarray["zarr_format"] == 2
@@ -81,3 +95,47 @@ def test_convert_to_zarr_v2_store(spark, tmp_path):
         spec0,
     )[0, 0]
     np.testing.assert_array_equal(got, arr)
+    spec1 = V2Spec(shape=(1, 1, 20, 25, 30), chunks=(1, 1, 16, 16, 16))
+    got1 = read_v2_region(
+        store, 1,
+        (slice(0, 1), slice(0, 1), slice(0, 20), slice(0, 25), slice(0, 30)),
+        spec1,
+    )[0, 0]
+    np.testing.assert_array_equal(
+        got1, downsample_block(arr, (2, 2, 2), "mean").astype(arr.dtype)
+    )
+
+
+@pytest.mark.parametrize("case", ["computed_pyramid", "v3_store"])
+def test_convert_to_zarr_v2_rejects_what_v2_cannot_write(
+    spark, tmp_path, case
+):
+    """v2 copies the source's own levels, and the writer reads a level's
+    zarr.json before its .zarray: a computed pyramid, or a location that
+    holds a v3 level, raises and leaves the location as it was."""
+    src = str(tmp_path / "tile")
+    write_npy_pyramid(src, np.zeros((8, 8, 8), dtype=np.uint16), n_levels=2)
+    store = tmp_path / "store.zarr"
+    kw = {}
+    if case == "v3_store":
+        write_array_metadata(
+            str(store), 0,
+            ShardSpec(shape=(1, 1, 8, 8, 8), shard_shape=(1, 1, 8, 8, 8),
+                      chunk_shape=(1, 1, 4, 4, 4)),
+        )
+        match = "Zarr v3 level 0"
+    else:
+        kw = dict(translate_pyramid=False, downsample_levels=2)
+        match = "translate_pyramid"
+    before = sorted(store.rglob("*"))
+    with pytest.raises(ValueError, match=match):
+        convert_to_zarr_v2(
+            spark,
+            ConvertJobSettings(
+                input_source=src,
+                output_location=str(store),
+                chunk_shape=(4, 4, 4),
+                **kw,
+            ),
+        )
+    assert sorted(store.rglob("*")) == before

@@ -175,6 +175,18 @@ def _v2(spark, tmp: str, out: str) -> None:
     )
 
 
+def _v2_quarantine(spark, tmp: str, out: str) -> None:
+    path = os.path.join(tmp, "v2_corrupt.ims")
+    _corrupt_ims_tile(path)
+    convert_to_zarr_v2(
+        spark,
+        ConvertJobSettings(
+            input_source=path, output_location=out, chunk_shape=(8, 8, 8),
+            on_corrupt="quarantine",
+        ),
+    )
+
+
 def _cascade(spark, out):
     _convert(
         spark, "synth://512,256,256,1", out, translate_pyramid=False,
@@ -268,6 +280,7 @@ CASES = {
         lambda spark, tmp, out: _misaligned(spark, out, [[0, 2], [2, 3]]),
         200_000,
     ),
+    "v2 quarantine corrupt ims": _v2_quarantine,
 }
 
 
