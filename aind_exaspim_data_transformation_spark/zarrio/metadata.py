@@ -2,9 +2,9 @@
 
 Pure driver-side computation (no Spark). Semantics follow the reference's
 generator (reference compress/omezarr_metadata.py:36-496): per-level scale
-transforms are cumulative products of the scale factor, per-level
-translations shift by half the parent voxel extent each level
-(``origin += voxel * (factor - 1) / 2``, reference :383-385), axes are
+transforms are cumulative products of each level's factor over the level
+before, per-level translations shift by half the parent voxel extent each
+level (``origin += voxel * (factor - 1) / 2``, reference :383-385), axes are
 (t, c, z, y, x) with millisecond/micrometer units (reference :212-218).
 
 Golden values (reference tests/test_translation_fix.py:88-94): for
@@ -18,25 +18,26 @@ from __future__ import annotations
 def downscale_origins(
     origin_zyx: tuple[float, float, float],
     voxel_zyx: tuple[float, float, float],
-    factors_zyx: tuple[float, float, float],
-    n_levels: int,
+    level_factors_zyx: list[tuple[float, float, float]],
 ) -> tuple[list[list[float]], list[list[float]]]:
-    """Per-level (origin, voxel) chains.
+    """Per-level (origin, voxel) chains, one level more than
+    ``level_factors_zyx``, whose entry k-1 is level k's per-axis factor
+    over level k-1.
 
-    Level k+1 voxel centers sit at the mean of the window they reduce, so
-    each level shifts by ``voxel_k * (factor - 1) / 2`` per axis.
+    Level k voxel centers sit at the mean of the window they reduce, so
+    each level shifts by ``voxel_{k-1} * (factor - 1) / 2`` per axis.
     """
     origins = [list(origin_zyx)]
     voxels = [list(voxel_zyx)]
-    for _ in range(1, n_levels):
+    for factors in level_factors_zyx:
         prev_o, prev_v = origins[-1], voxels[-1]
         origins.append(
             [
                 o + v * (f - 1) / 2.0
-                for o, v, f in zip(prev_o, prev_v, factors_zyx)
+                for o, v, f in zip(prev_o, prev_v, factors)
             ]
         )
-        voxels.append([v * f for v, f in zip(prev_v, factors_zyx)])
+        voxels.append([v * f for v, f in zip(prev_v, factors)])
     return origins, voxels
 
 
@@ -120,22 +121,23 @@ def validate_omero(omero: dict | None) -> None:
 
 def multiscales_metadata(
     name: str,
-    n_levels: int,
     voxel_zyx: tuple[float, float, float],
+    level_factors_zyx: list[tuple[float, float, float]],
     origin_zyx: tuple[float, float, float] = (0.0, 0.0, 0.0),
-    factors_zyx: tuple[float, float, float] = (2.0, 2.0, 2.0),
     channel_names: list[str] | None = None,
     method: str = "mean",
     channel_colors: list[int] | None = None,
     channel_minmax: list[tuple[float, float]] | None = None,
     channel_startend: list[tuple[float, float]] | None = None,
 ) -> dict:
-    """Root group attributes: OME-NGFF 0.5 multiscales + validated omero."""
+    """Root group attributes: OME-NGFF 0.5 multiscales + validated omero,
+    for level 0 and one level per entry of ``level_factors_zyx`` (see
+    ``downscale_origins``)."""
     origins, voxels = downscale_origins(
-        origin_zyx, voxel_zyx, factors_zyx, n_levels
+        origin_zyx, voxel_zyx, level_factors_zyx
     )
     datasets = []
-    for lvl in range(n_levels):
+    for lvl in range(len(origins)):
         scale = [1.0, 1.0] + list(voxels[lvl])
         translation = [0.0, 0.0] + list(origins[lvl])
         datasets.append(

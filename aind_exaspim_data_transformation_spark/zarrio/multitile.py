@@ -11,8 +11,9 @@ balanced by voxels — the deterministic host-side split of the
 reference's imaris_job.py:35-46, across every tile) and ``_run_pass``
 feeds each writer task its partition's rows, so no Spark job moves rows
 the driver already holds. ``pipeline.convert_to_zarr`` is the one-tile
-call; ``v2.convert_to_zarr_v2`` runs the same writer over a v2 chunk
-grid.
+call. Zarr v2 is a layout choice of the one planner
+(``plan_global_tasks(..., zarr_format=2)``): the same probe, metadata
+writes and task rows, one row per v2 chunk, and the same writer.
 
 A computed pyramid has one kernel, the fused cascade: the source writer
 reduces each superchunk group recursively and ships per-level partials
@@ -53,11 +54,13 @@ from .format import (
     write_array_metadata,
     write_group_metadata,
 )
+from .kvstore import kv_get, kv_join
 from . import pipeline
 from .metadata import multiscales_metadata
 from .pipeline import (
     ERROR_SAMPLE_CAP,
     _group_bbox,
+    _level_factors,
     _level_shapes,
     _level_specs,
     _put_shard,
@@ -68,7 +71,12 @@ from .pipeline import (
     stage_agg_exprs,
     stage_dict,
 )
-from .v2 import V2Spec, read_v2_array_metadata
+from .v2 import (
+    V2Spec,
+    read_v2_array_metadata,
+    write_v2_array_metadata,
+    write_v2_group,
+)
 
 #: One row per shard (or v2 chunk) read, for every stage: the
 #: source-read stage (level 0, or every level when translating, v2
@@ -348,21 +356,35 @@ class _PartitionFeed:
 def plan_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
+    zarr_format: int = 3,
 ) -> tuple[
     list[tuple],
-    dict[str, dict[int, ShardSpec]],
+    dict[str, dict[int, ShardSpec | V2Spec]],
     dict[str, str],
     list[tuple[int, int]],
 ]:
-    """Probe every tile driver-side, create its stores, and list the
-    global source-read task rows: every level in translate mode, level 0
-    in compute mode (whose deeper levels the cascade passes derive).
+    """Probe every tile driver-side, create its stores (Zarr v3, or v2
+    with ``zarr_format=2``), and list the global source-read task rows:
+    every level in translate mode, level 0 in compute mode (whose deeper
+    levels the cascade passes derive).
     Returns (TASK_SCHEMA rows, specs per tile, quarantined tiles,
     ``pyramid_passes``). The third map is empty unless
     on_corrupt="quarantine" skipped tiles whose open OR metadata probe
-    failed driver-side; the passes are empty when translating."""
-    all_specs: dict[str, dict[int, ShardSpec]] = {}
+    failed driver-side; the passes are empty when translating. A v2
+    store copies the source's own levels and cannot sit beside a v3
+    level (the writers read zarr.json first): either case, or a format
+    other than 2 or 3, raises ``ValueError`` before anything is
+    written."""
+    if zarr_format not in (2, 3):
+        raise ValueError(f"zarr_format must be 2 or 3, not {zarr_format}")
+    if zarr_format == 2 and not settings.translate_pyramid:
+        raise ValueError(
+            "Zarr v2 output copies the source's own levels; a computed "
+            "pyramid (translate_pyramid=False) is not supported"
+        )
+    all_specs: dict[str, dict[int, ShardSpec | V2Spec]] = {}
     quarantined: dict[str, str] = {}
+    probed = []
     for src_path, store in tiles:
         src = None
         try:
@@ -372,7 +394,7 @@ def plan_global_tasks(
             # task grid to build, so the tile is skipped, not the job.
             src = open_source(src_path)
             shapes = _level_shapes(settings, src.meta)
-            specs = _level_specs(settings, shapes, src.meta.dtype)
+            specs = _level_specs(settings, shapes, src.meta.dtype, zarr_format)
         except Exception as exc:  # noqa: BLE001 — quarantine boundary
             if settings.on_corrupt != "quarantine":
                 raise
@@ -385,23 +407,32 @@ def plan_global_tasks(
                     pass
             quarantined[src_path] = f"open: {type(exc).__name__}: {exc}"
             continue
-        all_specs[src_path] = specs
-        # Every level's zarr.json before any task runs: it is the only
-        # layout the writers read (``_LevelSpecs``).
-        for lvl in range(len(shapes)):
-            write_array_metadata(store, lvl, specs[lvl])
-        write_group_metadata(
-            store,
-            multiscales_metadata(
-                name=src_path.rsplit("/", 1)[-1],
-                n_levels=len(shapes),
-                voxel_zyx=src.meta.voxel_size,
-                origin_zyx=src.meta.origin,
-                factors_zyx=tuple(float(f) for f in settings.scale_factor),
-                method=settings.downsample_mode,
-            ),
-        )
         src.close()
+        all_specs[src_path] = specs
+        attrs = multiscales_metadata(
+            name=src_path.rsplit("/", 1)[-1],
+            voxel_zyx=src.meta.voxel_size,
+            level_factors_zyx=_level_factors(settings, shapes),
+            origin_zyx=src.meta.origin,
+            method=settings.downsample_mode,
+        )
+        probed.append((src_path, store, attrs))
+    write_array, write_group = write_array_metadata, write_group_metadata
+    if zarr_format == 2:
+        for src_path, store, _ in probed:
+            for lvl in all_specs[src_path]:
+                if kv_get(kv_join(store, str(lvl), "zarr.json")) is not None:
+                    raise ValueError(
+                        f"{store} already holds a Zarr v3 level {lvl}; "
+                        "write the v2 store to a fresh location"
+                    )
+        write_array, write_group = write_v2_array_metadata, write_v2_group
+    for src_path, store, attrs in probed:
+        # Every level's layout before any task runs: it is the only
+        # layout the writers read (``_LevelSpecs``).
+        for lvl, spec in all_specs[src_path].items():
+            write_array(store, lvl, spec)
+        write_group(store, attrs)
     rows: list[tuple] = []
     passes: list[tuple[int, int]] = []
     if settings.translate_pyramid:
@@ -673,9 +704,11 @@ def convert_tiles_to_zarr(
     settings: ConvertJobSettings,
     partition_to_process: int | None = None,
     num_partitions: int | None = None,
+    zarr_format: int = 3,
 ) -> dict:
     """Convert many tiles in ONE Spark action per cascade pass (global
-    shard scheduling).
+    shard scheduling), into Zarr v3 stores or, with ``zarr_format=2``,
+    v2 stores of the source's own levels.
 
     ``partition_to_process``/``num_partitions`` subset the global task
     list deterministically (row-major order, round-robin) — the Spark
@@ -696,7 +729,7 @@ def convert_tiles_to_zarr(
             "compute-pyramid stage once after all partitions complete"
         )
     tasks, all_specs, quarantined_tiles, passes = plan_global_tasks(
-        tiles, settings
+        tiles, settings, zarr_format
     )
     quarantine = settings.on_corrupt == "quarantine"
     if partition_to_process is not None and num_partitions:

@@ -7,16 +7,17 @@ compress/imaris_to_zarr.py:375-462, and the sequential pyramid,
 :677-799). When a window-aligned group of the full depth would exceed
 ``CASCADE_MAX_GROUP_BYTES``, the cascade runs in passes, each later pass
 reading its base level back from the store. ``convert_to_zarr`` is the
-one-tile call into that plan, reshaped into per-stage stats.
+one-tile call into that plan (Zarr v3, or v2 with ``zarr_format=2``),
+reshaped into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
-writers share: the superchunk group bounding box and coalesced source
-reads (``_group_bbox``, ``iter_coalesced_reads``), the one pad, encode
-and write step every writer ends in, v3 shard or v2 chunk
-(``_put_shard``), the cascade's
-group-alignment gate and partial routing (``cascade_group_multiple``,
-``_split_rows``), per-level shapes and specs, and the stage-stats
-aggregation (``stage_agg_exprs``).
+planner and writers share: the superchunk group bounding box and
+coalesced source reads (``_group_bbox``, ``iter_coalesced_reads``), the
+one pad, encode and write step every writer ends in, v3 shard or v2
+chunk (``_put_shard``), the cascade's group-alignment gate and partial
+routing (``cascade_group_multiple``, ``_split_rows``), per-level shapes,
+multiscales factors and v3 or v2 specs, and the stage-stats aggregation
+(``stage_agg_exprs``).
 
 Retry safety: shard writes are idempotent (same key, same bytes, atomic
 rename), so Spark task retries and speculative execution are harmless —
@@ -93,26 +94,52 @@ def _level_shapes(
     return shapes
 
 
+def _level_factors(
+    settings: ConvertJobSettings, shapes: list[tuple[int, int, int]]
+) -> list[tuple[float, float, float]]:
+    """Each level's per-axis factor over the level before: the rounded
+    shape ratio for source levels (reference X4,
+    compress/imaris_to_zarr.py:2332-2351), the applied ``scale_factor``
+    for computed ones (a ratio would read 1 on a collapsed axis)."""
+    if not settings.translate_pyramid:
+        factor = tuple(float(f) for f in settings.scale_factor)
+        return [factor] * (len(shapes) - 1)
+    return [
+        tuple(float(round(a / b)) for a, b in zip(prev, cur))
+        for prev, cur in zip(shapes, shapes[1:])
+    ]
+
+
 def _level_specs(
     settings: ConvertJobSettings,
     shapes: list[tuple[int, int, int]],
     dtype: str,
-) -> dict[int, ShardSpec]:
-    """Per-level 5-D shard specs with the reference's clamping rules."""
+    zarr_format: int = 3,
+) -> dict[int, ShardSpec | V2Spec]:
+    """Per-level 5-D layouts with the reference's clamping rules: v3
+    shard specs, or v2 chunk specs (zlib at ``codec_level``)."""
     specs = {}
     for lvl, shape in enumerate(shapes):
         shard, chunk = clamp_shard_and_chunk(
             shape, settings.shard_shape, settings.chunk_shape
         )
-        specs[lvl] = ShardSpec(
-            shape=(1, 1, *shape),
-            shard_shape=(1, 1, *shard),
-            chunk_shape=(1, 1, *chunk),
-            dtype=dtype,
-            codec=settings.codec,
-            codec_level=settings.codec_level,
-            transpose_order=settings.transpose_order,
-        )
+        if zarr_format == 2:
+            specs[lvl] = V2Spec(
+                shape=(1, 1, *shape),
+                chunks=(1, 1, *chunk),
+                dtype=dtype,
+                level=settings.codec_level,
+            )
+        else:
+            specs[lvl] = ShardSpec(
+                shape=(1, 1, *shape),
+                shard_shape=(1, 1, *shard),
+                chunk_shape=(1, 1, *chunk),
+                dtype=dtype,
+                codec=settings.codec,
+                codec_level=settings.codec_level,
+                transpose_order=settings.transpose_order,
+            )
     return specs
 
 
@@ -191,9 +218,12 @@ def iter_coalesced_reads(rows: list, read_fn):
     bounding box (the analog of the reference's divisibility validation,
     utils/io_utils.py:212-217 — here checked as volume equality, which
     also keeps resume/subset runs correct: a partial group falls back to
-    per-row reads instead of over-reading). Memory stays bounded by
-    ``superchunk_multiple * shard_shape``, mirroring the reference's
-    superchunk-sized bound.
+    per-row reads instead of over-reading). Memory is one group's
+    bounding box: ``superchunk_multiple * shard_shape`` (the reference's
+    superchunk bound) for a plain group; a cascade group, widened to stay
+    window-aligned (``cascade_group_multiple``), is bounded by
+    ``CASCADE_MAX_GROUP_BYTES``, or in a one-step pass by
+    ``scale_factor`` times the superchunk per axis.
     """
     box = _group_bbox(rows)
     if box is not None:
@@ -308,13 +338,13 @@ def stage_dict(row) -> dict:
 
 
 def convert_to_zarr(
-    spark: SparkSession, settings: ConvertJobSettings
+    spark: SparkSession, settings: ConvertJobSettings, zarr_format: int = 3
 ) -> dict:
     """Convert ``settings.input_source`` into the store at
-    ``settings.output_location``: a one-tile ``convert_tiles_to_zarr``
-    call. Returns per-stage stats — ``stages[0]`` is the source-read
-    stage (every level when translating), then one stage per computed
-    level."""
+    ``settings.output_location``, Zarr v3 or (``zarr_format=2``) v2: a
+    one-tile ``convert_tiles_to_zarr`` call. Returns per-stage stats —
+    ``stages[0]`` is the source-read stage (every level when
+    translating), then one stage per computed level."""
     # Imported here: multitile builds on this module's kernels.
     from .multitile import convert_tiles_to_zarr
 
@@ -328,7 +358,8 @@ def convert_to_zarr(
         src.close()
     store = settings.output_location
     mt = convert_tiles_to_zarr(
-        spark, [(settings.input_source, store)], settings
+        spark, [(settings.input_source, store)], settings,
+        zarr_format=zarr_format,
     )
     stage0 = {
         k: v

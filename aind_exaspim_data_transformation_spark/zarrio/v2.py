@@ -3,20 +3,24 @@
 The reference keeps a dask-based Zarr v2 writer for
 ``use_tensorstore=False`` (reference compress/imaris_to_zarr.py:807-990:
 ``zarr.create_dataset`` per level + ``da.to_zarr``, Blosc compressor).
-Here v2 is a layout, not a second writer: ``convert_to_zarr_v2`` writes
-each level's ``.zarray`` and hands the chunk grid to the one conversion
-writer (``multitile._GlobalWriter`` through ``multitile._run_pass``),
-which reads the layout back from ``.zarray`` (``read_v2_array_metadata``)
-as it reads a v3 level's from zarr.json. So v2 shares its superchunk-
-coalesced source reads, ``on_corrupt="quarantine"`` and stage stats; a
-task row is one CHUNK (v2 has no shards).
+Here v2 is only a layout: ``pipeline.convert_to_zarr(...,
+zarr_format=2)`` runs the one planner (``multitile.plan_global_tasks``),
+which builds a ``V2Spec`` per level and writes its ``.zarray``, and the
+one writer (``multitile._GlobalWriter``), which reads the layout back
+from ``.zarray`` (``read_v2_array_metadata``) as it reads a v3 level's
+from zarr.json. So v2 shares its probe, task rows, superchunk-coalesced
+source reads, ``on_corrupt="quarantine"`` and stage stats; a task row
+is one CHUNK (v2 has no shards).
 
-The on-disk layout is the v2 spec: per-level ``.zarray`` JSON,
-dot-separated chunk keys, and the zlib compressor (the stdlib-available
-numcodecs codec; Blosc needs the numcodecs wheel and is gated out in
-this environment). Chunks are zlib at ``codec_level`` whatever
-``codec`` says. Only the source's own levels are copied: a computed
-pyramid (``translate_pyramid=False``) is rejected.
+This module holds the layout only: ``V2Spec``, the ``.zarray`` /
+``.zgroup`` I/O, the chunk codec, ``v2_chunk_path`` and
+``read_v2_region``. The on-disk layout is the v2 spec: per-level
+``.zarray`` JSON, dot-separated chunk keys, and the zlib compressor
+(the stdlib-available numcodecs codec; Blosc needs the numcodecs
+wheel, which the package does not depend on). Chunks are zlib at
+``codec_level`` whatever ``codec`` says. Only the source's own levels
+are copied: the planner rejects a computed pyramid
+(``translate_pyramid=False``).
 
 Any zarr-python 2.x reader opens these stores.
 """
@@ -29,13 +33,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from pyspark.sql import SparkSession
-
-from ..config import ConvertJobSettings
-from ..sources.tensor import open_source
 from .format import grid_cells, region_bounds
 from .kvstore import kv_get, kv_join, kv_put
-from .metadata import multiscales_metadata
 
 
 @dataclass(frozen=True)
@@ -49,6 +48,11 @@ class V2Spec:
     @property
     def np_dtype(self) -> np.dtype:
         return np.dtype(self.dtype)
+
+    @property
+    def shard_shape(self) -> tuple[int, ...]:
+        """The chunk, a v2 level's write unit (a v3 level's shard)."""
+        return self.chunks
 
     @property
     def dtype_str(self) -> str:
@@ -138,71 +142,3 @@ def read_v2_region(
         if blob is not None:
             out[outer] = decode_v2_chunk(blob, spec)[inner]
     return out
-
-
-def convert_to_zarr_v2(
-    spark: SparkSession, settings: ConvertJobSettings
-) -> dict:
-    """Copy the source's levels into a Zarr v2 store, one task row per
-    chunk, with the one conversion writer. Returns ``stats``, the
-    source-read stage dict (``n_shards`` counts written chunks)."""
-    # Imported here: pipeline and multitile build on this module.
-    from .multitile import _GlobalWriter, _run_pass, _task_rows
-    from .pipeline import stage_dict
-
-    if not settings.translate_pyramid:
-        raise ValueError(
-            "Zarr v2 output copies the source's own levels; a computed "
-            "pyramid (translate_pyramid=False) is not supported"
-        )
-    src = open_source(settings.input_source)
-    try:
-        meta = src.meta
-    finally:
-        src.close()
-    store = settings.output_location
-    # The writer reads a level's zarr.json before its .zarray, so a v3
-    # level left at the location would take the v2 chunks' place.
-    for lvl in range(len(meta.shapes)):
-        if kv_get(kv_join(store, str(lvl), "zarr.json")) is not None:
-            raise ValueError(
-                f"{store} already holds a Zarr v3 level {lvl}; write the "
-                "v2 store to a fresh location"
-            )
-    tasks = []
-    for lvl, shape in enumerate(meta.shapes):
-        chunk = tuple(
-            min(c, d) for c, d in zip(settings.chunk_shape, shape)
-        )
-        write_v2_array_metadata(
-            store,
-            lvl,
-            V2Spec(
-                shape=(1, 1, *shape),
-                chunks=(1, 1, *chunk),
-                dtype=meta.dtype,
-                level=settings.codec_level,
-            ),
-        )
-        tasks += _task_rows(
-            settings.input_source, store, lvl, shape, chunk,
-            settings.superchunk_multiple,
-        )
-    write_v2_group(
-        store,
-        multiscales_metadata(
-            name=settings.input_source.rsplit("/", 1)[-1],
-            n_levels=len(meta.shapes),
-            voxel_zyx=meta.voxel_size,
-            origin_zyx=meta.origin,
-            factors_zyx=tuple(float(f) for f in settings.scale_factor),
-            method=settings.downsample_mode,
-        ),
-    )
-    (row,) = _run_pass(
-        spark, tasks, settings.tasks_per_cpu,
-        _GlobalWriter(settings.on_corrupt == "quarantine"),
-    )
-    stats = stage_dict(row)
-    del stats["tile_path"]
-    return {"n_levels": len(meta.shapes), "stats": stats, "store": store}

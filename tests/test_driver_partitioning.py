@@ -27,6 +27,9 @@ from aind_exaspim_data_transformation_spark.zarrio.multitile import (
     build_global_tasks,
     convert_tiles_to_zarr,
 )
+from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
+    convert_to_zarr,
+)
 
 
 def _plan(seed: int) -> list[tuple]:
@@ -159,8 +162,9 @@ def _jobs_of(spark, fn) -> int:
 def test_conversion_job_counts(spark, two_tiles, tmp_path):
     """Writer input needs no Spark job: a two-tile fused cascade runs the
     writer stage, the assembler stage and the stats result (3 jobs),
-    under on_corrupt="quarantine" too; a translate run the writer stage
-    and the stats result (2 jobs)."""
+    under on_corrupt="quarantine" too; a translate run, two-tile or a
+    single-tile Zarr v2 copy, the writer stage and the stats result
+    (2 jobs)."""
     cascade = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
                enumerate(two_tiles)]
     res = {}
@@ -200,4 +204,24 @@ def test_conversion_job_counts(spark, two_tiles, tmp_path):
             spark, translate, _settings(translate_pyramid=True)
         ),
     )
+    assert n == 2
+
+    res = {}
+    n = _jobs_of(
+        spark,
+        lambda: res.update(
+            convert_to_zarr(
+                spark,
+                _settings(translate_pyramid=True).model_copy(
+                    update={
+                        "input_source": two_tiles[0][0],
+                        "output_location": str(tmp_path / "v2.zarr"),
+                    }
+                ),
+                zarr_format=2,
+            )
+        ),
+    )
+    # One v2 chunk per task row: 64x48x40 over 16^3 chunks.
+    assert res["stages"][0]["n_shards"] == 4 * 3 * 3
     assert n == 2

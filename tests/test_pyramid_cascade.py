@@ -338,17 +338,19 @@ STAGE_KEYS = {
 
 
 @pytest.mark.parametrize(
-    "plan", ["translate", "fused_cascade", "cascade_passes"]
+    "plan", ["translate", "fused_cascade", "cascade_passes", "v2"]
 )
 def test_stage_dicts_share_one_key_set(spark, tmp_path, monkeypatch, plan):
     """Every stage dict carries the same stats keys whichever plan ran,
-    through both entry points: the level-0 copy, the cascade's deeper
-    levels in one pass or several all come from one aggregation."""
+    through both entry points: the level-0 copy, a Zarr v2 copy, the
+    cascade's deeper levels in one pass or several all come from one
+    aggregation."""
     import aind_exaspim_data_transformation_spark.zarrio.multitile as mt
 
     if plan == "cascade_passes":
         monkeypatch.setattr(pipeline, "CASCADE_MAX_GROUP_BYTES", 0)
-    translate = plan == "translate"
+    translate = plan in ("translate", "v2")
+    zarr_format = 2 if plan == "v2" else 3
     settings = ConvertJobSettings(
         input_source="synth://96,80,64,3",
         output_location=str(tmp_path / "one.zarr"),
@@ -357,7 +359,7 @@ def test_stage_dicts_share_one_key_set(spark, tmp_path, monkeypatch, plan):
         translate_pyramid=translate,
         downsample_levels=3,
     )
-    res = pipeline.convert_to_zarr(spark, settings)
+    res = pipeline.convert_to_zarr(spark, settings, zarr_format=zarr_format)
     levels = [0] if translate else [0, 1, 2]
     assert [s["level"] for s in res["stages"]] == levels
     for s in res["stages"]:
@@ -369,6 +371,7 @@ def test_stage_dicts_share_one_key_set(spark, tmp_path, monkeypatch, plan):
         spark,
         [(settings.input_source, str(tmp_path / "multi.zarr"))],
         settings,
+        zarr_format=zarr_format,
     )
     for t in multi["tiles"].values():
         assert set(t) == STAGE_KEYS | {"tile_path"}, t

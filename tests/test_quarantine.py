@@ -33,7 +33,6 @@ from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     convert_to_zarr,
 )
 from aind_exaspim_data_transformation_spark.zarrio.v2 import (
-    convert_to_zarr_v2,
     read_v2_array_metadata,
     read_v2_region,
 )
@@ -195,7 +194,7 @@ def test_v2_quarantine_withholds_only_the_corrupt_chunk(spark, tmp_path):
     arr = _make_tile(tile)
     _corrupt_chunk(tile, arr)
     store = str(tmp_path / "v2.zarr")
-    res = convert_to_zarr_v2(
+    res = convert_to_zarr(
         spark,
         ConvertJobSettings(
             input_source=str(tile),
@@ -203,8 +202,10 @@ def test_v2_quarantine_withholds_only_the_corrupt_chunk(spark, tmp_path):
             chunk_shape=(8, 8, 8),
             on_corrupt="quarantine",
         ),
+        zarr_format=2,
     )
-    stats = res["stats"]
+    assert res["n_errors"] == 1
+    stats = res["stages"][0]
     assert stats["n_errors"] == 1 and stats["n_shards"] == 4**3 - 1
     (sample,) = stats["error_samples"]
     assert (sample["level"], sample["iz"], sample["iy"], sample["ix"]) == (

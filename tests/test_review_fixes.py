@@ -83,7 +83,7 @@ def test_connected_components_raises_on_non_convergence(spark):
 
 def test_multiscales_metadata_records_method():
     meta = multiscales_metadata(
-        "t", 2, (1.0, 1.0, 1.0), method="median"
+        "t", (1.0, 1.0, 1.0), [(2.0, 2.0, 2.0)], method="median"
     )
     ms = meta["ome"]["multiscales"][0]
     assert ms["metadata"]["method"] == "median"

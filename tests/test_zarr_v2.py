@@ -17,9 +17,11 @@ from aind_exaspim_data_transformation_spark.zarrio.format import (
     ShardSpec,
     write_array_metadata,
 )
+from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
+    convert_to_zarr,
+)
 from aind_exaspim_data_transformation_spark.zarrio.v2 import (
     V2Spec,
-    convert_to_zarr_v2,
     decode_v2_chunk,
     encode_v2_chunk,
     read_v2_region,
@@ -63,22 +65,24 @@ def test_convert_to_zarr_v2_store(spark, tmp_path):
     src = str(tmp_path / "tile")
     write_npy_pyramid(src, arr, n_levels=2)
     store = str(tmp_path / "legacy.zarr")
-    result = convert_to_zarr_v2(
+    result = convert_to_zarr(
         spark,
         ConvertJobSettings(
             input_source=src,
             output_location=store,
             chunk_shape=(16, 16, 16),
-            # v2 has no zstd in this environment: v2 stores are zlib at
-            # codec_level whatever codec says — pin the legacy pairing
+            # v2 stores are zlib at codec_level whatever codec says —
+            # pin the legacy pairing
             codec="gzip",
             codec_level=1,
         ),
+        zarr_format=2,
     )
     assert result["n_levels"] == 2
-    # The one writer's stage dict: 48 level-0 + 8 level-1 chunks.
-    stats = result["stats"]
-    assert set(stats) == STAGE_KEYS
+    assert result["shapes"] == [(40, 50, 60), (20, 25, 30)]
+    # The one writer's source-read stage: 48 level-0 + 8 level-1 chunks.
+    stats = result["stages"][0]
+    assert set(stats) == STAGE_KEYS | {"level"}
     assert stats["n_shards"] == 48 + 8
     assert stats["n_errors"] == 0 and stats["error_samples"] == []
     # .zarray metadata is spec-conformant
@@ -106,17 +110,20 @@ def test_convert_to_zarr_v2_store(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("case", ["computed_pyramid", "v3_store"])
+@pytest.mark.parametrize(
+    "case", ["computed_pyramid", "v3_store", "unknown_format"]
+)
 def test_convert_to_zarr_v2_rejects_what_v2_cannot_write(
     spark, tmp_path, case
 ):
     """v2 copies the source's own levels, and the writer reads a level's
     zarr.json before its .zarray: a computed pyramid, or a location that
-    holds a v3 level, raises and leaves the location as it was."""
+    holds a v3 level, raises and leaves the location as it was; so does
+    a format that is neither 2 nor 3."""
     src = str(tmp_path / "tile")
     write_npy_pyramid(src, np.zeros((8, 8, 8), dtype=np.uint16), n_levels=2)
     store = tmp_path / "store.zarr"
-    kw = {}
+    kw, zarr_format = {}, 2
     if case == "v3_store":
         write_array_metadata(
             str(store), 0,
@@ -124,12 +131,14 @@ def test_convert_to_zarr_v2_rejects_what_v2_cannot_write(
                       chunk_shape=(1, 1, 4, 4, 4)),
         )
         match = "Zarr v3 level 0"
+    elif case == "unknown_format":
+        zarr_format, match = 4, "zarr_format must be 2 or 3"
     else:
         kw = dict(translate_pyramid=False, downsample_levels=2)
         match = "translate_pyramid"
     before = sorted(store.rglob("*"))
     with pytest.raises(ValueError, match=match):
-        convert_to_zarr_v2(
+        convert_to_zarr(
             spark,
             ConvertJobSettings(
                 input_source=src,
@@ -137,5 +146,6 @@ def test_convert_to_zarr_v2_rejects_what_v2_cannot_write(
                 chunk_shape=(4, 4, 4),
                 **kw,
             ),
+            zarr_format=zarr_format,
         )
     assert sorted(store.rglob("*")) == before

@@ -43,9 +43,6 @@ from aind_exaspim_data_transformation_spark.zarrio import (  # noqa: E402
     multitile,
     pipeline,
 )
-from aind_exaspim_data_transformation_spark.zarrio.v2 import (  # noqa: E402
-    convert_to_zarr_v2,
-)
 
 SYNTH = dict(
     chunk_shape=(64, 64, 64),
@@ -80,10 +77,11 @@ def _group_cap(nbytes: int):
         pipeline.CASCADE_MAX_GROUP_BYTES = saved
 
 
-def _convert(spark, src, out, **kw):
+def _convert(spark, src, out, zarr_format=3, **kw):
     return pipeline.convert_to_zarr(
         spark,
         ConvertJobSettings(input_source=src, output_location=out, **kw),
+        zarr_format=zarr_format,
     )
 
 
@@ -167,23 +165,31 @@ def _v2(spark, tmp: str, out: str) -> None:
     arr = rng.integers(0, 65535, size=(40, 50, 60), dtype=np.uint16)
     src = os.path.join(tmp, "v2_src")
     write_npy_pyramid(src, arr, n_levels=2)
-    convert_to_zarr_v2(
-        spark,
-        ConvertJobSettings(
-            input_source=src, output_location=out, chunk_shape=(16, 16, 16)
-        ),
-    )
+    _convert(spark, src, out, zarr_format=2, chunk_shape=(16, 16, 16))
 
 
 def _v2_quarantine(spark, tmp: str, out: str) -> None:
     path = os.path.join(tmp, "v2_corrupt.ims")
     _corrupt_ims_tile(path)
-    convert_to_zarr_v2(
-        spark,
-        ConvertJobSettings(
-            input_source=path, output_location=out, chunk_shape=(8, 8, 8),
-            on_corrupt="quarantine",
-        ),
+    _convert(
+        spark, path, out, zarr_format=2, chunk_shape=(8, 8, 8),
+        on_corrupt="quarantine",
+    )
+
+
+def _anisotropic_ims(spark, tmp: str, out: str) -> None:
+    """A 32x64x64 chunked (16^3) gzip Imaris pyramid whose level 1 keeps
+    Z and halves Y and X, with an anisotropic voxel, translated."""
+    rng = np.random.default_rng(13)
+    arr = rng.integers(0, 65535, size=(32, 64, 64), dtype=np.uint16)
+    path = os.path.join(tmp, "anisotropic.ims")
+    write_imaris_file(
+        path, [arr, arr[:, ::2, ::2]], voxel_size=(2.0, 0.5, 0.5),
+        chunks=(16, 16, 16), compression="gzip",
+    )
+    _convert(
+        spark, path, out, chunk_shape=(16, 16, 16),
+        shard_shape=(32, 32, 32),
     )
 
 
@@ -281,6 +287,7 @@ CASES = {
         200_000,
     ),
     "v2 quarantine corrupt ims": _v2_quarantine,
+    "translate anisotropic ims 2-level": _anisotropic_ims,
 }
 
 
