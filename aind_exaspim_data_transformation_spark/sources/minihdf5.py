@@ -48,6 +48,8 @@ import zlib
 
 import numpy as np
 
+from ..zarrio.format import grid_cells
+
 SIGNATURE = b"\x89HDF\r\n\x1a\n"
 UNDEF = 0xFFFFFFFFFFFFFFFF
 
@@ -529,24 +531,14 @@ class ChunkedDataset:
         if out.size == 0:
             return out
         index = self._chunk_index()
-        grids = [
-            range(b0 // c * c, b1, c)
-            for (b0, b1), c in zip(bounds, self._chunks)
-        ]
-        for corner in itertools.product(*grids):
-            entry = index.get(corner)
+        starts, stops = zip(*bounds)
+        for idx, inner, outer in grid_cells(starts, stops, self._chunks):
+            entry = index.get(
+                tuple(i * c for i, c in zip(idx, self._chunks))
+            )
             if entry is None:  # unallocated chunk -> fill (zeros)
                 continue
-            chunk = self._decode_chunk(*entry)
-            src = tuple(
-                slice(max(b0 - o, 0), min(b1 - o, c))
-                for o, c, (b0, b1) in zip(corner, self._chunks, bounds)
-            )
-            dst = tuple(
-                slice(max(o - b0, 0), max(o - b0, 0) + (s.stop - s.start))
-                for o, (b0, _), s in zip(corner, bounds, src)
-            )
-            out[dst] = chunk[src]
+            out[outer] = self._decode_chunk(*entry)[inner]
         return out
 
 

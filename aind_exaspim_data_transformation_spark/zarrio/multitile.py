@@ -9,9 +9,11 @@ which the driver writes before any task runs. The driver puts whole
 superchunk groups into Spark partitions itself (``assign_groups``,
 balanced by voxels — the deterministic host-side split of the
 reference's imaris_job.py:35-46, across every tile) and ``_run_pass``
-feeds each writer task its partition's rows, so no Spark job moves rows
-the driver already holds. ``pipeline.convert_to_zarr`` is the one-tile
-call. Zarr v2 is a layout choice of the one planner
+hands each writer task its partition's groups whole, so no Spark job
+moves rows the driver already holds and the writer never regroups
+them; it reads each group into one region (``pipeline._read_group``).
+``pipeline.convert_to_zarr`` is the one-tile call. Zarr v2 is a layout
+choice of the one planner
 (``plan_global_tasks(..., zarr_format=2)``): the same probe, metadata
 writes and task rows, one row per v2 chunk, and the same writer.
 
@@ -35,6 +37,7 @@ import heapq
 import logging
 import math
 import time
+from collections import namedtuple
 from collections.abc import Iterator
 
 import numpy as np
@@ -45,9 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsample_block
 from ..sources.tensor import open_source
-from .codecs import zstd_decompress
+from .codecs import zstd_compress, zstd_decompress
 from .format import (
     ShardSpec,
+    grid_cells,
     read_array_metadata,
     read_array_region,
     shard_grid,
@@ -64,10 +68,9 @@ from .pipeline import (
     _level_shapes,
     _level_specs,
     _put_shard,
+    _read_group,
     _row_slices,
-    _split_rows,
     cascade_group_multiple,
-    iter_coalesced_reads,
     stage_agg_exprs,
     stage_dict,
 )
@@ -90,6 +93,9 @@ TASK_SCHEMA = (
     "superchunk string"
 )
 TASK_COLS = [f.split()[0] for f in TASK_SCHEMA.split(", ")]
+#: A task row with named fields, as the writer reads it; the plan and
+#: its broadcast keep plain tuples.
+Task = namedtuple("Task", TASK_COLS)
 
 #: The one writer-row schema. 'stats' rows are per-shard write records
 #: (``error`` set on a quarantined shard, which was not written); 'part'
@@ -217,20 +223,25 @@ def _cascade_parts(
     pass (`pipeline.cascade_group_multiple`), so ANY shard shape
     cascades exactly — per-window reduce results are independent of
     the block extent they are computed in, so group-level and
-    shard-level reduces are byte-identical where both apply."""
+    shard-level reduces are byte-identical where both apply. Each
+    piece's voxels are zstd-1 compressed for the shuffle, cutting the
+    pandas->Arrow->UnsafeRow->shuffle copy chain to compressed size
+    (in-flight data only; stored shard bytes are untouched)."""
     factor, mode, depth = cascade
     out = []
     red = region
     for lvl_to in range(row.level + 1, row.level + depth):
         red = downsample_block(red, factor, mode)
         origin = tuple(o // f for o, f in zip(origin, factor))
+        end = tuple(o + n for o, n in zip(origin, red.shape))
         cs = specs[row.store, lvl_to].shard_shape[2:]
-        for part in _split_rows(red, origin, lvl_to, cs):
-            # part = (level, iz, iy, ix, oz, oy, ox, sz, sy, sx, payload)
-            out.append(
-                ("part", None, row.store, *part[:4], *(None,) * 4,
-                 *part[4:])
-            )
+        for idx, inner, outer in grid_cells(origin, end, cs):
+            piece = red[outer]
+            out.append((
+                "part", None, row.store, lvl_to, *idx, *(None,) * 4,
+                *(s.start for s in inner), *piece.shape,
+                zstd_compress(piece.tobytes(), 1),
+            ))
     return out
 
 
@@ -309,33 +320,34 @@ def _voxels(rows: list[tuple]) -> int:
     )
 
 
-def assign_groups(rows: list[tuple], n_parts: int) -> list[list[tuple]]:
-    """Put the TASK_SCHEMA ``rows`` into ``n_parts`` partitions, whole
-    superchunk groups at a time: largest group first, each onto the
-    least-loaded partition (lowest index on a tie), load counted in
-    voxels. So no group spans partitions, the same rows always give the
-    same assignment (a retried or speculative task gets the same rows),
-    and no partition carries more than the mean load plus the largest
-    group. With fewer groups than ``n_parts`` some partitions stay
-    empty."""
+def assign_groups(
+    rows: list[tuple], n_parts: int
+) -> list[list[list[tuple]]]:
+    """Put the TASK_SCHEMA ``rows`` into ``n_parts`` partitions, each a
+    list of whole superchunk groups (a group is a list of rows): largest
+    group first, each onto the least-loaded partition (lowest index on a
+    tie), load counted in voxels. So no group spans partitions, the same
+    rows always give the same assignment (a retried or speculative task
+    gets the same rows), and no partition carries more than the mean
+    load plus the largest group. With fewer groups than ``n_parts`` some
+    partitions stay empty."""
     groups: dict[str, list[tuple]] = {}
     for r in rows:
         groups.setdefault(r[12], []).append(r)
-    parts: list[list[tuple]] = [[] for _ in range(n_parts)]
+    parts: list[list[list[tuple]]] = [[] for _ in range(n_parts)]
     loads = [(0, p) for p in range(n_parts)]
     for grp in sorted(groups.values(), key=_voxels, reverse=True):
         load, p = heapq.heappop(loads)
-        parts[p] += grp
+        parts[p].append(grp)
         heapq.heappush(loads, (load + _voxels(grp), p))
     return parts
 
 
 class _PartitionFeed:
     """mapInPandas body over ``spark.range(n)``: the task holding id
-    ``p`` hands ``writer`` partition ``p``'s rows as one TASK_SCHEMA
-    frame (an empty partition yields nothing). The row lists arrive as a
-    broadcast, which a reused Python worker unpickles once, not once
-    per task."""
+    ``p`` hands ``writer`` partition ``p``'s superchunk groups (an empty
+    partition yields nothing). The groups arrive as a broadcast, which a
+    reused Python worker unpickles once, not once per task."""
 
     def __init__(self, parts, writer):
         self.parts = parts
@@ -346,11 +358,9 @@ class _PartitionFeed:
     ) -> Iterator[pd.DataFrame]:
         for ids in batches:
             for p in ids["id"]:
-                rows = self.parts.value[p]
-                if rows:
-                    yield from self.writer(
-                        iter([pd.DataFrame(rows, columns=TASK_COLS)])
-                    )
+                groups = self.parts.value[p]
+                if groups:
+                    yield from self.writer(groups)
 
 
 def plan_global_tasks(
@@ -495,27 +505,27 @@ def _test_straggler_hook() -> None:
 
 
 class _GlobalWriter:
-    """The one pyramid writer. Per superchunk group (the key embeds
-    tile_path and level, so groups never span tiles) it makes one
-    bounding-box read — of the source, or with ``from_store`` of the
-    pass's base level in the store — and writes every shard of a
-    source-read group with the level's spec from the store's zarr.json
-    (a v2 level's from its .zarray, each task row one chunk).
-    With ``cascade`` set to ``(factor, mode, depth)`` it emits the
-    group's reduced next ``depth - 1`` levels as 'part' rows
-    (``_cascade_parts``). A store-read group writes no shard (the pass
-    before wrote its level), so it emits parts only. It yields one
-    DataFrame per group, so a task never holds more than one group's
-    region and parts. Sources are cached per call.
+    """The one pyramid writer. It takes a partition's superchunk groups
+    (the key embeds tile_path and level, so groups never span tiles) and
+    reads each into one region with ``pipeline._read_group`` — from the
+    source, or with ``from_store`` from the pass's base level in the
+    store. A source-read group writes each row's shard out of that
+    region with the level's spec from the store's zarr.json (a v2
+    level's from its .zarray, each task row one chunk); a store-read
+    group writes no level-``base`` shard (the pass before wrote it).
+    With ``cascade`` set to ``(factor, mode, depth)`` it reduces the
+    region through the next ``depth - 1`` levels and emits them as
+    'part' rows (``_cascade_parts``). It yields one DataFrame per group,
+    so a task never holds more than one group's region and parts.
+    Sources are cached per call.
 
     With ``quarantine`` (settings.on_corrupt="quarantine"): a tile that
     fails to open, or a source read that fails, yields per-shard ERROR
     rows — a poison-pill tile cannot abort the other tiles'
     conversion. The open failure is cached per tile so a corrupt tile is
-    probed once per partition, not once per superchunk group. The
-    cascade then reduces the group's region built from the per-row
-    reads, each failed row as fill_value: the voxels a store read of the
-    withheld shard returns.
+    probed once per partition, not once per superchunk group. A failed
+    row holds fill_value in the group's region, so the cascade reduces
+    the voxels a store read of the withheld shard returns.
 
     A module-level CLASS (not a closure factory) so cloudpickle ships
     instances by class reference + state: workers re-import this module
@@ -532,13 +542,12 @@ class _GlobalWriter:
         self.cascade = cascade
         self.from_store = from_store
 
-    def __call__(
-        self, batches: Iterator[pd.DataFrame]
-    ) -> Iterator[pd.DataFrame]:
+    def __call__(self, groups: list[list[tuple]]) -> Iterator[pd.DataFrame]:
         _test_straggler_hook()
         quarantine, cascade = self.quarantine, self.cascade
         sources: dict[str, object] = {}
-        last_err: dict[str, str] = {}
+        # Failure message per failed row, and per tile for an open.
+        errors: dict = {}
         specs = _LevelSpecs()
 
         def store_read(row, z0, z1, y0, y1, x0, x1):
@@ -558,37 +567,26 @@ class _GlobalWriter:
                     if not quarantine:
                         raise
                     sources[row.tile_path] = None
-                    last_err[row.tile_path] = (
+                    errors[row.tile_path] = (
                         f"open: {type(exc).__name__}: {exc}"
                     )
-                    return None
             src = sources[row.tile_path]
             if src is None:  # cached open failure for this tile
+                errors[row] = errors[row.tile_path]
                 return None
             try:
                 return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
             except Exception as exc:  # noqa: BLE001 — quarantine
                 if not quarantine:
                     raise
-                last_err[row.tile_path] = (
-                    f"read: {type(exc).__name__}: {exc}"
-                )
+                errors[row] = f"read: {type(exc).__name__}: {exc}"
                 return None
 
-        # A group is read once only if all its rows are in hand, and a
-        # caller may hand one partition over as several frames — so
-        # materialize the partition's rows (coordinates only, tiny)
-        # before grouping. ``assign_groups`` puts whole superchunk
-        # groups into a partition, so a group never spans partitions.
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        tasks = pd.concat(pdfs, ignore_index=True)
+        read = store_read if self.from_store else source_read
         n_err: dict[str, int] = {}
-        for _, grp in tasks.groupby("superchunk", sort=False):
-            rows = list(grp.itertuples(index=False))
-            box = _group_bbox(rows)
-            if cascade is not None and box is None:
+        for group in groups:
+            rows = [Task._make(r) for r in group]
+            if cascade is not None and not _group_bbox(rows)[1]:
                 raise RuntimeError(
                     "fused cascade saw an incomplete superchunk "
                     f"group ({len(rows)} rows, key "
@@ -596,24 +594,13 @@ class _GlobalWriter:
                     "enumerate full groups, so this indicates a "
                     "partitioning bug"
                 )
-            if self.from_store:
-                region, items = store_read(rows[0], *box), ()
-            else:
-                region, items = iter_coalesced_reads(rows, source_read)
-            # After a quarantined group read the rows were read one by
-            # one: the cascade reduces their blocks, a failed row as
-            # fill_value.
-            fill_in = region is None and cascade is not None
-            if fill_in:
-                spec = specs[rows[0].store, rows[0].level]
-                region = np.full(
-                    tuple(b - a for a, b in zip(box[0::2], box[1::2])),
-                    spec.fill_value,
-                    dtype=spec.np_dtype,
-                )
+            spec = specs[rows[0].store, rows[0].level]
+            t0 = time.monotonic()
+            box, region, failed = _read_group(rows, read, spec)
+            read_sec = (time.monotonic() - t0) / len(rows)
             out = []
-            for row, block, read_sec in items:
-                if block is None:
+            for row in rows:
+                if row in failed:
                     # Message detail capped PER TILE (the final agg also
                     # groups by tile_path) so one fully-corrupt tile
                     # cannot blank another tile's locator samples; the
@@ -622,25 +609,24 @@ class _GlobalWriter:
                         n_err.get(row.tile_path, 0) + 1
                     )
                     msg = (
-                        last_err.get(row.tile_path, "read: unknown error")
+                        errors.get(row, "read: unknown error")
                         if n <= ERROR_SAMPLE_CAP
                         else ""
                     )
                     out.append(_stats_row(row, 0, 0, read_sec, msg))
-                    continue
-                if fill_in:
-                    region[_row_slices(row, box)] = block
-                t0 = time.monotonic()
-                nbytes = _put_shard(
-                    row.store, row.level, row.iz, row.iy, row.ix, block,
-                    specs[row.store, row.level],
-                )
-                out.append(
-                    _stats_row(
-                        row, block.nbytes, nbytes,
-                        read_sec + time.monotonic() - t0,
+                elif not self.from_store:
+                    block = region[_row_slices(row, box)]
+                    t0 = time.monotonic()
+                    nbytes = _put_shard(
+                        row.store, row.level, row.iz, row.iy, row.ix,
+                        block, spec,
                     )
-                )
+                    out.append(
+                        _stats_row(
+                            row, block.nbytes, nbytes,
+                            read_sec + time.monotonic() - t0,
+                        )
+                    )
             if cascade is not None:
                 out += _cascade_parts(
                     region, rows[0], box[0::2], cascade, specs
@@ -662,9 +648,10 @@ def _run_pass(
     stats, per tile without a cascade and per (tile, level) with one.
 
     The driver splits the rows into ``tasks_per_cpu`` partitions per
-    default-parallelism slot (``assign_groups``) with no Exchange in
-    front of the writer; the row lists ship as one broadcast, destroyed
-    once the action has run. A cascade's 'part' rows go through ONE
+    default-parallelism slot, whole superchunk groups each
+    (``assign_groups``), with no Exchange in front of the writer; the
+    groups ship as one broadcast of plain tuples, destroyed once the
+    action has run. A cascade's 'part' rows go through ONE
     shuffle to ``_make_global_assembler``, which writes the pass's
     deeper levels of every tile, so a pass's job count is fixed
     whatever the tile count or depth."""
@@ -753,6 +740,8 @@ def convert_tiles_to_zarr(
     for i, (base, depth) in enumerate(passes or [(0, 1)]):
         if i:
             tasks = _pass_rows(tiles, all_specs, base, depth, settings)
+        if not tasks:  # every tile quarantined, or an empty subset
+            continue
         cascade = (
             (settings.scale_factor, settings.downsample_mode, depth)
             if depth > 1
@@ -784,6 +773,11 @@ def convert_tiles_to_zarr(
         "bytes_read": sum(r["bytes_read"] for r in per_tile.values()),
         "bytes_written": sum(r["bytes_written"] for r in per_tile.values()),
         "tiles": per_tile,
+        # Each converted tile's level shapes (z, y, x), from the plan.
+        "shapes": {
+            path: [spec.shape[2:] for spec in specs.values()]
+            for path, specs in all_specs.items()
+        },
     }
     n_errors = sum(r["n_errors"] for r in per_tile.values())
     if quarantine or n_errors or quarantined_tiles:

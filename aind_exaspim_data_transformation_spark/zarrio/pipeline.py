@@ -1,7 +1,7 @@
 """Single-source conversion entry point and the shared conversion kernels.
 
 Every conversion runs in ``multitile``: one global shard-task plan,
-superchunk-coalesced source reads, and one pyramid kernel, the fused
+one read per superchunk group, and one pyramid kernel, the fused
 cascade (reference process_single_shard,
 compress/imaris_to_zarr.py:375-462, and the sequential pyramid,
 :677-799). When a window-aligned group of the full depth would exceed
@@ -11,13 +11,12 @@ one-tile call into that plan (Zarr v3, or v2 with ``zarr_format=2``),
 reshaped into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
-planner and writers share: the superchunk group bounding box and
-coalesced source reads (``_group_bbox``, ``iter_coalesced_reads``), the
-one pad, encode and write step every writer ends in, v3 shard or v2
-chunk (``_put_shard``), the cascade's group-alignment gate and partial
-routing (``cascade_group_multiple``, ``_split_rows``), per-level shapes,
-multiscales factors and v3 or v2 specs, and the stage-stats aggregation
-(``stage_agg_exprs``).
+planner and writers share: the one group read, from the source or the
+store, into the group's bounding-box region (``_read_group``), the one
+pad, encode and write step every writer ends in, v3 shard or v2 chunk
+(``_put_shard``), the cascade's group-alignment gate
+(``cascade_group_multiple``), per-level shapes, multiscales factors and
+v3 or v2 specs, and the stage-stats aggregation (``stage_agg_exprs``).
 
 Retry safety: shard writes are idempotent (same key, same bytes, atomic
 rename), so Spark task retries and speculative execution are harmless —
@@ -27,7 +26,6 @@ the property the reference relies on for SLURM re-runs.
 from __future__ import annotations
 
 import math
-import time
 
 import numpy as np
 
@@ -36,13 +34,10 @@ from pyspark.sql import functions as F
 
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsampled_shape
-from ..sources.tensor import open_source
-from .codecs import zstd_compress
 from .format import (
     ShardSpec,
     clamp_shard_and_chunk,
     encode_shard,
-    grid_cells,
     write_shard_file,
 )
 from .kvstore import kv_put
@@ -51,35 +46,6 @@ from .v2 import V2Spec, encode_v2_chunk, v2_chunk_path
 #: Cap on quarantined-shard detail rows carried to the driver: enough
 #: to locate the corrupt region(s); the full count is always exact.
 ERROR_SAMPLE_CAP = 20
-
-def _split_rows(
-    red: np.ndarray,
-    r0: tuple[int, int, int],
-    lvl_to: int,
-    child_shard: tuple[int, int, int],
-) -> list[tuple]:
-    """Split a reduced block (global origin ``r0`` at level ``lvl_to``)
-    across that level's shard grid. One tuple per overlapped target
-    shard: (level, iz, iy, ix, oz, oy, ox, sz, sy, sx, payload) —
-    offsets inside the target shard, piece shape, and the voxels
-    zstd-1 compressed for the shuffle, cutting the pandas->Arrow->
-    UnsafeRow->shuffle copy chain to compressed size (in-flight data
-    only; stored shard bytes are untouched)."""
-    r1 = tuple(a + s for a, s in zip(r0, red.shape))
-    rows = []
-    for idx, inner, outer in grid_cells(r0, r1, child_shard):
-        piece = red[outer]
-        rows.append(
-            (
-                lvl_to,
-                *idx,
-                *(s.start for s in inner),
-                *piece.shape,
-                zstd_compress(piece.tobytes(), 1),
-            )
-        )
-    return rows
-
 
 def _level_shapes(
     settings: ConvertJobSettings, meta
@@ -170,10 +136,10 @@ def _put_shard(
     return len(blob)
 
 
-def _group_bbox(rows) -> tuple[int, int, int, int, int, int] | None:
-    """``(z0, z1, y0, y1, x0, x1)`` bounding box of a superchunk group's
-    task rows, or None when the rows do not tile it exactly (checked as
-    volume equality)."""
+def _group_bbox(rows) -> tuple[tuple[int, int, int, int, int, int], bool]:
+    """``((z0, z1, y0, y1, x0, x1), tiled)``: the bounding box of a
+    superchunk group's task rows, and whether the rows tile it exactly
+    (checked as volume equality)."""
     box = (
         min(r.z0 for r in rows),
         max(r.z1 for r in rows),
@@ -186,7 +152,7 @@ def _group_bbox(rows) -> tuple[int, int, int, int, int, int] | None:
     rows_vol = sum(
         (r.z1 - r.z0) * (r.y1 - r.y0) * (r.x1 - r.x0) for r in rows
     )
-    return box if box_vol == rows_vol else None
+    return box, box_vol == rows_vol
 
 
 def _row_slices(r, box) -> tuple[slice, slice, slice]:
@@ -198,58 +164,58 @@ def _row_slices(r, box) -> tuple[slice, slice, slice]:
     )
 
 
-def iter_coalesced_reads(rows: list, read_fn):
-    """Superchunk read-once coalescing (reference S9, iter_superchunks at
-    utils/io_utils.py:153-303): issue ONE source read for a superchunk
-    group's bounding box and slice every shard block out of the in-memory
-    region — amortizing source I/O exactly as the reference's superchunk
-    loop does (its default superchunk is 2x the shard,
-    compress/imaris_to_zarr.py:1310-1314; ours is ``superchunk_multiple``
-    x the shard, same default).
+def _read_group(
+    rows: list, read_fn, spec: ShardSpec | V2Spec
+) -> tuple[tuple[int, int, int, int, int, int], np.ndarray, list]:
+    """Read one superchunk group into one region: superchunk read-once
+    coalescing (reference S9, iter_superchunks at
+    utils/io_utils.py:153-303), whose default superchunk is 2x the shard
+    (compress/imaris_to_zarr.py:1310-1314); ours is
+    ``superchunk_multiple`` x the shard, same default.
 
     ``rows`` are one group's task rows; ``read_fn(row, z0, z1, y0, y1,
-    x0, x1)`` performs the actual source read (the row identifies level /
-    tile for the caller). Returns ``(region, items)``: ``region`` is the
-    group's bounding-box array, or None when the rows were read one by
-    one, and ``items`` yields ``(row, block, read_seconds)`` with the
-    group's single read time amortized evenly over its rows.
+    x0, x1)`` reads the source or the store (the row names the level and
+    tile) and returns None for a quarantined read. Returns ``(box,
+    region, failed_rows)``: the group's bounding box, its voxels, and the
+    rows whose voxels could not be read, which hold ``spec``'s
+    fill_value in ``region`` (what a store read of a withheld shard
+    returns).
 
-    Coalescing only fires when the group's rows exactly tile their
-    bounding box (the analog of the reference's divisibility validation,
-    utils/io_utils.py:212-217 — here checked as volume equality, which
-    also keeps resume/subset runs correct: a partial group falls back to
-    per-row reads instead of over-reading). Memory is one group's
-    bounding box: ``superchunk_multiple * shard_shape`` (the reference's
-    superchunk bound) for a plain group; a cascade group, widened to stay
-    window-aligned (``cascade_group_multiple``), is bounded by
-    ``CASCADE_MAX_GROUP_BYTES``, or in a one-step pass by
+    When the rows tile their bounding box (the analog of the
+    reference's divisibility validation, utils/io_utils.py:212-217,
+    checked as volume equality) it is ONE ``read_fn`` call for the box.
+    Otherwise, or after that read failed, each row is read on its own
+    into a fill_value region: a partial group (a ``partition_to_process``
+    subset) reads no voxel outside its rows, and a quarantined group
+    read withholds only the shards whose own voxels are broken, not the
+    whole superchunk. A one-row group whose read failed is not read
+    again: that read was the row's own.
+
+    Memory is one group's bounding box, also for a partial group:
+    ``superchunk_multiple`` x the shard for a plain group; a cascade
+    group, widened to stay window-aligned (``cascade_group_multiple``),
+    is bounded by ``CASCADE_MAX_GROUP_BYTES``, or in a one-step pass by
     ``scale_factor`` times the superchunk per axis.
     """
-    box = _group_bbox(rows)
-    if box is not None:
-        t0 = time.monotonic()
-        region = read_fn(rows[0], *box)
-        per_row = (time.monotonic() - t0) / len(rows)
-        if region is not None:
-            return region, (
-                (r, region[_row_slices(r, box)], per_row) for r in rows
-            )
-        if len(rows) == 1:  # that read was the row's own read
-            return None, iter([(rows[0], None, per_row)])
-        # Quarantined group read (read_fn returned None, see
-        # multitile._GlobalWriter): the corruption may touch only part
-        # of the bounding box, so fall back to PER-ROW reads — only
-        # shards whose own voxels are broken quarantine, keeping the
-        # "every healthy byte converts" contract at shard granularity,
-        # not superchunk granularity.
-    return None, _read_rows(rows, read_fn)
-
-
-def _read_rows(rows: list, read_fn):
+    box, tiled = _group_bbox(rows)
+    region = read_fn(rows[0], *box) if tiled else None
+    if region is not None:
+        return box, region, []
+    region = np.full(
+        tuple(b - a for a, b in zip(box[0::2], box[1::2])),
+        spec.fill_value,
+        dtype=spec.np_dtype,
+    )
+    if len(rows) == 1:
+        return box, region, list(rows)
+    failed = []
     for r in rows:
-        t0 = time.monotonic()
         block = read_fn(r, r.z0, r.z1, r.y0, r.y1, r.x0, r.x1)
-        yield r, block, time.monotonic() - t0
+        if block is None:
+            failed.append(r)
+        else:
+            region[_row_slices(r, box)] = block
+    return box, region, failed
 
 
 #: Memory guard for the fused cascade's group read buffer: the group
@@ -348,19 +314,20 @@ def convert_to_zarr(
     # Imported here: multitile builds on this module's kernels.
     from .multitile import convert_tiles_to_zarr
 
-    # Driver-side probe. Unlike a multi-tile job, which skips an
-    # unopenable tile under on_corrupt="quarantine", a single-source
-    # conversion has nothing left to convert, so it raises here.
-    src = open_source(settings.input_source)
-    try:
-        shapes = _level_shapes(settings, src.meta)
-    finally:
-        src.close()
     store = settings.output_location
     mt = convert_tiles_to_zarr(
         spark, [(settings.input_source, store)], settings,
         zarr_format=zarr_format,
     )
+    # Unlike a multi-tile job, which skips a tile the planner quarantined,
+    # a single-source conversion has nothing left to convert.
+    reason = mt.get("quarantined_tiles", {}).get(settings.input_source)
+    if reason is not None:
+        raise RuntimeError(
+            f"{settings.input_source}: quarantined at the driver probe "
+            f"({reason})"
+        )
+    shapes = mt["shapes"][settings.input_source]
     stage0 = {
         k: v
         for k, v in mt["tiles"][settings.input_source].items()

@@ -1,6 +1,6 @@
 """Driver-partitioned conversion input: the driver puts whole superchunk
 groups into Spark partitions (``multitile.assign_groups``) and feeds each
-writer task its rows (``multitile._run_pass``), so no Spark job
+writer task its groups (``multitile._run_pass``), so no Spark job
 only moves rows the driver already holds."""
 
 import random
@@ -19,7 +19,6 @@ from aind_exaspim_data_transformation_spark.sources.tensor import (
     write_npy_pyramid,
 )
 from aind_exaspim_data_transformation_spark.zarrio.multitile import (
-    TASK_COLS,
     _PartitionFeed,
     _task_rows,
     _voxels,
@@ -53,14 +52,16 @@ def test_assignment_properties(seed, n_parts):
     assert len(parts) == n_parts
 
     # Every row exactly once.
-    flat = [r for p in parts for r in p]
+    flat = [r for p in parts for g in p for r in g]
     assert sorted(flat) == sorted(rows)
 
-    # No superchunk group split across partitions.
+    # Each group is one superchunk key, and no key is split across
+    # groups or partitions.
     home = {}
     for i, p in enumerate(parts):
-        for r in p:
-            assert home.setdefault(r[12], i) == i
+        for j, g in enumerate(p):
+            for r in g:
+                assert home.setdefault(r[12], (i, j)) == (i, j)
 
     # Same input, same assignment.
     assert assign_groups(list(rows), n_parts) == parts
@@ -69,7 +70,7 @@ def test_assignment_properties(seed, n_parts):
     groups = {}
     for r in rows:
         groups.setdefault(r[12], []).append(r)
-    loads = [_voxels(p) for p in parts]
+    loads = [sum(_voxels(g) for g in p) for p in parts]
     largest = max(_voxels(g) for g in groups.values())
     assert max(loads) <= sum(loads) / n_parts + largest
 
@@ -77,14 +78,14 @@ def test_assignment_properties(seed, n_parts):
 def test_fewer_groups_than_partitions_leaves_empty_ones():
     rows = _task_rows("t", "s", 0, (64, 64, 64), (32, 32, 32), (2, 2, 2))
     parts = assign_groups(rows, 4)  # one group of 8 rows
-    assert sorted(len(p) for p in parts) == [0, 0, 0, 8]
+    assert sorted(len(p) for p in parts) == [0, 0, 0, 1]
+    assert [len(g) for p in parts for g in p] == [8]
 
     calls = []
 
-    def writer(batches):
-        pdfs = list(batches)
-        calls.append(pdfs)
-        yield pd.DataFrame({"n": [sum(len(p) for p in pdfs)]})
+    def writer(groups):
+        calls.append(groups)
+        yield pd.DataFrame({"n": [sum(len(g) for g in groups)]})
 
     feed = _PartitionFeed(SimpleNamespace(value=parts), writer)
     for p, rows_p in enumerate(parts):
@@ -93,12 +94,11 @@ def test_fewer_groups_than_partitions_leaves_empty_ones():
             assert out == []
         else:
             assert out[0]["n"].tolist() == [8]
-    # The writer ran once, on the one non-empty partition, and got the
-    # TASK_SCHEMA frame of exactly its rows.
+    # The writer ran once, on the one non-empty partition, and got its
+    # one group of exactly its rows.
     assert len(calls) == 1
-    (pdf,) = calls[0]
-    assert list(pdf.columns) == TASK_COLS
-    assert sorted(pdf.itertuples(index=False, name=None)) == sorted(rows)
+    (group,) = calls[0]
+    assert sorted(group) == sorted(rows)
 
 
 def _settings(**kw):

@@ -13,6 +13,7 @@ from aind_exaspim_data_transformation_spark.operators.downsample import (
     downsample_block,
 )
 from aind_exaspim_data_transformation_spark.sources.tensor import (
+    NpyPyramidSource,
     SyntheticSource,
     open_source,
     write_npy_pyramid,
@@ -74,6 +75,37 @@ def test_translate_pyramid_roundtrip(spark, pyramid_src, tmp_path):
     assert ms["datasets"][1]["coordinateTransformations"][0]["scale"] == [
         1.0, 1.0, 2.0, 0.748 * 2, 0.748 * 2,
     ]
+
+
+def test_single_tile_conversion_opens_its_source_once(
+    spark, pyramid_src, tmp_path, monkeypatch
+):
+    """The planner's probe is the only driver-side open of a one-tile
+    conversion; the result's level shapes come from its plan. Counted
+    on the source class, so an open through any module's
+    ``open_source`` shows."""
+    src_path, level0 = pyramid_src
+    opened = []
+    init = NpyPyramidSource.__init__
+
+    def counting_init(self, path):
+        opened.append(path)
+        init(self, path)
+
+    monkeypatch.setattr(NpyPyramidSource, "__init__", counting_init)
+    result = convert_to_zarr(
+        spark,
+        ConvertJobSettings(
+            input_source=src_path,
+            output_location=str(tmp_path / "out.zarr"),
+            chunk_shape=(16, 16, 16),
+            shard_shape=(32, 32, 32),
+            translate_pyramid=True,
+        ),
+    )
+    # Writer tasks open the source in their own Python workers.
+    assert opened == [src_path]
+    assert result["shapes"] == [(64, 80, 96), (32, 40, 48), (16, 20, 24)]
 
 
 def test_compute_pyramid_matches_kernel(spark, tmp_path):

@@ -101,6 +101,26 @@ def test_strict_mode_fails_on_corrupt_tile(spark, tmp_path):
         )
 
 
+def test_single_source_quarantined_at_probe_raises(spark, tmp_path):
+    """A multi-tile job skips an unopenable tile; a single-source
+    conversion has nothing left to convert, so it raises, naming the
+    tile and the planner's quarantine message, before any Spark job."""
+    garbage = tmp_path / "garbage.ims"
+    garbage.write_bytes(b"not an hdf5 file at all" * 40)
+    store = tmp_path / "out.zarr"
+    sc = spark.sparkContext
+    sc.setJobGroup("quarantined-source", "quarantined-source")
+    try:
+        with pytest.raises(RuntimeError, match=r"garbage\.ims.*\(open: "):
+            convert_to_zarr(
+                spark, _settings(garbage, store, on_corrupt="quarantine")
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("quarantined-source") == []
+    assert not store.exists()
+
+
 def test_quarantine_converts_every_healthy_shard(spark, tmp_path):
     tile = tmp_path / "tile.ims"
     arr = _make_tile(tile)

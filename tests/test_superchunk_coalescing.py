@@ -1,7 +1,7 @@
 """S9 superchunk read-once coalescing: one source read per superchunk
 group, shards sliced from the in-memory region (reference
 iter_superchunks, utils/io_utils.py:153-303). Counted with an
-instrumented source driving the real writer UDFs directly."""
+instrumented source driving the real writer directly."""
 
 import numpy as np
 import pandas as pd
@@ -12,14 +12,16 @@ from aind_exaspim_data_transformation_spark.sources.tensor import (
     NpyPyramidSource,
     write_npy_pyramid,
 )
-from aind_exaspim_data_transformation_spark.zarrio import multitile, pipeline
+from aind_exaspim_data_transformation_spark.zarrio import multitile
 from aind_exaspim_data_transformation_spark.zarrio.format import (
     read_array_region,
 )
+from aind_exaspim_data_transformation_spark.zarrio.multitile import Task
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     _level_specs,
+    _read_group,
+    _row_slices,
     convert_to_zarr,
-    iter_coalesced_reads,
 )
 
 
@@ -46,41 +48,42 @@ def _settings(src, store, shard=(16, 16, 16), sm=(2, 2, 2)):
     )
 
 
-def _global_tasks(spark, settings):
-    """The tile's multitile task rows (creating its store) and level-0
-    spec, rows ordered so each superchunk group is contiguous."""
-    tasks, specs, _ = multitile.build_global_tasks(
-        spark, [(settings.input_source, settings.output_location)], settings
+def _global_groups(settings):
+    """The tile's superchunk groups of multitile task rows (creating its
+    store), as one writer task gets them, and its level-0 spec."""
+    rows, specs, _, _ = multitile.plan_global_tasks(
+        [(settings.input_source, settings.output_location)], settings
     )
-    pdf = (
-        tasks.toPandas()
-        .sort_values(["superchunk", "iz", "iy", "ix"])
-        .reset_index(drop=True)
-    )
-    return pdf, specs[settings.input_source][0]
+    (groups,) = multitile.assign_groups(rows, 1)
+    return groups, specs[settings.input_source][0]
+
+
+def _tasks(*bounds):
+    """Task rows of tile "t", store "s", level 0, one superchunk group,
+    for ``(iz, iy, ix, z0, z1, y0, y1, x0, x1)`` bounds."""
+    return [Task("t", "s", 0, *b, "t,0,0,0,0") for b in bounds]
 
 
 @pytest.fixture()
 def counted(tmp_path, monkeypatch):
-    """(array, CountingSource, store) with pipeline/multitile open_source
+    """(array, CountingSource, store) with multitile's open_source
     patched to hand back the instrumented instance."""
     rng = np.random.default_rng(7)
     arr = rng.integers(0, 65535, size=(64, 64, 64), dtype=np.uint16)
     src_path = str(tmp_path / "tile")
     write_npy_pyramid(src_path, arr, n_levels=1)
     src = CountingSource(src_path)
-    monkeypatch.setattr(pipeline, "open_source", lambda p: src)
     monkeypatch.setattr(multitile, "open_source", lambda p: src)
     return arr, src, str(tmp_path / "out.zarr"), src_path
 
 
-def test_one_read_per_superchunk(spark, counted):
+def test_one_read_per_superchunk(counted):
     arr, src, store, src_path = counted
-    pdf, spec0 = _global_tasks(spark, _settings(src_path, store))
-    assert len(pdf) == 64  # (64/16)^3 shards
+    groups, spec0 = _global_groups(_settings(src_path, store))
+    assert sum(map(len, groups)) == 64  # (64/16)^3 shards
 
     writer = multitile._GlobalWriter()
-    stats = pd.concat(list(writer(iter([pdf]))))
+    stats = pd.concat(list(writer(groups)))
 
     # 64 shards in 8 superchunks of 2x2x2 shards -> exactly 8 source
     # reads, each a full 32^3 superchunk bounding box.
@@ -98,28 +101,7 @@ def test_one_read_per_superchunk(spark, counted):
     np.testing.assert_array_equal(got, arr)
 
 
-def test_group_split_across_batches_is_read_once(spark, counted):
-    """mapInPandas may hand one partition over as several Arrow batches;
-    a superchunk group split between two of them is still read once."""
-    arr, src, store, src_path = counted
-    pdf, spec0 = _global_tasks(spark, _settings(src_path, store))
-    assert len(pdf) == 64
-
-    # Rows [:4] are half of the first 2x2x2-shard group.
-    batches = [pdf.iloc[:4], pdf.iloc[4:]]
-    stats = pd.concat(list(multitile._GlobalWriter()(iter(batches))))
-
-    assert len(stats) == 64
-    assert len(src.reads) == 8
-    got = read_array_region(
-        store, 0,
-        (slice(0, 1), slice(0, 1), slice(0, 64), slice(0, 64), slice(0, 64)),
-        spec0,
-    )[0, 0]
-    np.testing.assert_array_equal(got, arr)
-
-
-def test_edge_clamped_superchunks_still_coalesce(spark, tmp_path):
+def test_edge_clamped_superchunks_still_coalesce(tmp_path):
     """Non-divisible shape: clamped edge groups still tile their bounding
     box exactly, so every multi-shard group coalesces to one read."""
     rng = np.random.default_rng(13)
@@ -131,9 +113,9 @@ def test_edge_clamped_superchunks_still_coalesce(spark, tmp_path):
 
     store = str(tmp_path / "edge.zarr")
     with mock.patch.object(multitile, "open_source", lambda p: src):
-        pdf, spec0 = _global_tasks(spark, _settings(src_path, store))
-        assert len(pdf) == 27  # ceil-div grid 3x3x3
-        list(multitile._GlobalWriter()(iter([pdf])))
+        groups, spec0 = _global_groups(_settings(src_path, store))
+        assert sum(map(len, groups)) == 27  # ceil-div grid 3x3x3
+        list(multitile._GlobalWriter()(groups))
 
     # grid 3x3x3 with multiple 2 -> 2x2x2 = 8 superchunk groups
     assert len(src.reads) == 8
@@ -152,47 +134,74 @@ def test_partial_group_falls_back_to_per_row_reads(counted):
     settings = _settings(src_path, store)
     specs = _level_specs(settings, [arr.shape], "uint16")
 
-    rows = pd.DataFrame(
-        [
-            # two shards of the same superchunk, diagonal -> bbox 32^3
-            # but rows cover only 2*16^3: volume check must reject.
-            dict(level=0, iz=0, iy=0, ix=0, z0=0, z1=16, y0=0, y1=16,
-                 x0=0, x1=16, superchunk="0,0,0,0"),
-            dict(level=0, iz=1, iy=1, ix=1, z0=16, z1=32, y0=16, y1=32,
-                 x0=16, x1=32, superchunk="0,0,0,0"),
-        ]
+    # two shards of the same superchunk, diagonal -> bbox 32^3 but rows
+    # cover only 2*16^3: volume check must reject.
+    rows = _tasks(
+        (0, 0, 0, 0, 16, 0, 16, 0, 16),
+        (1, 1, 1, 16, 32, 16, 32, 16, 32),
     )
-    region, items = iter_coalesced_reads(
-        list(rows.itertuples(index=False)),
+    box, region, failed = _read_group(
+        rows,
         lambda r, z0, z1, y0, y1, x0, x1: src.read_block(
             r.level, z0, z1, y0, y1, x0, x1
         ),
+        specs[0],
     )
-    out = list(items)
-    assert region is None
-    assert len(out) == 2
+    assert failed == []
+    assert region.shape == (32, 32, 32)
     assert len(src.reads) == 2  # per-row, no 32^3 over-read
-    for (r, block, _sec) in out:
+    for r in rows:
         np.testing.assert_array_equal(
-            block, arr[r.z0 : r.z1, r.y0 : r.y1, r.x0 : r.x1]
+            region[_row_slices(r, box)],
+            arr[r.z0 : r.z1, r.y0 : r.y1, r.x0 : r.x1],
         )
+    # Outside the rows the region holds fill_value.
+    assert not region[16:, :16, :].any()
+
+
+def test_failed_group_read_falls_back_to_rows(counted):
+    """A quarantined group read is retried row by row, and only the rows
+    whose own reads fail come back failed, as fill_value; a one-row
+    group's failed read was that row's own read, so it is not
+    repeated."""
+    arr, src, store, src_path = counted
+    spec = _level_specs(_settings(src_path, store), [arr.shape], "uint16")[0]
+    calls = []
+
+    def read(r, z0, z1, y0, y1, x0, x1):
+        calls.append((z0, z1, y0, y1, x0, x1))
+        if (z1 - z0) > 16 or r.iz == 1:  # the group read and row iz=1
+            return None
+        return src.read_block(r.level, z0, z1, y0, y1, x0, x1)
+
+    rows = _tasks(
+        (0, 0, 0, 0, 16, 0, 16, 0, 16),
+        (1, 0, 0, 16, 32, 0, 16, 0, 16),
+    )
+    box, region, failed = _read_group(rows, read, spec)
+    assert box == (0, 32, 0, 16, 0, 16)
+    assert calls == [box, (0, 16, 0, 16, 0, 16), (16, 32, 0, 16, 0, 16)]
+    assert failed == [rows[1]]
+    np.testing.assert_array_equal(region[:16], arr[:16, :16, :16])
+    assert (region[16:] == spec.fill_value).all()
+
+    calls.clear()
+    box, region, failed = _read_group(rows[1:], read, spec)
+    assert calls == [box] and failed == rows[1:]
+    assert (region == spec.fill_value).all()
 
 
 def test_fused_writer_rejects_incomplete_group():
     """The fused cascade reduces a whole group's bounding box, so a group
     whose rows do not tile it must raise rather than cascade fill voxels
     into the deeper levels."""
-    rows = pd.DataFrame(
-        [
-            dict(level=0, iz=0, iy=0, ix=0, z0=0, z1=16, y0=0, y1=16,
-                 x0=0, x1=16, superchunk="t,0,0,0,0"),
-            dict(level=0, iz=1, iy=1, ix=1, z0=16, z1=32, y0=16, y1=32,
-                 x0=16, x1=32, superchunk="t,0,0,0,0"),
-        ]
+    rows = _tasks(
+        (0, 0, 0, 0, 16, 0, 16, 0, 16),
+        (1, 1, 1, 16, 32, 16, 32, 16, 32),
     )
     writer = multitile._GlobalWriter(cascade=((2, 2, 2), "mean", 2))
     with pytest.raises(RuntimeError, match="incomplete superchunk"):
-        list(writer(iter([rows])))
+        list(writer([rows]))
 
 
 def test_global_writer_coalesces(spark, counted):

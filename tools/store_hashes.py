@@ -207,6 +207,23 @@ def _ims(tmp: str) -> str:
     return path
 
 
+def _ims_subsets(spark, tmp, out):
+    """"translate ims" as two ``partition_to_process`` subsets into one
+    output. Its 9 superchunk groups of 2 shards sit 9 rows apart in the
+    sorted task list, so every group is split between the subsets and
+    each subset writes partial groups (three subsets would keep every
+    group whole)."""
+    settings = ConvertJobSettings(
+        input_source=_ims(tmp), output_location=out,
+        chunk_shape=(32, 32, 32), shard_shape=(64, 64, 64),
+    )
+    for p in range(2):
+        multitile.convert_tiles_to_zarr(
+            spark, [(settings.input_source, out)], settings,
+            partition_to_process=p, num_partitions=2,
+        )
+
+
 def _ims_cascade(spark, tmp, out):
     _convert(
         spark, _ims(tmp), out, chunk_shape=(32, 32, 32),
@@ -263,6 +280,7 @@ CASES = {
         spark, _ims(tmp), out, chunk_shape=(32, 32, 32),
         shard_shape=(64, 64, 64),
     ),
+    "translate ims 2 partition subsets": _ims_subsets,
     "cascade ims 3-level": _ims_cascade,
     "run_job partition_mode=file": lambda spark, tmp, out: _run_job(
         spark, tmp, out, partition_mode="file"
