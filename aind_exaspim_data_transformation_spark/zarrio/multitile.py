@@ -1,21 +1,21 @@
-"""Multi-tile conversion: one GLOBAL shard-task plan across all tiles
-(the reference's partition_mode='shard', imaris_job.py:535-647; its
-'file' mode is the same plan over one tile, so there is only this one).
+"""Multi-tile conversion: one GLOBAL plan of superchunk groups across
+all tiles (the reference's partition_mode='shard',
+imaris_job.py:535-647; its 'file' mode is the same plan over one tile,
+so there is only this one).
 
-Every task row names its write (source path, store, level, slice bounds,
-superchunk key); the level's layout (shapes, dtype, codec) lives only in
+A pass's plan is one ``Grid`` of superchunk groups per converting
+(tile, level); the level's layout (shapes, dtype, codec) lives only in
 the store's own zarr.json — or, for a Zarr v2 store, its ``.zarray`` —
-which the driver writes before any task runs. The driver puts whole
-superchunk groups into Spark partitions itself (``assign_groups``,
-balanced by voxels — the deterministic host-side split of the
-reference's imaris_job.py:35-46, across every tile) and ``_run_pass``
-hands each writer task its partition's groups whole, so no Spark job
-moves rows the driver already holds and the writer never regroups
-them; it reads each group into one region (``pipeline._read_group``).
-``pipeline.convert_to_zarr`` is the one-tile call. Zarr v2 is a layout
-choice of the one planner
+which the driver writes before any task runs. The driver cuts the one
+group order into voxel-balanced ranges (``group_offsets`` and ``cut``:
+the deterministic host-side split of the reference's
+imaris_job.py:35-46, across every tile), and each writer task expands
+only its own range (``iter_groups``) and reads each group into one
+region (``pipeline._read_group``), so no shard list is built and no
+Spark job moves data the driver holds. ``pipeline.convert_to_zarr`` is
+the one-tile call. Zarr v2 is a layout choice of the one planner
 (``plan_global_tasks(..., zarr_format=2)``): the same probe, metadata
-writes and task rows, one row per v2 chunk, and the same writer.
+writes and groups, of v2 chunks, and the same writer.
 
 A computed pyramid has one kernel, the fused cascade: the source writer
 reduces each superchunk group recursively and ships per-level partials
@@ -27,18 +27,18 @@ the store and cascades the next levels. One-step passes are the
 reference's sequential level-by-level pyramid
 (compress/imaris_to_zarr.py:677-799) as a special case.
 
-At 100 TB: ~45k coordinate rows per 6 TB tile, ~1M rows per dataset —
-trivially plannable; payloads never enter the DataFrame.
+At 100 TB: ~1M shards in ~500k groups per dataset, and a pass ships a
+few kB of plan; payloads never enter the DataFrame.
 """
 
 from __future__ import annotations
 
-import heapq
 import logging
 import math
 import time
 from collections import namedtuple
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -63,13 +63,11 @@ from . import pipeline
 from .metadata import multiscales_metadata
 from .pipeline import (
     ERROR_SAMPLE_CAP,
-    _group_bbox,
     _level_factors,
     _level_shapes,
     _level_specs,
     _put_shard,
     _read_group,
-    _row_slices,
     cascade_group_multiple,
     stage_agg_exprs,
     stage_dict,
@@ -81,21 +79,22 @@ from .v2 import (
     write_v2_group,
 )
 
-#: One row per shard (or v2 chunk) read, for every stage: the
-#: source-read stage (level 0, or every level when translating, v2
-#: included) and the base level of each later cascade pass. Rows are
-#: store-routed, so ONE Spark action covers a stage across EVERY tile;
-#: rows sharing a ``superchunk`` key always run in one task.
+#: One converting (tile, level) of a pass's plan: its ``dims`` (z, y,
+#: x), its ``block`` (the shard, or a v2 level's chunk) and its
+#: ``group`` extent, ``key_m`` x ``block``, in voxels. Its superchunk
+#: groups are the cells of ``format.shard_grid(dims, group)``; a plan's
+#: group order is its grids in list order, each row-major.
+Grid = namedtuple("Grid", "tile_path store level dims block group")
+
+#: One row per shard (or v2 chunk) of a plan, as ``build_global_tasks``
+#: lists it for perfbench's traced replay; rows sharing a ``superchunk``
+#: key are one group. The writers take the group plan, not these rows.
 TASK_SCHEMA = (
     "tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
     "z0 int, z1 int, y0 int, y1 int, x0 int, x1 int, "
     "superchunk string"
 )
-TASK_COLS = [f.split()[0] for f in TASK_SCHEMA.split(", ")]
-#: A task row with named fields, as the writer reads it; the plan and
-#: its broadcast keep plain tuples.
-Task = namedtuple("Task", TASK_COLS)
 
 #: The one writer-row schema. 'stats' rows are per-shard write records
 #: (``error`` set on a quarantined shard, which was not written); 'part'
@@ -110,12 +109,14 @@ WRITER_SCHEMA = (
 WRITER_COLS = [f.split()[0] for f in WRITER_SCHEMA.split(", ")]
 
 
-def _stats_row(row, nread, nwritten, elapsed, error=None) -> tuple:
-    """The WRITER_SCHEMA 'stats' row of task or part ``row``'s shard
-    (the part columns null)."""
+def _stats_row(
+    tile_path, store, level, idx, nread, nwritten, elapsed, error=None
+) -> tuple:
+    """The WRITER_SCHEMA 'stats' row of shard ``idx`` of (``store``,
+    ``level``), read for ``tile_path`` (the part columns null)."""
     return (
-        "stats", row.tile_path, row.store, row.level, row.iz, row.iy,
-        row.ix, nread, nwritten, elapsed, error, *(None,) * 7,
+        "stats", tile_path, store, level, *idx,
+        nread, nwritten, elapsed, error, *(None,) * 7,
     )
 
 
@@ -179,43 +180,98 @@ def pyramid_passes(
     return passes
 
 
-def _pass_rows(
+def _grid(src_path: str, store: str, lvl: int, spec, key_m) -> Grid:
+    """Level ``lvl`` of one tile as a plan entry: groups of ``key_m``
+    blocks per axis over ``spec``'s shard (or v2 chunk) grid."""
+    block = spec.shard_shape[2:]
+    group = tuple(m * b for m, b in zip(key_m, block))
+    return Grid(src_path, store, lvl, spec.shape[2:], block, group)
+
+
+def _pass_grids(
     tiles: list[tuple[str, str]],
     all_specs: dict[str, dict[int, ShardSpec]],
     base: int,
     depth: int,
     settings: ConvertJobSettings,
-) -> list[tuple]:
-    """Every converting tile's level-``base`` TASK_SCHEMA rows for a
-    pass of ``depth`` levels, grouped window-aligned through the pass
+) -> list[Grid]:
+    """Every converting tile's level-``base`` grid for a pass of
+    ``depth`` levels, grouped window-aligned through the pass
     (``_pass_multiple`` without the cap: ``pyramid_passes`` checked it,
     and a one-step pass runs whatever its group size)."""
-    rows: list[tuple] = []
+    grids: list[Grid] = []
     for src_path, store in tiles:
         specs = all_specs.get(src_path)
         if specs is None:  # quarantined at the driver probe
             continue
-        spec = specs[base]
         key_m = (
-            _pass_multiple(spec, base, depth, settings, math.inf)
+            _pass_multiple(specs[base], base, depth, settings, math.inf)
             or settings.superchunk_multiple
         )
-        rows += _task_rows(
-            src_path, store, base, spec.shape[2:], spec.shard_shape[2:],
-            key_m,
+        grids.append(_grid(src_path, store, base, specs[base], key_m))
+    return grids
+
+
+def group_offsets(grids: list[Grid]) -> np.ndarray:
+    """The voxel offset of every group of ``grids`` in the plan's order,
+    then the total: one cumsum over the groups' voxel counts, each the
+    product of its extents clipped to the level's dims. No group is
+    built."""
+    sizes = [np.zeros(1, dtype=np.int64)]
+    for g in grids:
+        ez, ey, ex = (
+            np.minimum(n, d - np.arange(0, d, n, dtype=np.int64))
+            for d, n in zip(g.dims, g.group)
         )
-    return rows
+        sizes.append((ez[:, None, None] * ey[:, None] * ex).ravel())
+    return np.cumsum(np.concatenate(sizes))
+
+
+def cut(offsets: np.ndarray, lo: int, hi: int, n: int) -> list[int]:
+    """Cut groups ``[lo, hi)`` of a plan (``offsets`` from
+    ``group_offsets``) into ``n`` contiguous ranges: the group whose
+    first voxel sits at offset ``s`` of the range's ``T`` voxels goes to
+    range ``s * n // T``. Returns the ``n + 1`` group indices where the
+    ranges start, ``hi`` last. So no group spans ranges, the same plan
+    always gives the same cut (a retried or speculative task gets the
+    same groups), and no range carries more than ``T / n`` plus its
+    largest group. With fewer groups than ``n`` some ranges are empty."""
+    base = int(offsets[lo])
+    span = int(offsets[hi]) - base
+    firsts = np.searchsorted(
+        offsets[lo:hi], [base + -(-p * span // n) for p in range(n)]
+    )
+    return [lo + int(i) for i in firsts] + [hi]
+
+
+def iter_groups(
+    grids: list[Grid], lo: int, hi: int
+) -> Iterator[tuple[str, str, int, tuple[int, ...]]]:
+    """Groups ``[lo, hi)`` of the plan's order, each as ``(tile_path,
+    store, level, (z0, z1, y0, y1, x0, x1))``, computed from their index:
+    nothing before ``lo`` is enumerated."""
+    first = 0
+    for g in grids:
+        nz, ny, nx = (-(-d // n) for d, n in zip(g.dims, g.group))
+        for k in range(max(lo - first, 0), min(hi - first, nz * ny * nx)):
+            gz, rest = divmod(k, ny * nx)
+            box: list[int] = []
+            for i, d, n in zip((gz, *divmod(rest, nx)), g.dims, g.group):
+                box += (i * n, min((i + 1) * n, d))
+            yield g.tile_path, g.store, g.level, tuple(box)
+        first += nz * ny * nx
 
 
 def _cascade_parts(
     region: np.ndarray,
-    row,
+    store: str,
+    level: int,
     origin: tuple[int, int, int],
     cascade: tuple[tuple[int, int, int], str, int],
     specs: _LevelSpecs,
 ) -> list[tuple]:
     """The fused cascade step of one group: reduce its ``region`` (at
-    ``row``'s store and level, global origin ``origin``) recursively
+    ``store`` and ``level``, global origin ``origin``) recursively
     through the pass's next ``depth - 1`` levels and emit 'part' rows
     routed to each level's shards. Reducing at group (not shard)
     granularity is what lifts the shard-alignment precondition: the
@@ -230,15 +286,15 @@ def _cascade_parts(
     factor, mode, depth = cascade
     out = []
     red = region
-    for lvl_to in range(row.level + 1, row.level + depth):
+    for lvl_to in range(level + 1, level + depth):
         red = downsample_block(red, factor, mode)
         origin = tuple(o // f for o, f in zip(origin, factor))
         end = tuple(o + n for o, n in zip(origin, red.shape))
-        cs = specs[row.store, lvl_to].shard_shape[2:]
+        cs = specs[store, lvl_to].shard_shape[2:]
         for idx, inner, outer in grid_cells(origin, end, cs):
             piece = red[outer]
             out.append((
-                "part", None, row.store, lvl_to, *idx, *(None,) * 4,
+                "part", None, store, lvl_to, *idx, *(None,) * 4,
                 *(s.start for s in inner), *piece.shape,
                 zstd_compress(piece.tobytes(), 1),
             ))
@@ -282,75 +338,28 @@ def _make_global_assembler():
             nread += size
         nbytes = _put_shard(store, lvl, iz, iy, ix, block, spec)
         return pd.DataFrame(
-            [_stats_row(first, nread, nbytes, time.monotonic() - t0)],
+            [
+                _stats_row(
+                    first.tile_path, store, lvl, (iz, iy, ix), nread, nbytes,
+                    time.monotonic() - t0,
+                )
+            ],
             columns=WRITER_COLS,
         )
 
     return assemble
 
 
-def _task_rows(
-    src_path: str,
-    store: str,
-    lvl: int,
-    shape: tuple[int, int, int],
-    block: tuple[int, int, int],
-    key_m: tuple[int, int, int],
-) -> list[tuple]:
-    """One tile's level-``lvl`` TASK_SCHEMA rows, one per ``block`` (a
-    shard, or a v2 chunk) of ``format.shard_grid`` over ``shape``; the
-    superchunk key groups ``key_m`` blocks per axis."""
-    return [
-        (
-            src_path,
-            store,
-            lvl,
-            *cell,
-            f"{src_path},{lvl},{cell[0] // key_m[0]},"
-            f"{cell[1] // key_m[1]},{cell[2] // key_m[2]}",
-        )
-        for cell in shard_grid(shape, block)
-    ]
-
-
-def _voxels(rows: list[tuple]) -> int:
-    """Voxels the TASK_SCHEMA ``rows`` write: the work they stand for."""
-    return sum(
-        (r[7] - r[6]) * (r[9] - r[8]) * (r[11] - r[10]) for r in rows
-    )
-
-
-def assign_groups(
-    rows: list[tuple], n_parts: int
-) -> list[list[list[tuple]]]:
-    """Put the TASK_SCHEMA ``rows`` into ``n_parts`` partitions, each a
-    list of whole superchunk groups (a group is a list of rows): largest
-    group first, each onto the least-loaded partition (lowest index on a
-    tie), load counted in voxels. So no group spans partitions, the same
-    rows always give the same assignment (a retried or speculative task
-    gets the same rows), and no partition carries more than the mean
-    load plus the largest group. With fewer groups than ``n_parts`` some
-    partitions stay empty."""
-    groups: dict[str, list[tuple]] = {}
-    for r in rows:
-        groups.setdefault(r[12], []).append(r)
-    parts: list[list[list[tuple]]] = [[] for _ in range(n_parts)]
-    loads = [(0, p) for p in range(n_parts)]
-    for grp in sorted(groups.values(), key=_voxels, reverse=True):
-        load, p = heapq.heappop(loads)
-        parts[p].append(grp)
-        heapq.heappush(loads, (load + _voxels(grp), p))
-    return parts
-
-
 class _PartitionFeed:
     """mapInPandas body over ``spark.range(n)``: the task holding id
-    ``p`` hands ``writer`` partition ``p``'s superchunk groups (an empty
-    partition yields nothing). The groups arrive as a broadcast, which a
-    reused Python worker unpickles once, not once per task."""
+    ``p`` hands ``writer`` groups ``bounds[p]:bounds[p + 1]`` of the
+    plan's ``grids`` (an empty range yields nothing). The plan is one
+    grid per (tile, level) and one index per partition, a few kB, so it
+    ships inside this object."""
 
-    def __init__(self, parts, writer):
-        self.parts = parts
+    def __init__(self, grids: list[Grid], bounds: list[int], writer):
+        self.grids = grids
+        self.bounds = bounds
         self.writer = writer
 
     def __call__(
@@ -358,9 +367,9 @@ class _PartitionFeed:
     ) -> Iterator[pd.DataFrame]:
         for ids in batches:
             for p in ids["id"]:
-                groups = self.parts.value[p]
-                if groups:
-                    yield from self.writer(groups)
+                lo, hi = self.bounds[p], self.bounds[p + 1]
+                if lo < hi:
+                    yield from self.writer(iter_groups(self.grids, lo, hi))
 
 
 def plan_global_tasks(
@@ -368,16 +377,17 @@ def plan_global_tasks(
     settings: ConvertJobSettings,
     zarr_format: int = 3,
 ) -> tuple[
-    list[tuple],
+    list[Grid],
     dict[str, dict[int, ShardSpec | V2Spec]],
     dict[str, str],
     list[tuple[int, int]],
 ]:
     """Probe every tile driver-side, create its stores (Zarr v3, or v2
-    with ``zarr_format=2``), and list the global source-read task rows:
-    every level in translate mode, level 0 in compute mode (whose deeper
-    levels the cascade passes derive).
-    Returns (TASK_SCHEMA rows, specs per tile, quarantined tiles,
+    with ``zarr_format=2``), and plan the global source-read pass, one
+    ``Grid`` per converting (tile, level): every level in translate
+    mode, level 0 in compute mode (whose deeper levels the cascade
+    passes derive).
+    Returns (grids, specs per tile, quarantined tiles,
     ``pyramid_passes``). The third map is empty unless
     on_corrupt="quarantine" skipped tiles whose open OR metadata probe
     failed driver-side; the passes are empty when translating. A v2
@@ -401,7 +411,7 @@ def plan_global_tasks(
             # The whole metadata probe sits inside the quarantine
             # boundary: a tile can open (intact superblock) yet raise on
             # shape/dtype/extent attributes — either way there is no
-            # task grid to build, so the tile is skipped, not the job.
+            # group grid to build, so the tile is skipped, not the job.
             src = open_source(src_path)
             shapes = _level_shapes(settings, src.meta)
             specs = _level_specs(settings, shapes, src.meta.dtype, zarr_format)
@@ -443,24 +453,22 @@ def plan_global_tasks(
         for lvl, spec in all_specs[src_path].items():
             write_array(store, lvl, spec)
         write_group(store, attrs)
-    rows: list[tuple] = []
-    passes: list[tuple[int, int]] = []
     if settings.translate_pyramid:
-        for src_path, store in tiles:
-            for lvl, spec in all_specs.get(src_path, {}).items():
-                rows += _task_rows(
-                    src_path, store, lvl, spec.shape[2:],
-                    spec.shard_shape[2:], settings.superchunk_multiple,
-                )
-    else:
-        # Compute-pyramid tiles group by the first pass's window-aligned
-        # cascade grid (identical to the plain superchunk grid for
-        # factor-divisible shards), so the cascade's group-level reduce
-        # stays exact for any shard shape.
-        passes = pyramid_passes(all_specs, settings)
-        depth = passes[0][1] if passes else 1
-        rows = _pass_rows(tiles, all_specs, 0, depth, settings)
-    return rows, all_specs, quarantined, passes
+        grids = [
+            _grid(src_path, store, lvl, spec, settings.superchunk_multiple)
+            for src_path, store in tiles
+            for lvl, spec in all_specs.get(src_path, {}).items()
+        ]
+        return grids, all_specs, quarantined, []
+
+    # Compute-pyramid tiles group by the first pass's window-aligned
+    # cascade grid (identical to the plain superchunk grid for
+    # factor-divisible shards), so the cascade's group-level reduce
+    # stays exact for any shard shape.
+    passes = pyramid_passes(all_specs, settings)
+    depth = passes[0][1] if passes else 1
+    grids = _pass_grids(tiles, all_specs, 0, depth, settings)
+    return grids, all_specs, quarantined, passes
 
 
 def build_global_tasks(
@@ -468,9 +476,21 @@ def build_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
 ) -> tuple[DataFrame, dict[str, dict[int, ShardSpec]], dict[str, str]]:
-    """``plan_global_tasks``'s rows as a TASK_SCHEMA DataFrame, with its
-    specs and quarantined tiles."""
-    rows, all_specs, quarantined, _ = plan_global_tasks(tiles, settings)
+    """``plan_global_tasks``'s groups as a TASK_SCHEMA DataFrame, with its
+    specs and quarantined tiles: one row per shard (or v2 chunk),
+    row-major per (tile, level), keyed by its group. Only perfbench's
+    traced replay reads these rows; conversions run the group plan."""
+    grids, all_specs, quarantined, _ = plan_global_tasks(tiles, settings)
+    rows = [
+        (
+            g.tile_path, g.store, g.level, *cell,
+            f"{g.tile_path},{g.level},"
+            + ",".join(str(i * b // n) for i, b, n in
+                       zip(cell, g.block, g.group)),
+        )
+        for g in grids
+        for cell in shard_grid(g.dims, g.block)
+    ]
     return spark.createDataFrame(rows, TASK_SCHEMA), all_specs, quarantined
 
 
@@ -505,26 +525,26 @@ def _test_straggler_hook() -> None:
 
 
 class _GlobalWriter:
-    """The one pyramid writer. It takes a partition's superchunk groups
-    (the key embeds tile_path and level, so groups never span tiles) and
-    reads each into one region with ``pipeline._read_group`` — from the
-    source, or with ``from_store`` from the pass's base level in the
-    store. A source-read group writes each row's shard out of that
-    region with the level's spec from the store's zarr.json (a v2
-    level's from its .zarray, each task row one chunk); a store-read
-    group writes no level-``base`` shard (the pass before wrote it).
-    With ``cascade`` set to ``(factor, mode, depth)`` it reduces the
-    region through the next ``depth - 1`` levels and emits them as
-    'part' rows (``_cascade_parts``). It yields one DataFrame per group,
-    so a task never holds more than one group's region and parts.
-    Sources are cached per call.
+    """The one pyramid writer. It takes a partition's superchunk groups,
+    each ``(tile_path, store, level, box)``, and reads each into one
+    region with ``pipeline._read_group`` — from the source, or with
+    ``from_store`` from the pass's base level in the store. It walks the
+    group's shards with ``format.grid_cells`` over the box and the
+    level's block from the store's zarr.json (a v2 level's chunk from
+    its .zarray): a source-read group writes each shard's
+    ``region[outer]``; a store-read group writes no level-``base`` shard
+    (the pass before wrote it). With ``cascade`` set to ``(factor, mode,
+    depth)`` it reduces the region through the next ``depth - 1`` levels
+    and emits them as 'part' rows (``_cascade_parts``). It yields one
+    DataFrame per group, so a task never holds more than one group's
+    region and parts. Sources are cached per call.
 
     With ``quarantine`` (settings.on_corrupt="quarantine"): a tile that
     fails to open, or a source read that fails, yields per-shard ERROR
     rows — a poison-pill tile cannot abort the other tiles'
     conversion. The open failure is cached per tile so a corrupt tile is
     probed once per partition, not once per superchunk group. A failed
-    row holds fill_value in the group's region, so the cascade reduces
+    shard holds fill_value in the group's region, so the cascade reduces
     the voxels a store read of the withheld shard returns.
 
     A module-level CLASS (not a closure factory) so cloudpickle ships
@@ -542,147 +562,112 @@ class _GlobalWriter:
         self.cascade = cascade
         self.from_store = from_store
 
-    def __call__(self, groups: list[list[tuple]]) -> Iterator[pd.DataFrame]:
+    def __call__(self, groups: Iterable[tuple]) -> Iterator[pd.DataFrame]:
         _test_straggler_hook()
         quarantine, cascade = self.quarantine, self.cascade
+        # An open source per tile, or the message its open failed with.
         sources: dict[str, object] = {}
-        # Failure message per failed row, and per tile for an open.
-        errors: dict = {}
         specs = _LevelSpecs()
 
-        def store_read(row, z0, z1, y0, y1, x0, x1):
-            return read_array_region(
-                row.store,
-                row.level,
-                (slice(0, 1), slice(0, 1), slice(z0, z1), slice(y0, y1),
-                 slice(x0, x1)),
-                specs[row.store, row.level],
-            )[0, 0]
-
-        def source_read(row, z0, z1, y0, y1, x0, x1):
-            if row.tile_path not in sources:
+        def read(tile_path, store, level, z0, z1, y0, y1, x0, x1):
+            if self.from_store:
+                zyx = (slice(z0, z1), slice(y0, y1), slice(x0, x1))
+                return read_array_region(
+                    store, level, (slice(0, 1), slice(0, 1), *zyx),
+                    specs[store, level],
+                )[0, 0]
+            if tile_path not in sources:
                 try:
-                    sources[row.tile_path] = open_source(row.tile_path)
+                    sources[tile_path] = open_source(tile_path)
                 except Exception as exc:  # noqa: BLE001 — quarantine
                     if not quarantine:
                         raise
-                    sources[row.tile_path] = None
-                    errors[row.tile_path] = (
-                        f"open: {type(exc).__name__}: {exc}"
-                    )
-            src = sources[row.tile_path]
-            if src is None:  # cached open failure for this tile
-                errors[row] = errors[row.tile_path]
-                return None
+                    sources[tile_path] = f"open: {type(exc).__name__}: {exc}"
+            src = sources[tile_path]
+            if isinstance(src, str):  # cached open failure for this tile
+                return src
             try:
-                return src.read_block(row.level, z0, z1, y0, y1, x0, x1)
+                return src.read_block(level, z0, z1, y0, y1, x0, x1)
             except Exception as exc:  # noqa: BLE001 — quarantine
                 if not quarantine:
                     raise
-                errors[row] = f"read: {type(exc).__name__}: {exc}"
-                return None
+                return f"read: {type(exc).__name__}: {exc}"
 
-        read = store_read if self.from_store else source_read
         n_err: dict[str, int] = {}
-        for group in groups:
-            rows = [Task._make(r) for r in group]
-            if cascade is not None and not _group_bbox(rows)[1]:
-                raise RuntimeError(
-                    "fused cascade saw an incomplete superchunk "
-                    f"group ({len(rows)} rows, key "
-                    f"{rows[0].superchunk!r}) — compute-pyramid runs "
-                    "enumerate full groups, so this indicates a "
-                    "partitioning bug"
-                )
-            spec = specs[rows[0].store, rows[0].level]
+        for tile_path, store, level, box in groups:
+            spec = specs[store, level]
+            cells = list(
+                grid_cells(box[0::2], box[1::2], spec.shard_shape[2:])
+            )
             t0 = time.monotonic()
-            box, region, failed = _read_group(rows, read, spec)
-            read_sec = (time.monotonic() - t0) / len(rows)
+            region, failed = _read_group(
+                box, cells, partial(read, tile_path, store, level), spec
+            )
+            read_sec = (time.monotonic() - t0) / len(cells)
             out = []
-            for row in rows:
-                if row in failed:
+            for idx, _, outer in cells:
+                if idx in failed:
                     # Message detail capped PER TILE (the final agg also
                     # groups by tile_path) so one fully-corrupt tile
                     # cannot blank another tile's locator samples; the
                     # count stays exact regardless.
-                    n = n_err[row.tile_path] = (
-                        n_err.get(row.tile_path, 0) + 1
-                    )
-                    msg = (
-                        errors.get(row, "read: unknown error")
-                        if n <= ERROR_SAMPLE_CAP
-                        else ""
-                    )
-                    out.append(_stats_row(row, 0, 0, read_sec, msg))
-                elif not self.from_store:
-                    block = region[_row_slices(row, box)]
+                    n = n_err[tile_path] = n_err.get(tile_path, 0) + 1
+                    msg = failed[idx] if n <= ERROR_SAMPLE_CAP else ""
+                    stats = (0, 0, read_sec, msg)
+                elif self.from_store:
+                    continue
+                else:
+                    block = region[outer]
                     t0 = time.monotonic()
-                    nbytes = _put_shard(
-                        row.store, row.level, row.iz, row.iy, row.ix,
-                        block, spec,
+                    nbytes = _put_shard(store, level, *idx, block, spec)
+                    stats = (
+                        block.nbytes, nbytes,
+                        read_sec + time.monotonic() - t0,
                     )
-                    out.append(
-                        _stats_row(
-                            row, block.nbytes, nbytes,
-                            read_sec + time.monotonic() - t0,
-                        )
-                    )
+                out.append(_stats_row(tile_path, store, level, idx, *stats))
             if cascade is not None:
                 out += _cascade_parts(
-                    region, rows[0], box[0::2], cascade, specs
+                    region, store, level, box[0::2], cascade, specs
                 )
             yield pd.DataFrame(out, columns=WRITER_COLS)
         for s in sources.values():
-            if s is not None:
+            if not isinstance(s, str):
                 s.close()
 
 
-def _run_pass(
-    spark: SparkSession,
-    rows: list[tuple],
-    tasks_per_cpu: int,
-    writer: _GlobalWriter,
-) -> list:
-    """``writer`` over the TASK_SCHEMA ``rows`` as one Spark action —
-    every conversion action runs here; returns the collected stage
-    stats, per tile without a cascade and per (tile, level) with one.
+def _run_pass(spark: SparkSession, feed: _PartitionFeed) -> list:
+    """``feed`` — a pass's group plan, its cut and its writer — as one
+    Spark action: every conversion action runs here; returns the
+    collected stage stats, per tile without a cascade and per (tile,
+    level) with one.
 
-    The driver splits the rows into ``tasks_per_cpu`` partitions per
-    default-parallelism slot, whole superchunk groups each
-    (``assign_groups``), with no Exchange in front of the writer; the
-    groups ship as one broadcast of plain tuples, destroyed once the
-    action has run. A cascade's 'part' rows go through ONE
-    shuffle to ``_make_global_assembler``, which writes the pass's
-    deeper levels of every tile, so a pass's job count is fixed
-    whatever the tile count or depth."""
-    n_parts = max(spark.sparkContext.defaultParallelism * tasks_per_cpu, 1)
-    bc = spark.sparkContext.broadcast(assign_groups(rows, n_parts))
+    One Spark partition per range of the cut, with no Exchange in front
+    of the writer; the plan ships inside the feed. A cascade's 'part'
+    rows go through ONE shuffle to ``_make_global_assembler``, which
+    writes the pass's deeper levels of every tile, so a pass's job count
+    is fixed whatever the tile count or depth."""
+    n_parts = len(feed.bounds) - 1
+    written = spark.range(n_parts, numPartitions=n_parts).mapInPandas(
+        feed, WRITER_SCHEMA
+    )
+    if feed.writer.cascade is None:
+        return written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
+    assembled = written.groupBy(
+        "kind", "store", "level", "iz", "iy", "ix"
+    ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
+    # Assembly is CPU-bound per group while its shuffled bytes are
+    # tiny, so size-based AQE coalescing would serialize it.
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce_key, "true")
+    spark.conf.set(coalesce_key, "false")
     try:
-        written = spark.range(n_parts, numPartitions=n_parts).mapInPandas(
-            _PartitionFeed(bc, writer), WRITER_SCHEMA
+        return (
+            assembled.groupBy("tile_path", "level")
+            .agg(*stage_agg_exprs())
+            .collect()
         )
-        if writer.cascade is None:
-            return (
-                written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
-            )
-        assembled = written.groupBy(
-            "kind", "store", "level", "iz", "iy", "ix"
-        ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
-        # Assembly is CPU-bound per group while its shuffled bytes are
-        # tiny, so size-based AQE coalescing would serialize it.
-        coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-        prev = spark.conf.get(coalesce_key, "true")
-        spark.conf.set(coalesce_key, "false")
-        try:
-            return (
-                assembled.groupBy("tile_path", "level")
-                .agg(*stage_agg_exprs())
-                .collect()
-            )
-        finally:
-            spark.conf.set(coalesce_key, prev)
     finally:
-        bc.destroy()
+        spark.conf.set(coalesce_key, prev)
 
 
 def convert_tiles_to_zarr(
@@ -697,32 +682,43 @@ def convert_tiles_to_zarr(
     shard scheduling), into Zarr v3 stores or, with ``zarr_format=2``,
     v2 stores of the source's own levels.
 
-    ``partition_to_process``/``num_partitions`` subset the global task
-    list deterministically (row-major order, round-robin) — the Spark
-    twin of the reference's SLURM-array partition protocol
-    (imaris_job.py:35-46, env var per array task). Inside one cluster
-    Spark schedules everything itself; the subset exists for resumable /
-    partial / multi-cluster runs, and re-running any subset is safe
-    because shard writes are idempotent.
+    ``partition_to_process``/``num_partitions`` run subset ``p`` of
+    ``N`` (``0 <= p < N``, else ``ValueError``): the ``p``-th ``cut``
+    of the plan's group order into ``N`` voxel-balanced ranges of whole
+    superchunk groups — the Spark twin of the reference's SLURM-array
+    partition protocol (imaris_job.py:35-46, env var per array task).
+    Inside one cluster Spark schedules everything itself; the subset
+    exists for resumable / partial / multi-cluster runs, and re-running
+    any subset is safe because shard writes are idempotent. The N
+    subsets are disjoint and together write every shard. Subsets were
+    once a round-robin over sorted shard rows, so a given subset now
+    writes other shards: finish a subset run with the version that
+    started it.
 
     Subsetting composes with TRANSLATE mode only: a computed pyramid
-    needs every level-0 group whole (and a later pass reads its base
-    level back from the store), so a partial level 0 would silently
-    bake fill-value zeros into the pyramid.
+    needs every level-0 group (and a later pass reads its base level
+    back from the store), so a partial level 0 would silently bake
+    fill-value zeros into the pyramid.
     """
+    if partition_to_process is not None and not (
+        num_partitions and 0 <= partition_to_process < num_partitions
+    ):
+        raise ValueError(
+            f"partition_to_process={partition_to_process} is not in "
+            f"[0, num_partitions={num_partitions})"
+        )
     if partition_to_process is not None and not settings.translate_pyramid:
         raise ValueError(
             "partition subsetting requires translate_pyramid=True; run the "
             "compute-pyramid stage once after all partitions complete"
         )
-    tasks, all_specs, quarantined_tiles, passes = plan_global_tasks(
+    grids, all_specs, quarantined_tiles, passes = plan_global_tasks(
         tiles, settings, zarr_format
     )
     quarantine = settings.on_corrupt == "quarantine"
-    if partition_to_process is not None and num_partitions:
-        tasks = sorted(tasks, key=lambda r: (r[0], *r[2:6]))[
-            partition_to_process::num_partitions
-        ]
+    n_parts = max(
+        spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
+    )
     pass_levels = [[base, base + depth - 1] for base, depth in passes]
     if len(passes) > 1:
         logging.getLogger(__name__).warning(
@@ -739,18 +735,23 @@ def convert_tiles_to_zarr(
     # back from the store, written by the pass before it.
     for i, (base, depth) in enumerate(passes or [(0, 1)]):
         if i:
-            tasks = _pass_rows(tiles, all_specs, base, depth, settings)
-        if not tasks:  # every tile quarantined, or an empty subset
+            grids = _pass_grids(tiles, all_specs, base, depth, settings)
+        offsets = group_offsets(grids)
+        lo, hi = 0, len(offsets) - 1
+        if partition_to_process is not None:
+            lo, hi = cut(offsets, lo, hi, num_partitions)[
+                partition_to_process : partition_to_process + 2
+            ]
+        if lo == hi:  # every tile quarantined, or an empty subset
             continue
         cascade = (
             (settings.scale_factor, settings.downsample_mode, depth)
             if depth > 1
             else None
         )
-        stats += _run_pass(
-            spark, tasks, settings.tasks_per_cpu,
-            _GlobalWriter(quarantine, cascade, from_store=i > 0),
-        )
+        writer = _GlobalWriter(quarantine, cascade, from_store=i > 0)
+        bounds = cut(offsets, lo, hi, n_parts)
+        stats += _run_pass(spark, _PartitionFeed(grids, bounds, writer))
     # Per tile: the source-read stage (level 0, or every level when
     # translating); each computed level one stage across every tile.
     per_tile, stages = {}, []

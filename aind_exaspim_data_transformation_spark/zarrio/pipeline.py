@@ -1,7 +1,7 @@
 """Single-source conversion entry point and the shared conversion kernels.
 
-Every conversion runs in ``multitile``: one global shard-task plan,
-one read per superchunk group, and one pyramid kernel, the fused
+Every conversion runs in ``multitile``: one global plan of superchunk
+groups, one read per group, and one pyramid kernel, the fused
 cascade (reference process_single_shard,
 compress/imaris_to_zarr.py:375-462, and the sequential pyramid,
 :677-799). When a window-aligned group of the full depth would exceed
@@ -12,7 +12,7 @@ reshaped into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
 planner and writers share: the one group read, from the source or the
-store, into the group's bounding-box region (``_read_group``), the one
+store, into the group's region (``_read_group``), the one
 pad, encode and write step every writer ends in, v3 shard or v2 chunk
 (``_put_shard``), the cascade's group-alignment gate
 (``cascade_group_multiple``), per-level shapes, multiscales factors and
@@ -136,86 +136,61 @@ def _put_shard(
     return len(blob)
 
 
-def _group_bbox(rows) -> tuple[tuple[int, int, int, int, int, int], bool]:
-    """``((z0, z1, y0, y1, x0, x1), tiled)``: the bounding box of a
-    superchunk group's task rows, and whether the rows tile it exactly
-    (checked as volume equality)."""
-    box = (
-        min(r.z0 for r in rows),
-        max(r.z1 for r in rows),
-        min(r.y0 for r in rows),
-        max(r.y1 for r in rows),
-        min(r.x0 for r in rows),
-        max(r.x1 for r in rows),
-    )
-    box_vol = (box[1] - box[0]) * (box[3] - box[2]) * (box[5] - box[4])
-    rows_vol = sum(
-        (r.z1 - r.z0) * (r.y1 - r.y0) * (r.x1 - r.x0) for r in rows
-    )
-    return box, box_vol == rows_vol
-
-
-def _row_slices(r, box) -> tuple[slice, slice, slice]:
-    """Task row ``r``'s voxels inside its group's bounding-box region."""
-    return (
-        slice(r.z0 - box[0], r.z1 - box[0]),
-        slice(r.y0 - box[2], r.y1 - box[2]),
-        slice(r.x0 - box[4], r.x1 - box[4]),
-    )
-
-
 def _read_group(
-    rows: list, read_fn, spec: ShardSpec | V2Spec
-) -> tuple[tuple[int, int, int, int, int, int], np.ndarray, list]:
+    box: tuple[int, int, int, int, int, int],
+    cells: list,
+    read_fn,
+    spec: ShardSpec | V2Spec,
+) -> tuple[np.ndarray, dict]:
     """Read one superchunk group into one region: superchunk read-once
     coalescing (reference S9, iter_superchunks at
     utils/io_utils.py:153-303), whose default superchunk is 2x the shard
     (compress/imaris_to_zarr.py:1310-1314); ours is
     ``superchunk_multiple`` x the shard, same default.
 
-    ``rows`` are one group's task rows; ``read_fn(row, z0, z1, y0, y1,
-    x0, x1)`` reads the source or the store (the row names the level and
-    tile) and returns None for a quarantined read. Returns ``(box,
-    region, failed_rows)``: the group's bounding box, its voxels, and the
-    rows whose voxels could not be read, which hold ``spec``'s
+    ``box`` is the group's ``(z0, z1, y0, y1, x0, x1)`` and ``cells`` its
+    shards, ``format.grid_cells`` over the box; ``read_fn(z0, z1, y0, y1,
+    x0, x1)`` reads the source or the store and returns the voxels, or
+    for a quarantined read the failure's message. Returns ``(region,
+    failed)``: the group's voxels, and ``{shard index: message}`` for the
+    shards whose voxels could not be read, which hold ``spec``'s
     fill_value in ``region`` (what a store read of a withheld shard
     returns).
 
-    When the rows tile their bounding box (the analog of the
-    reference's divisibility validation, utils/io_utils.py:212-217,
-    checked as volume equality) it is ONE ``read_fn`` call for the box.
-    Otherwise, or after that read failed, each row is read on its own
-    into a fill_value region: a partial group (a ``partition_to_process``
-    subset) reads no voxel outside its rows, and a quarantined group
-    read withholds only the shards whose own voxels are broken, not the
-    whole superchunk. A one-row group whose read failed is not read
-    again: that read was the row's own.
+    The driver plans whole groups, so the shards tile the box and it is
+    ONE ``read_fn`` call. Only after that read failed is each shard read
+    on its own into a fill_value region, so a quarantined group withholds
+    only the shards whose own voxels are broken, not the whole
+    superchunk. A one-shard group whose read failed is not read again:
+    that read was the shard's own.
 
-    Memory is one group's bounding box, also for a partial group:
-    ``superchunk_multiple`` x the shard for a plain group; a cascade
-    group, widened to stay window-aligned (``cascade_group_multiple``),
-    is bounded by ``CASCADE_MAX_GROUP_BYTES``, or in a one-step pass by
+    Memory is one group's box: ``superchunk_multiple`` x the shard for a
+    plain group; a cascade group, widened to stay window-aligned
+    (``cascade_group_multiple``), is bounded by
+    ``CASCADE_MAX_GROUP_BYTES``, or in a one-step pass by
     ``scale_factor`` times the superchunk per axis.
     """
-    box, tiled = _group_bbox(rows)
-    region = read_fn(rows[0], *box) if tiled else None
-    if region is not None:
-        return box, region, []
+    got = read_fn(*box)
+    if not isinstance(got, str):
+        return got, {}
     region = np.full(
         tuple(b - a for a, b in zip(box[0::2], box[1::2])),
         spec.fill_value,
         dtype=spec.np_dtype,
     )
-    if len(rows) == 1:
-        return box, region, list(rows)
-    failed = []
-    for r in rows:
-        block = read_fn(r, r.z0, r.z1, r.y0, r.y1, r.x0, r.x1)
-        if block is None:
-            failed.append(r)
+    if len(cells) == 1:
+        return region, {cells[0][0]: got}
+    failed = {}
+    for idx, _, outer in cells:
+        block = read_fn(*(
+            v for o, s in zip(box[0::2], outer)
+            for v in (o + s.start, o + s.stop)
+        ))
+        if isinstance(block, str):
+            failed[idx] = block
         else:
-            region[_row_slices(r, box)] = block
-    return box, region, failed
+            region[outer] = block
+    return region, failed
 
 
 #: Memory guard for the fused cascade's group read buffer: the group

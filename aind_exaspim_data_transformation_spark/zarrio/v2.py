@@ -8,8 +8,8 @@ zarr_format=2)`` runs the one planner (``multitile.plan_global_tasks``),
 which builds a ``V2Spec`` per level and writes its ``.zarray``, and the
 one writer (``multitile._GlobalWriter``), which reads the layout back
 from ``.zarray`` (``read_v2_array_metadata``) as it reads a v3 level's
-from zarr.json. So v2 shares its probe, task rows, superchunk-coalesced
-source reads, ``on_corrupt="quarantine"`` and stage stats; a task row
+from zarr.json. So v2 shares its probe, group plan, superchunk-coalesced
+source reads, ``on_corrupt="quarantine"`` and stage stats; its block
 is one CHUNK (v2 has no shards).
 
 This module holds the layout only: ``V2Spec``, the ``.zarray`` /

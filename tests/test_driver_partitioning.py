@@ -1,8 +1,10 @@
-"""Driver-partitioned conversion input: the driver puts whole superchunk
-groups into Spark partitions (``multitile.assign_groups``) and feeds each
-writer task its groups (``multitile._run_pass``), so no Spark job
-only moves rows the driver already holds."""
+"""Driver-partitioned conversion input: the driver cuts one order of
+whole superchunk groups into voxel-balanced ranges
+(``multitile.group_offsets`` + ``multitile.cut``) and each writer task
+expands only its own range (``multitile.iter_groups``), so no Spark job
+only moves data the driver holds and the plan it ships is a few kB."""
 
+import pickle
 import random
 import uuid
 from types import SimpleNamespace
@@ -11,94 +13,167 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aind_exaspim_data_transformation_spark.config import ConvertJobSettings
 from aind_exaspim_data_transformation_spark.sources.tensor import (
+    SourceMeta,
     write_npy_pyramid,
 )
+from aind_exaspim_data_transformation_spark.zarrio import multitile
+from aind_exaspim_data_transformation_spark.zarrio.format import (
+    grid_cells,
+    shard_grid,
+)
 from aind_exaspim_data_transformation_spark.zarrio.multitile import (
+    Grid,
     _PartitionFeed,
-    _task_rows,
-    _voxels,
-    assign_groups,
     build_global_tasks,
     convert_tiles_to_zarr,
+    cut,
+    group_offsets,
+    iter_groups,
 )
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     convert_to_zarr,
 )
 
 
-def _plan(seed: int) -> list[tuple]:
-    """TASK_SCHEMA rows of a few random tiles: edge-clamped grids, mixed
-    superchunk multiples, so group sizes differ."""
+def _plan(seed: int) -> list[Grid]:
+    """Grids of a few random tiles: edge-clamped grids, mixed superchunk
+    multiples, so group sizes differ."""
     rng = random.Random(seed)
-    rows = []
+    grids = []
     for t in range(rng.randint(1, 4)):
         shape = tuple(rng.randint(1, 90) for _ in range(3))
         block = tuple(rng.randint(4, 32) for _ in range(3))
         key_m = tuple(rng.randint(1, 3) for _ in range(3))
-        rows += _task_rows(f"tile{t}", f"store{t}", 0, shape, block, key_m)
-    return rows
+        grids.append(
+            Grid(f"tile{t}", f"store{t}", 0, shape, block,
+                 tuple(m * b for m, b in zip(key_m, block)))
+        )
+    return grids
+
+
+def _shards(group, block) -> list[tuple]:
+    """A group's shards as ``(tile_path, level, iz, iy, ix, z0, z1, y0,
+    y1, x0, x1)``, the writer's ``grid_cells`` walk over its box."""
+    tile, _, level, box = group
+    return [
+        (tile, level, *idx,
+         *(v for o, s in zip(box[0::2], outer)
+           for v in (o + s.start, o + s.stop)))
+        for idx, _, outer in grid_cells(box[0::2], box[1::2], block)
+    ]
 
 
 @pytest.mark.parametrize("seed", range(20))
 @pytest.mark.parametrize("n_parts", [1, 3, 8, 64])
 def test_assignment_properties(seed, n_parts):
-    rows = _plan(seed)
-    parts = assign_groups(rows, n_parts)
-    assert len(parts) == n_parts
+    grids = _plan(seed)
+    block = {g.tile_path: g.block for g in grids}
+    key_m = {
+        g.tile_path: tuple(n // b for n, b in zip(g.group, g.block))
+        for g in grids
+    }
+    offsets = group_offsets(grids)
+    bounds = cut(offsets, 0, len(offsets) - 1, n_parts)
+    assert len(bounds) == n_parts + 1
+    parts = [
+        list(iter_groups(grids, bounds[p], bounds[p + 1]))
+        for p in range(n_parts)
+    ]
 
-    # Every row exactly once.
-    flat = [r for p in parts for g in p for r in g]
-    assert sorted(flat) == sorted(rows)
+    # Every shard exactly once.
+    flat = [s for p in parts for g in p for s in _shards(g, block[g[0]])]
+    assert sorted(flat) == sorted(
+        (g.tile_path, g.level, *cell)
+        for g in grids
+        for cell in shard_grid(g.dims, g.block)
+    )
 
     # Each group is one superchunk key, and no key is split across
     # groups or partitions.
     home = {}
     for i, p in enumerate(parts):
         for j, g in enumerate(p):
-            for r in g:
-                assert home.setdefault(r[12], (i, j)) == (i, j)
+            for s in _shards(g, block[g[0]]):
+                key = (s[0], *(c // m for c, m in zip(s[2:5], key_m[s[0]])))
+                assert home.setdefault(key, (i, j)) == (i, j)
 
-    # Same input, same assignment.
-    assert assign_groups(list(rows), n_parts) == parts
+    # Same input, same split.
+    assert cut(group_offsets(list(grids)), 0, len(offsets) - 1,
+               n_parts) == bounds
+
+    # The cumsum's group sizes are the expanded groups' voxels.
+    sizes = np.diff(offsets)
+    assert sizes.tolist() == [
+        sum((s[6] - s[5]) * (s[8] - s[7]) * (s[10] - s[9])
+            for s in _shards(g, block[g[0]]))
+        for p in parts
+        for g in p
+    ]
 
     # Max load <= mean load + largest group.
-    groups = {}
-    for r in rows:
-        groups.setdefault(r[12], []).append(r)
-    loads = [sum(_voxels(g) for g in p) for p in parts]
-    largest = max(_voxels(g) for g in groups.values())
-    assert max(loads) <= sum(loads) / n_parts + largest
+    loads = [
+        int(sizes[bounds[p]:bounds[p + 1]].sum()) for p in range(n_parts)
+    ]
+    assert sum(loads) == offsets[-1]
+    assert max(loads) <= sum(loads) / n_parts + sizes.max()
 
 
 def test_fewer_groups_than_partitions_leaves_empty_ones():
-    rows = _task_rows("t", "s", 0, (64, 64, 64), (32, 32, 32), (2, 2, 2))
-    parts = assign_groups(rows, 4)  # one group of 8 rows
-    assert sorted(len(p) for p in parts) == [0, 0, 0, 1]
-    assert [len(g) for p in parts for g in p] == [8]
+    grids = [Grid("t", "s", 0, (64, 64, 64), (32, 32, 32), (64, 64, 64))]
+    offsets = group_offsets(grids)
+    bounds = cut(offsets, 0, len(offsets) - 1, 4)  # one group of 8 shards
+    sizes = [hi - lo for lo, hi in zip(bounds, bounds[1:])]
+    assert sorted(sizes) == [0, 0, 0, 1]
 
     calls = []
 
     def writer(groups):
-        calls.append(groups)
-        yield pd.DataFrame({"n": [sum(len(g) for g in groups)]})
+        calls.append(list(groups))
+        yield pd.DataFrame({"n": [len(calls[-1])]})
 
-    feed = _PartitionFeed(SimpleNamespace(value=parts), writer)
-    for p, rows_p in enumerate(parts):
+    feed = _PartitionFeed(grids, bounds, writer)
+    for p, size in enumerate(sizes):
         out = list(feed(iter([pd.DataFrame({"id": [p]})])))
-        if not rows_p:
+        if not size:
             assert out == []
         else:
-            assert out[0]["n"].tolist() == [8]
+            assert out[0]["n"].tolist() == [1]
     # The writer ran once, on the one non-empty partition, and got its
-    # one group of exactly its rows.
+    # one group, whose shards are all the tile's shards.
     assert len(calls) == 1
     (group,) = calls[0]
-    assert sorted(group) == sorted(rows)
+    assert sorted(_shards(group, (32, 32, 32))) == sorted(
+        ("t", 0, *cell) for cell in shard_grid((64, 64, 64), (32, 32, 32))
+    )
+
+
+def _feeds(monkeypatch, tiles, settings, n_cpus=4, **kw) -> list:
+    """The ``_PartitionFeed`` of every pass ``convert_tiles_to_zarr``
+    would run, captured instead of run (no Spark action; the plan's
+    metadata is written)."""
+    feeds = []
+    monkeypatch.setattr(
+        multitile, "_run_pass",
+        lambda spark, feed: feeds.append(feed) or [],
+    )
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=n_cpus)
+    )
+    convert_tiles_to_zarr(spark, tiles, settings, **kw)
+    return feeds
+
+
+def _feed_groups(feed) -> list[list[tuple]]:
+    """Each Spark partition's groups of ``feed``."""
+    b = feed.bounds
+    return [
+        list(iter_groups(feed.grids, b[p], b[p + 1]))
+        for p in range(len(b) - 1)
+    ]
 
 
 def _settings(**kw):
@@ -125,26 +200,113 @@ def two_tiles(tmp_path_factory):
 
 
 @pytest.mark.parametrize("n", [1, 2, 3, 5])
-def test_partition_subset_matches_window_subset(spark, two_tiles, n):
-    """The driver-side subset (sort by tile_path, level, iz, iy, ix, then
-    every n-th row) picks the same rows as a row_number Window over the
-    same order would."""
+def test_partition_subset_matches_window_subset(
+    spark, monkeypatch, two_tiles, n
+):
+    """Subset ``p`` of ``n`` is the ``p``-th voxel-balanced range of whole
+    groups in the plan's order (tile, level, row-major): the groups whose
+    voxel prefix sum ``s`` gives ``s * n div T == p``, as a Window over
+    the same order computes it. So the subsets are disjoint, their union
+    is every shard, and each holds whole groups."""
     settings = _settings(translate_pyramid=True)
     tasks, _, _ = build_global_tasks(spark, two_tiles, settings)
-    w = Window.orderBy("tile_path", "level", "iz", "iy", "ix")
-    numbered = tasks.withColumn("__rn", F.row_number().over(w) - 1)
-    rows = [tuple(r) for r in tasks.collect()]
+    vox = (
+        (F.col("z1") - F.col("z0"))
+        * (F.col("y1") - F.col("y0"))
+        * (F.col("x1") - F.col("x0"))
+    )
+    groups = tasks.groupBy("superchunk").agg(
+        F.first("tile_path").alias("tile_path"),
+        F.first("level").alias("level"),
+        F.min("z0").alias("z0"),
+        F.min("y0").alias("y0"),
+        F.min("x0").alias("x0"),
+        F.sum(vox).alias("vox"),
+    )
+    total = groups.agg(F.sum("vox")).first()[0]
+    subset = groups.selectExpr(
+        "superchunk",
+        "(sum(vox) OVER (ORDER BY tile_path, level, z0, y0, x0) - vox)"
+        f" * {n} div {total} AS subset",
+    )
+    want: dict[int, set] = {}
+    key_of = {}
+    for r in tasks.join(subset, "superchunk").collect():
+        shard = (r.tile_path, r.level, r.iz, r.iy, r.ix)
+        want.setdefault(r.subset, set()).add(shard)
+        key_of[shard] = r.superchunk
+
+    got = {}
     for p in range(n):
-        want = {
-            tuple(r)
-            for r in numbered.where(F.col("__rn") % n == p)
-            .drop("__rn")
-            .collect()
-        }
-        got = set(
-            sorted(rows, key=lambda r: (r[0], *r[2:6]))[p::n]
+        feeds = _feeds(
+            monkeypatch, two_tiles, settings,
+            partition_to_process=p, num_partitions=n,
         )
-        assert got == want
+        got[p] = {
+            s[:5]
+            for feed in feeds
+            for part in _feed_groups(feed)
+            for g in part
+            for s in _shards(g, (16, 16, 16))
+        }
+        assert got[p] == want.get(p, set())
+    assert sum(map(len, got.values())) == len(key_of)
+    assert set().union(*got.values()) == set(key_of)
+    for p, shards in got.items():
+        for q in got:
+            if q != p:
+                assert not {key_of[s] for s in shards} & {
+                    key_of[s] for s in got[q]
+                }
+
+
+class _StubSource:
+    """A one-level uint16 source of ``shape``, as the driver probe sees
+    it."""
+
+    def __init__(self, shape):
+        self.meta = SourceMeta(
+            n_levels=1,
+            dtype="uint16",
+            shapes=[shape],
+            voxel_size=(1.0, 1.0, 1.0),
+            origin=(0.0, 0.0, 0.0),
+        )
+
+    def close(self):
+        pass
+
+
+def test_shipped_plan_is_per_tile_not_per_shard(monkeypatch, tmp_path):
+    """22 tiles of 36x35x36 shards of 512^3 — 997,920 shards in 498,960
+    groups at superchunk_multiple (2, 1, 1): the first pass's feed, as
+    it ships to the writer tasks, pickles to under 64 KiB, and its
+    ranges expand to every shard."""
+    shape = (36 * 512, 35 * 512, 36 * 512)
+    monkeypatch.setattr(
+        multitile, "open_source", lambda p: _StubSource(shape)
+    )
+    tiles = [
+        (f"/fake/tile{i}.ims", str(tmp_path / f"{i}.zarr"))
+        for i in range(22)
+    ]
+    settings = ConvertJobSettings(
+        input_source="unused",
+        output_location=str(tmp_path),
+        chunk_shape=(64, 64, 64),
+        shard_shape=(512, 512, 512),
+        superchunk_multiple=(2, 1, 1),
+        translate_pyramid=True,
+    )
+    (feed,) = _feeds(monkeypatch, tiles, settings, n_cpus=64)
+    assert len(pickle.dumps(feed)) < 64 * 1024
+    n_shards = 0
+    for part in _feed_groups(feed):
+        for _, _, _, box in part:
+            n_shards += sum(
+                1 for _ in grid_cells(box[0::2], box[1::2], (512,) * 3)
+            )
+    assert n_shards == 997_920
 
 
 def _jobs_of(spark, fn) -> int:

@@ -53,6 +53,32 @@ def test_partition_subsetting_rejects_compute_mode(spark, tmp_path):
         )
 
 
+@pytest.mark.parametrize(
+    "p, n",
+    [
+        (-1, 2),  # used to write only the last shard
+        (2, 2),  # used to write nothing, with no error
+        (0, None),  # used to convert everything
+    ],
+)
+def test_partition_subsetting_rejects_out_of_range_subset(
+    spark, tmp_path, p, n
+):
+    settings = ConvertJobSettings(
+        input_source="x",
+        output_location="y",
+        translate_pyramid=True,
+    )
+    with pytest.raises(ValueError, match="partition_to_process"):
+        convert_tiles_to_zarr(
+            spark,
+            [("src", str(tmp_path))],
+            settings,
+            partition_to_process=p,
+            num_partitions=n,
+        )
+
+
 def test_env_settings_parse_tuples(monkeypatch):
     monkeypatch.setenv("TRANSFORMATION_JOB_INPUT_SOURCE", "/in")
     monkeypatch.setenv("TRANSFORMATION_JOB_OUTPUT_LOCATION", "/out")

@@ -14,13 +14,12 @@ from aind_exaspim_data_transformation_spark.sources.tensor import (
 )
 from aind_exaspim_data_transformation_spark.zarrio import multitile
 from aind_exaspim_data_transformation_spark.zarrio.format import (
+    grid_cells,
     read_array_region,
 )
-from aind_exaspim_data_transformation_spark.zarrio.multitile import Task
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     _level_specs,
     _read_group,
-    _row_slices,
     convert_to_zarr,
 )
 
@@ -49,19 +48,23 @@ def _settings(src, store, shard=(16, 16, 16), sm=(2, 2, 2)):
 
 
 def _global_groups(settings):
-    """The tile's superchunk groups of multitile task rows (creating its
-    store), as one writer task gets them, and its level-0 spec."""
-    rows, specs, _, _ = multitile.plan_global_tasks(
+    """The tile's superchunk groups (creating its store), as one writer
+    task gets them, and its level-0 spec."""
+    grids, specs, _, _ = multitile.plan_global_tasks(
         [(settings.input_source, settings.output_location)], settings
     )
-    (groups,) = multitile.assign_groups(rows, 1)
+    n = len(multitile.group_offsets(grids)) - 1
+    groups = list(multitile.iter_groups(grids, 0, n))
     return groups, specs[settings.input_source][0]
 
 
-def _tasks(*bounds):
-    """Task rows of tile "t", store "s", level 0, one superchunk group,
-    for ``(iz, iy, ix, z0, z1, y0, y1, x0, x1)`` bounds."""
-    return [Task("t", "s", 0, *b, "t,0,0,0,0") for b in bounds]
+def _cells(box, block=(16, 16, 16)):
+    """The shards of the group ``box``, as the writer walks them."""
+    return list(grid_cells(box[0::2], box[1::2], block))
+
+
+def _n_shards(groups, spec):
+    return sum(len(_cells(g[3], spec.shard_shape[2:])) for g in groups)
 
 
 @pytest.fixture()
@@ -80,7 +83,7 @@ def counted(tmp_path, monkeypatch):
 def test_one_read_per_superchunk(counted):
     arr, src, store, src_path = counted
     groups, spec0 = _global_groups(_settings(src_path, store))
-    assert sum(map(len, groups)) == 64  # (64/16)^3 shards
+    assert _n_shards(groups, spec0) == 64  # (64/16)^3 shards
 
     writer = multitile._GlobalWriter()
     stats = pd.concat(list(writer(groups)))
@@ -114,7 +117,7 @@ def test_edge_clamped_superchunks_still_coalesce(tmp_path):
     store = str(tmp_path / "edge.zarr")
     with mock.patch.object(multitile, "open_source", lambda p: src):
         groups, spec0 = _global_groups(_settings(src_path, store))
-        assert sum(map(len, groups)) == 27  # ceil-div grid 3x3x3
+        assert _n_shards(groups, spec0) == 27  # ceil-div grid 3x3x3
         list(multitile._GlobalWriter()(groups))
 
     # grid 3x3x3 with multiple 2 -> 2x2x2 = 8 superchunk groups
@@ -127,81 +130,35 @@ def test_edge_clamped_superchunks_still_coalesce(tmp_path):
     np.testing.assert_array_equal(got, arr)
 
 
-def test_partial_group_falls_back_to_per_row_reads(counted):
-    """A subset run (resume protocol) whose group no longer tiles its
-    bbox must NOT over-read: falls back to one read per row."""
-    arr, src, store, src_path = counted
-    settings = _settings(src_path, store)
-    specs = _level_specs(settings, [arr.shape], "uint16")
-
-    # two shards of the same superchunk, diagonal -> bbox 32^3 but rows
-    # cover only 2*16^3: volume check must reject.
-    rows = _tasks(
-        (0, 0, 0, 0, 16, 0, 16, 0, 16),
-        (1, 1, 1, 16, 32, 16, 32, 16, 32),
-    )
-    box, region, failed = _read_group(
-        rows,
-        lambda r, z0, z1, y0, y1, x0, x1: src.read_block(
-            r.level, z0, z1, y0, y1, x0, x1
-        ),
-        specs[0],
-    )
-    assert failed == []
-    assert region.shape == (32, 32, 32)
-    assert len(src.reads) == 2  # per-row, no 32^3 over-read
-    for r in rows:
-        np.testing.assert_array_equal(
-            region[_row_slices(r, box)],
-            arr[r.z0 : r.z1, r.y0 : r.y1, r.x0 : r.x1],
-        )
-    # Outside the rows the region holds fill_value.
-    assert not region[16:, :16, :].any()
-
-
 def test_failed_group_read_falls_back_to_rows(counted):
-    """A quarantined group read is retried row by row, and only the rows
-    whose own reads fail come back failed, as fill_value; a one-row
-    group's failed read was that row's own read, so it is not
+    """A quarantined group read is retried shard by shard, and only the
+    shards whose own reads fail come back failed, as fill_value; a
+    one-shard group's failed read was that shard's own read, so it is not
     repeated."""
     arr, src, store, src_path = counted
     spec = _level_specs(_settings(src_path, store), [arr.shape], "uint16")[0]
     calls = []
 
-    def read(r, z0, z1, y0, y1, x0, x1):
+    def read(z0, z1, y0, y1, x0, x1):
         calls.append((z0, z1, y0, y1, x0, x1))
-        if (z1 - z0) > 16 or r.iz == 1:  # the group read and row iz=1
-            return None
-        return src.read_block(r.level, z0, z1, y0, y1, x0, x1)
+        if (z1 - z0) > 16 or z0 == 16:  # the group read and shard iz=1
+            return "read: OSError: broken"
+        return src.read_block(0, z0, z1, y0, y1, x0, x1)
 
-    rows = _tasks(
-        (0, 0, 0, 0, 16, 0, 16, 0, 16),
-        (1, 0, 0, 16, 32, 0, 16, 0, 16),
-    )
-    box, region, failed = _read_group(rows, read, spec)
-    assert box == (0, 32, 0, 16, 0, 16)
+    box = (0, 32, 0, 16, 0, 16)
+    cells = _cells(box)
+    region, failed = _read_group(box, cells, read, spec)
+    assert [idx for idx, _, _ in cells] == [(0, 0, 0), (1, 0, 0)]
     assert calls == [box, (0, 16, 0, 16, 0, 16), (16, 32, 0, 16, 0, 16)]
-    assert failed == [rows[1]]
+    assert failed == {(1, 0, 0): "read: OSError: broken"}
     np.testing.assert_array_equal(region[:16], arr[:16, :16, :16])
     assert (region[16:] == spec.fill_value).all()
 
     calls.clear()
-    box, region, failed = _read_group(rows[1:], read, spec)
-    assert calls == [box] and failed == rows[1:]
+    box = (16, 32, 0, 16, 0, 16)
+    region, failed = _read_group(box, _cells(box), read, spec)
+    assert calls == [box] and list(failed) == [(1, 0, 0)]
     assert (region == spec.fill_value).all()
-
-
-def test_fused_writer_rejects_incomplete_group():
-    """The fused cascade reduces a whole group's bounding box, so a group
-    whose rows do not tile it must raise rather than cascade fill voxels
-    into the deeper levels."""
-    rows = _tasks(
-        (0, 0, 0, 0, 16, 0, 16, 0, 16),
-        (1, 1, 1, 16, 32, 16, 32, 16, 32),
-    )
-    writer = multitile._GlobalWriter(cascade=((2, 2, 2), "mean", 2))
-    with pytest.raises(RuntimeError, match="incomplete superchunk"):
-        list(writer([rows]))
 
 
 def test_global_writer_coalesces(spark, counted):

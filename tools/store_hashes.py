@@ -120,8 +120,14 @@ def _job_dataset(root: str) -> None:
         )
 
 
-def _multitile(spark, tmp: str, out: str) -> None:
-    """Three edge-truncated npy tiles, one computed 3-level store each."""
+def _multitile(
+    spark, tmp: str, out: str, translate: bool = False, n_subsets: int = 0
+) -> None:
+    """Three edge-truncated npy tiles, one computed 3-level store each;
+    with ``translate``, one copied level each, in ``n_subsets``
+    ``partition_to_process`` subsets into one output when set. The
+    plan's 16 groups span the three tiles, so three voxel-balanced
+    subsets cut ranges that cross tile boundaries."""
     rng = np.random.default_rng(5)
     tiles = []
     for i, shape in enumerate([(20, 14, 10), (16, 16, 16), (9, 9, 9)]):
@@ -135,11 +141,16 @@ def _multitile(spark, tmp: str, out: str) -> None:
         output_location="ignored",
         chunk_shape=(8, 8, 8),
         shard_shape=(8, 8, 8),
-        translate_pyramid=False,
+        translate_pyramid=translate,
         downsample_levels=3,
         downsample_mode="mean",
     )
-    multitile.convert_tiles_to_zarr(spark, tiles, settings)
+    for p in range(n_subsets or 1):
+        multitile.convert_tiles_to_zarr(
+            spark, tiles, settings,
+            partition_to_process=p if n_subsets else None,
+            num_partitions=n_subsets or None,
+        )
 
 
 def _run_job(spark, tmp: str, out: str, **kw) -> None:
@@ -209,10 +220,8 @@ def _ims(tmp: str) -> str:
 
 def _ims_subsets(spark, tmp, out):
     """"translate ims" as two ``partition_to_process`` subsets into one
-    output. Its 9 superchunk groups of 2 shards sit 9 rows apart in the
-    sorted task list, so every group is split between the subsets and
-    each subset writes partial groups (three subsets would keep every
-    group whole)."""
+    output: each subset a voxel-balanced range of whole superchunk
+    groups, together every shard."""
     settings = ConvertJobSettings(
         input_source=_ims(tmp), output_location=out,
         chunk_shape=(32, 32, 32), shard_shape=(64, 64, 64),
@@ -288,6 +297,12 @@ CASES = {
     "run_job": lambda spark, tmp, out: _run_job(spark, tmp, out),
     "multitile cascade": _multitile,
     "multitile depth-1 passes": _capped(_multitile, 0),
+    "multitile translate": lambda spark, tmp, out: _multitile(
+        spark, tmp, out, translate=True
+    ),
+    "multitile translate 3 partition subsets": lambda spark, tmp, out: (
+        _multitile(spark, tmp, out, translate=True, n_subsets=3)
+    ),
     "v2 translate": _v2,
     "translate synth codec=none": lambda spark, tmp, out: _convert(
         spark, "synth://512,256,256,1", out,
