@@ -228,7 +228,7 @@ def _lsh_pairs_plan(
     so the interpreted (non-codegen) fold ran once per BUCKET-PROBE
     pair — sum of bucket^2, 484M evaluations at sf10 — and the
     non-codegen eval path is JVM-bimodal (109-669 s for identical
-    runs, SCALE_r08.json). Now the estimator is eight packed-long
+    runs, faaaf6a:SCALE_r08.json). Now the estimator is eight packed-long
     equality comparisons (pure whole-stage codegen, no arrays), runs
     once per DISTINCT pair (3.87M at sf10 uncapped — 125x fewer), and
     the band shuffle carries ~10x fewer bytes. The sig joins are two
@@ -341,7 +341,7 @@ def _lsh_pairs_plan(
     scale_infeasible_reason=(
         "uncapped contrast exhibit: sum-of-bucket^2 pair expansion "
         "spills unboundedly above sf10 (>73 GB scratch at sf30, "
-        "SCALE_r10.json sf30_infeasible); production path is "
+        "faaaf6a:SCALE_r10.json sf30_infeasible); production path is "
         "q_minhash_lsh_pairs_capped"
     ),
 )
@@ -655,7 +655,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it is referenced FOUR times (self-join sides a and b, and the two
     # size lookups via `sizes`), and without the cache the whole
     # scan -> explode -> distinct -> repartition -> window subtree ran
-    # four times (plans/r14/q_ngram_jaccard_pairs_before.txt operators
+    # four times (faaaf6a:plans/r14/q_ngram_jaccard_pairs_before.txt operators
     # 1-12/13-24/31-42/49-60). The self-join is also pinned to
     # sort-merge like the LSH rows: the planner saw a "small" estimated
     # side and BROADCAST the corpus-scale shingle relation — wrong at

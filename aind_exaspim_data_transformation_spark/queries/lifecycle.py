@@ -79,7 +79,7 @@ def managed_query(
 # reuse amortizes interpreter + import cost across tasks) the daemon's
 # forked workers NEVER retire — a worker that once decoded images or
 # ran the 32k-BPE encoder keeps its peak heap forever. Measured in r14
-# (OPTIMIZATION_r14.md "Not yet optimized"): after a heterogeneous
+# (faaaf6a:OPTIMIZATION_r14.md "Not yet optimized"): after a heterogeneous
 # pandas/Arrow churn the pool grows to ~95 processes / 14 GB RSS, and
 # spark.python.worker.idleTimeoutSeconds does not reap the daemon pool.
 # On a long-lived session that is an unbounded memory leak; it also
@@ -101,7 +101,7 @@ def managed_query(
 # fresh daemon on the next Python task, so the recycle is invisible to
 # callers beyond one daemon start (~100 ms). The ceiling is a conf/env
 # dial (SPARK_GRAFT_PYWORKER_POOL_CEILING_MB, default 10240), calibrated
-# on local[32] (r15 churn measurement, OPTIMIZATION_r15.md): the healthy
+# on local[32] (r15 churn run, faaaf6a:OPTIMIZATION_r15.md): the healthy
 # floor is ~4.4 GB (32 reused workers x ~140 MB of numpy/pandas
 # imports), a fully-engaged two-factory pool (pickle + Arrow worker
 # modules) measures ~6.9 GB, and the r14 pathological state was 14 GB /

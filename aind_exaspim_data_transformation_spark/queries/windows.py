@@ -140,7 +140,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each order, COUNT(*) of orders with o_totalprice in
     # [p - 1000.0, p + 1000.0] — was computed by a GLOBAL RANGE window:
     # Exchange SinglePartition + one window task at any scale
-    # (plans/r15/q_window_range_frame_before.txt), the last single-task
+    # (faaaf6a:plans/r15/q_window_range_frame_before.txt), the last single-task
     # query path in the registry. Rewritten as a domain-bounded
     # bucket-partitioned cumulative count:
     #

@@ -44,12 +44,10 @@ def open_h5(path: str):
 
 @dataclass
 class SourceMeta:
-    n_levels: int
     dtype: str
     shapes: list[tuple[int, int, int]]  # per-level metadata (true) shapes
     voxel_size: tuple[float, float, float] = (1.0, 1.0, 1.0)  # ZYX um
     origin: tuple[float, float, float] = (0.0, 0.0, 0.0)
-    unit: str = "um"
 
 
 def true_shapes_from_padded(
@@ -103,12 +101,10 @@ class NpyPyramidSource(TensorSource):
         with open(os.path.join(path, "meta.json")) as f:
             raw = json.load(f)
         self.meta = SourceMeta(
-            n_levels=raw["n_levels"],
             dtype=raw["dtype"],
             shapes=[tuple(s) for s in raw["shapes"]],
             voxel_size=tuple(raw.get("voxel_size", (1.0, 1.0, 1.0))),
             origin=tuple(raw.get("origin", (0.0, 0.0, 0.0))),
-            unit=raw.get("unit", "um"),
         )
         self._mm: dict[int, np.ndarray] = {}
 
@@ -146,12 +142,10 @@ def write_npy_pyramid(
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(
             {
-                "n_levels": n_levels,
                 "dtype": str(level0.dtype),
                 "shapes": shapes,
                 "voxel_size": list(voxel_size),
                 "origin": list(origin),
-                "unit": "um",
             },
             f,
         )
@@ -177,9 +171,7 @@ class SyntheticSource(TensorSource):
                 math.ceil(sy / 2),
                 math.ceil(sx / 2),
             )
-        self.meta = SourceMeta(
-            n_levels=n_levels, dtype="uint16", shapes=shapes
-        )
+        self.meta = SourceMeta(dtype="uint16", shapes=shapes)
 
     def read_block(self, level, z0, z1, y0, y1, x0, x1):
         # Broadcasting in uint32 (mod-2^16 arithmetic is exact in any
@@ -367,7 +359,6 @@ class Hdf5ImarisSource(TensorSource):
             [self._dataset(lvl).shape for lvl in range(n_levels)],
         )
         self.meta = SourceMeta(
-            n_levels=n_levels,
             dtype=str(self._dataset(0).dtype),
             shapes=shapes,
             voxel_size=voxel,

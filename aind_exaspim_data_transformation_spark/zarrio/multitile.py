@@ -652,22 +652,19 @@ def _run_pass(spark: SparkSession, feed: _PartitionFeed) -> list:
     )
     if feed.writer.cascade is None:
         return written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
-    assembled = written.groupBy(
-        "kind", "store", "level", "iz", "iy", "ix"
-    ).applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
     # Assembly is CPU-bound per group while its shuffled bytes are
-    # tiny, so size-based AQE coalescing would serialize it.
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
-    try:
-        return (
-            assembled.groupBy("tile_path", "level")
-            .agg(*stage_agg_exprs())
-            .collect()
-        )
-    finally:
-        spark.conf.set(coalesce_key, prev)
+    # tiny, so size-based AQE coalescing would serialize it; AQE keeps
+    # an explicit partition count, and the session's conf stays as is.
+    keys = ("kind", "store", "level", "iz", "iy", "ix")
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        written.repartition(n, *keys)
+        .groupBy(*keys)
+        .applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
+        .groupBy("tile_path", "level")
+        .agg(*stage_agg_exprs())
+        .collect()
+    )
 
 
 def convert_tiles_to_zarr(

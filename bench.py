@@ -8,7 +8,7 @@ Prints ONE JSON line:
 Trust-by-construction protocol (round-10 verdict, Next #1). Two rounds
 running, the single-JVM bench read as a phantom regression on
 byte-identical code: same-commit two-worktree controls spread +/-9% per
-JVM (AB_r09_control.json), the variance is CORRELATED across queries
+JVM (faaaf6a:AB_r09_control.json), the variance is CORRELATED across queries
 within a JVM, and the host CPU has a measured ~4x slow power state —
 so one unlucky JVM (or one slow host window) shifted every median
 one-sidedly. Structural fixes, in this file rather than in the
@@ -133,7 +133,7 @@ REPS_PER_JVM = int(os.environ.get("BENCH_REPS", "3"))
 CONV_REPS_PER_JVM = int(os.environ.get("BENCH_CONV_REPS", "2"))
 
 # Reference cpu-probe speed (ms) for the sanity column: the r10
-# steady-state reading on this host class (BENCH_r10.json env).
+# steady-state reading on this host class (faaaf6a:BENCH_r10.json env).
 PROBE_REF_MS = 27.7
 
 _CHILD_TAG = "BENCHCHILD "
@@ -529,9 +529,9 @@ def main() -> None:
     }
 
     # The driver captures only the tail of an over-long stdout line
-    # (BENCH_r12.json: "parsed": null) — keep the headline JSON compact
-    # (<2 KB, every per-query value visible) and park everything else in
-    # a sidecar the repo keeps (round-12 verdict Next #6).
+    # (faaaf6a:BENCH_r12.json: "parsed": null) — keep the headline JSON
+    # compact (<2 KB, every per-query value visible) and park everything
+    # else in a sidecar the repo keeps (round-12 verdict Next #6).
     diag_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_DIAG.json")
     diagnostics = {

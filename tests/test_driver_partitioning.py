@@ -266,7 +266,6 @@ class _StubSource:
 
     def __init__(self, shape):
         self.meta = SourceMeta(
-            n_levels=1,
             dtype="uint16",
             shapes=[shape],
             voxel_size=(1.0, 1.0, 1.0),
@@ -387,3 +386,42 @@ def test_conversion_job_counts(spark, two_tiles, tmp_path):
     # One v2 chunk per task row: 64x48x40 over 16^3 chunks.
     assert res["stages"][0]["n_shards"] == 4 * 3 * 3
     assert n == 2
+
+
+def test_cascade_leaves_session_conf_alone(
+    spark, monkeypatch, two_tiles, tmp_path
+):
+    """A cascade pass sets no Spark conf: two conversions sharing one
+    session in threads cannot restore each other's values. The
+    assembler keeps its width without one: its stage runs one task per
+    ``spark.sql.shuffle.partitions``, none coalesced away."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        set_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    tiles = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
+             enumerate(two_tiles)]
+    sc = spark.sparkContext
+    group = f"conf-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        res = convert_tiles_to_zarr(
+            spark, tiles,
+            _settings(translate_pyramid=False, downsample_levels=3),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["pyramid_plan"] == "fused_cascade"
+    assert set_keys == []
+    tracker = sc.statusTracker()
+    _, assembler_job, _ = sorted(tracker.getJobIdsForGroup(group))
+    assembler_stage = max(tracker.getJobInfo(assembler_job).stageIds)
+    assert tracker.getStageInfo(assembler_stage).numTasks == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )

@@ -100,3 +100,15 @@ def test_repo_rotation_orders_never_sampled_first():
             assert not seen_sampled, (
                 f"never-sampled {name} sorted after a sampled name"
             )
+
+
+def test_repo_keeps_rotation_inputs():
+    # The committed CORRECTNESS_r*.json files are the rotation's only
+    # input; a cleanup that deletes them silently turns the rotation
+    # into registry order.
+    sys.path.insert(0, REPO)
+    try:
+        import __spark_entry__ as entry
+    finally:
+        sys.path.pop(0)
+    assert set(entry._last_sampled_round()) & set(entry.queries())

@@ -74,7 +74,7 @@ def test_padded_vs_metadata_shapes(ims_fixture):
     path, l0, l1 = ims_fixture
     src = open_source(path)
     assert isinstance(src, Hdf5ImarisSource)
-    assert src.meta.n_levels == 2
+    assert len(src.meta.shapes) == 2
     assert src.meta.dtype == "uint16"
     assert src.meta.shapes == [(10, 12, 14), (5, 6, 7)]
     # voxel size from Ext bounds over the META shape, origin = ExtMin ZYX

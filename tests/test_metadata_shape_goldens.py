@@ -20,7 +20,6 @@ class _StubSource:
 
     def __init__(self, shapes):
         self.meta = SourceMeta(
-            n_levels=len(shapes),
             dtype="uint16",
             shapes=list(shapes),
             voxel_size=(1.0, 1.0, 1.0),

@@ -24,7 +24,7 @@ clustered geometry (the r13 R-sweep finding this tool re-checks at
 1000x the fixture size).
 
     python tools/ann_recall_scale.py .localdata/sf10 \
-        --queries 20 > ANN_RECALL_r14.json
+        --queries 20 > .localdata/ann_recall.json
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Assemble SCALE_r{N}.json from this round's sweep logs.
+"""Assemble one scale-sweep JSON from a round's sweep logs.
 
 Round-agnostic: one assembler for every round's sweep logs. Explicit
 ``is not None`` checks (a legitimate 0.0 sec is never conflated with
@@ -13,7 +13,7 @@ and the HEADLINE ratio summary uses sf30 as the base when present
 fixed costs manufacture fake superlinearity).
 
     python tools/assemble_scale.py /tmp/sweep_sf30*.log \
-        /tmp/sweep_sf100*.log > SCALE_r14.json
+        /tmp/sweep_sf100*.log > .localdata/scale.json
 """
 
 from __future__ import annotations

@@ -8,11 +8,13 @@ join strategies, Python-boundary nodes, pushed filters).
 Usage:
     python tools/opt_profile.py <sf_dir> [out_json] [name_filter ...]
 
-Writes plans to plans/r14/<query>_profile.txt (one file per query) and
-a JSON summary with per-query seconds + plan stats. Timing is min over
-REPS (env OPT_REPS, default 2) after one warm pass, matching the
-bench's min-of-mins philosophy in a single JVM (cross-JVM robustness
-is bench.py's job; this tool ranks queries relative to one another).
+Writes plans to plans/<tag>/<query>_profile.txt (one file per query;
+tag from env OPT_PLANS_TAG, default r15; plans/ is untracked run
+output) and a JSON summary with per-query seconds + plan stats. Timing
+is min over REPS (env OPT_REPS, default 2) after one warm pass,
+matching the bench's min-of-mins philosophy in a single JVM (cross-JVM
+robustness is bench.py's job; this tool ranks queries relative to one
+another).
 """
 
 from __future__ import annotations
