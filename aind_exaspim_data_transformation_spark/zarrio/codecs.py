@@ -45,8 +45,8 @@ def crc32c(data: bytes, value: int = 0) -> int:
 # level) for one libzstd build, which pins the idempotent-rewrite
 # guarantee (same shard key -> same bytes on retry or resume) to the
 # pyarrow build; ``zstd_backend_info()`` reports it. Its decompress API
-# needs the output size, which every caller knows (the shard decode's
-# chunk_shape x itemsize, the cascade assembler's piece shape).
+# needs the output size, which its one caller knows: the shard decode's
+# chunk_shape x itemsize.
 def zstd_compress(data: bytes, level: int) -> bytes:
     return _pa.Codec("zstd", compression_level=level).compress(
         data, asbytes=True

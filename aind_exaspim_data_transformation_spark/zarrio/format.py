@@ -329,8 +329,8 @@ def write_array_metadata(
 
 def write_group_metadata(store: str, attributes: dict) -> str:
     """Root group zarr.json carrying OME-NGFF attributes (driver-side,
-    written once after the job action — replaces the reference's
-    partition-0 gate, compress/imaris_to_zarr.py:2006-2028)."""
+    written once by the planner before any task runs — replaces the
+    reference's partition-0 gate, compress/imaris_to_zarr.py:2006-2028)."""
     meta = {
         "zarr_format": 3,
         "node_type": "group",

@@ -299,7 +299,10 @@ def kv_get(path: str) -> bytes | None:
 
 
 def kv_list_prefix(path: str) -> list[str]:
-    """All object keys (relative to the store URL) under ``path``.
+    """Every object under ``path``: on S3 (and the fake-S3 scheme) the
+    bucket keys, which include the prefix and not the bucket (the form
+    ``kv_delete_prefix`` deletes by); on a local filesystem the absolute
+    file paths, sorted.
 
     S3 has no directories — a "directory" is the set of keys sharing a
     prefix — so the prefix is normalized to end with '/' to avoid

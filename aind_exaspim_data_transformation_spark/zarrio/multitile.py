@@ -3,29 +3,30 @@ all tiles (the reference's partition_mode='shard',
 imaris_job.py:535-647; its 'file' mode is the same plan over one tile,
 so there is only this one).
 
-A pass's plan is one ``Grid`` of superchunk groups per converting
-(tile, level); the level's layout (shapes, dtype, codec) lives only in
-the store's own zarr.json — or, for a Zarr v2 store, its ``.zarray`` —
-which the driver writes before any task runs. The driver cuts the one
-group order into voxel-balanced ranges (``group_offsets`` and ``cut``:
-the deterministic host-side split of the reference's
-imaris_job.py:35-46, across every tile), and each writer task expands
-only its own range (``iter_groups``) and reads each group into one
-region (``pipeline._read_group``), so no shard list is built and no
-Spark job moves data the driver holds. ``pipeline.convert_to_zarr`` is
-the one-tile call. Zarr v2 is a layout choice of the one planner
-(``plan_global_tasks(..., zarr_format=2)``): the same probe, metadata
-writes and groups, of v2 chunks, and the same writer.
+A pass's plan is one ``Grid`` of units per converting (tile, level);
+the level's layout (shapes, dtype, codec) lives only in the store's own
+zarr.json — or, for a Zarr v2 store, its ``.zarray`` — which the driver
+writes before any task runs. The driver cuts the one unit order into
+voxel-balanced ranges (``unit_offsets`` and ``cut``: the deterministic
+host-side split of the reference's imaris_job.py:35-46, across every
+tile), and each writer task expands only its own range (``iter_units``)
+and reads each superchunk group of a unit into one region
+(``pipeline._read_group``), so no shard list is built and no Spark job
+moves data the driver holds. A unit is one group when nothing is
+computed. ``pipeline.convert_to_zarr`` is the one-tile call. Zarr v2 is
+a layout choice of the one planner (``plan_global_tasks(...,
+zarr_format=2)``): the same probe, metadata writes and groups, of v2
+chunks, and the same writer.
 
-A computed pyramid has one kernel, the fused cascade: the source writer
-reduces each superchunk group recursively and ships per-level partials
-through one shuffle to the assembler, which writes the deeper levels.
-When a window-aligned group of the full depth would exceed
-``pipeline.CASCADE_MAX_GROUP_BYTES``, the cascade runs in passes
-(``pyramid_passes``): each later pass reads its base level back from
-the store and cascades the next levels. One-step passes are the
-reference's sequential level-by-level pyramid
-(compress/imaris_to_zarr.py:677-799) as a special case.
+A computed pyramid is built in passes (``pyramid_passes``), each one
+``mapInPandas`` over its units plus the stats aggregation. A pass reads
+level ``base`` (the source first, the store after) and writes the levels
+after it up to level ``top`` inside the writer task: a unit is the
+base-level footprint of one level-``top`` block, the writer reduces its
+groups in tree order into one open block per level and writes each
+shard once its block is complete. The next pass reads level ``top``
+back from the store, as the reference builds every level
+(compress/imaris_to_zarr.py:677-799); one-step passes are that loop.
 
 At 100 TB: ~1M shards in ~500k groups per dataset, and a pass ships a
 few kB of plan; payloads never enter the DataFrame.
@@ -48,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import ConvertJobSettings
 from ..operators.downsample import downsample_block
 from ..sources.tensor import open_source
-from .codecs import zstd_compress, zstd_decompress
 from .format import (
     ShardSpec,
     grid_cells,
@@ -80,15 +80,18 @@ from .v2 import (
 )
 
 #: One converting (tile, level) of a pass's plan: its ``dims`` (z, y,
-#: x), its ``block`` (the shard, or a v2 level's chunk) and its
-#: ``group`` extent, ``key_m`` x ``block``, in voxels. Its superchunk
-#: groups are the cells of ``format.shard_grid(dims, group)``; a plan's
-#: group order is its grids in list order, each row-major.
-Grid = namedtuple("Grid", "tile_path store level dims block group")
+#: x), its ``block`` (the shard, or a v2 level's chunk), its superchunk
+#: ``group`` extent (``key_m`` x ``block``), its ``unit`` extent, all in
+#: voxels, and ``blocks``, the block extent of each level after ``level``
+#: that the pass writes in-task (``_pass_blocks``), empty when it writes
+#: none. The plan's elements are its units, the cells of
+#: ``format.shard_grid(dims, unit)``, in its grids' list order, each
+#: row-major; a unit with no in-task level is one group.
+Grid = namedtuple("Grid", "tile_path store level dims block group unit blocks")
 
 #: One row per shard (or v2 chunk) of a plan, as ``build_global_tasks``
 #: lists it for perfbench's traced replay; rows sharing a ``superchunk``
-#: key are one group. The writers take the group plan, not these rows.
+#: key are one group. The writers take the unit plan, not these rows.
 TASK_SCHEMA = (
     "tile_path string, store string, level int, "
     "iz int, iy int, ix int, "
@@ -96,28 +99,13 @@ TASK_SCHEMA = (
     "superchunk string"
 )
 
-#: The one writer-row schema. 'stats' rows are per-shard write records
-#: (``error`` set on a quarantined shard, which was not written); 'part'
-#: rows carry a cascade's compressed reduced piece routed to (store,
-#: level, shard index), placed at (oz, oy, ox) with shape (sz, sy, sx).
+#: The one writer-row schema: a per-shard write record, ``error`` set on
+#: a quarantined shard, which was not written.
 WRITER_SCHEMA = (
-    "kind string, tile_path string, store string, level int, "
-    "iz int, iy int, ix int, "
-    "bytes_read long, bytes_written long, elapsed double, error string, "
-    "oz int, oy int, ox int, sz int, sy int, sx int, payload binary"
+    "tile_path string, level int, iz int, iy int, ix int, "
+    "bytes_read long, bytes_written long, elapsed double, error string"
 )
 WRITER_COLS = [f.split()[0] for f in WRITER_SCHEMA.split(", ")]
-
-
-def _stats_row(
-    tile_path, store, level, idx, nread, nwritten, elapsed, error=None
-) -> tuple:
-    """The WRITER_SCHEMA 'stats' row of shard ``idx`` of (``store``,
-    ``level``), read for ``tile_path`` (the part columns null)."""
-    return (
-        "stats", tile_path, store, level, *idx,
-        nread, nwritten, elapsed, error, *(None,) * 7,
-    )
 
 
 class _LevelSpecs(dict):
@@ -137,55 +125,131 @@ class _LevelSpecs(dict):
         return spec
 
 
-def _pass_multiple(
-    spec: ShardSpec,
+def _grid(
+    src_path: str,
+    store: str | None,
+    specs: dict[int, ShardSpec],
     base: int,
-    depth: int,
+    top: int,
     settings: ConvertJobSettings,
-    max_group_bytes: float | None = None,
-) -> tuple[int, int, int] | None:
-    """``pipeline.cascade_group_multiple`` for a pass that reads level
-    ``base`` (``spec``) and cascades ``depth`` levels. The source pass
-    groups from ``settings.superchunk_multiple``; a store pass from one
-    shard, because a store read has nothing to coalesce."""
-    sm = settings.superchunk_multiple if base == 0 else (1, 1, 1)
-    return cascade_group_multiple(
-        spec, settings.scale_factor, depth, sm, max_group_bytes
+) -> Grid | None:
+    """Level ``base`` of one tile as the plan entry of a pass that
+    writes levels ``base + 1`` to ``top`` in-task, or None when a level
+    past ``base + 1`` does not nest.
+
+    Groups are ``superchunk_multiple`` shards, or one shard in a store
+    pass (a store read has nothing to coalesce), widened by
+    ``pipeline.cascade_group_multiple`` onto the reduce window grid when
+    the pass reduces. A block is whole shards of its level whose
+    footprint on the level below is whole children (blocks, or groups at
+    ``base``) on the window grid, so the writer completes a block by
+    reducing its children into it in turn; per-window reduce results do
+    not depend on the extent they are computed in, so any such tree
+    writes the bytes of one whole-level reduce. The first block is the
+    least such extent, one shard unless groups straddle shards; a deeper
+    block must be one shard: its footprint nests on the level below. A
+    unit is the base-level footprint of one last block."""
+    spec, factor = specs[base], settings.scale_factor
+    key_m = settings.superchunk_multiple
+    if top > base:
+        key_m = cascade_group_multiple(
+            spec, factor, key_m if base == 0 else (1, 1, 1)
+        )
+    group = tuple(m * s for m, s in zip(key_m, spec.shard_shape[2:]))
+    child, child_dims, blocks = group, spec.shape[2:], []
+    for lvl in range(base + 1, top + 1):
+        dims, shard = specs[lvl].shape[2:], specs[lvl].shard_shape[2:]
+        block = []
+        for c, cd, d, s, f in zip(child, child_dims, dims, shard, factor):
+            if cd <= c:  # one child spans the axis, so one block does
+                block.append(-(-d // s) * s)
+            elif c % f:  # children off the window grid
+                return None
+            else:
+                block.append(s if d <= s else math.lcm(s, c // f))
+        if blocks and tuple(block) != shard:
+            return None
+        blocks.append(tuple(block))
+        child, child_dims = block, dims
+    unit = tuple(c * f ** len(blocks) for c, f in zip(child, factor))
+    return Grid(
+        src_path, store, base, spec.shape[2:], spec.shard_shape[2:], group,
+        unit, tuple(blocks),
     )
 
 
 def pyramid_passes(
     all_specs: dict[str, dict[int, ShardSpec]],
     settings: ConvertJobSettings,
+    n_parts: int,
 ) -> list[tuple[int, int]]:
-    """The computed pyramid's cascade passes over the whole dataset,
-    ``[(base, depth), ...]``: a pass reads level ``base`` (the source
-    for the first pass, the store after it) and cascades ``depth``
-    levels, ``base`` included. Each pass is as deep as every tile's
-    window-aligned group allows within
-    ``pipeline.CASCADE_MAX_GROUP_BYTES``; a one-step pass always runs,
-    so the pyramid always completes. Empty when nothing is computed."""
+    """The computed pyramid's passes over the whole dataset, ``[(base,
+    depth), ...]``: a pass reads level ``base`` (the source for the
+    first pass, the store after it) and writes the ``depth - 1`` levels
+    after it in-task (``_grid``). Each pass goes to the deepest level
+    where every tile's levels nest, every tile's group region plus one
+    block per level fit ``pipeline.CASCADE_MAX_GROUP_BYTES``, and the
+    dataset's units still number at least ``min(n_parts, units one
+    level deep)``, so a deeper pass never starves the ``n_parts`` writer
+    ranges. A one-step pass always runs, so the pyramid always
+    completes. When a pass ends because a level does not nest or the cap
+    binds, one record names why. Empty when nothing is computed."""
     n_levels = max((len(s) for s in all_specs.values()), default=0)
+    cap = pipeline.CASCADE_MAX_GROUP_BYTES
+
+    def plan(base, top):
+        return [
+            _grid(path, None, specs, base, top, settings)
+            for path, specs in all_specs.items()
+        ]
+
+    def n_units(grids):
+        return sum(
+            math.prod(-(-d // u) for d, u in zip(g.dims, g.unit))
+            for g in grids
+        )
+
+    def held(g):  # one group region plus one block per level, clipped
+        specs = all_specs[g.tile_path]
+        return specs[g.level].np_dtype.itemsize * sum(
+            math.prod(map(min, ext, specs[lvl].shape[2:]))
+            for lvl, ext in enumerate((g.group, *g.blocks), g.level)
+        )
+
     passes: list[tuple[int, int]] = []
+    fallbacks: list[str] = []
     base = 0
     while base < n_levels - 1:
-        depth = n_levels - base
-        while depth > 2 and not all(
-            _pass_multiple(specs[base], base, depth, settings) is not None
-            for specs in all_specs.values()
-        ):
-            depth -= 1
-        passes.append((base, depth))
-        base += depth - 1
+        top = base + 1
+        want = min(n_parts, n_units(plan(base, top)))
+        while top < n_levels - 1:
+            grids = plan(base, top + 1)
+            if None in grids:
+                fallbacks.append(
+                    f"level {top + 1}'s shards do not nest on level {top}'s"
+                )
+                break
+            if n_units(grids) < want:
+                break
+            most = max(map(held, grids))
+            if most > cap:
+                fallbacks.append(
+                    f"levels {base + 1}-{top + 1} would hold {most} bytes "
+                    f"per task, over CASCADE_MAX_GROUP_BYTES={cap}"
+                )
+                break
+            top += 1
+        passes.append((base, top - base + 1))
+        base = top
+    if fallbacks:
+        levels = [[b, b + d - 1] for b, d in passes]
+        logging.getLogger(__name__).warning(
+            "pyramid cascade runs in %d passes (levels %s) because %s; "
+            "each later pass reads its base level back from the store",
+            len(passes), levels, "; ".join(fallbacks),
+            extra={"pyramid_passes": levels},
+        )
     return passes
-
-
-def _grid(src_path: str, store: str, lvl: int, spec, key_m) -> Grid:
-    """Level ``lvl`` of one tile as a plan entry: groups of ``key_m``
-    blocks per axis over ``spec``'s shard (or v2 chunk) grid."""
-    block = spec.shard_shape[2:]
-    group = tuple(m * b for m, b in zip(key_m, block))
-    return Grid(src_path, store, lvl, spec.shape[2:], block, group)
 
 
 def _pass_grids(
@@ -196,46 +260,39 @@ def _pass_grids(
     settings: ConvertJobSettings,
 ) -> list[Grid]:
     """Every converting tile's level-``base`` grid for a pass of
-    ``depth`` levels, grouped window-aligned through the pass
-    (``_pass_multiple`` without the cap: ``pyramid_passes`` checked it,
-    and a one-step pass runs whatever its group size)."""
-    grids: list[Grid] = []
-    for src_path, store in tiles:
-        specs = all_specs.get(src_path)
-        if specs is None:  # quarantined at the driver probe
-            continue
-        key_m = (
-            _pass_multiple(specs[base], base, depth, settings, math.inf)
-            or settings.superchunk_multiple
-        )
-        grids.append(_grid(src_path, store, base, specs[base], key_m))
-    return grids
+    ``depth`` levels (``pyramid_passes`` checked that they nest)."""
+    return [
+        _grid(src_path, store, all_specs[src_path], base, base + depth - 1,
+              settings)
+        for src_path, store in tiles
+        if src_path in all_specs  # else quarantined at the driver probe
+    ]
 
 
-def group_offsets(grids: list[Grid]) -> np.ndarray:
-    """The voxel offset of every group of ``grids`` in the plan's order,
-    then the total: one cumsum over the groups' voxel counts, each the
-    product of its extents clipped to the level's dims. No group is
+def unit_offsets(grids: list[Grid]) -> np.ndarray:
+    """The voxel offset of every unit of ``grids`` in the plan's order,
+    then the total: one cumsum over the units' voxel counts, each the
+    product of its extents clipped to the level's dims. No unit is
     built."""
     sizes = [np.zeros(1, dtype=np.int64)]
     for g in grids:
         ez, ey, ex = (
             np.minimum(n, d - np.arange(0, d, n, dtype=np.int64))
-            for d, n in zip(g.dims, g.group)
+            for d, n in zip(g.dims, g.unit)
         )
         sizes.append((ez[:, None, None] * ey[:, None] * ex).ravel())
     return np.cumsum(np.concatenate(sizes))
 
 
 def cut(offsets: np.ndarray, lo: int, hi: int, n: int) -> list[int]:
-    """Cut groups ``[lo, hi)`` of a plan (``offsets`` from
-    ``group_offsets``) into ``n`` contiguous ranges: the group whose
+    """Cut units ``[lo, hi)`` of a plan (``offsets`` from
+    ``unit_offsets``) into ``n`` contiguous ranges: the unit whose
     first voxel sits at offset ``s`` of the range's ``T`` voxels goes to
-    range ``s * n // T``. Returns the ``n + 1`` group indices where the
-    ranges start, ``hi`` last. So no group spans ranges, the same plan
+    range ``s * n // T``. Returns the ``n + 1`` unit indices where the
+    ranges start, ``hi`` last. So no unit spans ranges, the same plan
     always gives the same cut (a retried or speculative task gets the
-    same groups), and no range carries more than ``T / n`` plus its
-    largest group. With fewer groups than ``n`` some ranges are empty."""
+    same units), and no range carries more than ``T / n`` plus its
+    largest unit. With fewer units than ``n`` some ranges are empty."""
     base = int(offsets[lo])
     span = int(offsets[hi]) - base
     firsts = np.searchsorted(
@@ -244,115 +301,27 @@ def cut(offsets: np.ndarray, lo: int, hi: int, n: int) -> list[int]:
     return [lo + int(i) for i in firsts] + [hi]
 
 
-def iter_groups(
+def iter_units(
     grids: list[Grid], lo: int, hi: int
-) -> Iterator[tuple[str, str, int, tuple[int, ...]]]:
-    """Groups ``[lo, hi)`` of the plan's order, each as ``(tile_path,
-    store, level, (z0, z1, y0, y1, x0, x1))``, computed from their index:
-    nothing before ``lo`` is enumerated."""
+) -> Iterator[tuple[Grid, tuple[int, ...]]]:
+    """Units ``[lo, hi)`` of the plan's order, each as ``(grid, (z0, z1,
+    y0, y1, x0, x1))``, computed from their index: nothing before ``lo``
+    is enumerated."""
     first = 0
     for g in grids:
-        nz, ny, nx = (-(-d // n) for d, n in zip(g.dims, g.group))
+        nz, ny, nx = (-(-d // n) for d, n in zip(g.dims, g.unit))
         for k in range(max(lo - first, 0), min(hi - first, nz * ny * nx)):
             gz, rest = divmod(k, ny * nx)
             box: list[int] = []
-            for i, d, n in zip((gz, *divmod(rest, nx)), g.dims, g.group):
+            for i, d, n in zip((gz, *divmod(rest, nx)), g.dims, g.unit):
                 box += (i * n, min((i + 1) * n, d))
-            yield g.tile_path, g.store, g.level, tuple(box)
+            yield g, tuple(box)
         first += nz * ny * nx
-
-
-def _cascade_parts(
-    region: np.ndarray,
-    store: str,
-    level: int,
-    origin: tuple[int, int, int],
-    cascade: tuple[tuple[int, int, int], str, int],
-    specs: _LevelSpecs,
-) -> list[tuple]:
-    """The fused cascade step of one group: reduce its ``region`` (at
-    ``store`` and ``level``, global origin ``origin``) recursively
-    through the pass's next ``depth - 1`` levels and emit 'part' rows
-    routed to each level's shards. Reducing at group (not shard)
-    granularity is what lifts the shard-alignment precondition: the
-    group extent is chosen window-aligned through every level of the
-    pass (`pipeline.cascade_group_multiple`), so ANY shard shape
-    cascades exactly — per-window reduce results are independent of
-    the block extent they are computed in, so group-level and
-    shard-level reduces are byte-identical where both apply. Each
-    piece's voxels are zstd-1 compressed for the shuffle, cutting the
-    pandas->Arrow->UnsafeRow->shuffle copy chain to compressed size
-    (in-flight data only; stored shard bytes are untouched)."""
-    factor, mode, depth = cascade
-    out = []
-    red = region
-    for lvl_to in range(level + 1, level + depth):
-        red = downsample_block(red, factor, mode)
-        origin = tuple(o // f for o, f in zip(origin, factor))
-        end = tuple(o + n for o, n in zip(origin, red.shape))
-        cs = specs[store, lvl_to].shard_shape[2:]
-        for idx, inner, outer in grid_cells(origin, end, cs):
-            piece = red[outer]
-            out.append((
-                "part", None, store, lvl_to, *idx, *(None,) * 4,
-                *(s.start for s in inner), *piece.shape,
-                zstd_compress(piece.tobytes(), 1),
-            ))
-    return out
-
-
-def _make_global_assembler():
-    """Grouped assembler for every cascade pass: each 'part' group
-    is one (store, level, shard) — place pieces, encode with the
-    store's own spec, write, emit a stats row. 'stats' groups pass
-    through. Specs are cached per (store, level) across the groups of
-    a task."""
-    specs = _LevelSpecs()
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.iloc[0]["kind"] == "stats":
-            return pdf
-        t0 = time.monotonic()
-        first = next(pdf.itertuples(index=False))
-        store, lvl = first.store, int(first.level)
-        iz, iy, ix = int(first.iz), int(first.iy), int(first.ix)
-        spec = specs[store, lvl]
-        cs = spec.shard_shape[2:]
-        dims = spec.shape[2:]
-        start = (iz * cs[0], iy * cs[1], ix * cs[2])
-        valid = tuple(min(c, d - s) for c, d, s in zip(cs, dims, start))
-        block = np.full(valid, spec.fill_value, dtype=spec.np_dtype)
-        nread = 0
-        for r in pdf.itertuples(index=False):
-            # Uncompressed piece size: the reduced voxels this shard is
-            # built from, not the zstd-1 bytes that crossed the shuffle.
-            size = int(r.sz) * int(r.sy) * int(r.sx) * spec.np_dtype.itemsize
-            piece = np.frombuffer(
-                zstd_decompress(r.payload, size), dtype=spec.np_dtype
-            ).reshape(r.sz, r.sy, r.sx)
-            block[
-                r.oz : r.oz + r.sz,
-                r.oy : r.oy + r.sy,
-                r.ox : r.ox + r.sx,
-            ] = piece
-            nread += size
-        nbytes = _put_shard(store, lvl, iz, iy, ix, block, spec)
-        return pd.DataFrame(
-            [
-                _stats_row(
-                    first.tile_path, store, lvl, (iz, iy, ix), nread, nbytes,
-                    time.monotonic() - t0,
-                )
-            ],
-            columns=WRITER_COLS,
-        )
-
-    return assemble
 
 
 class _PartitionFeed:
     """mapInPandas body over ``spark.range(n)``: the task holding id
-    ``p`` hands ``writer`` groups ``bounds[p]:bounds[p + 1]`` of the
+    ``p`` hands ``writer`` units ``bounds[p]:bounds[p + 1]`` of the
     plan's ``grids`` (an empty range yields nothing). The plan is one
     grid per (tile, level) and one index per partition, a few kB, so it
     ships inside this object."""
@@ -369,13 +338,14 @@ class _PartitionFeed:
             for p in ids["id"]:
                 lo, hi = self.bounds[p], self.bounds[p + 1]
                 if lo < hi:
-                    yield from self.writer(iter_groups(self.grids, lo, hi))
+                    yield from self.writer(iter_units(self.grids, lo, hi))
 
 
 def plan_global_tasks(
     tiles: list[tuple[str, str]],
     settings: ConvertJobSettings,
     zarr_format: int = 3,
+    n_parts: int = 1,
 ) -> tuple[
     list[Grid],
     dict[str, dict[int, ShardSpec | V2Spec]],
@@ -385,8 +355,8 @@ def plan_global_tasks(
     """Probe every tile driver-side, create its stores (Zarr v3, or v2
     with ``zarr_format=2``), and plan the global source-read pass, one
     ``Grid`` per converting (tile, level): every level in translate
-    mode, level 0 in compute mode (whose deeper levels the cascade
-    passes derive).
+    mode, level 0 in compute mode (whose deeper levels the passes
+    derive, planned for ``n_parts`` writer ranges).
     Returns (grids, specs per tile, quarantined tiles,
     ``pyramid_passes``). The third map is empty unless
     on_corrupt="quarantine" skipped tiles whose open OR metadata probe
@@ -455,17 +425,13 @@ def plan_global_tasks(
         write_group(store, attrs)
     if settings.translate_pyramid:
         grids = [
-            _grid(src_path, store, lvl, spec, settings.superchunk_multiple)
+            _grid(src_path, store, all_specs[src_path], lvl, lvl, settings)
             for src_path, store in tiles
-            for lvl, spec in all_specs.get(src_path, {}).items()
+            for lvl in all_specs.get(src_path, {})
         ]
         return grids, all_specs, quarantined, []
 
-    # Compute-pyramid tiles group by the first pass's window-aligned
-    # cascade grid (identical to the plain superchunk grid for
-    # factor-divisible shards), so the cascade's group-level reduce
-    # stays exact for any shard shape.
-    passes = pyramid_passes(all_specs, settings)
+    passes = pyramid_passes(all_specs, settings, n_parts)
     depth = passes[0][1] if passes else 1
     grids = _pass_grids(tiles, all_specs, 0, depth, settings)
     return grids, all_specs, quarantined, passes
@@ -479,7 +445,7 @@ def build_global_tasks(
     """``plan_global_tasks``'s groups as a TASK_SCHEMA DataFrame, with its
     specs and quarantined tiles: one row per shard (or v2 chunk),
     row-major per (tile, level), keyed by its group. Only perfbench's
-    traced replay reads these rows; conversions run the group plan."""
+    traced replay reads these rows; conversions run the unit plan."""
     grids, all_specs, quarantined, _ = plan_global_tasks(tiles, settings)
     rows = [
         (
@@ -525,19 +491,25 @@ def _test_straggler_hook() -> None:
 
 
 class _GlobalWriter:
-    """The one pyramid writer. It takes a partition's superchunk groups,
-    each ``(tile_path, store, level, box)``, and reads each into one
-    region with ``pipeline._read_group`` — from the source, or with
-    ``from_store`` from the pass's base level in the store. It walks the
-    group's shards with ``format.grid_cells`` over the box and the
-    level's block from the store's zarr.json (a v2 level's chunk from
-    its .zarray): a source-read group writes each shard's
+    """The one pyramid writer. It takes a partition's units, each
+    ``(grid, box)`` (``iter_units``), and reads each superchunk group
+    into one region with ``pipeline._read_group`` — from the source, or
+    with ``from_store`` from the pass's base level in the store. It
+    walks a group's shards with ``format.grid_cells`` over the box and
+    the level's block from the store's zarr.json (a v2 level's chunk
+    from its .zarray): a source-read group writes each shard's
     ``region[outer]``; a store-read group writes no level-``base`` shard
-    (the pass before wrote it). With ``cascade`` set to ``(factor, mode,
-    depth)`` it reduces the region through the next ``depth - 1`` levels
-    and emits them as 'part' rows (``_cascade_parts``). It yields one
-    DataFrame per group, so a task never holds more than one group's
-    region and parts. Sources are cached per call.
+    (the pass before wrote it).
+
+    With ``cascade`` set to ``(factor, mode)``, a unit is the footprint
+    of one block of the pass's last level (``Grid.blocks``). The writer
+    builds that block from its children in tree order: each child, a
+    group at the base level or a block one level down built the same
+    way, is reduced with ``downsample_block`` into its place in the
+    block, and once the block is complete each of its shards is written.
+    So a task holds at most one group region plus one block per in-task
+    level. It yields one DataFrame of stats rows per unit. Sources are
+    cached per call.
 
     With ``quarantine`` (settings.on_corrupt="quarantine"): a tile that
     fails to open, or a source read that fails, yields per-shard ERROR
@@ -555,16 +527,18 @@ class _GlobalWriter:
     def __init__(
         self,
         quarantine: bool = False,
-        cascade: tuple[tuple[int, int, int], str, int] | None = None,
+        cascade: tuple[tuple[int, int, int], str] | None = None,
         from_store: bool = False,
     ):
         self.quarantine = quarantine
         self.cascade = cascade
         self.from_store = from_store
 
-    def __call__(self, groups: Iterable[tuple]) -> Iterator[pd.DataFrame]:
+    def __call__(
+        self, units: Iterable[tuple[Grid, tuple]]
+    ) -> Iterator[pd.DataFrame]:
         _test_straggler_hook()
-        quarantine, cascade = self.quarantine, self.cascade
+        quarantine = self.quarantine
         # An open source per tile, or the message its open failed with.
         sources: dict[str, object] = {}
         specs = _LevelSpecs()
@@ -594,74 +568,102 @@ class _GlobalWriter:
                 return f"read: {type(exc).__name__}: {exc}"
 
         n_err: dict[str, int] = {}
-        for tile_path, store, level, box in groups:
-            spec = specs[store, level]
+
+        def build(grid, level, box, rows):
+            """Level ``level``'s voxels over ``box``: at the pass's base
+            level one group read into one region, deeper a block reduced
+            from its children in turn; then every shard a source read or
+            a reduce made is written."""
+            spec = specs[grid.store, level]
             cells = list(
                 grid_cells(box[0::2], box[1::2], spec.shard_shape[2:])
             )
             t0 = time.monotonic()
-            region, failed = _read_group(
-                box, cells, partial(read, tile_path, store, level), spec
-            )
-            read_sec = (time.monotonic() - t0) / len(cells)
-            out = []
+            if level == grid.level:
+                out, failed = _read_group(
+                    box, cells,
+                    partial(read, grid.tile_path, grid.store, level), spec,
+                )
+                tile = grid.tile_path
+                sec = (time.monotonic() - t0) / len(cells)
+            else:
+                factor, mode = self.cascade
+                child = (grid.group, *grid.blocks)[level - grid.level - 1]
+                dims = specs[grid.store, level - 1].shape[2:]
+                lo = [a * f for a, f in zip(box[0::2], factor)]
+                hi = [
+                    min(e * f, d) for e, f, d in zip(box[1::2], factor, dims)
+                ]
+                out = np.empty(
+                    [e - a for a, e in zip(box[0::2], box[1::2])],
+                    dtype=spec.np_dtype,
+                )
+                for _, _, o in grid_cells(lo, hi, child):
+                    red = downsample_block(
+                        build(grid, level - 1, tuple(
+                            v for a, s in zip(lo, o)
+                            for v in (a + s.start, a + s.stop)
+                        ), rows),
+                        factor, mode,
+                    )
+                    out[tuple(
+                        slice(s.start // f, s.start // f + n)
+                        for s, f, n in zip(o, factor, red.shape)
+                    )] = red
+                # No tile on a computed level's rows: each such level is
+                # one stage across every tile.
+                failed, tile, sec = {}, None, 0.0
             for idx, _, outer in cells:
                 if idx in failed:
                     # Message detail capped PER TILE (the final agg also
                     # groups by tile_path) so one fully-corrupt tile
                     # cannot blank another tile's locator samples; the
                     # count stays exact regardless.
-                    n = n_err[tile_path] = n_err.get(tile_path, 0) + 1
+                    n = n_err[tile] = n_err.get(tile, 0) + 1
                     msg = failed[idx] if n <= ERROR_SAMPLE_CAP else ""
-                    stats = (0, 0, read_sec, msg)
-                elif self.from_store:
-                    continue
-                else:
-                    block = region[outer]
+                    rows.append((tile, level, *idx, 0, 0, sec, msg))
+                elif level > grid.level or not self.from_store:
                     t0 = time.monotonic()
-                    nbytes = _put_shard(store, level, *idx, block, spec)
-                    stats = (
-                        block.nbytes, nbytes,
-                        read_sec + time.monotonic() - t0,
-                    )
-                out.append(_stats_row(tile_path, store, level, idx, *stats))
-            if cascade is not None:
-                out += _cascade_parts(
-                    region, store, level, box[0::2], cascade, specs
-                )
-            yield pd.DataFrame(out, columns=WRITER_COLS)
+                    shard = out[outer]
+                    nbytes = _put_shard(grid.store, level, *idx, shard, spec)
+                    rows.append((
+                        tile, level, *idx, shard.nbytes, nbytes,
+                        sec + time.monotonic() - t0, None,
+                    ))
+            return out
+
+        for grid, box in units:
+            rows: list[tuple] = []
+            # A unit is the footprint of one block of the pass's last
+            # level.
+            k = len(grid.blocks)
+            scale = [f ** k for f in self.cascade[0]] if k else [1, 1, 1]
+            build(grid, grid.level + k, tuple(
+                v for a, e, m in zip(box[0::2], box[1::2], scale)
+                for v in (a // m, -(-e // m))
+            ), rows)
+            yield pd.DataFrame(rows, columns=WRITER_COLS)
         for s in sources.values():
             if not isinstance(s, str):
                 s.close()
 
 
 def _run_pass(spark: SparkSession, feed: _PartitionFeed) -> list:
-    """``feed`` — a pass's group plan, its cut and its writer — as one
+    """``feed`` — a pass's unit plan, its cut and its writer — as one
     Spark action: every conversion action runs here; returns the
     collected stage stats, per tile without a cascade and per (tile,
     level) with one.
 
     One Spark partition per range of the cut, with no Exchange in front
-    of the writer; the plan ships inside the feed. A cascade's 'part'
-    rows go through ONE shuffle to ``_make_global_assembler``, which
-    writes the pass's deeper levels of every tile, so a pass's job count
+    of the writer; the plan ships inside the feed. Every level the pass
+    computes is written inside the writer tasks, so a pass's job count
     is fixed whatever the tile count or depth."""
     n_parts = len(feed.bounds) - 1
-    written = spark.range(n_parts, numPartitions=n_parts).mapInPandas(
-        feed, WRITER_SCHEMA
-    )
-    if feed.writer.cascade is None:
-        return written.groupBy("tile_path").agg(*stage_agg_exprs()).collect()
-    # Assembly is CPU-bound per group while its shuffled bytes are
-    # tiny, so size-based AQE coalescing would serialize it; AQE keeps
-    # an explicit partition count, and the session's conf stays as is.
-    keys = ("kind", "store", "level", "iz", "iy", "ix")
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = ("tile_path", "level") if feed.writer.cascade else ("tile_path",)
     return (
-        written.repartition(n, *keys)
+        spark.range(n_parts, numPartitions=n_parts)
+        .mapInPandas(feed, WRITER_SCHEMA)
         .groupBy(*keys)
-        .applyInPandas(_make_global_assembler(), WRITER_SCHEMA)
-        .groupBy("tile_path", "level")
         .agg(*stage_agg_exprs())
         .collect()
     )
@@ -675,7 +677,7 @@ def convert_tiles_to_zarr(
     num_partitions: int | None = None,
     zarr_format: int = 3,
 ) -> dict:
-    """Convert many tiles in ONE Spark action per cascade pass (global
+    """Convert many tiles in ONE Spark action per pyramid pass (global
     shard scheduling), into Zarr v3 stores or, with ``zarr_format=2``,
     v2 stores of the source's own levels.
 
@@ -709,23 +711,14 @@ def convert_tiles_to_zarr(
             "partition subsetting requires translate_pyramid=True; run the "
             "compute-pyramid stage once after all partitions complete"
         )
-    grids, all_specs, quarantined_tiles, passes = plan_global_tasks(
-        tiles, settings, zarr_format
-    )
-    quarantine = settings.on_corrupt == "quarantine"
     n_parts = max(
         spark.sparkContext.defaultParallelism * settings.tasks_per_cpu, 1
     )
+    grids, all_specs, quarantined_tiles, passes = plan_global_tasks(
+        tiles, settings, zarr_format, n_parts
+    )
+    quarantine = settings.on_corrupt == "quarantine"
     pass_levels = [[base, base + depth - 1] for base, depth in passes]
-    if len(passes) > 1:
-        logging.getLogger(__name__).warning(
-            "pyramid cascade runs in %d passes (levels %s): no "
-            "window-aligned group of the full depth fits "
-            "CASCADE_MAX_GROUP_BYTES=%d for every tile, so each later "
-            "pass re-reads its base level from the store",
-            len(passes), pass_levels, pipeline.CASCADE_MAX_GROUP_BYTES,
-            extra={"pyramid_passes": pass_levels},
-        )
     stats = []
     # The first pass reads the source (every level when translating, no
     # cascade for a one-level pyramid); each later one level ``base``
@@ -733,7 +726,7 @@ def convert_tiles_to_zarr(
     for i, (base, depth) in enumerate(passes or [(0, 1)]):
         if i:
             grids = _pass_grids(tiles, all_specs, base, depth, settings)
-        offsets = group_offsets(grids)
+        offsets = unit_offsets(grids)
         lo, hi = 0, len(offsets) - 1
         if partition_to_process is not None:
             lo, hi = cut(offsets, lo, hi, num_partitions)[
@@ -742,7 +735,7 @@ def convert_tiles_to_zarr(
         if lo == hi:  # every tile quarantined, or an empty subset
             continue
         cascade = (
-            (settings.scale_factor, settings.downsample_mode, depth)
+            (settings.scale_factor, settings.downsample_mode)
             if depth > 1
             else None
         )

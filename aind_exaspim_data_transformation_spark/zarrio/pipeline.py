@@ -1,20 +1,20 @@
 """Single-source conversion entry point and the shared conversion kernels.
 
 Every conversion runs in ``multitile``: one global plan of superchunk
-groups, one read per group, and one pyramid kernel, the fused
-cascade (reference process_single_shard,
+groups, one read per group, and one write path. A computed pyramid is
+built in passes (reference process_single_shard,
 compress/imaris_to_zarr.py:375-462, and the sequential pyramid,
-:677-799). When a window-aligned group of the full depth would exceed
-``CASCADE_MAX_GROUP_BYTES``, the cascade runs in passes, each later pass
-reading its base level back from the store. ``convert_to_zarr`` is the
-one-tile call into that plan (Zarr v3, or v2 with ``zarr_format=2``),
-reshaped into per-stage stats.
+:677-799): each pass writes as many levels inside its writer tasks as
+nest and fit ``CASCADE_MAX_GROUP_BYTES``, and the next pass reads its
+base level back from the store. ``convert_to_zarr`` is the one-tile
+call into that plan (Zarr v3, or v2 with ``zarr_format=2``), reshaped
+into per-stage stats.
 
 This module holds that public wrapper and the kernels the multitile
-planner and writers share: the one group read, from the source or the
-store, into the group's region (``_read_group``), the one
-pad, encode and write step every writer ends in, v3 shard or v2 chunk
-(``_put_shard``), the cascade's group-alignment gate
+planner and writer share: the one group read, from the source or the
+store, into the group's region (``_read_group``), the one pad, encode
+and write step every shard ends in, v3 shard or v2 chunk
+(``_put_shard``), the group's window alignment
 (``cascade_group_multiple``), per-level shapes, multiscales factors and
 v3 or v2 specs, and the stage-stats aggregation (``stage_agg_exprs``).
 
@@ -164,11 +164,12 @@ def _read_group(
     superchunk. A one-shard group whose read failed is not read again:
     that read was the shard's own.
 
-    Memory is one group's box: ``superchunk_multiple`` x the shard for a
-    plain group; a cascade group, widened to stay window-aligned
-    (``cascade_group_multiple``), is bounded by
-    ``CASCADE_MAX_GROUP_BYTES``, or in a one-step pass by
-    ``scale_factor`` times the superchunk per axis.
+    Memory is one group's box: ``superchunk_multiple`` x the shard (one
+    shard in a store pass), widened in a computed pyramid to the reduce
+    window grid by at most ``scale_factor`` per axis
+    (``cascade_group_multiple``). Beside it a pass's writer holds one
+    block per level it writes in-task; the planner keeps the two within
+    ``CASCADE_MAX_GROUP_BYTES`` unless the pass is one step deep.
     """
     got = read_fn(*box)
     if not isinstance(got, str):
@@ -193,59 +194,37 @@ def _read_group(
     return region, failed
 
 
-#: Memory guard for the fused cascade's group read buffer: the group
-#: bounding box (raw voxels) a single task holds in memory. Pathological
-#: shard shapes (e.g. a 101-voxel odd shard under a depth-5 factor-2
-#: pyramid) would need gigabyte groups to stay window-aligned through
-#: every level; past this bound the cascade runs in shallower passes
-#: (``multitile.pyramid_passes``). Read at call time, so setting it to 0
-#: forces one-step passes.
+#: Memory guard for a pyramid pass: the bytes a writer task holds, one
+#: group region plus one block per level written in-task
+#: (``multitile.pyramid_passes``). A pass that would hold more writes
+#: fewer levels and leaves the rest to the next pass, which reads its
+#: base level back from the store; a one-step pass always runs. Read at
+#: call time, so setting it to 0 forces one-step passes.
 CASCADE_MAX_GROUP_BYTES = 1 << 30
 
 
 def cascade_group_multiple(
     spec: ShardSpec,
     factor: tuple[int, int, int],
-    n_levels: int,
     superchunk_multiple: tuple[int, int, int],
-    max_group_bytes: float | None = None,
-) -> tuple[int, int, int] | None:
+) -> tuple[int, int, int]:
     """Per-axis superchunk multiple (in shards of ``spec``, the level a
-    cascade pass reads) that makes every cascade group exactly
-    window-aligned at every level of an ``n_levels``-level pass, or None
-    when the pass has nothing to cascade or the required group exceeds
-    ``max_group_bytes`` (default: ``CASCADE_MAX_GROUP_BYTES``).
-
-    The fused cascade reduces each group's bounding box recursively, so
-    a group's origin and extent must stay on the window grid through
-    n_levels-1 reduce steps: group_extent % factor^(n_levels-1) == 0 per
-    axis (groups clamped at the array edge are exempt — their truncated
-    trailing windows are genuine global edge windows at every level).
-    The minimal such multiple is superchunk_multiple scaled by
-    factor^(n_levels-1) / gcd(superchunk_extent, factor^(n_levels-1)) —
-    1 for the common power-of-two shard/factor configs, so the aligned
-    case reads exactly the groups it always did."""
-    if n_levels < 2:
-        return None
-    if max_group_bytes is None:
-        max_group_bytes = CASCADE_MAX_GROUP_BYTES
-    shard = spec.shard_shape[2:]
-    dims = spec.shape[2:]
-    csm = []
-    for sm, sh, f in zip(superchunk_multiple, shard, factor):
-        t = f ** (n_levels - 1)
-        csm.append(sm * (t // math.gcd(sm * sh, t)))
-    group_bytes = spec.np_dtype.itemsize
-    for c, sh, d in zip(csm, shard, dims):
-        group_bytes *= min(c * sh, d)
-    if group_bytes > max_group_bytes:
-        return None
-    return tuple(csm)
+    pass reads) that puts every group on the reduce window grid:
+    group_extent % factor == 0 per axis (a group clamped at the array
+    edge is exempt: its truncated trailing window is a genuine global
+    edge window). The minimal such multiple is superchunk_multiple
+    scaled by factor / gcd(superchunk_extent, factor): 1 for the common
+    power-of-two shard/factor configs, so the aligned case reads exactly
+    the groups it always did."""
+    return tuple(
+        sm * (f // math.gcd(sm * sh, f))
+        for sm, sh, f in zip(superchunk_multiple, spec.shard_shape[2:], factor)
+    )
 
 
 def stage_agg_exprs() -> list:
-    """The stage-stats aggregation, shared by every writer agg (source
-    writer, every cascade pass) so the error-row protocol —
+    """The stage-stats aggregation, shared by every pass's writer agg
+    so the error-row protocol —
     ``n_shards`` counts WRITTEN shards, quarantined rows tally in
     ``n_errors``, and the locator-sample list honors the writers'
     blank-message cap (messages past ``ERROR_SAMPLE_CAP`` per

@@ -1,8 +1,9 @@
 """Driver-partitioned conversion input: the driver cuts one order of
 whole superchunk groups into voxel-balanced ranges
-(``multitile.group_offsets`` + ``multitile.cut``) and each writer task
-expands only its own range (``multitile.iter_groups``), so no Spark job
-only moves data the driver holds and the plan it ships is a few kB."""
+(``multitile.unit_offsets`` + ``multitile.cut``) and each writer task
+expands only its own range (``multitile.iter_units``), so no Spark job
+only moves data the driver holds and the plan it ships is a few kB. A
+translate unit is one group."""
 
 import pickle
 import random
@@ -31,8 +32,8 @@ from aind_exaspim_data_transformation_spark.zarrio.multitile import (
     build_global_tasks,
     convert_tiles_to_zarr,
     cut,
-    group_offsets,
-    iter_groups,
+    iter_units,
+    unit_offsets,
 )
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
     convert_to_zarr,
@@ -48,9 +49,9 @@ def _plan(seed: int) -> list[Grid]:
         shape = tuple(rng.randint(1, 90) for _ in range(3))
         block = tuple(rng.randint(4, 32) for _ in range(3))
         key_m = tuple(rng.randint(1, 3) for _ in range(3))
+        group = tuple(m * b for m, b in zip(key_m, block))
         grids.append(
-            Grid(f"tile{t}", f"store{t}", 0, shape, block,
-                 tuple(m * b for m, b in zip(key_m, block)))
+            Grid(f"tile{t}", f"store{t}", 0, shape, block, group, group, ())
         )
     return grids
 
@@ -58,9 +59,9 @@ def _plan(seed: int) -> list[Grid]:
 def _shards(group, block) -> list[tuple]:
     """A group's shards as ``(tile_path, level, iz, iy, ix, z0, z1, y0,
     y1, x0, x1)``, the writer's ``grid_cells`` walk over its box."""
-    tile, _, level, box = group
+    grid, box = group
     return [
-        (tile, level, *idx,
+        (grid.tile_path, grid.level, *idx,
          *(v for o, s in zip(box[0::2], outer)
            for v in (o + s.start, o + s.stop)))
         for idx, _, outer in grid_cells(box[0::2], box[1::2], block)
@@ -76,16 +77,19 @@ def test_assignment_properties(seed, n_parts):
         g.tile_path: tuple(n // b for n, b in zip(g.group, g.block))
         for g in grids
     }
-    offsets = group_offsets(grids)
+    offsets = unit_offsets(grids)
     bounds = cut(offsets, 0, len(offsets) - 1, n_parts)
     assert len(bounds) == n_parts + 1
     parts = [
-        list(iter_groups(grids, bounds[p], bounds[p + 1]))
+        list(iter_units(grids, bounds[p], bounds[p + 1]))
         for p in range(n_parts)
     ]
 
     # Every shard exactly once.
-    flat = [s for p in parts for g in p for s in _shards(g, block[g[0]])]
+    flat = [
+        s for p in parts for g in p
+        for s in _shards(g, block[g[0].tile_path])
+    ]
     assert sorted(flat) == sorted(
         (g.tile_path, g.level, *cell)
         for g in grids
@@ -97,19 +101,19 @@ def test_assignment_properties(seed, n_parts):
     home = {}
     for i, p in enumerate(parts):
         for j, g in enumerate(p):
-            for s in _shards(g, block[g[0]]):
+            for s in _shards(g, block[g[0].tile_path]):
                 key = (s[0], *(c // m for c, m in zip(s[2:5], key_m[s[0]])))
                 assert home.setdefault(key, (i, j)) == (i, j)
 
     # Same input, same split.
-    assert cut(group_offsets(list(grids)), 0, len(offsets) - 1,
+    assert cut(unit_offsets(list(grids)), 0, len(offsets) - 1,
                n_parts) == bounds
 
     # The cumsum's group sizes are the expanded groups' voxels.
     sizes = np.diff(offsets)
     assert sizes.tolist() == [
         sum((s[6] - s[5]) * (s[8] - s[7]) * (s[10] - s[9])
-            for s in _shards(g, block[g[0]]))
+            for s in _shards(g, block[g[0].tile_path]))
         for p in parts
         for g in p
     ]
@@ -123,8 +127,9 @@ def test_assignment_properties(seed, n_parts):
 
 
 def test_fewer_groups_than_partitions_leaves_empty_ones():
-    grids = [Grid("t", "s", 0, (64, 64, 64), (32, 32, 32), (64, 64, 64))]
-    offsets = group_offsets(grids)
+    grids = [Grid("t", "s", 0, (64, 64, 64), (32, 32, 32), (64, 64, 64),
+                  (64, 64, 64), ())]
+    offsets = unit_offsets(grids)
     bounds = cut(offsets, 0, len(offsets) - 1, 4)  # one group of 8 shards
     sizes = [hi - lo for lo, hi in zip(bounds, bounds[1:])]
     assert sorted(sizes) == [0, 0, 0, 1]
@@ -171,7 +176,7 @@ def _feed_groups(feed) -> list[list[tuple]]:
     """Each Spark partition's groups of ``feed``."""
     b = feed.bounds
     return [
-        list(iter_groups(feed.grids, b[p], b[p + 1]))
+        list(iter_units(feed.grids, b[p], b[p + 1]))
         for p in range(len(b) - 1)
     ]
 
@@ -301,7 +306,7 @@ def test_shipped_plan_is_per_tile_not_per_shard(monkeypatch, tmp_path):
     assert len(pickle.dumps(feed)) < 64 * 1024
     n_shards = 0
     for part in _feed_groups(feed):
-        for _, _, _, box in part:
+        for _, box in part:
             n_shards += sum(
                 1 for _ in grid_cells(box[0::2], box[1::2], (512,) * 3)
             )
@@ -320,12 +325,12 @@ def _jobs_of(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_conversion_job_counts(spark, two_tiles, tmp_path):
-    """Writer input needs no Spark job: a two-tile fused cascade runs the
-    writer stage, the assembler stage and the stats result (3 jobs),
-    under on_corrupt="quarantine" too; a translate run, two-tile or a
-    single-tile Zarr v2 copy, the writer stage and the stats result
-    (2 jobs)."""
+def test_conversion_job_counts(spark, two_tiles, tmp_path, one_range_plan):
+    """Writer input needs no Spark job, and every level a pass computes
+    is written inside its writer tasks: a two-tile fused cascade (one
+    pass, as planned for one writer range) runs the writer stage and
+    the stats result (2 jobs), under on_corrupt="quarantine" too, the
+    same as a translate run, two-tile or a single-tile Zarr v2 copy."""
     cascade = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
                enumerate(two_tiles)]
     res = {}
@@ -339,7 +344,7 @@ def test_conversion_job_counts(spark, two_tiles, tmp_path):
         ),
     )
     assert res["pyramid_plan"] == "fused_cascade"
-    assert n == 3
+    assert n == 2
 
     quarantine = [(src, str(tmp_path / f"q{i}.zarr")) for i, (src, _) in
                   enumerate(two_tiles)]
@@ -355,7 +360,7 @@ def test_conversion_job_counts(spark, two_tiles, tmp_path):
         ),
     )
     assert res["pyramid_plan"] == "fused_cascade" and res["n_errors"] == 0
-    assert n == 3
+    assert n == 2
 
     translate = [(src, str(tmp_path / f"t{i}.zarr")) for i, (src, _) in
                  enumerate(two_tiles)]
@@ -392,9 +397,7 @@ def test_cascade_leaves_session_conf_alone(
     spark, monkeypatch, two_tiles, tmp_path
 ):
     """A cascade pass sets no Spark conf: two conversions sharing one
-    session in threads cannot restore each other's values. The
-    assembler keeps its width without one: its stage runs one task per
-    ``spark.sql.shuffle.partitions``, none coalesced away."""
+    session in threads cannot restore each other's values."""
     from pyspark.sql.conf import RuntimeConfig
 
     set_keys = []
@@ -407,21 +410,8 @@ def test_cascade_leaves_session_conf_alone(
     monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     tiles = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
              enumerate(two_tiles)]
-    sc = spark.sparkContext
-    group = f"conf-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        res = convert_tiles_to_zarr(
-            spark, tiles,
-            _settings(translate_pyramid=False, downsample_levels=3),
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert res["pyramid_plan"] == "fused_cascade"
-    assert set_keys == []
-    tracker = sc.statusTracker()
-    _, assembler_job, _ = sorted(tracker.getJobIdsForGroup(group))
-    assembler_stage = max(tracker.getJobInfo(assembler_job).stageIds)
-    assert tracker.getStageInfo(assembler_stage).numTasks == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+    convert_tiles_to_zarr(
+        spark, tiles,
+        _settings(translate_pyramid=False, downsample_levels=3),
     )
+    assert set_keys == []

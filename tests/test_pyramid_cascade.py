@@ -1,18 +1,19 @@
-"""Fused pyramid cascade in one pass vs in several passes.
+"""Computed pyramid in one pass vs in several passes.
 
-The cascade (zarrio/multitile.py: `_GlobalWriter` with its `cascade`
-step and `_make_global_assembler`, reached through
-`pipeline.convert_to_zarr` as a one-tile call) computes every pyramid
-level inside ONE Spark job — the source writer reduces each superchunk
-group's block recursively and ships compressed partials through a single
-shuffle. When a window-aligned group would exceed
-`pipeline.CASCADE_MAX_GROUP_BYTES` it runs in passes, each later pass
-reading its base level back from the store; with the cap at 0 every
-pass is one reduce step, the sequential level-by-level pyramid (which
-is golden-tested against the reference's downsample semantics). For
-any shape / mode / depth every pass plan must write a BYTE-identical
-store, because the deterministic-shard-bytes guarantee (gzip mtime=0 /
-fixed zstd frames) is what makes re-runs idempotent.
+A pass (zarrio/multitile.py: `_GlobalWriter` with its `cascade` step,
+reached through `pipeline.convert_to_zarr` as a one-tile call) writes
+the levels after its base level inside its writer tasks: it reduces
+each unit's superchunk groups in tree order into one open block per
+level and writes each shard once its block is complete. The planner
+(`multitile.pyramid_passes`) ends a pass where a level's shards do not
+nest, where the units would number fewer than the writer ranges need,
+or where the held bytes would exceed `pipeline.CASCADE_MAX_GROUP_BYTES`;
+the next pass reads its base level back from the store. With the cap
+at 0 every pass is one reduce step, the sequential level-by-level
+pyramid (which is golden-tested against the reference's downsample
+semantics). For any shape / mode / depth every pass plan must write a
+BYTE-identical store, because the deterministic-shard-bytes guarantee
+(gzip mtime=0 / fixed zstd frames) is what makes re-runs idempotent.
 """
 
 from __future__ import annotations
@@ -96,104 +97,88 @@ def test_cascade_matches_loop_bytes(spark, shape, mode, levels):
             assert sa["bytes_written"] == sb["bytes_written"]
 
 
-def _settings(shard, n_levels):
-    return ConvertJobSettings(
+def _specs(shape, shard, chunk, n_levels):
+    """(settings, per-level uint16 specs) of a factor-2 pyramid over
+    ``shape``, with ``shard`` and ``chunk`` clamped per level."""
+    from types import SimpleNamespace
+
+    settings = ConvertJobSettings(
         input_source="unused",
         output_location="unused",
-        chunk_shape=shard,
+        chunk_shape=chunk,
         shard_shape=shard,
         translate_pyramid=False,
         downsample_levels=n_levels,
     )
-
-
-def _specs(shard, shape=(4096, 4096, 4096), n_levels=2):
-    """Per-level uint16 specs of a factor-2 pyramid over ``shape``, with
-    ``shard`` (and a one-chunk shard) clamped per level."""
-    from types import SimpleNamespace
-
-    settings = _settings(shard, n_levels)
     shapes = pipeline._level_shapes(settings, SimpleNamespace(shapes=[shape]))
-    return pipeline._level_specs(settings, shapes, "uint16")
+    return settings, pipeline._level_specs(settings, shapes, "uint16")
 
 
-def test_cascade_group_multiple_gate():
-    """The group-alignment gate: power-of-two configs keep the plain
-    superchunk grouping; factor-indivisible shards get a scaled (but
-    small) aligned group; pathological shards that would need a
-    gigabyte group are refused (None)."""
-    sm = (2, 1, 1)
-    # 64^3 shards, factor 2, depth 3: already aligned, group == sm.
-    assert pipeline.cascade_group_multiple(
-        _specs((64, 64, 64))[0], (2, 2, 2), 3, sm
-    ) == (2, 1, 1)
-    # 48^3 shards at depth 6 (48 % 32 != 0 — the OLD gate rejected
-    # this): a (2,2,2)-shard group (96^3 voxels) is 32-aligned.
-    assert pipeline.cascade_group_multiple(
-        _specs((48, 48, 48))[0], (2, 2, 2), 6, sm
-    ) == (2, 2, 2)
-    # factor 3: 48 has one factor of 3, depth 3 needs 9 -> triple the
-    # y/x group; z already has sm=2 -> 96 -> needs m=3 as well.
-    assert pipeline.cascade_group_multiple(
-        _specs((48, 48, 48))[0], (3, 3, 3), 3, sm
-    ) == (6, 3, 3)
-    # Odd 101^3 shard at depth 5 needs 1616-voxel groups -> over the
-    # 1 GiB cap.
-    assert (
-        pipeline.cascade_group_multiple(
-            _specs((101, 101, 101))[0], (2, 2, 2), 5, sm
-        )
-        is None
-    )
-    # Single level: nothing to cascade.
-    assert (
-        pipeline.cascade_group_multiple(
-            _specs((64, 64, 64))[0], (2, 2, 2), 1, sm
-        )
-        is None
-    )
-    # The byte estimate clamps the group to the array shape: the same
-    # odd shard on a small array fits and cascades.
-    assert pipeline.cascade_group_multiple(
-        _specs((101, 101, 101), shape=(300, 300, 300))[0],
-        (2, 2, 2), 5, sm,
-    ) == (16, 16, 16)
-
-
-def test_pyramid_passes_plan(monkeypatch):
-    """The pass planner: one pass when the full-depth group fits the
-    cap, else passes chained base to base, each within the cap unless
-    it is one step deep; a cap of 0 gives one-step passes."""
+def test_pyramid_passes_plan(monkeypatch, caplog):
+    """The pass planner, for an explicit writer range count: each pass
+    goes as deep as every level nests (whole shards on the window grid),
+    the units still feed the ranges, and the held bytes fit the cap; a
+    pass that a level's nesting or the cap ended logs one record naming
+    why, and a pass the unit count ended logs none."""
     import aind_exaspim_data_transformation_spark.zarrio.multitile as mt
 
-    def chained(passes, n_levels):
-        levels = [(b, b + d - 1) for b, d in passes]
-        return (
-            levels[0][0] == 0
-            and levels[-1][1] == n_levels - 1
-            and all(a[1] == b[0] for a, b in zip(levels, levels[1:]))
-        )
+    logger = "aind_exaspim_data_transformation_spark.zarrio.multitile"
+    perfbench = ((128, 256, 256), (128,) * 3, (64,) * 3, 4)
+    # (name, geometry, tiles, ranges, cap, passes, logged reason)
+    table = [
+        # Level 1 is one 64x128x128 shard per tile, so each level is
+        # one unit per tile: all of it in one pass.
+        ("perfbench tile", perfbench, 4, 8, None, [(0, 4)], None),
+        # 64 / 8 / 1 units for levels 1 / 2 / 3: level 3 would starve
+        # the 8 ranges, so level 2 is read back for it.
+        ("1024^3 over 128^3", ((1024,) * 3, (128,) * 3, (64,) * 3, 4), 1,
+         8, None, [(0, 3), (2, 2)], None),
+        # Level 2's 12-voxel x shards do not nest on level 1's 18-voxel
+        # ones, nor level 3's on level 2's, whatever the range count.
+        ("100x80x60 over 18^3", ((100, 80, 60), (18,) * 3, (6,) * 3, 4), 1,
+         1, None, [(0, 2), (1, 2), (2, 2)],
+         "level 2's shards do not nest on level 1's"),
+        # Level 1's odd 101-voxel shards are off the window grid; a store
+        # pass reads two of them as one group and goes to the last level.
+        ("300^3 over 101^3", ((300,) * 3, (101,) * 3, (101,) * 3, 5), 1,
+         1, None, [(0, 2), (1, 4)],
+         "level 2's shards do not nest on level 1's"),
+        ("cap 0", perfbench, 4, 8, 0, [(0, 2), (1, 2), (2, 2)],
+         "CASCADE_MAX_GROUP_BYTES=0"),
+        ("one level", ((64, 64, 64), (64,) * 3, (64,) * 3, 1), 1, 8, None,
+         [], None),
+    ]
+    for name, (shape, shard, chunk, n_levels), n_tiles, ranges, cap, want, \
+            reason in table:
+        settings, specs = _specs(shape, shard, chunk, n_levels)
+        all_specs = {f"t{i}": specs for i in range(n_tiles)}
+        if cap is not None:
+            monkeypatch.setattr(pipeline, "CASCADE_MAX_GROUP_BYTES", cap)
+        caplog.clear()
+        with caplog.at_level("WARNING", logger=logger):
+            assert mt.pyramid_passes(all_specs, settings, ranges) == want, name
+        monkeypatch.undo()
+        records = [r for r in caplog.records if r.name == logger]
+        if reason is None:
+            assert records == [], name
+        else:
+            (rec,) = records
+            assert reason in rec.getMessage(), name
+            assert rec.pyramid_passes == [[b, b + d - 1] for b, d in want]
+        # Every pass's units are whole groups at its base level.
+        for base, depth in want:
+            g = mt._grid("t0", None, specs, base, base + depth - 1, settings)
+            assert all(u % n == 0 or u >= d
+                       for u, n, d in zip(g.unit, g.group, g.dims)), name
 
-    st = _settings((64, 64, 64), 5)
-    pow2 = {"t0": _specs((64, 64, 64), n_levels=5), "t1": _specs(
-        (64, 64, 64), shape=(300, 260, 200), n_levels=5)}
-    assert mt.pyramid_passes(pow2, st) == [(0, 5)]
-
-    st = _settings((101, 101, 101), 5)
-    odd = {"t0": _specs((101, 101, 101), n_levels=5)}
-    passes = mt.pyramid_passes(odd, st)
-    assert len(passes) > 1 and chained(passes, 5)
-    for base, depth in passes:
-        if depth > 2:
-            spec = odd["t0"][base]
-            assert mt._pass_multiple(spec, base, depth, st) is not None
-
-    # One single-level tile set: nothing to compute.
-    assert mt.pyramid_passes({"t0": _specs((64, 64, 64), n_levels=1)},
-                             _settings((64, 64, 64), 1)) == []
-
-    monkeypatch.setattr(pipeline, "CASCADE_MAX_GROUP_BYTES", 0)
-    assert mt.pyramid_passes(pow2, st) == [(0, 2), (1, 2), (2, 2), (3, 2)]
+    # A store pass widens a one-shard group onto the window grid; with
+    # factor 3, 50-voxel shards need groups of 3 on y and x, 6 on z.
+    settings, specs = _specs((300,) * 3, (101,) * 3, (101,) * 3, 5)
+    assert mt._grid("t", None, specs, 1, 4, settings).group == (202,) * 3
+    settings, specs = _specs((300,) * 3, (50,) * 3, (50,) * 3, 2)
+    assert pipeline.cascade_group_multiple(
+        specs[0], (3, 3, 3), settings.superchunk_multiple
+    ) == (6, 3, 3)
 
 
 @pytest.mark.parametrize(
@@ -208,8 +193,17 @@ def test_pyramid_passes_plan(monkeypatch):
     ],
 )
 def test_misaligned_cascade_matches_loop_bytes(
-    spark, shape, mode, levels, shard, chunk
+    spark, one_range_plan, shape, mode, levels, shard, chunk
 ):
+    """Planned for one writer range, so a pass ends only where a level
+    does not nest: level 2's 12-voxel x shards do not nest on level 1's
+    18-voxel ones in the first geometry; the other two run in one
+    pass."""
+    want = {
+        ("100,80,60", "mean"): [[0, 1], [1, 2]],
+        ("90,66,50", "mode"): [[0, 2]],
+        ("100,80,60", "stride"): [[0, 3]],
+    }[shape, mode]
     with tempfile.TemporaryDirectory() as tmp:
         a = os.path.join(tmp, "cascade.zarr")
         b = os.path.join(tmp, "loop.zarr")
@@ -220,37 +214,47 @@ def test_misaligned_cascade_matches_loop_bytes(
             spark, b, shape, mode, levels, cap=0, shard=shard, chunk=chunk
         )
         # The plan-choice record says which plan each run took.
-        assert ra["pyramid_plan"] == "fused_cascade"
-        assert ra["pyramid_passes"] == [[0, levels - 1]]
+        assert ra["pyramid_plan"] == (
+            "fused_cascade" if len(want) == 1 else "cascade_passes"
+        )
+        assert ra["pyramid_passes"] == want
         assert rb["pyramid_plan"] == "cascade_passes"
         assert rb["pyramid_passes"] == [[i, i + 1] for i in range(levels - 1)]
         assert _tree_hash(a) == _tree_hash(b)
 
 
-def test_two_pass_cascade_matches_one_pass_bytes(spark, caplog):
-    """A cap that admits a depth-3 group but not a depth-4 one splits a
-    4-level pyramid over 18^3 shards into [(0, 3), (2, 2)]: the second
-    pass reads level 2 back from the store. Group bytes (uint16, 2x the
-    superchunk on z): depth 3 needs 36^3 = 93,312 B, depth 4 needs
-    72x72x60 = 622,080 B."""
-    shard, chunk = (18, 18, 18), (6, 6, 6)
+def test_two_pass_cascade_matches_one_pass_bytes(
+    spark, caplog, one_range_plan
+):
+    """A cap that admits levels 1-2 in-task but not level 3 splits a
+    4-level pyramid over 256^3 in 64^3 shards into [(0, 3), (2, 2)]:
+    the second pass reads level 2 back from the store. Held bytes
+    (uint16): a 128x64x64 group, 1 MiB, plus a 64^3 block per level,
+    512 KiB each, and a 32^3 level-3 block: 2,097,152 B to level 2 and
+    2,162,688 B to level 3. Over 18^3 shards level 2's 12-voxel x shards
+    do not nest on level 1's 18-voxel ones, so that pyramid runs in
+    one-step passes whatever the cap. Each fallback plan logs one record
+    naming its cause; the one-pass plan logs none."""
     logger = "aind_exaspim_data_transformation_spark.zarrio.multitile"
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def records():
+        out = [r for r in caplog.records if r.name == logger]
+        caplog.clear()
+        return out
+
+    shard, chunk = (18, 18, 18), (6, 6, 6)
+    with tempfile.TemporaryDirectory() as tmp, caplog.at_level(
+        "WARNING", logger=logger
+    ):
         a = os.path.join(tmp, "one.zarr")
         b = os.path.join(tmp, "two.zarr")
-        with caplog.at_level("WARNING", logger=logger):
-            ra = _convert(
-                spark, a, "100,80,60", "mean", 4, shard=shard, chunk=chunk
-            )
-            assert not [r for r in caplog.records if r.name == logger]
-            rb = _convert(
-                spark, b, "100,80,60", "mean", 4, cap=200_000, shard=shard,
-                chunk=chunk,
-            )
-        # The multi-pass plan logs ONE record naming the passes and cap.
-        (rec,) = [r for r in caplog.records if r.name == logger]
+        ra = _convert(spark, a, "256,256,256", "mean", 4)
+        assert records() == []
+        rb = _convert(spark, b, "256,256,256", "mean", 4, cap=2_100_000)
+        (rec,) = records()
         assert rec.pyramid_passes == [[0, 2], [2, 3]]
-        assert "200000" in rec.getMessage()
+        assert "CASCADE_MAX_GROUP_BYTES=2100000" in rec.getMessage()
+        assert ra["pyramid_plan"] == "fused_cascade"
         assert ra["pyramid_passes"] == [[0, 3]]
         assert rb["pyramid_plan"] == "cascade_passes"
         assert rb["pyramid_passes"] == [[0, 2], [2, 3]]
@@ -259,6 +263,21 @@ def test_two_pass_cascade_matches_one_pass_bytes(spark, caplog):
         for sa, sb in zip(ra["stages"], rb["stages"]):
             assert sa["n_shards"] == sb["n_shards"]
             assert sa["bytes_written"] == sb["bytes_written"]
+
+        a = os.path.join(tmp, "one18.zarr")
+        b = os.path.join(tmp, "two18.zarr")
+        steps = [[0, 1], [1, 2], [2, 3]]
+        for out, cap in ((a, None), (b, 200_000)):
+            res = _convert(
+                spark, out, "100,80,60", "mean", 4, cap=cap, shard=shard,
+                chunk=chunk,
+            )
+            assert res["pyramid_passes"] == steps
+            (rec,) = records()
+            assert rec.pyramid_passes == steps
+            assert "do not nest" in rec.getMessage()
+            assert "CASCADE_MAX_GROUP_BYTES" not in rec.getMessage()
+        assert _tree_hash(a) == _tree_hash(b)
 
 
 def test_cascade_idempotent_rerun(spark):
@@ -272,10 +291,12 @@ def test_cascade_idempotent_rerun(spark):
         assert _tree_hash(out) == h1
 
 
-def test_multitile_cascade_matches_loop_bytes(spark, tmp_path, monkeypatch):
+def test_multitile_cascade_matches_loop_bytes(
+    spark, tmp_path, monkeypatch, one_range_plan
+):
     """The multi-tile fused cascade must write byte-identical stores in
-    one pass and in one-step passes for every tile, including
-    edge-truncated grids."""
+    one pass (as planned for one writer range) and in one-step passes
+    for every tile, including edge-truncated grids."""
     import numpy as np
 
     import aind_exaspim_data_transformation_spark.zarrio.multitile as mt
@@ -298,8 +319,6 @@ def test_multitile_cascade_matches_loop_bytes(spark, tmp_path, monkeypatch):
         ]
         if one_step:
             monkeypatch.setattr(pipeline, "CASCADE_MAX_GROUP_BYTES", 0)
-        else:
-            monkeypatch.undo()
         return tiles, mt.convert_tiles_to_zarr(
             spark,
             tiles,

@@ -53,8 +53,8 @@ def _global_groups(settings):
     grids, specs, _, _ = multitile.plan_global_tasks(
         [(settings.input_source, settings.output_location)], settings
     )
-    n = len(multitile.group_offsets(grids)) - 1
-    groups = list(multitile.iter_groups(grids, 0, n))
+    n = len(multitile.unit_offsets(grids)) - 1
+    groups = list(multitile.iter_units(grids, 0, n))
     return groups, specs[settings.input_source][0]
 
 
@@ -64,7 +64,7 @@ def _cells(box, block=(16, 16, 16)):
 
 
 def _n_shards(groups, spec):
-    return sum(len(_cells(g[3], spec.shard_shape[2:])) for g in groups)
+    return sum(len(_cells(box, spec.shard_shape[2:])) for _, box in groups)
 
 
 @pytest.fixture()

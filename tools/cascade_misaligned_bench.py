@@ -1,18 +1,22 @@
-"""A/B bench: fused pyramid cascade, window-aligned vs misaligned shards.
+"""A/B bench: computed pyramid, window-aligned vs misaligned shards.
 
-Round-6 lifted the cascade's shard-alignment precondition via
-window-aligned superchunk groups (``cascade_group_multiple``); byte
-identity is proven in tests/test_pyramid_cascade.py. This tool records
-the PERF side of that story (round-5 acceptance bar: a misaligned config
-within 1.5x of the aligned cascade's throughput on the same volume).
+Byte identity of any pass plan is proven in
+tests/test_pyramid_cascade.py; this tool records the PERF side (the
+acceptance bar: a misaligned config within 1.5x of the aligned one's
+throughput on the same volume), and each config's ``pyramid_passes``.
 
-  aligned:    shard 128^3, factor 2, depth 4  -> group multiple 1
-  misaligned: shard 100^3, factor 2, depth 4  -> group multiple 2
-              (100 % 2^3 != 0, so groups scale to 200-shard windows)
+  aligned:    shard 128^3, factor 2, depth 4
+  misaligned: shard 100^3, factor 2, depth 4 (100 % 2^3 != 0)
+
+The pass plan depends on the writer range count (``multitile.
+pyramid_passes``): with 8 ranges (4 cores, 2 tasks per core) the
+aligned volume plans 64 / 8 / 1 units for levels 1 / 2 / 3, so its last
+level is read back from the store, [(0, 3), (2, 2)].
 
 Same 2.1 GB synthetic uint16 volume, same codec (zstd-3), same protocol
 as bench.py's pyramid row (1 untimed warm-up + 3 timed, median). Prints
-one JSON line.
+one JSON line. ``SPARK_GRAFT_CPUS`` sets the local core count (default
+32).
 """
 
 from __future__ import annotations
@@ -29,9 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from aind_exaspim_data_transformation_spark.config import ConvertJobSettings
 from aind_exaspim_data_transformation_spark.session import get_spark
 from aind_exaspim_data_transformation_spark.zarrio.pipeline import (
-    cascade_group_multiple,
     convert_to_zarr,
-    _level_specs,
 )
 
 CONFIGS = {
@@ -71,31 +73,12 @@ def main() -> None:
                 )
                 runs.append(time.monotonic() - t0)
         med = statistics.median(runs)
-        # the full-depth group multiple (None past the cap, where the
-        # cascade runs in the passes reported beside it)
-        from aind_exaspim_data_transformation_spark.sources.tensor import (
-            open_source,
-        )
-        from aind_exaspim_data_transformation_spark.operators.downsample import (
-            downsampled_shape,
-        )
-
-        st = settings("/tmp/x", cfg)
-        meta = open_source(VOLUME).meta
-        shapes = [meta.shapes[0]]
-        for _ in range(1, DEPTH):
-            shapes.append(downsampled_shape(shapes[-1], st.scale_factor))
-        specs = _level_specs(st, shapes, meta.dtype)
-        gm = cascade_group_multiple(
-            specs[0], st.scale_factor, DEPTH, st.superchunk_multiple
-        )
         result["configs"][name] = {
             "median_sec": round(med, 3),
             "runs": [round(x, 3) for x in runs],
             "gbps": round(r["stages"][0]["bytes_read"] / 1e9 / med, 4),
-            "group_multiple": gm,
             "plan": r["pyramid_plan"],
-            "passes": r["pyramid_passes"],
+            "pyramid_passes": r["pyramid_passes"],
         }
     a = result["configs"]["aligned_128"]["median_sec"]
     b = result["configs"]["misaligned_100"]["median_sec"]
