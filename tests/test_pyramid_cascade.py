@@ -175,10 +175,31 @@ def test_pyramid_passes_plan(monkeypatch, caplog):
     # factor 3, 50-voxel shards need groups of 3 on y and x, 6 on z.
     settings, specs = _specs((300,) * 3, (101,) * 3, (101,) * 3, 5)
     assert mt._grid("t", None, specs, 1, 4, settings).group == (202,) * 3
-    settings, specs = _specs((300,) * 3, (50,) * 3, (50,) * 3, 2)
-    assert pipeline.cascade_group_multiple(
-        specs[0], (3, 3, 3), settings.superchunk_multiple
-    ) == (6, 3, 3)
+
+
+def test_cascade_group_multiple_gate():
+    """The group-alignment gate for one reduce step: a superchunk group
+    whose extent the factor divides keeps the plain multiple; otherwise
+    the multiple grows by factor / gcd(extent, factor) on that axis
+    only."""
+    sm = (2, 1, 1)
+
+    def multiple(shard, factor):
+        _, specs = _specs((300,) * 3, shard, shard, 2)
+        return pipeline.cascade_group_multiple(specs[0], factor, sm)
+
+    # Power-of-two shards, factor 2: already aligned, group == sm.
+    assert multiple((64, 64, 64), (2, 2, 2)) == (2, 1, 1)
+    # 18 % 4 != 0 no longer matters: one step needs only 18 % 2 == 0.
+    assert multiple((18, 18, 18), (2, 2, 2)) == (2, 1, 1)
+    # Odd 101-voxel shards: z's 202-voxel group is even, y and x double.
+    assert multiple((101, 101, 101), (2, 2, 2)) == (2, 2, 2)
+    # Factor 3 on 48-voxel shards: 96 and 48 both divide by 3.
+    assert multiple((48, 48, 48), (3, 3, 3)) == (2, 1, 1)
+    # Factor 3 on 50-voxel shards: triple every axis.
+    assert multiple((50, 50, 50), (3, 3, 3)) == (6, 3, 3)
+    # An axis with factor 1 never widens.
+    assert multiple((101, 101, 101), (2, 2, 1)) == (2, 2, 1)
 
 
 @pytest.mark.parametrize(
