@@ -83,7 +83,7 @@ from .v2 import (
 #: x), its ``block`` (the shard, or a v2 level's chunk), its superchunk
 #: ``group`` extent (``key_m`` x ``block``), its ``unit`` extent, all in
 #: voxels, and ``blocks``, the block extent of each level after ``level``
-#: that the pass writes in-task (``_pass_blocks``), empty when it writes
+#: that the pass writes in-task (``_grid``), empty when it writes
 #: none. The plan's elements are its units, the cells of
 #: ``format.shard_grid(dims, unit)``, in its grids' list order, each
 #: row-major; a unit with no in-task level is one group.
@@ -145,10 +145,10 @@ def _grid(
     ``base``) on the window grid, so the writer completes a block by
     reducing its children into it in turn; per-window reduce results do
     not depend on the extent they are computed in, so any such tree
-    writes the bytes of one whole-level reduce. The first block is the
-    least such extent, one shard unless groups straddle shards; a deeper
-    block must be one shard: its footprint nests on the level below. A
-    unit is the base-level footprint of one last block."""
+    writes the bytes of one whole-level reduce. Each block is the least
+    such extent, one shard unless its children straddle shards; a level
+    does not nest when its children are off the window grid. A unit is
+    the base-level footprint of one last block."""
     spec, factor = specs[base], settings.scale_factor
     key_m = settings.superchunk_multiple
     if top > base:
@@ -167,8 +167,6 @@ def _grid(
                 return None
             else:
                 block.append(s if d <= s else math.lcm(s, c // f))
-        if blocks and tuple(block) != shard:
-            return None
         blocks.append(tuple(block))
         child, child_dims = block, dims
     unit = tuple(c * f ** len(blocks) for c, f in zip(child, factor))
@@ -187,13 +185,16 @@ def pyramid_passes(
     depth), ...]``: a pass reads level ``base`` (the source for the
     first pass, the store after it) and writes the ``depth - 1`` levels
     after it in-task (``_grid``). Each pass goes to the deepest level
-    where every tile's levels nest, every tile's group region plus one
-    block per level fit ``pipeline.CASCADE_MAX_GROUP_BYTES``, and the
-    dataset's units still number at least ``min(n_parts, units one
-    level deep)``, so a deeper pass never starves the ``n_parts`` writer
-    ranges. A one-step pass always runs, so the pyramid always
-    completes. When a pass ends because a level does not nest or the cap
-    binds, one record names why. Empty when nothing is computed."""
+    where every tile's levels nest and every tile's group region plus
+    one block per level fit ``pipeline.CASCADE_MAX_GROUP_BYTES``. When
+    the pass's base level, over the whole dataset, is larger than that
+    cap, the dataset's units must also still number at least
+    ``min(n_parts, units one level deep)``, so a deeper pass never
+    starves the ``n_parts`` writer ranges; a base level within the cap
+    stays in one pass on however few units (SCALE.md gives the measured
+    trade). A one-step pass always runs, so the pyramid always
+    completes. When a pass ends because a level does not nest or the
+    cap binds, one record names why. Empty when nothing is computed."""
     n_levels = max((len(s) for s in all_specs.values()), default=0)
     cap = pipeline.CASCADE_MAX_GROUP_BYTES
 
@@ -209,6 +210,12 @@ def pyramid_passes(
             for g in grids
         )
 
+    def level_bytes(level):  # every tile's level ``level``
+        return sum(
+            specs[level].np_dtype.itemsize * math.prod(specs[level].shape)
+            for specs in all_specs.values()
+        )
+
     def held(g):  # one group region plus one block per level, clipped
         specs = all_specs[g.tile_path]
         return specs[g.level].np_dtype.itemsize * sum(
@@ -221,7 +228,9 @@ def pyramid_passes(
     base = 0
     while base < n_levels - 1:
         top = base + 1
-        want = min(n_parts, n_units(plan(base, top)))
+        want = 0
+        if level_bytes(base) > cap:
+            want = min(n_parts, n_units(plan(base, top)))
         while top < n_levels - 1:
             grids = plan(base, top + 1)
             if None in grids:
@@ -229,14 +238,14 @@ def pyramid_passes(
                     f"level {top + 1}'s shards do not nest on level {top}'s"
                 )
                 break
-            if n_units(grids) < want:
-                break
             most = max(map(held, grids))
             if most > cap:
                 fallbacks.append(
                     f"levels {base + 1}-{top + 1} would hold {most} bytes "
                     f"per task, over CASCADE_MAX_GROUP_BYTES={cap}"
                 )
+                break
+            if n_units(grids) < want:
                 break
             top += 1
         passes.append((base, top - base + 1))

@@ -18,17 +18,3 @@ def spark():
     spark = get_spark("engine-tests", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
-
-
-@pytest.fixture()
-def one_range_plan(monkeypatch):
-    """Plan computed pyramids as if for one writer range: each pass then
-    goes as deep as its levels nest and fit the group cap, whatever the
-    session's core count (``multitile.pyramid_passes``)."""
-    from aind_exaspim_data_transformation_spark.zarrio import multitile
-
-    plan = multitile.pyramid_passes
-    monkeypatch.setattr(
-        multitile, "pyramid_passes",
-        lambda all_specs, settings, n_parts: plan(all_specs, settings, 1),
-    )

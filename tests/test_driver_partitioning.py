@@ -325,12 +325,12 @@ def _jobs_of(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_conversion_job_counts(spark, two_tiles, tmp_path, one_range_plan):
+def test_conversion_job_counts(spark, two_tiles, tmp_path):
     """Writer input needs no Spark job, and every level a pass computes
     is written inside its writer tasks: a two-tile fused cascade (one
-    pass, as planned for one writer range) runs the writer stage and
-    the stats result (2 jobs), under on_corrupt="quarantine" too, the
-    same as a translate run, two-tile or a single-tile Zarr v2 copy."""
+    pass) runs the writer stage and the stats result (2 jobs), under
+    on_corrupt="quarantine" too, the same as a translate run, two-tile
+    or a single-tile Zarr v2 copy."""
     cascade = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
                enumerate(two_tiles)]
     res = {}
@@ -410,8 +410,9 @@ def test_cascade_leaves_session_conf_alone(
     monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     tiles = [(src, str(tmp_path / f"c{i}.zarr")) for i, (src, _) in
              enumerate(two_tiles)]
-    convert_tiles_to_zarr(
+    res = convert_tiles_to_zarr(
         spark, tiles,
         _settings(translate_pyramid=False, downsample_levels=3),
     )
+    assert res["pyramid_plan"] == "fused_cascade"
     assert set_keys == []

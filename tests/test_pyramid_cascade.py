@@ -6,9 +6,12 @@ the levels after its base level inside its writer tasks: it reduces
 each unit's superchunk groups in tree order into one open block per
 level and writes each shard once its block is complete. The planner
 (`multitile.pyramid_passes`) ends a pass where a level's shards do not
-nest, where the units would number fewer than the writer ranges need,
-or where the held bytes would exceed `pipeline.CASCADE_MAX_GROUP_BYTES`;
-the next pass reads its base level back from the store. With the cap
+nest, where the held bytes would exceed
+`pipeline.CASCADE_MAX_GROUP_BYTES`, or, when the base level itself is
+over that cap, where the units would number fewer than the writer
+ranges need; the next pass reads its base level back from the store.
+The test session's 16 writer ranges matter only to the runs that lower
+the cap below their base level's bytes. With the cap
 at 0 every pass is one reduce step, the sequential level-by-level
 pyramid (which is golden-tested against the reference's downsample
 semantics). For any shape / mode / depth every pass plan must write a
@@ -116,10 +119,11 @@ def _specs(shape, shard, chunk, n_levels):
 
 def test_pyramid_passes_plan(monkeypatch, caplog):
     """The pass planner, for an explicit writer range count: each pass
-    goes as deep as every level nests (whole shards on the window grid),
-    the units still feed the ranges, and the held bytes fit the cap; a
-    pass that a level's nesting or the cap ended logs one record naming
-    why, and a pass the unit count ended logs none."""
+    goes as deep as every level nests (whole shards on the window grid)
+    and the held bytes fit the cap, and, when its base level is over the
+    cap, as its units still feed the ranges; a pass that a level's
+    nesting or the cap ended logs one record naming why, and a pass the
+    unit count ended logs none."""
     import aind_exaspim_data_transformation_spark.zarrio.multitile as mt
 
     logger = "aind_exaspim_data_transformation_spark.zarrio.multitile"
@@ -129,19 +133,29 @@ def test_pyramid_passes_plan(monkeypatch, caplog):
         # Level 1 is one 64x128x128 shard per tile, so each level is
         # one unit per tile: all of it in one pass.
         ("perfbench tile", perfbench, 4, 8, None, [(0, 4)], None),
-        # 64 / 8 / 1 units for levels 1 / 2 / 3: level 3 would starve
-        # the 8 ranges, so level 2 is read back for it.
+        # 2 GiB of level 0, over the cap: 64 / 8 / 1 units for levels
+        # 1 / 2 / 3, so level 3 would starve the 8 ranges and level 2 is
+        # read back for it; on one range it is one pass.
         ("1024^3 over 128^3", ((1024,) * 3, (128,) * 3, (64,) * 3, 4), 1,
          8, None, [(0, 3), (2, 2)], None),
-        # Level 2's 12-voxel x shards do not nest on level 1's 18-voxel
-        # ones, nor level 3's on level 2's, whatever the range count.
+        ("1024^3 over 128^3, 1 range",
+         ((1024,) * 3, (128,) * 3, (64,) * 3, 4), 1, 1, None, [(0, 4)],
+         None),
+        # 0.94 GiB of level 0 fits the cap: one pass on one unit.
+        ("1024x1024x480 over 128^3",
+         ((1024, 1024, 480), (128,) * 3, (64,) * 3, 4), 1, 8, None,
+         [(0, 4)], None),
+        # 32 MiB of level 0: one pass on one unit.
+        ("256^3 over 64^3", ((256,) * 3, (64,) * 3, (32,) * 3, 4), 1, 16,
+         None, [(0, 4)], None),
+        # Level 2's x block is three 12-voxel shards (36 voxels, clipped
+        # to its 15), the footprint of two of level 1's 18-voxel shards.
         ("100x80x60 over 18^3", ((100, 80, 60), (18,) * 3, (6,) * 3, 4), 1,
-         1, None, [(0, 2), (1, 2), (2, 2)],
-         "level 2's shards do not nest on level 1's"),
+         16, None, [(0, 4)], None),
         # Level 1's odd 101-voxel shards are off the window grid; a store
         # pass reads two of them as one group and goes to the last level.
         ("300^3 over 101^3", ((300,) * 3, (101,) * 3, (101,) * 3, 5), 1,
-         1, None, [(0, 2), (1, 4)],
+         16, None, [(0, 2), (1, 4)],
          "level 2's shards do not nest on level 1's"),
         ("cap 0", perfbench, 4, 8, 0, [(0, 2), (1, 2), (2, 2)],
          "CASCADE_MAX_GROUP_BYTES=0"),
@@ -211,19 +225,23 @@ def test_cascade_group_multiple_gate():
         ("100,80,60", "mean", 3, (18, 18, 18), (6, 6, 6)),
         ("90,66,50", "mode", 3, (18, 18, 18), (9, 9, 9)),
         ("100,80,60", "stride", 4, (20, 20, 20), (10, 10, 10)),
+        # Odd shards: level 2's do not nest on level 1's, so a store
+        # pass reads level 1 in two-shard groups and writes levels 2-4
+        # in-task.
+        ("300,300,300", "mean", 5, (101, 101, 101), (101, 101, 101)),
     ],
 )
 def test_misaligned_cascade_matches_loop_bytes(
-    spark, one_range_plan, shape, mode, levels, shard, chunk
+    spark, shape, mode, levels, shard, chunk
 ):
-    """Planned for one writer range, so a pass ends only where a level
-    does not nest: level 2's 12-voxel x shards do not nest on level 1's
-    18-voxel ones in the first geometry; the other two run in one
-    pass."""
+    """A block may span several shards of its level: the first three
+    geometries run in one pass; the last runs in two because odd shards
+    put level 1's blocks off the window grid."""
     want = {
-        ("100,80,60", "mean"): [[0, 1], [1, 2]],
+        ("100,80,60", "mean"): [[0, 2]],
         ("90,66,50", "mode"): [[0, 2]],
         ("100,80,60", "stride"): [[0, 3]],
+        ("300,300,300", "mean"): [[0, 1], [1, 4]],
     }[shape, mode]
     with tempfile.TemporaryDirectory() as tmp:
         a = os.path.join(tmp, "cascade.zarr")
@@ -244,18 +262,19 @@ def test_misaligned_cascade_matches_loop_bytes(
         assert _tree_hash(a) == _tree_hash(b)
 
 
-def test_two_pass_cascade_matches_one_pass_bytes(
-    spark, caplog, one_range_plan
-):
-    """A cap that admits levels 1-2 in-task but not level 3 splits a
-    4-level pyramid over 256^3 in 64^3 shards into [(0, 3), (2, 2)]:
-    the second pass reads level 2 back from the store. Held bytes
-    (uint16): a 128x64x64 group, 1 MiB, plus a 64^3 block per level,
-    512 KiB each, and a 32^3 level-3 block: 2,097,152 B to level 2 and
-    2,162,688 B to level 3. Over 18^3 shards level 2's 12-voxel x shards
-    do not nest on level 1's 18-voxel ones, so that pyramid runs in
-    one-step passes whatever the cap. Each fallback plan logs one record
-    naming its cause; the one-pass plan logs none."""
+def test_two_pass_cascade_matches_one_pass_bytes(spark, caplog):
+    """A cap that admits level 1 in-task but not level 2 splits a
+    4-level pyramid over 256^3 in 64^3 shards into [(0, 2), (1, 3)]:
+    the second pass reads level 1 back from the store and writes levels
+    2-3 in-task. Held bytes (uint16): a 128x64x64 group, 1 MiB, plus a
+    64^3 block per level, 512 KiB each: 2,097,152 B to level 2, over a
+    2,000,000 B cap; the store pass holds a 64^3 group, a 64^3 block
+    and a 32^3 one, 1,114,112 B. That plan logs one record naming the
+    cap; the one-pass plan logs none. Over 18^3 shards a 200,000 B cap
+    never binds, but it puts the 960,000 B level 0 over the cap, so the
+    unit count applies: level 2's 4 units would starve the session's 16
+    writer ranges where level 1 has 18, and the pyramid runs [(0, 2),
+    (1, 3)] without a record."""
     logger = "aind_exaspim_data_transformation_spark.zarrio.multitile"
 
     def records():
@@ -271,14 +290,14 @@ def test_two_pass_cascade_matches_one_pass_bytes(
         b = os.path.join(tmp, "two.zarr")
         ra = _convert(spark, a, "256,256,256", "mean", 4)
         assert records() == []
-        rb = _convert(spark, b, "256,256,256", "mean", 4, cap=2_100_000)
+        rb = _convert(spark, b, "256,256,256", "mean", 4, cap=2_000_000)
         (rec,) = records()
-        assert rec.pyramid_passes == [[0, 2], [2, 3]]
-        assert "CASCADE_MAX_GROUP_BYTES=2100000" in rec.getMessage()
+        assert rec.pyramid_passes == [[0, 1], [1, 3]]
+        assert "CASCADE_MAX_GROUP_BYTES=2000000" in rec.getMessage()
         assert ra["pyramid_plan"] == "fused_cascade"
         assert ra["pyramid_passes"] == [[0, 3]]
         assert rb["pyramid_plan"] == "cascade_passes"
-        assert rb["pyramid_passes"] == [[0, 2], [2, 3]]
+        assert rb["pyramid_passes"] == [[0, 1], [1, 3]]
         assert _tree_hash(a) == _tree_hash(b)
         assert [s["level"] for s in rb["stages"]] == [0, 1, 2, 3]
         for sa, sb in zip(ra["stages"], rb["stages"]):
@@ -287,17 +306,15 @@ def test_two_pass_cascade_matches_one_pass_bytes(
 
         a = os.path.join(tmp, "one18.zarr")
         b = os.path.join(tmp, "two18.zarr")
-        steps = [[0, 1], [1, 2], [2, 3]]
-        for out, cap in ((a, None), (b, 200_000)):
+        for out, cap, want in (
+            (a, None, [[0, 3]]), (b, 200_000, [[0, 1], [1, 3]])
+        ):
             res = _convert(
                 spark, out, "100,80,60", "mean", 4, cap=cap, shard=shard,
                 chunk=chunk,
             )
-            assert res["pyramid_passes"] == steps
-            (rec,) = records()
-            assert rec.pyramid_passes == steps
-            assert "do not nest" in rec.getMessage()
-            assert "CASCADE_MAX_GROUP_BYTES" not in rec.getMessage()
+            assert res["pyramid_passes"] == want
+            assert records() == []
         assert _tree_hash(a) == _tree_hash(b)
 
 
@@ -312,12 +329,10 @@ def test_cascade_idempotent_rerun(spark):
         assert _tree_hash(out) == h1
 
 
-def test_multitile_cascade_matches_loop_bytes(
-    spark, tmp_path, monkeypatch, one_range_plan
-):
+def test_multitile_cascade_matches_loop_bytes(spark, tmp_path, monkeypatch):
     """The multi-tile fused cascade must write byte-identical stores in
-    one pass (as planned for one writer range) and in one-step passes
-    for every tile, including edge-truncated grids."""
+    one pass and in one-step passes for every tile, including
+    edge-truncated grids."""
     import numpy as np
 
     import aind_exaspim_data_transformation_spark.zarrio.multitile as mt

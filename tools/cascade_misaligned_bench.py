@@ -8,10 +8,11 @@ throughput on the same volume), and each config's ``pyramid_passes``.
   aligned:    shard 128^3, factor 2, depth 4
   misaligned: shard 100^3, factor 2, depth 4 (100 % 2^3 != 0)
 
-The pass plan depends on the writer range count (``multitile.
+The 2 GiB level 0 is larger than ``CASCADE_MAX_GROUP_BYTES``, so the
+pass plan depends on the writer range count (``multitile.
 pyramid_passes``): with 8 ranges (4 cores, 2 tasks per core) the
-aligned volume plans 64 / 8 / 1 units for levels 1 / 2 / 3, so its last
-level is read back from the store, [(0, 3), (2, 2)].
+aligned volume plans 64 / 8 / 1 units for levels 1 / 2 / 3, so its
+level 2 is read back from the store, [(0, 3), (2, 2)].
 
 Same 2.1 GB synthetic uint16 volume, same codec (zstd-3), same protocol
 as bench.py's pyramid row (1 untimed warm-up + 3 timed, median). Prints

@@ -253,11 +253,10 @@ def _quarantine(spark, tmp, out):
 
 
 def _misaligned(spark, out, passes):
-    """100x80x60, 4 levels over 18^3 shards (18 % 2^3 != 0). Level 2's
-    12-voxel x shards do not nest on level 1's 18-voxel ones, nor level
-    3's on level 2's, so the pyramid runs in one-step passes with or
-    without the 200,000-byte group cap (which bound a 2-pass split of
-    the old cascade, hence the row names)."""
+    """100x80x60, 4 levels over 18^3 shards (18 % 2^3 != 0); under a
+    200,000-byte group cap the pyramid runs as passes [(0, 3), (2, 2)]:
+    the cap puts level 0 over it, so on this session's 4 writer ranges
+    level 3's one unit ends the first pass."""
     res = _convert(
         spark, "synth://100,80,60,1", out, chunk_shape=(6, 6, 6),
         shard_shape=(18, 18, 18), translate_pyramid=False,
@@ -316,12 +315,10 @@ CASES = {
         **{**SYNTH, "codec": "none", "transpose_order": "C"},
     ),
     "one-pass synth misaligned 4-level": lambda spark, tmp, out: _misaligned(
-        spark, out, [[0, 1], [1, 2], [2, 3]]
+        spark, out, [[0, 3]]
     ),
     "two-pass synth misaligned 4-level": _capped(
-        lambda spark, tmp, out: _misaligned(
-            spark, out, [[0, 1], [1, 2], [2, 3]]
-        ),
+        lambda spark, tmp, out: _misaligned(spark, out, [[0, 2], [2, 3]]),
         200_000,
     ),
     "v2 quarantine corrupt ims": _v2_quarantine,
