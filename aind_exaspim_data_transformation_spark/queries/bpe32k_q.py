@@ -56,10 +56,26 @@ from ..functions.bpe32k import (
 )
 from ..sources.tables import load_table
 from ._helpers import fan_out_small_scan
-from .dataprep_q import _SEQ_LEN
+from .dataprep_q import (
+    _pack_oracle,
+    _pipe_oracle,
+    build_training_pipeline,
+    pack_sequences,
+)
 from .registry import query
 
 _PREFIX_RANKS = 512
+
+
+def _count32k_udf():
+    """Per-document token count under the full 32k vocabulary (heap
+    encoder) as a pandas UDF — the counter every 32k query shares."""
+
+    @F.pandas_udf("long")
+    def n_tokens32k(texts: pd.Series) -> pd.Series:
+        return token_count_series(texts).astype("int64")
+
+    return n_tokens32k
 
 
 _TOKENS32K_ORACLE = f"""
@@ -75,16 +91,11 @@ def q_text_bpe32k_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token count under the full 32,768-merge vocabulary
     (heap encoder) vs raw character length — the doc-by-doc
     compression a production tokenizer achieves."""
-
-    @F.pandas_udf("long")
-    def n_tokens(texts: pd.Series) -> pd.Series:
-        return token_count_series(texts).astype("int64")
-
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
-        n_tokens(F.col("text")).alias("n_tokens"),
+        _count32k_udf()(F.col("text")).alias("n_tokens"),
     )
 
 
@@ -143,157 +154,51 @@ def q_text_bpe32k_prefix512(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pack32k_oracle() -> str:
-    """Same packing arithmetic as q_docs_pack_sequences_bpe, with the
-    token counter swapped for the full 32k fold — exact, O(vocab x
-    corpus), driver-gate SF only (tagged with the tokens query in
-    ORACLE_INFEASIBLE_AT_SCALE)."""
-    tc = sql_token_count32k("text")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, source, CAST({tc} AS BIGINT) AS n_tokens
-  FROM documents),
-cum AS (
-  SELECT doc_id, source, n_tokens,
-    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_in_src
-  FROM toks),
-src_tot AS (
-  SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS total FROM toks
-  GROUP BY source),
-src_off AS (
-  SELECT source,
-    CAST(SUM(total) OVER (ORDER BY source
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total
-      AS BIGINT) AS offset
-  FROM src_tot)
-SELECT c.doc_id, c.source, c.n_tokens,
-  CAST(o.offset + c.cum_in_src - c.n_tokens AS BIGINT) AS global_start,
-  CAST((o.offset + c.cum_in_src - c.n_tokens) // {_SEQ_LEN} AS BIGINT)
-    AS first_example,
-  CAST((o.offset + c.cum_in_src - 1) // {_SEQ_LEN} AS BIGINT)
-    AS last_example
-FROM cum c JOIN src_off o ON c.source = o.source
-"""
-
-
-@query("q_docs_pack_sequences_bpe32k", oracle=_pack32k_oracle())
+# The packing oracle's token counter is the exact 32k fold: O(vocab x
+# corpus), driver-gate SF only (tagged with the tokens query in
+# ORACLE_INFEASIBLE_AT_SCALE).
+@query(
+    "q_docs_pack_sequences_bpe32k",
+    oracle=_pack_oracle(f"CAST({sql_token_count32k('text')} AS BIGINT)"),
+)
 def q_docs_pack_sequences_bpe32k(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """GPT-style sequence packing by PRODUCTION-vocabulary token counts
     — the form a real pipeline runs (pack budgets move a lot between a
     256-merge and a 32k-merge tokenizer: ~2.4 vs ~7.2 chars/token on
-    this corpus). Identical packing arithmetic to
+    this corpus). The same ``pack_sequences`` step as
     ``q_docs_pack_sequences_bpe`` (per-source parallel cumsum + offset
     window, text never shuffles); only the counter changed to the heap
     encoder."""
-
-    @F.pandas_udf("long")
-    def n_tokens32k(texts: pd.Series) -> pd.Series:
-        return token_count_series(texts).astype("int64")
-
-    from pyspark.sql import Window
-
     toks = fan_out_small_scan(
         load_table(spark, sf_dir, "documents")
     ).select(
-        "doc_id", "source", n_tokens32k(F.col("text")).alias("n_tokens")
+        "doc_id", "source", _count32k_udf()(F.col("text")).alias("n_tokens")
     )
-    w_src = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = toks.withColumn("cum_in_src", F.sum("n_tokens").over(w_src))
-    src_tot = toks.groupBy("source").agg(F.sum("n_tokens").alias("total"))
-    w_off = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    src_off = src_tot.select(
-        "source",
-        (F.sum("total").over(w_off) - F.col("total")).alias("offset"),
-    )
-    gstart = F.col("offset") + F.col("cum_in_src") - F.col("n_tokens")
-    gend = F.col("offset") + F.col("cum_in_src")
-    return cum.join(F.broadcast(src_off), "source").select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        gstart.alias("global_start"),
-        F.floor(gstart / _SEQ_LEN).alias("first_example"),
-        F.floor((gend - 1) / _SEQ_LEN).alias("last_example"),
-    )
+    return pack_sequences(toks, "n_tokens", ["doc_id", "source"])
 
 
-def _pipe32k_oracle() -> str:
-    """The full composite-pipeline oracle (filter -> dedup -> resample
-    -> pack) with the packing counter swapped for the exact 32k replace
-    fold. O(vocab x corpus) like the tokens oracle — driver-gate SF
-    only (tagged in ORACLE_INFEASIBLE_AT_SCALE); the quality filter and
-    sampling stages are byte-identical to q_docs_training_pipeline's
-    oracle so the two pipelines stay provably in lockstep everywhere
-    except the counter."""
-    from .dataprep_q import _DOMAIN_SQL, _probs_sql, _uniform_sql
-
-    tc = sql_token_count32k("text")
-    return f"""
-WITH base AS (
-  SELECT doc_id, source, text, string_split(text, ' ') AS ws,
-         len(string_split(text, ' ')) AS n_words
-  FROM documents),
-sig AS (
-  SELECT doc_id, source, text, n_words,
-    CAST(list_max(list_transform(list_distinct(ws),
-           w -> len(list_filter(ws, x -> x = w)))) AS DOUBLE) / n_words
-      AS top_frac,
-    1.0 - CAST(len(list_distinct(list_transform(range(1, n_words),
-           i -> ws[i] || ' ' || ws[i + 1]))) AS DOUBLE)
-          / (n_words - 1) AS dup2_frac
-  FROM base WHERE n_words >= 10),
-filtered AS (
+# The composite-pipeline oracle with the packing counter swapped for the
+# exact 32k replace fold: O(vocab x corpus) like the tokens oracle,
+# driver-gate SF only (tagged in ORACLE_INFEASIBLE_AT_SCALE). The filter,
+# dedup, sampling and packing CTEs are q_docs_training_pipeline's
+# (one builder, _pipe_oracle), so the two pipelines differ only in the
+# counter.
+@query(
+    "q_docs_training_pipeline_bpe32k",
+    oracle=_pipe_oracle(
+        f"""filtered AS (
   SELECT doc_id, source, text FROM sig
   WHERE top_frac <= 0.20 AND dup2_frac <= 0.60),
 toked AS (
-  SELECT doc_id, source, text, CAST({tc} AS BIGINT) AS n_tokens
-  FROM filtered),
-deduped AS (
-  SELECT doc_id, source, n_tokens FROM (
-    SELECT doc_id, source, n_tokens,
-      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM toked)
-  WHERE rn = 1),
-doms AS (
-  SELECT doc_id, source, n_tokens, {_DOMAIN_SQL} AS domain
-  FROM deduped),
-{_probs_sql("doms")},
-sampled AS (
-  SELECT d.doc_id, d.source, d.domain, d.n_tokens
-  FROM doms d JOIN probs p ON d.domain = p.domain
-  WHERE {_uniform_sql("CAST(d.doc_id AS VARCHAR)")} < p.keep_prob),
-cum AS (
-  SELECT doc_id, source, domain, n_tokens,
-    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_in_src
-  FROM sampled),
-src_off AS (
-  SELECT source,
-    CAST(SUM(total) OVER (ORDER BY source
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total
-      AS BIGINT) AS offset
-  FROM (SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS total
-        FROM sampled GROUP BY source))
-SELECT c.doc_id, c.source, c.domain, c.n_tokens,
-  CAST(o.offset + c.cum_in_src - c.n_tokens AS BIGINT) AS global_start,
-  CAST((o.offset + c.cum_in_src - c.n_tokens) // {_SEQ_LEN} AS BIGINT)
-    AS first_example,
-  CAST((o.offset + c.cum_in_src - 1) // {_SEQ_LEN} AS BIGINT)
-    AS last_example
-FROM cum c JOIN src_off o ON c.source = o.source
-"""
-
-
-@query("q_docs_training_pipeline_bpe32k", oracle=_pipe32k_oracle())
+  SELECT doc_id, source, text,
+    CAST({sql_token_count32k('text')} AS BIGINT) AS n_tokens
+  FROM filtered)""",
+        "n_tokens",
+        "toked",
+    ),
+)
 def q_docs_training_pipeline_bpe32k(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -305,16 +210,9 @@ def q_docs_training_pipeline_bpe32k(
     pandas-UDF column in the post-filter projection; only filter
     survivors pay the encode, the survivor cache still carries no
     text)."""
-
-    @F.pandas_udf("long")
-    def n_tokens32k(texts: pd.Series) -> pd.Series:
-        return token_count_series(texts).astype("int64")
-
-    from .dataprep_q import build_training_pipeline
-
     return build_training_pipeline(
         spark,
         sf_dir,
-        pack_counter=n_tokens32k,
+        pack_counter=_count32k_udf(),
         counter_name="n_tokens",
     )

@@ -4,8 +4,8 @@
 byte-level BPE merges table (``functions/bpe.py``) — the faithful
 token accounting a production LLM pipeline packs by, replacing the
 whitespace-split proxy. ``q_docs_pack_sequences_bpe`` is the
-token-faithful twin of ``q_docs_pack_sequences``: identical packing
-arithmetic, but over BPE token counts.
+token-faithful twin of ``q_docs_pack_sequences``: the same
+``dataprep_q.pack_sequences`` step, but over BPE token counts.
 
 Oracle strategy: the encode fold is rendered as a nested DuckDB
 ``replace()`` chain from the SAME merges table (``sql_token_count``),
@@ -14,8 +14,8 @@ RNG, no precomputed answers.
 
 Scale: encode is an Arrow-batched pandas UDF, map-only over the text
 column (the merges table rides along as a ~3 KB closure constant);
-packing adds the same per-source parallel-cumsum shape as the
-whitespace variant — one narrow shuffle of (doc_id, source, n_tokens)
+packing is the whitespace variant's per-source parallel cumsum
+(``pack_sequences``) — one narrow shuffle of (doc_id, source, n_tokens)
 rows, text never shuffles.
 """
 
@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bpe import (
@@ -33,7 +33,7 @@ from ..functions.bpe import (
     token_count_series,
 )
 from ..sources.tables import load_table
-from .dataprep_q import _SEQ_LEN
+from .dataprep_q import _pack_oracle, pack_sequences
 from .registry import query
 
 
@@ -66,41 +66,15 @@ def q_text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PACK_BPE_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, source,
-    CAST({sql_token_count('text')} AS BIGINT) AS n_tokens
-  FROM documents),
-cum AS (
-  SELECT doc_id, source, n_tokens,
-    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_in_src
-  FROM toks),
-src_tot AS (
-  SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS total FROM toks
-  GROUP BY source),
-src_off AS (
-  SELECT source,
-    CAST(SUM(total) OVER (ORDER BY source
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total
-      AS BIGINT) AS offset
-  FROM src_tot)
-SELECT c.doc_id, c.source, c.n_tokens,
-  CAST(o.offset + c.cum_in_src - c.n_tokens AS BIGINT) AS global_start,
-  CAST((o.offset + c.cum_in_src - c.n_tokens) // {_SEQ_LEN} AS BIGINT)
-    AS first_example,
-  CAST((o.offset + c.cum_in_src - 1) // {_SEQ_LEN} AS BIGINT)
-    AS last_example
-FROM cum c JOIN src_off o ON c.source = o.source
-"""
-
-
-@query("q_docs_pack_sequences_bpe", oracle=_PACK_BPE_ORACLE)
+@query(
+    "q_docs_pack_sequences_bpe",
+    oracle=_pack_oracle(f"CAST({sql_token_count('text')} AS BIGINT)"),
+)
 def q_docs_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-faithful GPT-style sequence packing: concatenate the BPE
     token stream in (source, doc_id) order and cut every ``_SEQ_LEN``
     tokens; emit each document's global token offset and the example-id
-    range it lands in. Same integer window arithmetic as the
+    range it lands in. The same ``pack_sequences`` step as the
     whitespace-token variant (``q_docs_pack_sequences``) — only the
     token counter changed."""
     toks = load_table(spark, sf_dir, "documents").select(
@@ -108,30 +82,7 @@ def q_docs_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         _bpe_count_udf()(F.col("text")).alias("n_tokens"),
     )
-    w_src = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = toks.withColumn("cum_in_src", F.sum("n_tokens").over(w_src))
-    src_tot = toks.groupBy("source").agg(F.sum("n_tokens").alias("total"))
-    w_off = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    src_off = src_tot.select(
-        "source",
-        (F.sum("total").over(w_off) - F.col("total")).alias("offset"),
-    )
-    gstart = F.col("offset") + F.col("cum_in_src") - F.col("n_tokens")
-    gend = F.col("offset") + F.col("cum_in_src")
-    return cum.join(F.broadcast(src_off), "source").select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        gstart.alias("global_start"),
-        F.floor(gstart / _SEQ_LEN).alias("first_example"),
-        F.floor((gend - 1) / _SEQ_LEN).alias("last_example"),
-    )
+    return pack_sequences(toks, "n_tokens", ["doc_id", "source"])
 
 
 # Corpus vocabulary usage: which learned merges actually carry the

@@ -155,9 +155,54 @@ def q_docs_temperature_sample(
     )
 
 
-_PACK_ORACLE = f"""
+def pack_sequences(
+    rows: DataFrame, counter: str, cols: list[str]
+) -> DataFrame:
+    """GPT-style packing arithmetic over ``rows`` (with ``source``,
+    ``doc_id`` and a per-document token count ``counter``): concatenate
+    the token stream in (source, doc_id) order, cut every ``_SEQ_LEN``
+    tokens, and emit ``cols``, the counter, each document's global token
+    offset and the example-id range it lands in.
+
+    The running sum is per source (parallel windows); a second window
+    over the per-source TOTALS (one row per source) supplies each
+    source's global offset, so no window runs over the whole corpus on
+    one partition. Pure integer arithmetic — exact at any scale."""
+    w_src = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = rows.withColumn("cum_in_src", F.sum(counter).over(w_src))
+    w_off = Window.orderBy("source").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    src_off = (
+        rows.groupBy("source")
+        .agg(F.sum(counter).alias("total"))
+        .select(
+            "source",
+            (F.sum("total").over(w_off) - F.col("total")).alias("offset"),
+        )
+    )
+    gstart = F.col("offset") + F.col("cum_in_src") - F.col(counter)
+    gend = F.col("offset") + F.col("cum_in_src")
+    return cum.join(F.broadcast(src_off), "source").select(
+        *cols,
+        counter,
+        gstart.alias("global_start"),
+        F.floor(gstart / _SEQ_LEN).alias("first_example"),
+        F.floor((gend - 1) / _SEQ_LEN).alias("last_example"),
+    )
+
+
+def _pack_oracle(n_tokens_sql: str) -> str:
+    """DuckDB twin of ``pack_sequences`` over ``documents``, counting
+    each document's tokens with ``n_tokens_sql`` (whitespace words,
+    256-merge BPE or the 32k fold)."""
+    return f"""
 WITH toks AS (
-  SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens
+  SELECT doc_id, source, {n_tokens_sql} AS n_tokens
   FROM documents),
 cum AS (
   SELECT doc_id, source, n_tokens,
@@ -183,7 +228,10 @@ FROM cum c JOIN src_off o ON c.source = o.source
 """
 
 
-@query("q_docs_pack_sequences", oracle=_PACK_ORACLE)
+@query(
+    "q_docs_pack_sequences",
+    oracle=_pack_oracle("len(string_split(text, ' '))"),
+)
 def q_docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style sequence packing: concatenate the whitespace-token
     stream in (source, doc_id) order and cut every ``_SEQ_LEN`` tokens;
@@ -194,30 +242,7 @@ def q_docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size(F.split("text", " ")).alias("n_tokens"),
     )
-    w_src = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = toks.withColumn("cum_in_src", F.sum("n_tokens").over(w_src))
-    src_tot = toks.groupBy("source").agg(F.sum("n_tokens").alias("total"))
-    w_off = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    src_off = src_tot.select(
-        "source",
-        (F.sum("total").over(w_off) - F.col("total")).alias("offset"),
-    )
-    gstart = F.col("offset") + F.col("cum_in_src") - F.col("n_tokens")
-    gend = F.col("offset") + F.col("cum_in_src")
-    return cum.join(F.broadcast(src_off), "source").select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        gstart.alias("global_start"),
-        F.floor(gstart / _SEQ_LEN).alias("first_example"),
-        F.floor((gend - 1) / _SEQ_LEN).alias("last_example"),
-    )
+    return pack_sequences(toks, "n_tokens", ["doc_id", "source"])
 
 
 # --------------------------------------------------------------------------
@@ -236,10 +261,15 @@ def q_docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text-column scan + filter + dedup window (measured: 12 parquet scans
 # of the corpus). Post-dedup rows carry only (doc_id, source, n_words,
 # domain) — the text never enters the cache. The heaviest exchange is
-# the dedup hash partition; packing reuses the per-source
-# parallel-cumsum shape of q_docs_pack_sequences.
+# the dedup hash partition; packing is the pack_sequences step
+# q_docs_pack_sequences runs.
 # --------------------------------------------------------------------------
-_PIPE_ORACLE = f"""
+def _pipe_oracle(counted: str, counter: str, src: str) -> str:
+    """DuckDB twin of ``build_training_pipeline``: the quality-filter
+    signals, then ``counted`` (the CTEs from the filter to ``src``,
+    which carries the text and the packing counter ``counter``), then
+    dedup -> resample -> pack."""
+    return f"""
 WITH base AS (
   SELECT doc_id, source, text, string_split(text, ' ') AS ws,
          len(string_split(text, ' ')) AS n_words
@@ -253,26 +283,24 @@ sig AS (
            i -> ws[i] || ' ' || ws[i + 1]))) AS DOUBLE)
           / (n_words - 1) AS dup2_frac
   FROM base WHERE n_words >= 10),
-filtered AS (
-  SELECT doc_id, source, text, n_words FROM sig
-  WHERE top_frac <= 0.20 AND dup2_frac <= 0.60),
+{counted},
 deduped AS (
-  SELECT doc_id, source, n_words FROM (
-    SELECT doc_id, source, n_words,
+  SELECT doc_id, source, {counter} FROM (
+    SELECT doc_id, source, {counter},
       ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM filtered)
+    FROM {src})
   WHERE rn = 1),
 doms AS (
-  SELECT doc_id, source, n_words, {_DOMAIN_SQL} AS domain
+  SELECT doc_id, source, {counter}, {_DOMAIN_SQL} AS domain
   FROM deduped),
 {_probs_sql("doms")},
 sampled AS (
-  SELECT d.doc_id, d.source, d.domain, d.n_words
+  SELECT d.doc_id, d.source, d.domain, d.{counter}
   FROM doms d JOIN probs p ON d.domain = p.domain
   WHERE {_uniform_sql("CAST(d.doc_id AS VARCHAR)")} < p.keep_prob),
 cum AS (
-  SELECT doc_id, source, domain, n_words,
-    SUM(n_words) OVER (PARTITION BY source ORDER BY doc_id
+  SELECT doc_id, source, domain, {counter},
+    SUM({counter}) OVER (PARTITION BY source ORDER BY doc_id
       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_in_src
   FROM sampled),
 src_off AS (
@@ -280,11 +308,11 @@ src_off AS (
     CAST(SUM(total) OVER (ORDER BY source
       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total
       AS BIGINT) AS offset
-  FROM (SELECT source, CAST(SUM(n_words) AS BIGINT) AS total
+  FROM (SELECT source, CAST(SUM({counter}) AS BIGINT) AS total
         FROM sampled GROUP BY source))
-SELECT c.doc_id, c.source, c.domain, c.n_words,
-  CAST(o.offset + c.cum_in_src - c.n_words AS BIGINT) AS global_start,
-  CAST((o.offset + c.cum_in_src - c.n_words) // {_SEQ_LEN} AS BIGINT)
+SELECT c.doc_id, c.source, c.domain, c.{counter},
+  CAST(o.offset + c.cum_in_src - c.{counter} AS BIGINT) AS global_start,
+  CAST((o.offset + c.cum_in_src - c.{counter}) // {_SEQ_LEN} AS BIGINT)
     AS first_example,
   CAST((o.offset + c.cum_in_src - 1) // {_SEQ_LEN} AS BIGINT)
     AS last_example
@@ -373,39 +401,21 @@ def build_training_pipeline(
         .where(u < F.col("keep_prob"))
         .select("doc_id", "source", "domain", counter_name)
     )
-    w_src = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = sampled.withColumn(
-        "cum_in_src", F.sum(counter_name).over(w_src)
-    )
-    w_off = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    src_off = (
-        sampled.groupBy("source")
-        .agg(F.sum(counter_name).alias("total"))
-        .select(
-            "source",
-            (F.sum("total").over(w_off) - F.col("total")).alias("offset"),
-        )
-    )
-    gstart = F.col("offset") + F.col("cum_in_src") - F.col(counter_name)
-    gend = F.col("offset") + F.col("cum_in_src")
-    return cum.join(F.broadcast(src_off), "source").select(
-        "doc_id",
-        "source",
-        "domain",
-        counter_name,
-        gstart.alias("global_start"),
-        F.floor(gstart / _SEQ_LEN).alias("first_example"),
-        F.floor((gend - 1) / _SEQ_LEN).alias("last_example"),
+    return pack_sequences(
+        sampled, counter_name, ["doc_id", "source", "domain"]
     )
 
 
-@query("q_docs_training_pipeline", oracle=_PIPE_ORACLE)
+@query(
+    "q_docs_training_pipeline",
+    oracle=_pipe_oracle(
+        """filtered AS (
+  SELECT doc_id, source, text, n_words FROM sig
+  WHERE top_frac <= 0.20 AND dup2_frac <= 0.60)""",
+        "n_words",
+        "filtered",
+    ),
+)
 def q_docs_training_pipeline(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

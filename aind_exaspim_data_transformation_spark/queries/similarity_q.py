@@ -15,9 +15,12 @@ a bounded candidate fraction of the corpus.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.kmeans import Codebook, assign_nearest
 from ..sources.tables import load_table
 from ._helpers import fan_out_small_scan
 from .lifecycle import track_persist
@@ -44,6 +47,38 @@ def _norm(a: str) -> Column:
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
+    )
+
+
+def _rerank_topk(
+    cand: DataFrame, emb: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """The exact tail of every ANN path: cosine similarity of each
+    (qid, cid) candidate, rounded to 6 decimals, then the top ``k`` per
+    query (ties to the lower cid). The query vectors (vec_id <
+    ``n_queries``) broadcast; the candidates join the corpus by id."""
+    q = emb.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
+    c = emb.select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    )
+    scored = (
+        cand.join(F.broadcast(q), "qid")
+        .join(c, "cid")
+        .select(
+            "qid",
+            "cid",
+            F.round(
+                _dot("qe", "ce") / (_norm("qe") * _norm("ce")), 6
+            ).alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("cid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("qid", "cid", "cos_sim")
     )
 
 
@@ -421,29 +456,7 @@ def ann_lsh_topk(
         .select("qid", F.col("vec_id").alias("cid"))
         .distinct()
     )
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored = (
-        cand.join(F.broadcast(q), "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                _dot("qe", "ce") / (_norm("qe") * _norm("ce")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "cid", "cos_sim")
-    )
+    return _rerank_topk(cand, emb, n_queries, k)
 
 
 # (q_ann_ivf lives after the k-means section below — its coarse
@@ -644,6 +657,31 @@ pcl{it} AS MATERIALIZED (
 
 _PQ_TRAIN_CHAIN, _PQ_CENTS, _PQ_CENTLISTS = _pq_train_cte()
 
+# The search tail of both PQ oracles (flat and residual): the top-_PQ_R
+# ADC candidates per query from ``adc``, exact cosine, top 3 — the
+# DuckDB twin of _adc_shortlist + _rerank_topk.
+_PQ_RERANK_SQL = f"""shortlist AS (
+  SELECT qid, cid
+  FROM (SELECT qid, cid,
+          ROW_NUMBER() OVER (PARTITION BY qid
+                             ORDER BY approx_d2, cid) AS rn
+        FROM adc)
+  WHERE rn <= {_PQ_R}),
+reranked AS (
+  SELECT s.qid, s.cid,
+    round({_SQL_DOT.format(a="a.embedding", b="b.embedding")}
+      / ({_SQL_NORM.format(a="a.embedding")}
+         * {_SQL_NORM.format(a="b.embedding")}), 6) AS cos_sim
+  FROM shortlist s JOIN embeddings a ON s.qid = a.vec_id
+                   JOIN embeddings b ON s.cid = b.vec_id)
+SELECT qid, cid, cos_sim
+FROM (SELECT qid, cid, cos_sim,
+        ROW_NUMBER() OVER (PARTITION BY qid
+                           ORDER BY cos_sim DESC, cid) AS rn
+      FROM reranked)
+WHERE rn <= 3
+"""
+
 _PQ_ORACLE = f"""
 WITH {_PQ_TRAIN_CHAIN},
 cents AS (SELECT k, m, cvec FROM {_PQ_CENTS}),
@@ -677,27 +715,7 @@ adc AS (
   FROM enc e JOIN lut l ON e.m = l.m AND e.k = l.k
   WHERE l.qid <> e.vec_id
   GROUP BY l.qid, e.vec_id),
-shortlist AS (
-  SELECT qid, cid
-  FROM (SELECT qid, cid,
-          ROW_NUMBER() OVER (PARTITION BY qid
-                             ORDER BY approx_d2, cid) AS rn
-        FROM adc)
-  WHERE rn <= {_PQ_R}),
-reranked AS (
-  SELECT s.qid, s.cid,
-    round({_SQL_DOT.format(a="a.embedding", b="b.embedding")}
-      / ({_SQL_NORM.format(a="a.embedding")}
-         * {_SQL_NORM.format(a="b.embedding")}), 6) AS cos_sim
-  FROM shortlist s JOIN embeddings a ON s.qid = a.vec_id
-                   JOIN embeddings b ON s.cid = b.vec_id)
-SELECT qid, cid, cos_sim
-FROM (SELECT qid, cid, cos_sim,
-        ROW_NUMBER() OVER (PARTITION BY qid
-                           ORDER BY cos_sim DESC, cid) AS rn
-      FROM reranked)
-WHERE rn <= 3
-"""
+{_PQ_RERANK_SQL}"""
 
 
 def _pq_subvectors(id_col: str, out: str) -> list:
@@ -757,6 +775,215 @@ def _adc_shortlist(
     return ranked.where(F.col("rn") <= shortlist_r).select("qid", "cid")
 
 
+# Codebook TRAINING (round-12), shared by flat PQ over the embeddings
+# and IVF-PQ over the coarse residuals: _PQ_ITERS deterministic Lloyd
+# rounds per subspace from the first-_PQ_K init — the production
+# k-means shape (operators/kmeans.py): assignment is a map-only Arrow
+# kernel (numpy argmin, codebook in the closure), the update shuffles
+# only narrow (m, k, dim, val) rows, and the driver collects just the
+# M x K x D codebook per round. The update's VALUE-sorted fold
+# (_sorted_fold_update) mirrors the oracle's per-dim list_sort fold so
+# every trained centroid double is bit-identical across engines (the
+# q_kmeans determinism harness; production form = plain avg).
+def _sorted_fold_update(
+    dims: DataFrame, keys: list[str], out: str
+) -> DataFrame:
+    """The Lloyd update of the k-means and PQ trainers: from
+    (*keys, dim, val) member rows, each centroid's dim-ordered mean
+    array ``out``, one row per ``keys``.
+
+    Skew-audit note (round 8): the per-(key, dim) sorted fold holds one
+    cluster's members for one dimension in a group — the ONE
+    deliberately order-gathering aggregation left in the registry. It
+    exists solely so the centroid double is bit-identical to the
+    oracle's value-sorted sum under any partitioning; the production
+    form is plain avg(val) (single-scalar state, map-side combine),
+    identical modulo float association — see COVERAGE.md
+    "Unbounded-state audit"."""
+    means = dims.groupBy(*keys, "dim").agg(
+        (
+            F.aggregate(
+                F.array_sort(F.collect_list("val")),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            / F.count(F.lit(1))
+        ).alias("c")
+    )
+    # Bounded per-key state: list length = D dims (schema constant).
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "c"))),
+            lambda s: s["c"],
+        ).alias(out)
+    )
+
+
+def _nearest_codes(
+    xs: np.ndarray, ks: np.ndarray, cs: np.ndarray
+) -> np.ndarray:
+    """The id in ``ks`` of the nearest row of ``cs`` for every row of
+    ``xs`` — the one numpy kernel behind PQ training and encode.
+
+    d2 adds the squared per-dim differences in EXPLICIT dim order: each
+    elementwise double op is IEEE-exact, so d2 is bit-identical to the
+    SQL fold ((0+t0)+t1)+... the oracle runs. ``np.argmin`` returns the
+    first minimum and ``ks`` is ascending, so an exact tie goes to the
+    lowest k — the oracle's ``min(struct_pack(d, k))``."""
+    sq = (xs[:, None, :] - cs[None, :, :]) ** 2
+    d2 = sq[..., 0].copy()
+    for j in range(1, xs.shape[1]):
+        d2 = d2 + sq[..., j]
+    return ks[np.argmin(d2, axis=1)]
+
+
+def _codebook_from(pairs: list[tuple[tuple[int, int], list[float]]]) -> dict:
+    """{m: (ks int64[K_m], cents float64[K_m, D])} sorted by k, from
+    ((m, k), cvec) pairs."""
+    book: dict[int, tuple] = {}
+    for m in range(_PQ_M):
+        rows = sorted((k, v) for (mm, k), v in pairs if mm == m)
+        book[m] = (
+            np.array([k for k, _ in rows], dtype=np.int64),
+            np.array([v for _, v in rows], dtype=np.float64),
+        )
+    return book
+
+
+def _pq_init(src: DataFrame, vec_col: str) -> dict:
+    """The seed codebook: subspace m of each of the first _PQ_K
+    vectors (one bounded collect)."""
+    init_rows = sorted(
+        src.where(F.col("vec_id") < _PQ_K).select("vec_id", vec_col).collect(),
+        key=lambda r: r["vec_id"],
+    )
+    return _codebook_from(
+        [
+            (
+                (m, int(r["vec_id"])),
+                [float(x) for x in r[vec_col][m * _PQ_D : (m + 1) * _PQ_D]],
+            )
+            for r in init_rows
+            for m in range(_PQ_M)
+        ]
+    )
+
+
+def _pq_assign_fn(book: dict, vec_col: str):
+    """Map-only Arrow kernel: per (vector, subspace), the id of the
+    nearest centroid (and the subvector, for the update)."""
+
+    def fn(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            vs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            out = []
+            for m in range(_PQ_M):
+                xs = vs[:, m * _PQ_D : (m + 1) * _PQ_D]
+                out.append(
+                    pd.DataFrame(
+                        {
+                            "vec_id": pdf["vec_id"].to_numpy(),
+                            "m": np.full(n, m, dtype=np.int32),
+                            "k": _nearest_codes(xs, *book[m]),
+                            "svec": xs.tolist(),
+                        }
+                    )
+                )
+            yield pd.concat(out, ignore_index=True)
+
+    return fn
+
+
+def _pq_train(src: DataFrame, vec_col: str) -> dict:
+    """The trained per-subspace codebook of ``src``'s ``vec_col``
+    vectors: the first-_PQ_K init, then _PQ_ITERS Lloyd rounds (one
+    assign job and one codebook collect each)."""
+    codebook = _pq_init(src, vec_col)
+    for _ in range(_PQ_ITERS):
+        assigned = src.select("vec_id", vec_col).mapInPandas(
+            _pq_assign_fn(codebook, vec_col),
+            "vec_id long, m int, k long, svec array<double>",
+        )
+        dims = assigned.select(
+            "m", "k", F.posexplode("svec").alias("pos", "val")
+        ).select("m", "k", (F.col("pos") + 1).alias("dim"), "val")
+        cvecs = _sorted_fold_update(dims, ["m", "k"], "cvec")
+        codebook = _codebook_from(
+            [
+                ((int(r["m"]), int(r["k"])), list(r["cvec"]))
+                for r in cvecs.collect()
+            ]
+        )
+    return codebook
+
+
+def _pq_cents(spark: SparkSession, book: dict) -> DataFrame:
+    """The codebook as a local relation for the LUT side (M x K x D
+    doubles — bounded at any corpus scale)."""
+    return spark.createDataFrame(
+        [
+            (int(k), int(m), [float(x) for x in book[m][1][i]])
+            for m in range(_PQ_M)
+            for i, k in enumerate(book[m][0])
+        ],
+        "k long, m int, cvec array<double>",
+    )
+
+
+def _pq_encode(src: DataFrame, vec_col: str, book: dict) -> DataFrame:
+    """(vec_id, m, k): every vector's PQ code, a map-only Arrow kernel
+    against the codebook in its closure."""
+
+    def encode(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            vs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            codes = [
+                _nearest_codes(vs[:, m * _PQ_D : (m + 1) * _PQ_D], *book[m])
+                for m in range(_PQ_M)
+            ]
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), _PQ_M),
+                    "m": np.tile(np.arange(_PQ_M), n),
+                    "k": np.stack(codes, axis=1).reshape(-1),
+                }
+            )
+
+    return src.select("vec_id", vec_col).mapInPandas(
+        encode, "vec_id long, m int, k long"
+    )
+
+
+def _adc_sum(coded: DataFrame) -> DataFrame:
+    """(qid, cid, approx_d2) from candidate codes joined to their query
+    LUT rows (qid, vec_id, m, qd2): the ADC distance sums the M
+    sub-distances over an m-sorted collect_list, so the double is
+    bit-deterministic (bounded per-key state: list length = M, a schema
+    constant — round-8 skew audit)."""
+    return (
+        coded.where(F.col("qid") != F.col("vec_id"))
+        .groupBy("qid", F.col("vec_id").alias("cid"))
+        .agg(
+            F.round(
+                F.aggregate(
+                    F.array_sort(
+                        F.collect_list(F.struct(F.col("m"), F.col("qd2")))
+                    ),
+                    F.lit(0.0),
+                    lambda acc, s: acc + s["qd2"],
+                ),
+                6,
+            ).alias("approx_d2")
+        )
+    )
+
+
 @query("q_ann_pq", oracle=_PQ_ORACLE)
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_pq_topk(
@@ -782,249 +1009,45 @@ def ann_pq_topk(
     0.96 recall@3 at 500 vectors to 0.15 at 2M while R=N/2000 holds
     the floor, so production search must scale the shortlist with the
     corpus, not pin it."""
-    # The numpy encode kernel below is CPU-bound per row; fan the scan
-    # out so every core gets an Arrow batch. track_persist (round 14,
-    # guide §5): this multi-action training pipeline reads the vector
+    # The numpy encode kernel is CPU-bound per row; fan the scan out so
+    # every core gets an Arrow batch. track_persist (round 14, guide
+    # §5): this multi-action training pipeline reads the vector
     # relation in every job — the init collect, one assign job per
     # Lloyd round, and the final encode/query/rerank plan — so without
-    # the cache the scan + fan-out shuffle re-runs once per job (the
-    # same fix the ivfpq_residual pipeline got; unpersisted by
-    # lifecycle.managed_query in long-lived sessions).
+    # the cache the scan + fan-out shuffle re-runs once per job
+    # (unpersisted by lifecycle.managed_query in long-lived sessions).
     emb = track_persist(
         fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
     )
-
-    def subs(df: DataFrame, id_in: str, id_out: str, out: str) -> DataFrame:
-        rows = df.select(*_pq_subvectors(id_in, out))
-        return rows.select(
-            F.col(id_in).alias(id_out),
+    codebook = _pq_train(emb, "embedding")
+    cents = _pq_cents(spark, codebook)
+    enc = _pq_encode(emb, "embedding", codebook)
+    qsubs = (
+        emb.where(F.col("vec_id") < n_queries)
+        .select(*_pq_subvectors("vec_id", "qvec"))
+        .select(
+            F.col("vec_id").alias("qid"),
             F.col("sub.m").alias("m"),
-            F.col(f"sub.{out}").alias(out),
+            F.col("sub.qvec").alias("qvec"),
         )
-
-    # Codebook TRAINING (round-12): _PQ_ITERS deterministic Lloyd
-    # rounds per subspace from the first-_PQ_K init — the production
-    # k-means shape (operators/kmeans.py): assignment is a map-only
-    # Arrow kernel (numpy argmin, codebook in the closure), the update
-    # shuffles only narrow (m, k, dim, val) rows, and the driver
-    # collects just the M x K x D codebook per round. The update's
-    # VALUE-sorted fold mirrors the oracle's per-dim list_sort fold so
-    # every trained centroid double is bit-identical across engines
-    # (the q_kmeans determinism harness; production form = plain avg).
-    # The Arrow kernel computes (x-c)^2 sums with EXPLICIT per-dim add
-    # order — each elementwise double op is IEEE-exact, so d2 and the
-    # argmin (np.argmin ties -> first index == smallest k, rows sorted
-    # by k) are bit-identical to the SQL fold ((0+t0)+t1)+... the
-    # oracle runs — for assignment during training AND for encode.
-    import numpy as np
-    import pandas as pd
-
-    def _codebook_from(pairs: list[tuple[int, list[float]]]) -> dict:
-        """{m: (ks int64[K_m], cents float64[K_m, D])} sorted by k."""
-        book: dict[int, tuple] = {}
-        for m in range(_PQ_M):
-            rows = sorted(
-                (k, v) for (mm, k), v in pairs if mm == m
-            )
-            book[m] = (
-                np.array([k for k, _ in rows], dtype=np.int64),
-                np.array([v for _, v in rows], dtype=np.float64),
-            )
-        return book
-
-    init_rows = sorted(
-        emb.where(F.col("vec_id") < _PQ_K)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    codebook = _codebook_from(
-        [
-            (
-                (m, int(r["vec_id"])),
-                [
-                    float(x)
-                    for x in r["embedding"][m * _PQ_D : (m + 1) * _PQ_D]
-                ],
-            )
-            for r in init_rows
-            for m in range(_PQ_M)
-        ]
-    )
-
-    def _assign_fn(book):
-        """Map-only Arrow kernel: per (vector, subspace), the id of
-        the nearest centroid (and the subvector, for the update)."""
-
-        def fn(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                embs = np.array(
-                    pdf["embedding"].tolist(), dtype=np.float64
-                )
-                out = []
-                for m in range(_PQ_M):
-                    xs = embs[:, m * _PQ_D : (m + 1) * _PQ_D]
-                    ks, cs = book[m]
-                    sq = (xs[:, None, :] - cs[None, :, :]) ** 2
-                    d2 = sq[..., 0].copy()
-                    for j in range(1, _PQ_D):
-                        d2 = d2 + sq[..., j]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "vec_id": pdf["vec_id"].to_numpy(),
-                                "m": np.full(n, m, dtype=np.int32),
-                                "k": ks[np.argmin(d2, axis=1)],
-                                "svec": xs.tolist(),
-                            }
-                        )
-                    )
-                yield pd.concat(out, ignore_index=True)
-
-        return fn
-
-    _ASSIGN_SCHEMA = "vec_id long, m int, k long, svec array<double>"
-    for _ in range(_PQ_ITERS):
-        assigned = emb.select("vec_id", "embedding").mapInPandas(
-            _assign_fn(codebook), _ASSIGN_SCHEMA
-        )
-        dims = assigned.select(
-            "m",
-            "k",
-            F.posexplode("svec").alias("pos", "val"),
-        ).select("m", "k", (F.col("pos") + 1).alias("dim"), "val")
-        # Per-(m, k, dim) value-sorted fold mean (bounded by cluster
-        # size; the documented oracle-determinism exception — see
-        # _km_centroids). Production form: plain F.avg.
-        means = dims.groupBy("m", "k", "dim").agg(
-            (
-                F.aggregate(
-                    F.array_sort(F.collect_list("val")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-        cvecs = means.groupBy("m", "k").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("cvec")
-        )
-        codebook = _codebook_from(
-            [
-                ((int(r["m"]), int(r["k"])), list(r["cvec"]))
-                for r in cvecs.collect()
-            ]
-        )
-
-    # Trained codebook as a local relation for the LUT side (M x K x D
-    # doubles — bounded at any corpus scale).
-    cents = spark.createDataFrame(
-        [
-            (int(k), int(m), [float(x) for x in codebook[m][1][i]])
-            for m in range(_PQ_M)
-            for i, k in enumerate(codebook[m][0])
-        ],
-        "k long, m int, cvec array<double>",
-    )
-
-    def encode(batches):
-        book = codebook
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            embs = np.array(
-                pdf["embedding"].tolist(), dtype=np.float64
-            )
-            codes = []
-            for m in range(_PQ_M):
-                xs = embs[:, m * _PQ_D : (m + 1) * _PQ_D]
-                ks, cs = book[m]
-                sq = (xs[:, None, :] - cs[None, :, :]) ** 2
-                d2 = sq[..., 0].copy()
-                for j in range(1, _PQ_D):
-                    d2 = d2 + sq[..., j]
-                codes.append(ks[np.argmin(d2, axis=1)])
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), _PQ_M
-                    ),
-                    "m": np.tile(np.arange(_PQ_M), n),
-                    "k": np.stack(codes, axis=1).reshape(-1),
-                }
-            )
-
-    enc = emb.select("vec_id", "embedding").mapInPandas(
-        encode, "vec_id long, m int, k long"
-    )
-    qsubs = subs(
-        emb.where(F.col("vec_id") < n_queries), "vec_id", "qid", "qvec"
     )
     lut = qsubs.join(F.broadcast(cents), "m").select(
         "qid", "m", "k", _pq_sub_d2("qvec", "cvec").alias("qd2")
     )
-    adc = (
-        enc.join(F.broadcast(lut), ["m", "k"])
-        .where(F.col("qid") != F.col("vec_id"))
-        .groupBy("qid", F.col("vec_id").alias("cid"))
-        .agg(
-            # Bounded per-key state: list length = M PQ subspaces
-            # (schema constant), sorted so the ADC sum is
-            # bit-deterministic (round-8 skew audit).
-            F.round(
-                F.aggregate(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("m"), F.col("qd2")))
-                    ),
-                    F.lit(0.0),
-                    lambda acc, s: acc + s["qd2"],
-                ),
-                6,
-            ).alias("approx_d2")
-        )
-    )
+    adc = _adc_sum(enc.join(F.broadcast(lut), ["m", "k"]))
     shortlist = _adc_shortlist(adc, emb, shortlist_r, adaptive_r)
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    reranked = (
-        shortlist.join(F.broadcast(q), "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                _dot("qe", "ce") / (_norm("qe") * _norm("ce")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc("cos_sim"), F.asc("cid")
-    )
-    return (
-        reranked.withColumn("rn", F.row_number().over(w_top))
-        .where(F.col("rn") <= k)
-        .select("qid", "cid", "cos_sim")
-    )
+    return _rerank_topk(shortlist, emb, n_queries, k)
 
 
 # --------------------------------------------------------------------------
 # Distributed k-means (Lloyd's algorithm) over the embeddings, K=8,
 # two fixed iterations from a deterministic seed (the first K vectors).
-# The assign step is a broadcast-centroid cross join with a row-local
-# distance fold; the update step is the classic explode -> per-(k, dim)
-# mean -> re-assemble arrays. That assign/update pair is the iterative
-# template q_ann_ivf's single step and pyspark.ml's KMeans both follow.
+# The assign step is operators/kmeans.assign_nearest over the collected
+# codebook (a map-only literal-codebook fold, the same call the IVF
+# paths make); the update step is the classic explode -> per-(k, dim)
+# mean -> re-assemble arrays (_sorted_fold_update, shared with the PQ
+# trainer). That assign/update pair is the iterative template
+# q_ann_ivf's single step and pyspark.ml's KMeans both follow.
 #
 # Determinism: the per-(cluster, dim) mean folds a VALUE-SORTED
 # collect_list, so the double is identical under any partitioning and
@@ -1033,9 +1056,10 @@ def ann_pq_topk(
 # per-group materialization); the sorted fold is the cross-engine
 # bit-determinism harness, swappable one line.
 #
-# Scale notes: per iteration, the big side shuffles twice (argmin window
-# on vec_id, update groupBy on (k, dim)); centroids stay K x D rows and
-# always broadcast. Iterations chain lazily — one action at the end.
+# Scale notes: per iteration the driver collects the K x D codebook
+# (bounded), assignment is map-only, and the big side shuffles for the
+# vec_id join-back and the (k, dim) update; centroids stay K x D rows
+# and always broadcast.
 # --------------------------------------------------------------------------
 _KM_K = 8
 _KM_DIM = 64
@@ -1110,42 +1134,15 @@ GROUP BY a.k"""
     )
 
 
-def _km_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment as a MAP-ONLY literal-codebook fold
-    (round 12; the operators/kmeans.py `assign_nearest` shape): the
-    K x D codebook is collected (bounded — K*D doubles) and embedded
-    as a literal array of structs, and the per-row argmin is
-    ``array_min`` over ``transform`` — min over struct(d2, k) is
-    lowest distance with ties to the lowest k, exactly the
-    ``ROW_NUMBER() ... ORDER BY d2, k`` the oracle runs, over the
-    identical d2 fold, so every assignment is bit-unchanged. The
-    previous form crossJoined and sorted N*K rows through a window —
-    one full shuffle per Lloyd iteration that this removes."""
-    lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(k)).alias("k"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("c"),
-            )
-            for k, c in sorted(
-                (r["k"], list(r["c"])) for r in cents.collect()
-            )
-        ]
-    )
-
-    def d2(c):
-        return F.aggregate(
-            F.zip_with(F.col("v"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    best = F.array_min(
-        F.transform(
-            lit, lambda s: F.struct(d2(s["c"]).alias("d2"), s["k"].alias("k"))
-        )
-    )
-    return vecs.select("vec_id", best["k"].alias("k"))
+def _km_codebook(cents: DataFrame) -> Codebook:
+    """The collected K x D centroid relation as an ``assign_nearest``
+    codebook, sorted by k (bounded — K*D doubles). ``assign_nearest``
+    folds it into the plan as literals and takes ``array_min`` over
+    struct(d2, k): lowest distance with ties to the lowest k, exactly
+    the ``ROW_NUMBER() ... ORDER BY d2, k`` the oracle runs, over the
+    identical d2 fold — a map-only assignment, no N*K crossJoin or
+    window shuffle per Lloyd iteration."""
+    return sorted((r["k"], list(r["c"])) for r in cents.collect())
 
 
 def _km_centroids(vecs: DataFrame) -> DataFrame:
@@ -1163,37 +1160,15 @@ def _km_centroids(vecs: DataFrame) -> DataFrame:
         F.col("vec_id").alias("k"), F.col("v").alias("c")
     )
     for _ in range(_KM_ITERS):
-        assign = _km_assign(vecs, cents)
+        assign = assign_nearest(vecs, _km_codebook(cents)).select(
+            "vec_id", "k"
+        )
         exploded = (
             vecs.join(assign, "vec_id")
             .select("k", F.posexplode("v").alias("pos", "val"))
             .select("k", (F.col("pos") + 1).alias("dim"), "val")
         )
-        # Skew-audit note (round 8): this per-(k, dim) sorted fold holds
-        # one cluster's members for one dimension in a group — the ONE
-        # deliberately order-gathering aggregation left in the registry.
-        # It exists solely so the centroid double is bit-identical to
-        # the oracle's list_sum(... ORDER BY) under any partitioning;
-        # the production form is plain avg(val) (single-scalar state,
-        # map-side combine), identical modulo float association — see
-        # COVERAGE.md "Unbounded-state audit".
-        upd = exploded.groupBy("k", "dim").agg(
-            (
-                F.aggregate(
-                    F.array_sort(F.collect_list("val")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-        # Bounded per-key state: list length = D dims (schema constant).
-        cents = upd.groupBy("k").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("c")
-        )
+        cents = _sorted_fold_update(exploded, ["k"], "c")
     return spark.createDataFrame(cents.collect(), cents.schema)
 
 
@@ -1207,7 +1182,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     cents = _km_centroids(vecs)
-    final = _km_assign(vecs, cents)
+    final = assign_nearest(vecs, _km_codebook(cents)).select("vec_id", "k")
     norms = cents.select(
         "k",
         F.sqrt(
@@ -1241,6 +1216,30 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # touches ~nprobe/K of the corpus.
 # --------------------------------------------------------------------------
 _IVF_NPROBE = 3
+
+
+def _ivf_probes(
+    vecs: DataFrame, cents: DataFrame, n_queries: int, nprobe: int, out: str
+) -> DataFrame:
+    """(qid, <out>): each query vector's ``nprobe`` nearest coarse
+    cells, ties to the lower k — the oracle's ``ROW_NUMBER() ... ORDER
+    BY d2, k`` over the broadcast K-row codebook."""
+    d2 = F.aggregate(
+        F.zip_with(
+            F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    w_probe = Window.partitionBy("qid").orderBy("d2", "k")
+    return (
+        vecs.where(F.col("vec_id") < n_queries)
+        .crossJoin(F.broadcast(cents))
+        .select(F.col("vec_id").alias("qid"), "k", d2.alias("d2"))
+        .withColumn("rn", F.row_number().over(w_probe))
+        .where(F.col("rn") <= nprobe)
+        .select("qid", F.col("k").alias(out))
+    )
 
 
 def _ivf_oracle() -> str:
@@ -1301,23 +1300,8 @@ def ann_ivf_topk(
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     cents = _km_centroids(vecs)
-    assign = _km_assign(vecs, cents)
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w_probe = Window.partitionBy("qid").orderBy("d2", "k")
-    probes = (
-        vecs.where(F.col("vec_id") < n_queries)
-        .crossJoin(F.broadcast(cents))
-        .select(F.col("vec_id").alias("qid"), "k", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= nprobe)
-        .select("qid", F.col("k").alias("cluster"))
-    )
+    assign = assign_nearest(vecs, _km_codebook(cents)).select("vec_id", "k")
+    probes = _ivf_probes(vecs, cents, n_queries, nprobe, "cluster")
     cand = (
         F.broadcast(probes)
         .join(assign, probes["cluster"] == assign["k"])
@@ -1325,29 +1309,7 @@ def ann_ivf_topk(
         .select("qid", F.col("vec_id").alias("cid"))
         .distinct()
     )
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored = (
-        cand.join(F.broadcast(q), "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                _dot("qe", "ce") / (_norm("qe") * _norm("ce")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "cid", "cos_sim")
-    )
+    return _rerank_topk(cand, emb, n_queries, k)
 
 
 # --------------------------------------------------------------------------
@@ -1370,13 +1332,14 @@ def ann_ivf_topk(
 # R=100 query below is pinned on the clustered fixture in
 # tests/test_ann_recall.py.
 #
-# Pipeline (all stages reuse the pinned deterministic chains):
+# Pipeline (every stage is a function the flat paths run too):
 #   coarse = _km_centroids (K=8, 2 Lloyd rounds)   [bounded collect]
 #   r      = v - c_assign                          [map-only zip_with]
-#   PQ     = _pq_train_cte chain over residuals    [narrow shuffles]
-#   search = probe nprobe=2 cells; per-cell query residual -> ADC LUT
-#            over candidates OF THAT CELL only; shortlist R; exact
-#            rerank.
+#   PQ     = _pq_train / _pq_encode over column rv [narrow shuffles]
+#            (oracle: _pq_train_cte over rvecs)
+#   search = _ivf_probes (nprobe=2 cells); per-cell query residual ->
+#            ADC LUT over candidates OF THAT CELL only (_adc_sum);
+#            _adc_shortlist R; _rerank_topk.
 # Scale: identical cost shape to q_ann_pq plus one broadcast join for
 # the cell id; the search side touches ~nprobe/K of the codes and the
 # LUT is Q x nprobe x M x K doubles — broadcast at any corpus scale.
@@ -1440,27 +1403,7 @@ adc AS (
   JOIN rlut l ON rv.cell = l.cell AND e.m = l.m AND e.k = l.k
   WHERE l.qid <> e.vec_id
   GROUP BY l.qid, e.vec_id),
-shortlist AS (
-  SELECT qid, cid
-  FROM (SELECT qid, cid,
-          ROW_NUMBER() OVER (PARTITION BY qid
-                             ORDER BY approx_d2, cid) AS rn
-        FROM adc)
-  WHERE rn <= {_PQ_R}),
-reranked AS (
-  SELECT s.qid, s.cid,
-    round({_SQL_DOT.format(a="a.embedding", b="b.embedding")}
-      / ({_SQL_NORM.format(a="a.embedding")}
-         * {_SQL_NORM.format(a="b.embedding")}), 6) AS cos_sim
-  FROM shortlist s JOIN embeddings a ON s.qid = a.vec_id
-                   JOIN embeddings b ON s.cid = b.vec_id)
-SELECT qid, cid, cos_sim
-FROM (SELECT qid, cid, cos_sim,
-        ROW_NUMBER() OVER (PARTITION BY qid
-                           ORDER BY cos_sim DESC, cid) AS rn
-      FROM reranked)
-WHERE rn <= 3
-"""
+{_PQ_RERANK_SQL}"""
 
 
 @query("q_ann_ivfpq_residual", oracle=_ivfpq_oracle())
@@ -1484,9 +1427,6 @@ def ann_ivfpq_residual_topk(
     harness; the registered query is this with (3, 3, nprobe=2,
     R=100) — identical plan). ``adaptive_r`` switches the shortlist
     bound to the in-plan max(R, N // 2000) dial (see ann_pq_topk)."""
-    import numpy as np
-    import pandas as pd
-
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
     # Round-14 (guide §5): persist the parsed vector relation and the
     # residual relation. This operator is a multi-action pipeline —
@@ -1505,7 +1445,7 @@ def ann_ivfpq_residual_topk(
         )
     )
     cents = _km_centroids(vecs)
-    assign = _km_assign(vecs, cents)
+    assign = assign_nearest(vecs, _km_codebook(cents)).select("vec_id", "k")
     # Residuals: map-only elementwise subtraction against the broadcast
     # coarse codebook (bit-identical to the oracle's v[i] - c[i]).
     rvecs = track_persist(
@@ -1518,147 +1458,13 @@ def ann_ivfpq_residual_topk(
         )
     )
 
-    # --- PQ training on residuals (the q_ann_pq chain, residual input).
-    def _codebook_from(pairs):
-        book = {}
-        for m in range(_PQ_M):
-            rows = sorted((k, v) for (mm, k), v in pairs if mm == m)
-            book[m] = (
-                np.array([k for k, _ in rows], dtype=np.int64),
-                np.array([v for _, v in rows], dtype=np.float64),
-            )
-        return book
-
-    init_rows = sorted(
-        rvecs.where(F.col("vec_id") < _PQ_K)
-        .select("vec_id", "rv")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    codebook = _codebook_from(
-        [
-            (
-                (m, int(r["vec_id"])),
-                [float(x) for x in r["rv"][m * _PQ_D : (m + 1) * _PQ_D]],
-            )
-            for r in init_rows
-            for m in range(_PQ_M)
-        ]
-    )
-
-    def _assign_fn(book):
-        def fn(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                rvs = np.array(pdf["rv"].tolist(), dtype=np.float64)
-                out = []
-                for m in range(_PQ_M):
-                    xs = rvs[:, m * _PQ_D : (m + 1) * _PQ_D]
-                    ks, cs = book[m]
-                    sq = (xs[:, None, :] - cs[None, :, :]) ** 2
-                    d2 = sq[..., 0].copy()
-                    for j in range(1, _PQ_D):
-                        d2 = d2 + sq[..., j]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "vec_id": pdf["vec_id"].to_numpy(),
-                                "m": np.full(n, m, dtype=np.int32),
-                                "k": ks[np.argmin(d2, axis=1)],
-                                "svec": xs.tolist(),
-                            }
-                        )
-                    )
-                yield pd.concat(out, ignore_index=True)
-
-        return fn
-
-    _ASSIGN_SCHEMA = "vec_id long, m int, k long, svec array<double>"
-    for _ in range(_PQ_ITERS):
-        assigned = rvecs.select("vec_id", "rv").mapInPandas(
-            _assign_fn(codebook), _ASSIGN_SCHEMA
-        )
-        dims = assigned.select(
-            "m", "k", F.posexplode("svec").alias("pos", "val")
-        ).select("m", "k", (F.col("pos") + 1).alias("dim"), "val")
-        means = dims.groupBy("m", "k", "dim").agg(
-            (
-                F.aggregate(
-                    F.array_sort(F.collect_list("val")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-        cvecs = means.groupBy("m", "k").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("cvec")
-        )
-        codebook = _codebook_from(
-            [
-                ((int(r["m"]), int(r["k"])), list(r["cvec"]))
-                for r in cvecs.collect()
-            ]
-        )
-
-    rcents = spark.createDataFrame(
-        [
-            (int(k), int(m), [float(x) for x in codebook[m][1][i]])
-            for m in range(_PQ_M)
-            for i, k in enumerate(codebook[m][0])
-        ],
-        "k long, m int, cvec array<double>",
-    )
-
-    def encode(batches):
-        book = codebook
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            rvs = np.array(pdf["rv"].tolist(), dtype=np.float64)
-            codes = []
-            for m in range(_PQ_M):
-                xs = rvs[:, m * _PQ_D : (m + 1) * _PQ_D]
-                ks, cs = book[m]
-                sq = (xs[:, None, :] - cs[None, :, :]) ** 2
-                d2 = sq[..., 0].copy()
-                for j in range(1, _PQ_D):
-                    d2 = d2 + sq[..., j]
-                codes.append(ks[np.argmin(d2, axis=1)])
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), _PQ_M),
-                    "m": np.tile(np.arange(_PQ_M), n),
-                    "k": np.stack(codes, axis=1).reshape(-1),
-                }
-            )
-
-    enc = rvecs.select("vec_id", "rv").mapInPandas(
-        encode, "vec_id long, m int, k long"
-    )
+    codebook = _pq_train(rvecs, "rv")
+    rcents = _pq_cents(spark, codebook)
+    enc = _pq_encode(rvecs, "rv", codebook)
 
     # --- Search: probe nprobe cells, per-cell query residual LUT, ADC
     # over that cell's candidates only, shortlist, exact rerank.
-    d2c = F.aggregate(
-        F.zip_with("v", "c", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w_probe = Window.partitionBy("qid").orderBy("d2", "k")
-    probes = (
-        vecs.where(F.col("vec_id") < n_queries)
-        .crossJoin(F.broadcast(cents))
-        .select(F.col("vec_id").alias("qid"), "k", d2c.alias("d2"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= nprobe)
-        .select("qid", F.col("k").alias("cell"))
-    )
+    probes = _ivf_probes(vecs, cents, n_queries, nprobe, "cell")
     qres = (
         probes.join(
             vecs.select(F.col("vec_id").alias("qid"), "v"), "qid"
@@ -1693,47 +1499,8 @@ def ann_ivfpq_residual_topk(
         )
     )
     cells = rvecs.select("vec_id", "cell")
-    adc = (
-        enc.join(cells, "vec_id")
-        .join(F.broadcast(rlut), ["cell", "m", "k"])
-        .where(F.col("qid") != F.col("vec_id"))
-        .groupBy("qid", F.col("vec_id").alias("cid"))
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("m"), F.col("qd2")))
-                    ),
-                    F.lit(0.0),
-                    lambda acc, s: acc + s["qd2"],
-                ),
-                6,
-            ).alias("approx_d2")
-        )
+    adc = _adc_sum(
+        enc.join(cells, "vec_id").join(F.broadcast(rlut), ["cell", "m", "k"])
     )
     shortlist = _adc_shortlist(adc, emb, shortlist_r, adaptive_r)
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    reranked = (
-        shortlist.join(F.broadcast(q), "qid")
-        .join(c, "cid")
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                _dot("qe", "ce") / (_norm("qe") * _norm("ce")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc("cos_sim"), F.asc("cid")
-    )
-    return (
-        reranked.withColumn("rn", F.row_number().over(w_top))
-        .where(F.col("rn") <= k)
-        .select("qid", "cid", "cos_sim")
-    )
+    return _rerank_topk(shortlist, emb, n_queries, k)

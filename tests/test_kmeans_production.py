@@ -21,8 +21,8 @@ from aind_exaspim_data_transformation_spark.operators.kmeans import (
 from aind_exaspim_data_transformation_spark.queries.similarity_q import (
     _KM_ITERS,
     _KM_K,
-    _km_assign,
     _km_centroids,
+    _km_codebook,
 )
 from aind_exaspim_data_transformation_spark.sources.tables import load_table
 
@@ -52,24 +52,29 @@ def test_production_centroids_match_deterministic_fold(spark, vecs):
             )
 
 
-def test_production_assignments_match_window_form(spark, vecs):
-    cents_df = _km_centroids(vecs)
-    codebook = sorted(
-        (r["k"], list(r["c"])) for r in cents_df.collect()
-    )
-    prod = {
+def test_trained_codebook_literal_matches_pandas_fallback(spark, vecs):
+    """The registry queries assign with ``assign_nearest`` over the
+    trained ``_km_centroids`` codebook, on the literal path. The pandas
+    fallback (``max_literal_values=0``: one matmul per batch over the
+    expanded-form d2) is the other real form; on the trained codebook,
+    not only the seed, both must pick the same centroid for every
+    vector."""
+    codebook = _km_codebook(_km_centroids(vecs))
+    assert len(codebook) == _KM_K
+    lit = {
         r["vec_id"]: r["k"]
         for r in assign_nearest(vecs, codebook)
         .select("vec_id", "k")
         .collect()
     }
-    win = {
-        r["vec_id"]: r["k"] for r in _km_assign(vecs, cents_df).collect()
+    fallback = {
+        r["vec_id"]: r["k"]
+        for r in assign_nearest(vecs, codebook, max_literal_values=0)
+        .select("vec_id", "k")
+        .collect()
     }
-    # Float caveat: the two forms compute d2 with the same zip_with fold
-    # over the same doubles, so the argmin is identical (incl. ties,
-    # both break on lower k).
-    assert prod == win
+    assert len(lit) == vecs.count()
+    assert fallback == lit
 
 
 def test_assignment_is_map_only(spark, vecs):
