@@ -853,17 +853,14 @@ def _codebook_from(pairs: list[tuple[tuple[int, int], list[float]]]) -> dict:
 def _pq_init(src: DataFrame, vec_col: str) -> dict:
     """The seed codebook: subspace m of each of the first _PQ_K
     vectors (one bounded collect)."""
-    init_rows = sorted(
-        src.where(F.col("vec_id") < _PQ_K).select("vec_id", vec_col).collect(),
-        key=lambda r: r["vec_id"],
-    )
+    rows = src.where(F.col("vec_id") < _PQ_K).select("vec_id", vec_col)
     return _codebook_from(
         [
             (
                 (m, int(r["vec_id"])),
                 [float(x) for x in r[vec_col][m * _PQ_D : (m + 1) * _PQ_D]],
             )
-            for r in init_rows
+            for r in rows.collect()
             for m in range(_PQ_M)
         ]
     )
