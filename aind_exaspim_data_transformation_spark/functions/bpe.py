@@ -54,6 +54,8 @@ def encode(text: str) -> list[str]:
 
 
 def decode(tokens: list[str]) -> str:
+    """Inverse of ``encode`` for both vocabularies (``bpe32k`` shares it):
+    tokens are source substrings, so decoding is concatenation."""
     return "".join(tokens)
 
 
@@ -75,21 +77,27 @@ def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def sql_apply_merges(col_expr: str) -> str:
-    """Render the merge fold as a DuckDB ``list_reduce`` over the
-    merges table (a nested replace() chain trips the binder's
-    128-deep expression recursion limit at 256 merges). Each list
-    entry packs one merge as ``merged_char + pair`` — merged tokens
-    are always exactly one char, so ``substr`` unpacks without any
+def sql_merge_fold(col_expr: str, entries) -> str:
+    """Render a rank-order merge fold over ``(merged_char, pair)``
+    entries as a DuckDB ``list_reduce`` (a nested replace() chain trips
+    the binder's 128-deep expression recursion limit at 256 merges) —
+    the one renderer of the 256-merge and the 32k oracles. Each list
+    entry packs one merge as ``merged_char + pair``: merged tokens are
+    always exactly one code point, so ``substr`` unpacks without any
     per-row split allocation. DuckDB's replace is
     leftmost-non-overlapping like Python's, so the fold computes the
     identical token stream."""
-    entries = ", ".join(
-        _sql_quote(merged + pair) for pair, merged in MERGES
-    )
+    packed = ", ".join(_sql_quote(merged + pair) for merged, pair in entries)
     return (
-        f"list_reduce(list_prepend({col_expr}, [{entries}]), "
+        f"list_reduce(list_prepend({col_expr}, [{packed}]), "
         "(acc, mg) -> replace(acc, substr(mg, 2), substr(mg, 1, 1)))"
+    )
+
+
+def sql_apply_merges(col_expr: str) -> str:
+    """The merge fold of this module's 256-merge table."""
+    return sql_merge_fold(
+        col_expr, ((merged, pair) for pair, merged in MERGES)
     )
 
 

@@ -55,6 +55,7 @@ import base64
 import re
 from heapq import heapify, heappop, heappush
 
+from .bpe import decode, sql_merge_fold  # noqa: F401  (decode re-exported)
 from .bpe_vocab_32k import N_MERGES, PAIRS_B64, PUA32_BASE
 
 _PACKED = base64.b64decode(PAIRS_B64).decode("utf-8")
@@ -156,10 +157,6 @@ def encode(text: str, n_ranks: int | None = None) -> list[str]:
     return [exp.get(c, c) for c in apply_merges(text, n_ranks)]
 
 
-def decode(tokens: list[str]) -> str:
-    return "".join(tokens)
-
-
 def detokenize_mapped(mapped: str) -> str:
     """Expand a mapped (1-char-per-token) string back to source text."""
     exp = expansion()
@@ -177,24 +174,13 @@ def token_count_series(texts, n_ranks: int | None = None):
     return texts.map(lambda t: len(apply_merges(t, n_ranks)))
 
 
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def sql_apply_merges32k(col_expr: str, n_ranks: int | None = None) -> str:
-    """Render the rank-order merge fold as a DuckDB ``list_reduce``
-    over the (possibly prefix-restricted) merges table. Identical
-    construction to ``bpe.sql_apply_merges`` — each list entry packs
-    one merge as ``merged_char + pair``; merged tokens are exactly one
-    code point, so ``substr`` unpacks by code-point position; DuckDB
-    ``replace`` is leftmost-non-overlapping like Python's. O(n_ranks x
-    corpus): exact at any rank count, feasible only for small SF or
-    small prefixes (see module docstring)."""
+    """Render the rank-order merge fold over the (possibly
+    prefix-restricted) merges table with ``bpe.sql_merge_fold``, the
+    renderer of the 256-merge oracle. O(n_ranks x corpus): exact at any
+    rank count, feasible only for small SF or small prefixes (see
+    module docstring)."""
     limit = N_MERGES if n_ranks is None else n_ranks
-    entries = ", ".join(
-        _sql_quote(chr(PUA32_BASE + rank) + pair)
-        for rank, pair in enumerate(PAIRS[:limit])
-    )
     # Mirror apply_merges' input contract (round-13 advice): the Spark
     # side raises on code points >= U+F0000 (they would alias merged
     # tokens); the oracle must fail the same way, not silently encode.
@@ -204,9 +190,12 @@ def sql_apply_merges32k(col_expr: str, n_ranks: int | None = None) -> str:
         f"THEN error('bpe32k input contains code points >= U+F0000') "
         f"ELSE {col_expr} END"
     )
-    return (
-        f"list_reduce(list_prepend({guarded}, [{entries}]), "
-        "(acc, mg) -> replace(acc, substr(mg, 2), substr(mg, 1, 1)))"
+    return sql_merge_fold(
+        guarded,
+        (
+            (chr(PUA32_BASE + rank), pair)
+            for rank, pair in enumerate(PAIRS[:limit])
+        ),
     )
 
 

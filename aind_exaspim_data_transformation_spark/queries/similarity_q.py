@@ -20,7 +20,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.kmeans import Codebook, assign_nearest
 from ..sources.tables import load_table
 from ._helpers import fan_out_small_scan
 from .lifecycle import track_persist
@@ -527,13 +526,13 @@ def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Nearest Neighbor Search" — public paper). M=8 subspaces x 8 dims, K=64
 # centroids per subspace, TRAINED per subspace with the fixed
 # deterministic Lloyd protocol (round-11 verdict, Next #2): init = the
-# first-64 subvectors, then _PQ_ITERS assign/update rounds — the same
-# production k-means shape as operators/kmeans.py (numpy argmin
-# assignment in a map-only Arrow kernel; per-(m, k, dim) mean update),
-# with the update's value-sorted fold keeping every centroid double
-# bit-identical to the oracle's training chain (the q_kmeans
-# determinism harness, see _km_centroids). Encode = per-subspace
-# argmin against the trained broadcast codebook; search = asymmetric
+# first-64 subvectors, then _PQ_ITERS assign/update rounds — the one
+# trainer q_kmeans_embeddings and the IVF paths run with one subspace
+# (_pq_train: numpy argmin assignment in a map-only Arrow kernel;
+# per-(m, k, dim) mean update), with the update's value-sorted fold
+# keeping every centroid double bit-identical to the oracle's training
+# chain. Encode = per-subspace argmin against the trained codebook
+# (_pq_assign, the same kernel); search = asymmetric
 # distance computation (ADC) against a broadcast per-query lookup
 # table.
 #
@@ -775,22 +774,28 @@ def _adc_shortlist(
     return ranked.where(F.col("rn") <= shortlist_r).select("qid", "cid")
 
 
-# Codebook TRAINING (round-12), shared by flat PQ over the embeddings
-# and IVF-PQ over the coarse residuals: _PQ_ITERS deterministic Lloyd
-# rounds per subspace from the first-_PQ_K init — the production
-# k-means shape (operators/kmeans.py): assignment is a map-only Arrow
-# kernel (numpy argmin, codebook in the closure), the update shuffles
-# only narrow (m, k, dim, val) rows, and the driver collects just the
-# M x K x D codebook per round. The update's VALUE-sorted fold
-# (_sorted_fold_update) mirrors the oracle's per-dim list_sort fold so
-# every trained centroid double is bit-identical across engines (the
-# q_kmeans determinism harness; production form = plain avg).
+# Codebook TRAINING (round-12): one trainer for k-means, IVF and PQ.
+# k-means is PQ with one subspace, so a trainer over the shape (M
+# subspaces, D dims each, K centroids) serves the k-means / IVF coarse
+# quantizer (1, 64, 8), flat PQ over the embeddings and IVF-PQ over the
+# coarse residuals (8, 8, 64). It runs the deterministic Lloyd protocol:
+# the first-K init, then a fixed number of rounds, each one map-only
+# assign pass (the numpy kernel _nearest_codes in one mapInPandas, the
+# codebook in the closure, each subvector emitted beside its code), one
+# shuffle of narrow (m, k, dim, val) rows and one M x K x D codebook
+# collect. The update's VALUE-sorted fold (_sorted_fold_update) mirrors
+# the oracles' value-sorted sums, so every trained centroid double is
+# bit-identical across engines (the q_kmeans determinism harness;
+# production form = plain avg).
+_PQ_SHAPE = (_PQ_M, _PQ_D, _PQ_K)
+
+
 def _sorted_fold_update(
     dims: DataFrame, keys: list[str], out: str
 ) -> DataFrame:
-    """The Lloyd update of the k-means and PQ trainers: from
-    (*keys, dim, val) member rows, each centroid's dim-ordered mean
-    array ``out``, one row per ``keys``.
+    """The Lloyd update of the trainer: from (*keys, dim, val) member
+    rows, each centroid's dim-ordered mean array ``out``, one row per
+    ``keys``. A centroid that lost every member gets no row.
 
     Skew-audit note (round 8): the per-(key, dim) sorted fold holds one
     cluster's members for one dimension in a group — the ONE
@@ -823,13 +828,15 @@ def _nearest_codes(
     xs: np.ndarray, ks: np.ndarray, cs: np.ndarray
 ) -> np.ndarray:
     """The id in ``ks`` of the nearest row of ``cs`` for every row of
-    ``xs`` — the one numpy kernel behind PQ training and encode.
+    ``xs`` — the one nearest-centroid kernel behind every assignment of
+    k-means, IVF and PQ, in training and in encode.
 
     d2 adds the squared per-dim differences in EXPLICIT dim order: each
     elementwise double op is IEEE-exact, so d2 is bit-identical to the
     SQL fold ((0+t0)+t1)+... the oracle runs. ``np.argmin`` returns the
     first minimum and ``ks`` is ascending, so an exact tie goes to the
-    lowest k — the oracle's ``min(struct_pack(d, k))``."""
+    lowest k — the oracle's ``min(struct_pack(d, k))`` and ``ROW_NUMBER()
+    ... ORDER BY d2, k``."""
     sq = (xs[:, None, :] - cs[None, :, :]) ** 2
     d2 = sq[..., 0].copy()
     for j in range(1, xs.shape[1]):
@@ -838,10 +845,10 @@ def _nearest_codes(
 
 
 def _codebook_from(pairs: list[tuple[tuple[int, int], list[float]]]) -> dict:
-    """{m: (ks int64[K_m], cents float64[K_m, D])} sorted by k, from
-    ((m, k), cvec) pairs."""
+    """{m: (ks int64[K_m], cents float64[K_m, D])} sorted by m and by k,
+    from ((m, k), cvec) pairs."""
     book: dict[int, tuple] = {}
-    for m in range(_PQ_M):
+    for m in sorted({m for (m, _), _ in pairs}):
         rows = sorted((k, v) for (mm, k), v in pairs if mm == m)
         book[m] = (
             np.array([k for k, _ in rows], dtype=np.int64),
@@ -850,110 +857,98 @@ def _codebook_from(pairs: list[tuple[tuple[int, int], list[float]]]) -> dict:
     return book
 
 
-def _pq_init(src: DataFrame, vec_col: str) -> dict:
-    """The seed codebook: subspace m of each of the first _PQ_K
-    vectors (one bounded collect)."""
-    rows = src.where(F.col("vec_id") < _PQ_K).select("vec_id", vec_col)
+def _pq_init(src: DataFrame, vec_col: str, shape: tuple) -> dict:
+    """The seed codebook of ``shape`` (M, D, K): subspace m of each of
+    the first K vectors (one bounded collect)."""
+    n_sub, dim, n_cent = shape
+    rows = src.where(F.col("vec_id") < n_cent).select("vec_id", vec_col)
     return _codebook_from(
         [
             (
                 (m, int(r["vec_id"])),
-                [float(x) for x in r[vec_col][m * _PQ_D : (m + 1) * _PQ_D]],
+                [float(x) for x in r[vec_col][m * dim : (m + 1) * dim]],
             )
             for r in rows.collect()
-            for m in range(_PQ_M)
+            for m in range(n_sub)
         ]
     )
 
 
-def _pq_assign_fn(book: dict, vec_col: str):
-    """Map-only Arrow kernel: per (vector, subspace), the id of the
-    nearest centroid (and the subvector, for the update)."""
+def _pq_assign(
+    src: DataFrame, vec_col: str, book: dict, with_vec: bool = False
+) -> DataFrame:
+    """(vec_id, m, k): per (vector, subspace), the id of the nearest
+    centroid of ``book`` — the one assignment pass of training and
+    encode, a map-only Arrow kernel with the codebook in its closure
+    (the plan does not grow with K x D). ``with_vec`` adds the
+    subvector as ``svec`` beside its code, so the update and the IVF
+    residual read it there instead of joining back on vec_id."""
+    dim = book[0][1].shape[1]
 
-    def fn(batches):
+    def assign(batches):
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
             vs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             out = []
-            for m in range(_PQ_M):
-                xs = vs[:, m * _PQ_D : (m + 1) * _PQ_D]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "m": np.full(n, m, dtype=np.int32),
-                            "k": _nearest_codes(xs, *book[m]),
-                            "svec": xs.tolist(),
-                        }
-                    )
-                )
+            for m, (ks, cs) in book.items():
+                xs = vs[:, m * dim : (m + 1) * dim]
+                cols = {
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "m": np.full(n, m, dtype=np.int32),
+                    "k": _nearest_codes(xs, ks, cs),
+                }
+                if with_vec:
+                    cols["svec"] = xs.tolist()
+                out.append(pd.DataFrame(cols))
             yield pd.concat(out, ignore_index=True)
 
-    return fn
+    schema = "vec_id long, m int, k long"
+    if with_vec:
+        schema += ", svec array<double>"
+    return src.select("vec_id", vec_col).mapInPandas(assign, schema)
 
 
-def _pq_train(src: DataFrame, vec_col: str) -> dict:
-    """The trained per-subspace codebook of ``src``'s ``vec_col``
-    vectors: the first-_PQ_K init, then _PQ_ITERS Lloyd rounds (one
-    assign job and one codebook collect each)."""
-    codebook = _pq_init(src, vec_col)
-    for _ in range(_PQ_ITERS):
-        assigned = src.select("vec_id", vec_col).mapInPandas(
-            _pq_assign_fn(codebook, vec_col),
-            "vec_id long, m int, k long, svec array<double>",
-        )
-        dims = assigned.select(
-            "m", "k", F.posexplode("svec").alias("pos", "val")
-        ).select("m", "k", (F.col("pos") + 1).alias("dim"), "val")
-        cvecs = _sorted_fold_update(dims, ["m", "k"], "cvec")
-        codebook = _codebook_from(
+def _lloyd_round(src: DataFrame, vec_col: str, book: dict) -> DataFrame:
+    """(m, k, cvec): one Lloyd round from ``book`` — the assign pass,
+    then the value-sorted mean of each centroid's subvectors."""
+    dims = (
+        _pq_assign(src, vec_col, book, with_vec=True)
+        .select("m", "k", F.posexplode("svec").alias("pos", "val"))
+        .select("m", "k", (F.col("pos") + 1).alias("dim"), "val")
+    )
+    return _sorted_fold_update(dims, ["m", "k"], "cvec")
+
+
+def _pq_train(
+    src: DataFrame, vec_col: str, shape: tuple, iters: int
+) -> dict:
+    """The trained codebook of ``shape`` (M, D, K) over ``src``'s
+    ``vec_col`` vectors: the first-K init, then ``iters`` Lloyd rounds
+    (one assign-and-update job and one codebook collect each)."""
+    book = _pq_init(src, vec_col, shape)
+    for _ in range(iters):
+        book = _codebook_from(
             [
                 ((int(r["m"]), int(r["k"])), list(r["cvec"]))
-                for r in cvecs.collect()
+                for r in _lloyd_round(src, vec_col, book).collect()
             ]
         )
-    return codebook
+    return book
 
 
 def _pq_cents(spark: SparkSession, book: dict) -> DataFrame:
-    """The codebook as a local relation for the LUT side (M x K x D
-    doubles — bounded at any corpus scale)."""
+    """(k, m, cvec): the codebook as a local relation for the LUT,
+    probe, residual and norm sides (M x K x D doubles — bounded at any
+    corpus scale)."""
     return spark.createDataFrame(
         [
-            (int(k), int(m), [float(x) for x in book[m][1][i]])
-            for m in range(_PQ_M)
-            for i, k in enumerate(book[m][0])
+            (int(k), int(m), [float(x) for x in cs[i]])
+            for m, (ks, cs) in book.items()
+            for i, k in enumerate(ks)
         ],
         "k long, m int, cvec array<double>",
-    )
-
-
-def _pq_encode(src: DataFrame, vec_col: str, book: dict) -> DataFrame:
-    """(vec_id, m, k): every vector's PQ code, a map-only Arrow kernel
-    against the codebook in its closure."""
-
-    def encode(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            vs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = [
-                _nearest_codes(vs[:, m * _PQ_D : (m + 1) * _PQ_D], *book[m])
-                for m in range(_PQ_M)
-            ]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), _PQ_M),
-                    "m": np.tile(np.arange(_PQ_M), n),
-                    "k": np.stack(codes, axis=1).reshape(-1),
-                }
-            )
-
-    return src.select("vec_id", vec_col).mapInPandas(
-        encode, "vec_id long, m int, k long"
     )
 
 
@@ -1016,9 +1011,9 @@ def ann_pq_topk(
     emb = track_persist(
         fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
     )
-    codebook = _pq_train(emb, "embedding")
+    codebook = _pq_train(emb, "embedding", _PQ_SHAPE, _PQ_ITERS)
     cents = _pq_cents(spark, codebook)
-    enc = _pq_encode(emb, "embedding", codebook)
+    enc = _pq_assign(emb, "embedding", codebook)
     qsubs = (
         emb.where(F.col("vec_id") < n_queries)
         .select(*_pq_subvectors("vec_id", "qvec"))
@@ -1039,12 +1034,11 @@ def ann_pq_topk(
 # --------------------------------------------------------------------------
 # Distributed k-means (Lloyd's algorithm) over the embeddings, K=8,
 # two fixed iterations from a deterministic seed (the first K vectors).
-# The assign step is operators/kmeans.assign_nearest over the collected
-# codebook (a map-only literal-codebook fold, the same call the IVF
-# paths make); the update step is the classic explode -> per-(k, dim)
-# mean -> re-assemble arrays (_sorted_fold_update, shared with the PQ
-# trainer). That assign/update pair is the iterative template
-# q_ann_ivf's single step and pyspark.ml's KMeans both follow.
+# k-means is PQ with one 64-dim subspace, so training is _pq_train with
+# shape (1, 64, 8) and the final assignment is _pq_assign: the same
+# map-only numpy kernel and value-sorted update (_sorted_fold_update)
+# the PQ paths run, and the coarse quantizer q_ann_ivf and the IVF-PQ
+# queries train the same way.
 #
 # Determinism: the per-(cluster, dim) mean folds a VALUE-SORTED
 # collect_list, so the double is identical under any partitioning and
@@ -1054,13 +1048,15 @@ def ann_pq_topk(
 # bit-determinism harness, swappable one line.
 #
 # Scale notes: per iteration the driver collects the K x D codebook
-# (bounded), assignment is map-only, and the big side shuffles for the
-# vec_id join-back and the (k, dim) update; centroids stay K x D rows
-# and always broadcast.
+# (bounded), assignment is map-only and emits each vector beside its
+# code, so the embeddings are scanned once per round and the only
+# shuffle is the (k, dim) update; centroids stay K x D rows and always
+# broadcast.
 # --------------------------------------------------------------------------
 _KM_K = 8
 _KM_DIM = 64
 _KM_ITERS = 2
+_KM_SHAPE = (1, _KM_DIM, _KM_K)
 
 _KM_D2 = (
     "list_sum(list_transform(range(1, {dim} + 1), "
@@ -1131,60 +1127,17 @@ GROUP BY a.k"""
     )
 
 
-def _km_codebook(cents: DataFrame) -> Codebook:
-    """The collected K x D centroid relation as an ``assign_nearest``
-    codebook, sorted by k (bounded — K*D doubles). ``assign_nearest``
-    folds it into the plan as literals and takes ``array_min`` over
-    struct(d2, k): lowest distance with ties to the lowest k, exactly
-    the ``ROW_NUMBER() ... ORDER BY d2, k`` the oracle runs, over the
-    identical d2 fold — a map-only assignment, no N*K crossJoin or
-    window shuffle per Lloyd iteration."""
-    return sorted((r["k"], list(r["c"])) for r in cents.collect())
-
-
-def _km_centroids(vecs: DataFrame) -> DataFrame:
-    """_KM_ITERS Lloyd iterations from the first-_KM_K seed; returns the
-    final (k, c double[64]) centroid relation MATERIALIZED as a local
-    relation: the centroid table is K x D doubles at any corpus scale,
-    and every consumer references it at least twice (assign + norms, or
-    assign + probes), so leaving it lazy re-evaluates the whole
-    iterative chain per reference (observed: 14 base-table scans in
-    q_ann_ivf's plan, zero exchange reuse — the subtrees differ after
-    filter pushdown). One eager evaluation + a literal relation is the
-    same pattern as a broadcast codebook."""
-    spark = vecs.sparkSession
-    cents = vecs.where(F.col("vec_id") < _KM_K).select(
-        F.col("vec_id").alias("k"), F.col("v").alias("c")
-    )
-    for _ in range(_KM_ITERS):
-        assign = assign_nearest(vecs, _km_codebook(cents)).select(
-            "vec_id", "k"
-        )
-        exploded = (
-            vecs.join(assign, "vec_id")
-            .select("k", F.posexplode("v").alias("pos", "val"))
-            .select("k", (F.col("pos") + 1).alias("dim"), "val")
-        )
-        cents = _sorted_fold_update(exploded, ["k"], "c")
-    return spark.createDataFrame(cents.collect(), cents.schema)
-
-
 @query("q_kmeans_embeddings", oracle=_km_oracle())
 def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Per-row K x D distance folds + the dim explode are CPU-bound;
-    # fan out (sorted folds in _km_centroids keep floats exact).
+    # The assignment kernel is CPU-bound per row; fan out.
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    cents = _km_centroids(vecs)
-    final = assign_nearest(vecs, _km_codebook(cents)).select("vec_id", "k")
-    norms = cents.select(
+    book = _pq_train(emb, "embedding", _KM_SHAPE, _KM_ITERS)
+    final = _pq_assign(emb, "embedding", book)
+    norms = _pq_cents(spark, book).select(
         "k",
         F.sqrt(
             F.aggregate(
-                F.transform(F.col("c"), lambda x: x * x),
+                F.transform(F.col("cvec"), lambda x: x * x),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )
@@ -1216,21 +1169,24 @@ _IVF_NPROBE = 3
 
 
 def _ivf_probes(
-    vecs: DataFrame, cents: DataFrame, n_queries: int, nprobe: int, out: str
+    emb: DataFrame, cents: DataFrame, n_queries: int, nprobe: int, out: str
 ) -> DataFrame:
-    """(qid, <out>): each query vector's ``nprobe`` nearest coarse
-    cells, ties to the lower k — the oracle's ``ROW_NUMBER() ... ORDER
-    BY d2, k`` over the broadcast K-row codebook."""
+    """(qid, <out>): each query vector's ``nprobe`` nearest cells of the
+    (k, cvec) coarse codebook ``cents``, ties to the lower k — the
+    oracle's ``ROW_NUMBER() ... ORDER BY d2, k`` over the broadcast
+    K-row codebook."""
     d2 = F.aggregate(
         F.zip_with(
-            F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)
+            F.col("embedding"),
+            F.col("cvec"),
+            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
     w_probe = Window.partitionBy("qid").orderBy("d2", "k")
     return (
-        vecs.where(F.col("vec_id") < n_queries)
+        emb.where(F.col("vec_id") < n_queries)
         .crossJoin(F.broadcast(cents))
         .select(F.col("vec_id").alias("qid"), "k", d2.alias("d2"))
         .withColumn("rn", F.row_number().over(w_probe))
@@ -1290,18 +1246,15 @@ def ann_ivf_topk(
     """Parameterized IVF top-k (round-14 recall-at-scale harness; the
     registered query is this with (5, 3, nprobe=3) — identical plan).
     """
-    # Same CPU-bound fan-out as q_kmeans_embeddings (assignment folds).
+    # Same CPU-bound fan-out as q_kmeans_embeddings (assignment kernel).
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    cents = _km_centroids(vecs)
-    assign = assign_nearest(vecs, _km_codebook(cents)).select("vec_id", "k")
-    probes = _ivf_probes(vecs, cents, n_queries, nprobe, "cluster")
+    book = _pq_train(emb, "embedding", _KM_SHAPE, _KM_ITERS)
+    cents = _pq_cents(spark, book).drop("m")
+    cells = _pq_assign(emb, "embedding", book)
+    probes = _ivf_probes(emb, cents, n_queries, nprobe, "cluster")
     cand = (
         F.broadcast(probes)
-        .join(assign, probes["cluster"] == assign["k"])
+        .join(cells, probes["cluster"] == cells["k"])
         .where(F.col("qid") != F.col("vec_id"))
         .select("qid", F.col("vec_id").alias("cid"))
         .distinct()
@@ -1330,9 +1283,10 @@ def ann_ivf_topk(
 # tests/test_ann_recall.py.
 #
 # Pipeline (every stage is a function the flat paths run too):
-#   coarse = _km_centroids (K=8, 2 Lloyd rounds)   [bounded collect]
-#   r      = v - c_assign                          [map-only zip_with]
-#   PQ     = _pq_train / _pq_encode over column rv [narrow shuffles]
+#   coarse = _pq_train, shape (1, 64, 8)           [bounded collect]
+#   r      = v - c_assign: the coarse _pq_assign   [map-only zip_with]
+#            emits v beside its cell
+#   PQ     = _pq_train / _pq_assign over column rv [narrow shuffles]
 #            (oracle: _pq_train_cte over rvecs)
 #   search = _ivf_probes (nprobe=2 cells); per-cell query residual ->
 #            ADC LUT over candidates OF THAT CELL only (_adc_sum);
@@ -1424,56 +1378,56 @@ def ann_ivfpq_residual_topk(
     harness; the registered query is this with (3, 3, nprobe=2,
     R=100) — identical plan). ``adaptive_r`` switches the shortlist
     bound to the in-plan max(R, N // 2000) dial (see ann_pq_topk)."""
-    emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-    # Round-14 (guide §5): persist the parsed vector relation and the
-    # residual relation. This operator is a multi-action pipeline —
-    # k-means training, the PQ init collect, _PQ_ITERS training rounds,
-    # the encode pass and the cell lookup each launch their own job —
-    # and without the caches every one of them re-ran the
-    # scan -> cast-transform -> assign -> broadcast-join -> zip_with
-    # chain from the parquet file (rvecs rebuilt 5x, vecs 10+x).
-    # Measured 2.53 s -> 1.38 s at sf0.1, identical output. At scale
-    # both caches are corpus-rows x (64 doubles) — the same relation
-    # every IVF-PQ implementation keeps materialized while it trains.
-    vecs = track_persist(
-        emb.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
+    # Round-14 (guide §5): persist the embeddings and the residual
+    # relation. This operator is a multi-action pipeline — k-means
+    # training, the PQ init collect, _PQ_ITERS training rounds, the
+    # encode pass and the search each launch their own job — and
+    # without the caches every one of them re-ran the scan and its
+    # fan-out exchange from the parquet file (the rerank tail and the
+    # adaptive shortlist's count included), and the residuals' coarse
+    # assign -> broadcast-join -> zip_with chain. Measured 2.53 s ->
+    # 1.38 s at sf0.1, identical output. At scale both caches are
+    # corpus-rows x (64 floats or doubles) — the same relation every
+    # IVF-PQ implementation keeps materialized while it trains.
+    emb = track_persist(
+        fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
     )
-    cents = _km_centroids(vecs)
-    assign = assign_nearest(vecs, _km_codebook(cents)).select("vec_id", "k")
-    # Residuals: map-only elementwise subtraction against the broadcast
+    coarse = _pq_train(emb, "embedding", _KM_SHAPE, _KM_ITERS)
+    cents = _pq_cents(spark, coarse).drop("m")
+    # Residuals: the coarse assign pass emits each vector beside its
+    # cell; map-only elementwise subtraction against the broadcast
     # coarse codebook (bit-identical to the oracle's v[i] - c[i]).
     rvecs = track_persist(
-        vecs.join(assign, "vec_id")
+        _pq_assign(emb, "embedding", coarse, with_vec=True)
         .join(F.broadcast(cents), "k")
         .select(
             "vec_id",
             F.col("k").alias("cell"),
-            F.zip_with("v", "c", lambda x, y: x - y).alias("rv"),
+            F.zip_with("svec", "cvec", lambda x, y: x - y).alias("rv"),
         )
     )
 
-    codebook = _pq_train(rvecs, "rv")
+    codebook = _pq_train(rvecs, "rv", _PQ_SHAPE, _PQ_ITERS)
     rcents = _pq_cents(spark, codebook)
-    enc = _pq_encode(rvecs, "rv", codebook)
+    enc = _pq_assign(rvecs, "rv", codebook)
 
     # --- Search: probe nprobe cells, per-cell query residual LUT, ADC
     # over that cell's candidates only, shortlist, exact rerank.
-    probes = _ivf_probes(vecs, cents, n_queries, nprobe, "cell")
+    probes = _ivf_probes(emb, cents, n_queries, nprobe, "cell")
     qres = (
         probes.join(
-            vecs.select(F.col("vec_id").alias("qid"), "v"), "qid"
+            emb.select(F.col("vec_id").alias("qid"), "embedding"), "qid"
         )
         .join(
-            F.broadcast(cents.select(F.col("k").alias("cell"), "c")),
+            F.broadcast(cents.withColumnRenamed("k", "cell")),
             "cell",
         )
         .select(
             "qid",
             "cell",
-            F.zip_with("v", "c", lambda x, y: x - y).alias("rq"),
+            F.zip_with(
+                "embedding", "cvec", lambda x, y: x.cast("double") - y
+            ).alias("rq"),
         )
     )
     qsub = F.explode(

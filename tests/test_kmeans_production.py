@@ -1,28 +1,34 @@
-"""Production k-means (operators/kmeans.py) vs the registry query's
-deterministic-fold form: same assignments, same cluster sizes, centroids
-equal within float-association tolerance (round-8 verdict, Next #7).
+"""The one Lloyd trainer and nearest-centroid kernel behind k-means, IVF
+and PQ (``queries/similarity_q.py``: ``_pq_train``, ``_pq_assign``,
+``_nearest_codes``).
 
-Also pins the production path's plan shape: assignment must be map-only
-(no Exchange, no Window) — the whole point of the broadcast-literal
-codebook.
+k-means is the trainer with one 64-dim subspace and 8 centroids, PQ the
+trainer with 8 subspaces of 8 dims and 64 centroids each. Both are
+checked bit for bit against a pure-numpy Lloyd written here; the plan
+checks pin what makes the trainer scale: a round scans the embeddings
+once and joins nothing, and assignment is map-only with a plan that does
+not grow with the codebook.
 """
 
-import math
+import functools
+import operator
+import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from aind_exaspim_data_transformation_spark.operators.kmeans import (
-    assign_nearest,
-    lloyd,
-    seed_first_k,
-    update_centroids,
-)
 from aind_exaspim_data_transformation_spark.queries.similarity_q import (
     _KM_ITERS,
     _KM_K,
-    _km_centroids,
-    _km_codebook,
+    _KM_SHAPE,
+    _PQ_ITERS,
+    _PQ_SHAPE,
+    _codebook_from,
+    _lloyd_round,
+    _pq_assign,
+    _pq_init,
+    _pq_train,
 )
 from aind_exaspim_data_transformation_spark.sources.tables import load_table
 
@@ -30,58 +36,94 @@ from conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
-def vecs(spark):
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).cache()
+def emb(spark):
+    return load_table(spark, SF_SMALL, "embeddings")
 
 
-def test_production_centroids_match_deterministic_fold(spark, vecs):
-    prod = dict(lloyd(vecs, _KM_K, _KM_ITERS))
-    det = {
-        r["k"]: list(r["c"]) for r in _km_centroids(vecs).collect()
-    }
-    assert set(prod) == set(det)
-    for k in det:
-        for a, b in zip(prod[k], det[k]):
-            # identical inputs, different float association order
-            assert math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12), (
-                k, a, b,
+def _numpy_lloyd(ids, vs, shape, iters):
+    """Reference Lloyd per subspace: seed = the vectors with id < K;
+    assignment = argmin of a left-fold d2, ties to the lower k; update
+    = per-dim mean of the members, summed in ascending value order.
+    Returns ({m: (ks, cs)}, {m: final codes})."""
+    n_sub, dim, n_cent = shape
+    book, codes = {}, {}
+    for m in range(n_sub):
+        xs = vs[:, m * dim : (m + 1) * dim]
+        ks, cs = ids[ids < n_cent], xs[ids < n_cent]
+
+        def nearest(ks, cs):
+            d2 = np.zeros((len(xs), len(ks)))
+            for j in range(dim):
+                d2 = d2 + (xs[:, None, j] - cs[None, :, j]) ** 2
+            return ks[np.argmin(d2, axis=1)]
+
+        for _ in range(iters):
+            labels = nearest(ks, cs)
+            ks = np.unique(labels)
+            cs = np.array(
+                [
+                    [
+                        functools.reduce(
+                            operator.add, sorted(col.tolist()), 0.0
+                        )
+                        / len(col)
+                        for col in xs[labels == k].T
+                    ]
+                    for k in ks
+                ]
             )
+        book[m], codes[m] = (ks, cs), nearest(ks, cs)
+    return book, codes
 
 
-def test_trained_codebook_literal_matches_pandas_fallback(spark, vecs):
-    """The registry queries assign with ``assign_nearest`` over the
-    trained ``_km_centroids`` codebook, on the literal path. The pandas
-    fallback (``max_literal_values=0``: one matmul per batch over the
-    expanded-form d2) is the other real form; on the trained codebook,
-    not only the seed, both must pick the same centroid for every
-    vector."""
-    codebook = _km_codebook(_km_centroids(vecs))
-    assert len(codebook) == _KM_K
-    lit = {
-        r["vec_id"]: r["k"]
-        for r in assign_nearest(vecs, codebook)
-        .select("vec_id", "k")
-        .collect()
+@pytest.mark.parametrize(
+    "shape, iters",
+    [(_KM_SHAPE, _KM_ITERS), (_PQ_SHAPE, _PQ_ITERS)],
+    ids=["1-64-8", "8-8-64"],
+)
+def test_trainer_matches_numpy_lloyd(spark, emb, shape, iters):
+    pdf = emb.select("vec_id", "embedding").toPandas().sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy()
+    vs = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    ref_book, ref_codes = _numpy_lloyd(ids, vs, shape, iters)
+
+    book = _pq_train(emb, "embedding", shape, iters)
+    assert sorted(book) == sorted(ref_book)
+    for m, (ks, cs) in book.items():
+        assert ks.tolist() == ref_book[m][0].tolist()
+        assert cs.tobytes() == ref_book[m][1].tobytes(), m
+
+    codes = {
+        (r["vec_id"], r["m"]): r["k"]
+        for r in _pq_assign(emb, "embedding", book).collect()
     }
-    fallback = {
-        r["vec_id"]: r["k"]
-        for r in assign_nearest(vecs, codebook, max_literal_values=0)
-        .select("vec_id", "k")
-        .collect()
-    }
-    assert len(lit) == vecs.count()
-    assert fallback == lit
+    assert len(codes) == len(ids) * shape[0]
+    for m, ks in ref_codes.items():
+        assert [codes[(i, m)] for i in ids.tolist()] == ks.tolist(), m
 
 
-def test_assignment_is_map_only(spark, vecs):
-    codebook = seed_first_k(vecs, _KM_K)
+def _formatted(df) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def test_training_round_scans_once_and_joins_nothing(spark, emb):
+    """The assign pass emits each vector beside its code, so a round
+    reads the embeddings once and never joins its assignment back to
+    the vectors on vec_id."""
+    book = _pq_init(emb, "embedding", _KM_SHAPE)
+    plan = _formatted(_lloyd_round(emb, "embedding", book))
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_assignment_is_map_only(spark, emb):
+    book = _pq_init(emb, "embedding", _KM_SHAPE)
     plan = (
-        assign_nearest(vecs, codebook)
-        .select("vec_id", "k")
+        _pq_assign(emb, "embedding", book)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -90,65 +132,45 @@ def test_assignment_is_map_only(spark, vecs):
     assert "Window" not in plan, plan
 
 
-def test_pandas_fallback_matches_literal_assignments(spark, vecs):
-    """Round-9 advice (What's wrong #4): codebooks past
-    LITERAL_CODEBOOK_MAX_VALUES route through the Pandas-UDF
-    broadcast-closure path. Same assignments as the literal plan on the
-    embeddings table (deterministic inputs, no exact inter-centroid
-    ties), and still map-only."""
-    codebook = seed_first_k(vecs, _KM_K)
-    lit = {
-        r["vec_id"]: r["k"]
-        for r in assign_nearest(vecs, codebook).select("vec_id", "k").collect()
-    }
-    fallback_df = assign_nearest(
-        vecs, codebook, max_literal_values=0
-    ).select("vec_id", "k")
-    plan = fallback_df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan, plan  # really took the UDF path
-    assert "Exchange" not in plan and "Window" not in plan, plan
-    pd_assign = {r["vec_id"]: r["k"] for r in fallback_df.collect()}
-    assert pd_assign == lit
-
-
-def test_large_codebook_routes_to_pandas_and_plan_stays_small(spark, vecs):
-    """K=512 x D=64 = 32768 values > the 16384 default: the literal form
-    would build one plan node per double (the compile-cost failure the
-    bound exists for); the fallback's plan must stay O(1) in K*D."""
-    import numpy as np
-
-    from aind_exaspim_data_transformation_spark.operators.kmeans import (
-        LITERAL_CODEBOOK_MAX_VALUES,
-    )
-
-    # embeddings are D=64: K=512 centroids -> 32768 codebook values
+def test_large_codebook_plan_stays_small(spark, emb):
+    """A 512 x 64 codebook (32768 doubles) rides in the kernel's
+    closure: the plan must not embed it."""
     rng = np.random.default_rng(7)
-    big = [(k, rng.normal(size=64).tolist()) for k in range(512)]
-    assert sum(len(c) for _, c in big) > LITERAL_CODEBOOK_MAX_VALUES
-    df = assign_nearest(vecs, big)
-    plan = df._jdf.queryExecution().analyzed().toString()
-    assert "ArrowEvalPython" in str(
-        df._jdf.queryExecution().executedPlan().toString()
+    book = _codebook_from(
+        [((0, k), rng.normal(size=64).tolist()) for k in range(512)]
     )
-    # the 32768 doubles must NOT be embedded in the plan text
+    plan = (
+        _pq_assign(emb, "embedding", book)
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
+    )
     assert len(plan) < 100_000, f"plan grew with the codebook: {len(plan)}"
 
 
 def test_update_centroids_drops_empty_clusters(spark):
+    """A centroid that wins no vector leaves the codebook, as in the
+    oracles' group-by update."""
     df = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (0, [2.0, 2.0]), (3, [5.0, 7.0])],
-        "k int, v array<double>",
+        [(0, [0.0, 0.0]), (1, [2.0, 2.0]), (2, [5.0, 7.0])],
+        "vec_id long, embedding array<float>",
     )
-    out = dict(update_centroids(df))
+    book = _codebook_from(
+        [((0, 0), [0.0, 0.0]), ((0, 1), [100.0, 100.0]), ((0, 3), [5.0, 7.0])]
+    )
+    out = {
+        r["k"]: list(r["cvec"])
+        for r in _lloyd_round(df, "embedding", book).collect()
+    }
     assert out == {0: [1.0, 1.0], 3: [5.0, 7.0]}
 
 
-def test_seed_matches_registry_seed(spark, vecs):
-    seed = seed_first_k(vecs, _KM_K)
-    assert [k for k, _ in seed] == list(range(_KM_K))
+def test_seed_matches_registry_seed(spark, emb):
+    ks, cs = _pq_init(emb, "embedding", _KM_SHAPE)[0]
+    assert ks.tolist() == list(range(_KM_K))
     first = {
-        r["vec_id"]: list(r["v"])
-        for r in vecs.where(F.col("vec_id") < _KM_K).collect()
+        r["vec_id"]: [float(x) for x in r["embedding"]]
+        for r in emb.where(F.col("vec_id") < _KM_K).collect()
     }
-    for k, c in seed:
+    for k, c in zip(ks.tolist(), cs.tolist()):
         assert c == first[k]
