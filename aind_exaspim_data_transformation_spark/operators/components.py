@@ -1,22 +1,31 @@
 """Connected components over candidate-pair edges (dedup clustering).
 
 After LSH produces near-duplicate PAIRS, dedup needs CLUSTERS (keep one
-representative per component). This is iterative min-label propagation —
-each iteration one join + one aggregation; converges in O(diameter)
-rounds, which for near-dup graphs is tiny (duplicate groups are dense).
-
-Scale notes: this is the standard Pregel-style large-graph CC formulated
-in DataFrame ops — state is (vertex, label), the join is key-partitioned,
-and the driver only checks a convergence count per round. For graphs with
-huge diameter, switch to the alternating small/large-star algorithm; for
-dedup clusters the plain propagation is optimal.
+representative per component). Small edge lists are answered by a
+driver-side union-find; larger ones by Pregel-style min-label
+propagation with pointer jumping in DataFrame ops — state is
+(vertex, label), the join is key-partitioned, and the driver only
+checks a convergence count per round. Large-star/small-star
+alternation (Kiveris et al., SoCC 2014) is the known alternative for
+huge-diameter graphs.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+#: Driver-heap budget for the union-find route, in bytes of the
+#: estimate ``edges * max row width * 2``. Read at call time, so setting
+#: it to 0 forces the distributed path.
+COLLECT_MAX_BYTES = 256 << 20
+
+#: Propagation rounds the distributed path may run before it raises.
+#: Read at call time.
+MAX_ROUNDS = 25
 
 
 def _union_find_components(
@@ -73,74 +82,72 @@ def _row_width_expr(edges: DataFrame, col: str):
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-    collect_threshold: int = 4_000_000,
-    collect_max_bytes: int = 256 << 20,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(vertex, component) with component = min vertex id reachable.
 
     ``edges`` is an undirected edge list; isolated vertices simply don't
     appear (callers union them back if needed).
 
-    Adaptive strategy (same spirit as a broadcast-join threshold): when
-    the edge list is small enough to hold on the driver, a driver-side
-    union-find answers in one job — the iterative path costs O(rounds)
-    scheduled jobs of fixed latency, which dwarfs the compute for small
-    graphs. Above the threshold (the 100 TB path) the distributed
-    min-label propagation with pointer jumping runs in O(log diameter)
-    rounds. Pass ``collect_threshold=0`` to force the distributed path.
+    Route rule: one engine-side ``agg`` takes the edge count and the max
+    per-row width over ALL rows (a prefix sample would miss width skew
+    in the tail). When ``count * max width * 2 <= COLLECT_MAX_BYTES``
+    the edges are collected and a driver union-find answers in one job;
+    the x2 covers union-find's parent dict. Otherwise (the 100 TB path)
+    the distributed min-label propagation with pointer jumping runs in
+    O(log diameter) rounds, at most ``MAX_ROUNDS``. Each call logs one
+    record with ``extra={"components_route": {...}}``: the route, the
+    edge count, the estimated driver bytes and, when distributed, the
+    rounds run.
 
-    The collect decision is BYTES-aware (round-11 verdict, What's
-    wrong #3): a flat row cap ignores vertex width, and 4M collected
-    Rows of long ids already cost hundreds of MB of driver heap — an
-    OOM on a small driver for wide (string) vertex ids. The estimate
-    is ``count * max per-row width * 2``: the max width is computed
-    engine-side over ALL rows (one cheap agg — a prefix sample would
-    miss width skew in the tail) and the x2 covers union-find's own
-    parent dict roughly doubling resident heap. Default budget
-    256 MiB — for two-long edges that binds near ~800k edges, well
-    under the old flat default; the row cap remains as a hard upper
-    bound.
+    The distributed path pins its inputs with ``localCheckpoint``, whose
+    blocks live only on the executors: a lost executor fails the job
+    rather than recomputing the lost blocks.
     """
-    # The edge list is consumed at least twice (threshold count +
-    # either the driver collect or the symmetrized build) and its
-    # lineage is typically an expensive candidate-pair join — pin it
-    # once instead of recomputing the whole pair generation per action.
-    # localCheckpoint (not persist) so the blocks are owned by the RDD
-    # and freed on GC; callers keep a lazy-plan API.
+    # The edge list is read twice (the route agg + the collect or the
+    # symmetrised build) and its lineage is typically an expensive
+    # candidate-pair join — pin it once. localCheckpoint (not persist)
+    # so the blocks are owned by the RDD and freed on GC; callers keep
+    # a lazy-plan API.
     edges = edges.select(src, dst).localCheckpoint(eager=False)
-    if collect_threshold:
-        n_edges = edges.count()
-        if n_edges <= collect_threshold:
-            per_row = 0
-            if n_edges:
-                width = (
-                    _row_width_expr(edges, src)
-                    + _row_width_expr(edges, dst)
-                    + F.lit(64)  # Row tuple + per-row bookkeeping
-                )
-                per_row = edges.agg(
-                    F.max(width).alias("w")
-                ).collect()[0]["w"]
-            if n_edges * per_row * 2 <= collect_max_bytes:
-                return _union_find_components(edges, src, dst)
+    width = (
+        _row_width_expr(edges, src)
+        + _row_width_expr(edges, dst)
+        + F.lit(64)  # Row tuple + per-row bookkeeping
+    )
+    stats = edges.agg(
+        F.count(F.lit(1)).alias("n"), F.max(width).alias("w")
+    ).collect()[0]
+    n_edges = stats["n"]
+    driver_bytes = n_edges * (stats["w"] or 0) * 2
+    route = {"edges": n_edges, "driver_bytes": driver_bytes}
+    log = logging.getLogger(__name__)
+    if driver_bytes <= COLLECT_MAX_BYTES:
+        route["route"] = "union_find"
+        log.info(
+            "connected_components: union_find over %d edges "
+            "(~%d driver bytes)", n_edges, driver_bytes,
+            extra={"components_route": route},
+        )
+        return _union_find_components(edges, src, dst)
+    # Duplicate edges and self-loops need no `distinct`: a min over
+    # neighbour labels ignores them.
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
-        .distinct()
+        .localCheckpoint(eager=False)
     )
+    # Round 0 without a join: own id or the smallest neighbour id.
     labels = (
-        sym.select(F.col("a").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
+        sym.groupBy("a")
+        .agg(F.least(F.col("a"), F.min("b")).alias("component"))
+        .withColumnRenamed("a", "vertex")
     )
     converged = False
-    for _ in range(max_iterations):
+    rounds = 0
+    for rounds in range(1, MAX_ROUNDS + 1):
         # candidate label per vertex: min over own label and neighbors'
         neighbor_labels = (
             sym.join(
@@ -186,16 +193,20 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        changed = new_labels.where(
+        converged = not new_labels.where(
             F.col("component") < F.col("prev_component")
         ).count()
         labels = new_labels.select("vertex", "component")
-        if changed == 0:
-            converged = True
+        if converged:
             break
+    route.update(route="distributed", rounds=rounds)
+    log.info(
+        "connected_components: distributed over %d edges in %d rounds",
+        n_edges, rounds, extra={"components_route": route},
+    )
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (graph diameter too large) — raise max_iterations"
+            f"connected_components did not converge in {rounds} "
+            "rounds (graph diameter too large) — raise MAX_ROUNDS"
         )
     return labels

@@ -363,9 +363,10 @@ MAX_BUCKET = 20  # band buckets above this are degenerate, skip them
 # near-dup pass never enumerates degenerate-bucket pairs — and the
 # oracle computes its closure over the identical capped pair set.
 # --------------------------------------------------------------------------
-# Measured convergence: 24 rounds at sf1, 28 at sf10 (capped-bucket
-# graphs chain into long paths, so the chase step compresses slower than
-# textbook doubling); 48 leaves ~2x margin and each round costs only V+E
+# Convergence measured on the round-8 corpus: 24 rounds at sf1, 28 at
+# sf10 (capped-bucket graphs chain into long paths, so the chase step
+# compresses slower than textbook doubling); 48 leaves ~2x margin over
+# those round-8 figures and each round costs only V+E
 # join rows. This is an ORACLE BUDGET, not engine state: the Spark side
 # iterates to convergence, so a corpus whose components chain longer
 # than the budget fails the hash VISIBLY with the oracle under-merged.
@@ -388,8 +389,8 @@ def _members_cte() -> str:
     (l' = min over edge neighbors of l) then a label-chase
     (l'' = min(l', l(l'))), so state stays ONE label per vertex
     (V + E join rows per round, never k^2) and convergence is
-    near-logarithmic rounds (measured: 24 at sf1, 28 at sf10 —
-    ``_CC_ROUNDS`` = 48 for margin); a non-converged
+    near-logarithmic rounds (measured on the round-8 corpus: 24 at
+    sf1, 28 at sf10 — ``_CC_ROUNDS`` = 48 for margin); a non-converged
     label would FAIL the hash against the engine (visible, never a
     silent pass). Same component definition as before: the minimum
     vertex id of the component.

@@ -1,34 +1,46 @@
 """Connected-components operator: known graphs + convergence."""
 
+import pytest
+
+import aind_exaspim_data_transformation_spark.operators.components as C
 from aind_exaspim_data_transformation_spark.operators.components import (
     connected_components,
 )
 
+ROUTES = ["union_find", "distributed"]
 
-def test_two_components_and_chain(spark):
+
+def _labels(edges, monkeypatch, route):
+    """{vertex: component} over ``route``; a zero budget forces the
+    distributed path."""
+    if route == "distributed":
+        monkeypatch.setattr(C, "COLLECT_MAX_BYTES", 0)
+    return {
+        r["vertex"]: r["component"]
+        for r in connected_components(edges).collect()
+    }
+
+
+@pytest.mark.parametrize("route", ROUTES)
+def test_two_components_and_chain(spark, monkeypatch, route):
     # chain 1-2-3-4 (diameter > 1 forces multiple iterations) + pair 10-11
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11)], "src long, dst long"
     )
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
+    got = _labels(edges, monkeypatch, route)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_self_loop_and_duplicate_edges(spark):
+@pytest.mark.parametrize("route", ROUTES)
+def test_self_loop_and_duplicate_edges(spark, monkeypatch, route):
     edges = spark.createDataFrame(
         [(5, 5), (6, 7), (7, 6), (6, 7)], "src long, dst long"
     )
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
+    got = _labels(edges, monkeypatch, route)
     assert got == {5: 5, 6: 6, 7: 6}
 
 
-def test_distributed_path_matches_union_find(spark):
+def test_distributed_path_matches_union_find(spark, monkeypatch):
     # random-ish graph: chains, a star, an isolated pair; both execution
     # strategies must produce the identical (vertex, component) map
     raw = (
@@ -38,14 +50,8 @@ def test_distributed_path_matches_union_find(spark):
         + [(7, 3)]  # chord inside the chain
     )
     edges = spark.createDataFrame(raw, "src long, dst long")
-    fast = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    dist = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edges, collect_threshold=0).collect()
-    }
+    fast = _labels(edges, monkeypatch, "union_find")
+    dist = _labels(edges, monkeypatch, "distributed")
     assert fast == dist
     assert dist[19] == 1 and dist[109] == 100 and dist[201] == 200
 
@@ -55,8 +61,6 @@ def test_bytes_aware_collect_routing(spark, monkeypatch):
     (round-11 verdict, What's wrong #3): the same edge COUNT routes to
     union-find with narrow long ids but to the distributed path with
     wide string ids that would blow the byte budget."""
-    import aind_exaspim_data_transformation_spark.operators.components as C
-
     calls = []
     real_uf = C._union_find_components
     monkeypatch.setattr(
@@ -74,23 +78,22 @@ def test_bytes_aware_collect_routing(spark, monkeypatch):
         [("a" * 40_000 + str(i), "a" * 40_000 + str(i + 1)) for i in range(3)],
         "src string, dst string",
     )
-    # 3 edges x ~80 KB rows ~ 240 KB estimated heap > 100 KB budget
+    # 3 edges x ~80 KB rows ~ 480 KB estimated heap > 100 KB budget
+    monkeypatch.setattr(C, "COLLECT_MAX_BYTES", 100_000)
     got = {
         r["vertex"]: r["component"]
-        for r in C.connected_components(
-            wide, collect_max_bytes=100_000
-        ).collect()
+        for r in C.connected_components(wide).collect()
     }
     assert calls == [1]  # union-find NOT used for the wide graph
     assert len(set(got.values())) == 1  # still one correct component
 
 
 def test_forced_distributed_at_10m_edges(spark, monkeypatch):
-    """~10M edges exceed the row cap: the operator must take the
-    distributed path (never a driver collect) and still be correct.
-    Disjoint 2-cliques keep the diameter at 1 so the test exercises
-    ROUTING and the propagation machinery, not long convergence."""
-    import aind_exaspim_data_transformation_spark.operators.components as C
+    """~10M edges exceed the default byte budget: the operator must
+    take the distributed path (never a driver collect) and still be
+    correct. Disjoint 2-cliques keep the diameter at 1 so the test
+    exercises ROUTING and the propagation machinery, not long
+    convergence."""
     from pyspark.sql import functions as F
 
     def boom(*a, **kw):  # any driver collect of 10M edges is the bug
@@ -115,9 +118,9 @@ def test_forced_distributed_at_10m_edges(spark, monkeypatch):
     assert agg["odd_ok"] == 10_000_000 and agg["even_ok"] == 10_000_000
 
 
-def test_path_graph_converges_in_log_rounds(spark):
+def test_path_graph_converges_in_log_rounds(spark, monkeypatch):
     """Adversarial 2^20-vertex PATH graph (diameter ~1M): pointer
-    jumping must converge in O(log d) rounds — max_iterations=25 would
+    jumping must converge in O(log d) rounds — MAX_ROUNDS=25 would
     be hopeless for the O(d) propagation-only algorithm, so plain
     convergence here IS the round-count proof."""
     from pyspark.sql import functions as F
@@ -126,9 +129,9 @@ def test_path_graph_converges_in_log_rounds(spark):
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    labels = connected_components(
-        edges, collect_threshold=0, max_iterations=25
-    )
+    monkeypatch.setattr(C, "COLLECT_MAX_BYTES", 0)
+    monkeypatch.setattr(C, "MAX_ROUNDS", 25)
+    labels = connected_components(edges)
     agg = labels.agg(
         F.count(F.lit(1)).alias("n"),
         F.max("component").alias("max_c"),
@@ -136,3 +139,40 @@ def test_path_graph_converges_in_log_rounds(spark):
     ).collect()[0]
     assert agg["n"] == n
     assert agg["max_c"] == 0 and agg["min_c"] == 0
+
+
+def test_route_is_logged(spark, monkeypatch, caplog):
+    """One structured record per call: the route, the edge count, the
+    driver-bytes estimate and, when distributed, the rounds run.
+    Disjoint pairs converge in one round: round 0 already labels each
+    pair with its smaller id, so round 1 changes nothing."""
+    from pyspark.sql import functions as F
+
+    def routes():
+        out = [
+            r.components_route
+            for r in caplog.records
+            if hasattr(r, "components_route")
+        ]
+        caplog.clear()
+        return out
+
+    small = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    pairs = spark.range(1000).select(
+        (F.col("id") * 2).alias("src"), (F.col("id") * 2 + 1).alias("dst")
+    )
+    with caplog.at_level("INFO", logger=C.__name__):
+        connected_components(small)
+        assert routes() == [
+            {"route": "union_find", "edges": 2, "driver_bytes": 512}
+        ]
+        monkeypatch.setattr(C, "COLLECT_MAX_BYTES", 0)
+        connected_components(pairs)
+        assert routes() == [
+            {
+                "route": "distributed",
+                "edges": 1000,
+                "driver_bytes": 256_000,
+                "rounds": 1,
+            }
+        ]

@@ -96,15 +96,19 @@ def test_salted_join_rejects_right_outer(spark):
         salted_join(df, df, "k", how="right")
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     # a chain of diameter 63 cannot converge in 2 pointer-jumping
-    # iterations (each round at most ~triples reach); force the
-    # distributed path — the union-find fast path has no iteration cap
+    # rounds (each round at most ~triples reach); force the
+    # distributed path — the union-find fast path has no round cap
+    import aind_exaspim_data_transformation_spark.operators.components as C
+
+    monkeypatch.setattr(C, "COLLECT_MAX_BYTES", 0)
+    monkeypatch.setattr(C, "MAX_ROUNDS", 2)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iterations=2, collect_threshold=0)
+        connected_components(edges)
 
 
 def test_multiscales_metadata_records_method():
